@@ -208,17 +208,18 @@ def main() -> None:
     headline = {n: e for n, e in plans.QUERIES.items() if e.bench}
 
     def _release_leaked_state() -> None:
-        """Unpersist RDD blocks that outlive their query (localCheckpoint
-        pins blocks for the session lifetime). Without this, each
-        checkpointing query's blocks accumulate across the ~28 timed
-        runs and evict later queries' caches — observed as
-        minhash_dedup_verified reading 38s in the sf1 block vs 8.3s in
-        a fresh session (the shingle cache was being recomputed). The
+        """Release every memo, cached frame and persisted RDD between
+        queries (plans/memos.py clear_all): localCheckpoint pins blocks
+        for the session lifetime, and without this each checkpointing
+        query's blocks accumulate across the ~28 timed runs and evict
+        later queries' caches — observed as minhash_dedup_verified
+        reading 38s in the sf1 block vs 8.3s in a fresh session. The
         cleanup runs OUTSIDE the per-query timer: each query still pays
         its own materialization cost."""
+        from big_data_competition_dxc_spark.plans.memos import clear_all
+
         try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist(False)  # non-blocking: don't bill the next query
+            clear_all()
         except Exception:  # noqa: BLE001 - cleanup must never fail the bench
             pass
 
@@ -365,20 +366,6 @@ def main() -> None:
         # deltas, r9 verdict item 4)
         best["memo_warm"] = sorted(n for n in best["timings"] if qwarm.get(n))
         return best
-
-    def _clear_session_memos() -> None:
-        """Between blocks: drop every registered session memo (cached
-        DataFrames keyed by (session, sf_dir) — ml/recommend's ratings,
-        cosine pairs and pruned-b frames, dedup/simhash's pair set) via
-        the central registry (plans/memos.py) — the next block uses a
-        different sf_dir, so the previous block's memo entries are dead
-        weight pinning executor memory for the rest of the process."""
-        try:
-            from big_data_competition_dxc_spark.plans.memos import clear_all
-
-            clear_all()
-        except Exception:  # noqa: BLE001 - cleanup must never fail the bench
-            pass
 
     here = os.path.dirname(os.path.abspath(__file__))
 
@@ -607,7 +594,7 @@ def main() -> None:
         }
     else:
         main_run = gated_block(sf_dir, min_attempts=2)
-        _clear_session_memos()
+        _release_leaked_state()
     timings = main_run["timings"]
     total = main_run["total"]
     steal_main = main_run["steal"]
@@ -676,7 +663,7 @@ def main() -> None:
             sp_main = gated_block(
                 sf_dir, min_attempts=2, queryset=spot_set, max_attempts=3
             )
-            _clear_session_memos()
+            _release_leaked_state()
             spotlight = {
                 "round": round_no,
                 "names": spot_names,
@@ -694,7 +681,7 @@ def main() -> None:
                 sp_sc = gated_block(
                     sf1_dir, min_attempts=2, queryset=spot_set, max_attempts=3
                 )
-                _clear_session_memos()
+                _release_leaked_state()
                 m_min, s_min = sp_main["queries_min"], sp_sc["queries_min"]
                 m_rows, s_rows = sp_main["rows"], sp_sc["rows"]
                 spotlight["sf_scale"] = {
@@ -727,7 +714,7 @@ def main() -> None:
     scale_check = None
     if sf1_dir and os.path.isdir(sf1_dir) and not spot_only:
         sc = gated_block(sf1_dir, min_attempts=2)
-        _clear_session_memos()
+        _release_leaked_state()
         sc_timings, sc_rows = sc["timings"], sc["rows"]
         sc_min, main_min = sc["queries_min"], main_run["queries_min"]
         main_rows = main_run["rows"]

@@ -346,8 +346,7 @@ def dedup_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand2, sh, sh, docs.select("doc_id").filter(is_d2),
         sizes_c=sizes, sizes_d=sizes,
     )
-    # shingle/band memos stay live for the family (central hygiene
-    # releases them between blocks)
+    # shingle/band memos stay live for the family (plans/memos.py)
     return result_checkpoint(dec2)
 
 

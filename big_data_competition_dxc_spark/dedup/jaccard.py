@@ -13,12 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
-from ..plans.memos import (
-    evict_other_sessions,
-    memo_key,
-    note_warm_hit,
-    register_memo,
-)
+from ..plans.memos import memoized
 from ..plans.registry import query
 from ..sources import load
 
@@ -119,27 +114,18 @@ def jaccard_pairs_frame(docs: DataFrame) -> DataFrame:
 
 # The exact-Jaccard pair graph is the shared canonical intermediate of
 # FOUR registered queries (the listing + the three neardup-components
-# clustering queries) — memoized like the simhash pair set: keyed
-# (applicationId, sf_dir), cached, centrally registered for
-# between-block hygiene (plans/memos.py), bypassed in plan-audit mode.
-_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
+# clustering queries) — a session memo (plans/memos.py) like the simhash
+# pair set.
 
 
 def jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The canonical corpus pair graph, cached once per (session, dir)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_CHECKPOINT"):
-        return jaccard_pairs_frame(load(spark, sf_dir, "documents"))
-    key = memo_key(spark, sf_dir)
-    hit = _PAIRS_MEMO.get(key)
-    if hit is None:
-        evict_other_sessions(key)
-        hit = jaccard_pairs_frame(load(spark, sf_dir, "documents")).cache()
-        _PAIRS_MEMO[key] = hit
-    else:
-        note_warm_hit()
-    return hit
+    """The canonical corpus pair graph, a session memo."""
+    return memoized(
+        "jaccard_pairs",
+        spark,
+        sf_dir,
+        lambda: jaccard_pairs_frame(load(spark, sf_dir, "documents")),
+    )
 
 
 @query("ngram_jaccard_pairs", oracle=_JACCARD_ORACLE, tags=("dedup", "jaccard"))

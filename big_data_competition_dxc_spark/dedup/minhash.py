@@ -26,12 +26,7 @@ from ..functions.rounding import round_to, sql_round
 from ..plans.checkpointing import result_checkpoint
 from ..plans.registry import query
 from ..sources import load
-from ..plans.memos import (
-    evict_other_sessions,
-    memo_key,
-    note_warm_hit,
-    register_memo,
-)
+from ..plans.memos import memoized
 from .jaccard import JACCARD_THRESHOLD, SQL_SHINGLES, shingle_rows
 
 NUM_HASHES = 16
@@ -108,7 +103,7 @@ FROM bands a JOIN bands b
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs: docs agreeing on all ROWS_PER_BAND minhashes
     in at least one band."""
-    bands = _bands(spark, sf_dir)
+    bands = cached_bands(spark, sf_dir)
     # shuffle_hash: same band self-join as minhash_dedup_verified's
     # candidate stage (r9 A/B: SMJ sorts were the cost, see SCALING.md)
     a, b = bands.alias("a"), bands.hint("shuffle_hash").alias("b")
@@ -149,92 +144,50 @@ def _band_rows(sig: DataFrame) -> DataFrame:
     )
 
 
-# The corpus shingle rows and band index are the shared canonical
-# intermediates of the whole minhash/incremental family (the verified
-# pipeline, the LSH candidate listing, both incremental variants, and
-# the index-evolution lifecycle) — production derives them once per
-# corpus (the streaming variant literally persists them as tables), so
-# the batch queries memoize them: keyed (applicationId, sf_dir),
-# cached, centrally registered for between-block hygiene
-# (plans/memos.py), bypassed in plan-audit mode.
-_SHINGLES_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-_BANDS_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
-def _audit_mode() -> bool:
-    import os
-
-    return bool(os.environ.get("SPARK_GRAFT_NO_CHECKPOINT"))
+# The corpus shingle rows, band index and per-doc sizes are the shared
+# canonical intermediates of the whole minhash/incremental family (the
+# verified pipeline, the LSH candidate listing, both incremental
+# variants, and the index-evolution lifecycle) — production derives
+# them once per corpus (the streaming variant literally persists them
+# as tables), so the batch queries read them as session memos
+# (plans/memos.py).
 
 
 def cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exploded corpus shingle rows, cached once per (session, dir)."""
-    if _audit_mode():
-        return shingle_rows(load(spark, sf_dir, "documents"))
-    key = memo_key(spark, sf_dir)
-    hit = _SHINGLES_MEMO.get(key)
-    if hit is None:
-        evict_other_sessions(key)
-        hit = shingle_rows(load(spark, sf_dir, "documents")).cache()
-        _SHINGLES_MEMO[key] = hit
-    else:
-        note_warm_hit()
-    return hit
+    """The exploded corpus shingle rows, a session memo."""
+    return memoized(
+        "minhash_shingles",
+        spark,
+        sf_dir,
+        lambda: shingle_rows(load(spark, sf_dir, "documents")),
+    )
 
 
 def cached_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus LSH band index, cached once per (session, dir);
-    derives from the shingle memo so one corpus scan feeds both."""
-    if _audit_mode():
-        return _band_rows(_signature(shingle_rows(load(spark, sf_dir, "documents"))))
-    key = memo_key(spark, sf_dir)
-    hit = _BANDS_MEMO.get(key)
-    if hit is None:
-        evict_other_sessions(key)
-        hit = _band_rows(_signature(cached_shingles(spark, sf_dir))).cache()
-        _BANDS_MEMO[key] = hit
-    else:
-        note_warm_hit()
-    return hit
-
-
-def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cached_bands(spark, sf_dir)
-
-
-_SIZES_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
+    """The corpus LSH band index, a session memo; derives from the
+    shingle memo so one corpus scan feeds both."""
+    return memoized(
+        "minhash_bands",
+        spark,
+        sf_dir,
+        lambda: _band_rows(_signature(cached_shingles(spark, sf_dir))),
+    )
 
 
 def cached_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc shingle counts ``(doc_id, n)``, cached once per
-    (session, dir) — the third canonical intermediate of the family
-    (r15): every exact-Jaccard verify stage needs it TWICE (both pair
-    sides), so the verified pipeline computed the same full-shingle
-    aggregation twice per run, each incremental decision twice, the
-    evolution lifecycle four times. Derives from the shingle memo
-    (no extra corpus scan); |documents| rows. Same hygiene contract as
-    the shingle/band memos: registered, cleared between blocks,
-    bypassed in plan-audit mode, warm hits flagged."""
-    if _audit_mode():
-        return (
-            shingle_rows(load(spark, sf_dir, "documents"))
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n"))
-        )
-    key = memo_key(spark, sf_dir)
-    hit = _SIZES_MEMO.get(key)
-    if hit is None:
-        evict_other_sessions(key)
-        hit = (
-            cached_shingles(spark, sf_dir)
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n"))
-            .cache()
-        )
-        _SIZES_MEMO[key] = hit
-    else:
-        note_warm_hit()
-    return hit
+    """Per-doc shingle counts ``(doc_id, n)``, a session memo — the
+    third canonical intermediate of the family (r15): every
+    exact-Jaccard verify stage needs it TWICE (both pair sides), so the
+    verified pipeline computed the same full-shingle aggregation twice
+    per run, each incremental decision twice, the evolution lifecycle
+    four times. Derives from the shingle memo (no extra corpus scan);
+    |documents| rows."""
+    return memoized(
+        "minhash_sizes",
+        spark,
+        sf_dir,
+        lambda: cached_shingles(spark, sf_dir).groupBy("doc_id").agg(F.count("*").alias("n")),
+    )
 
 
 _VERIFIED_ORACLE = f"""
@@ -313,11 +266,10 @@ def minhash_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", round_to(jac, 4).alias("jaccard"))
     )
     # localCheckpoint materializes the verified pairs ON THE EXECUTORS
-    # while the shingle cache is hot. The shingle/band memos stay live
-    # for the family's other queries; between-block hygiene
-    # (plans/memos.py clear_all) releases them. A driver collect() here
-    # would be a scale bug: at 100 TB the verified near-dup pair set is
-    # not driver-sized.
+    # while the shingle cache is hot; the shingle/band memos stay live
+    # for the family's other queries. A driver collect() here would be
+    # a scale bug: at 100 TB the verified near-dup pair set is not
+    # driver-sized.
     return result_checkpoint(out)
 
 

@@ -13,12 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.memos import (
-    evict_other_sessions,
-    memo_key,
-    note_warm_hit,
-    register_memo,
-)
+from ..plans.memos import memoized
 from ..plans.registry import query
 from ..sources import load
 
@@ -118,11 +113,8 @@ def _chunk_bounds() -> list[tuple[int, int]]:
 
 # The pair set is the shared canonical intermediate of THREE registered
 # queries (the listing + both bounded twins) — production computes it
-# once per corpus, so it is memoized like ml/recommend's cosine pairs:
-# keyed (applicationId, sf_dir), cached, registered for the central
-# session hygiene (plans/memos.py; bench clears between blocks), and
-# bypassed in plan-audit mode so .explain shows the real pipeline.
-_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
+# once per corpus, so it is a session memo (plans/memos.py) like
+# ml/recommend's cosine pairs.
 
 
 @query("simhash_neardup_pairs", oracle=_PAIRS_ORACLE, bench=True, tags=("dedup", "simhash"))
@@ -135,16 +127,10 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors pay the bit_count. Same result set as the oracle's
     all-pairs form, linear-ish cost (the plan audit forbids the
     nested-loop join the naive form would produce)."""
-    import os
+    return memoized("simhash_pairs", spark, sf_dir, lambda: _neardup_pairs(spark, sf_dir))
 
-    audit_mode = bool(os.environ.get("SPARK_GRAFT_NO_CHECKPOINT"))
-    key = memo_key(spark, sf_dir)
-    if not audit_mode:
-        hit = _PAIRS_MEMO.get(key)
-        if hit is not None:
-            note_warm_hit()
-            return hit
-        evict_other_sessions(key)
+
+def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = _fingerprints(spark, sf_dir).select(
         "doc_id", F.col("simhash").cast("bigint").alias("simhash")
     )
@@ -176,14 +162,9 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a pair can share several chunks -> dedup before scoring
     cand = cand.distinct()
     ham = F.expr("bit_count(sim_a ^ sim_b)").cast("int")
-    out = cand.select("doc_a", "doc_b", ham.alias("hamming")).filter(
+    return cand.select("doc_a", "doc_b", ham.alias("hamming")).filter(
         F.col("hamming") <= HAMMING_THRESHOLD
     )
-    if audit_mode:
-        return out
-    out = out.cache()
-    _PAIRS_MEMO[key] = out
-    return out
 
 
 # ---------------------------------------------------------------------------

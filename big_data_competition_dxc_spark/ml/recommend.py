@@ -40,7 +40,7 @@ from ..functions.rounding import (
     to_units,
 )
 from ..plans.checkpointing import result_checkpoint
-from ..plans.memos import note_warm_hit, register_memo
+from ..plans.memos import memoized
 from ..plans.registry import query
 from ..sources import load
 
@@ -122,7 +122,7 @@ def ml_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (already-rated excluded via anti-join, D:21/D:91) intersected with
     the user's held-out items (D:89-99). maxIter 20 -> 10 vs the
     reference (fixture-scale runtime; documented deviation)."""
-    r = ratings(spark, sf_dir).cache()
+    r = cached_ratings(spark, sf_dir)
     train, test = r.randomSplit([0.6, 0.4], seed=11)
     als = ALS(
         rank=10,
@@ -168,7 +168,6 @@ def ml_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into a determinism pin — tests/test_ml.py asserts it is identical
     # across two runs, and any seed/split/ranking regression changes it.
     units = topk.agg(F.sum(to_units(F.col("score"), 4)).alias("u")).collect()[0]["u"]
-    r.unpersist()
     return spark.createDataFrame(
         [
             (
@@ -218,74 +217,21 @@ _COS_PAIRS_SQL = f"""
 """
 
 
-# Session-scoped memos of the canonical ratings frame and the ranked
-# similarity frame: knn_user_neighbors and knn_user_recommend both
-# consume them, and in a driver/test session they run back-to-back —
-# without the memo the second query rebuilds the whole capped self-join
-# pipeline from scratch, and without the shared ratings frame a single
-# cold knn_user_recommend computes the orders⨝lineitem aggregation
-# twice (once for its own uses, once inside the pairs pipeline). Keyed
-# by (session, data dir), which is sound ONLY because both memos hold
-# the canonical full derivation (no parameters — a caller wanting a
-# filtered split builds its own frames, as ml/ranking_eval.py does with
-# the itemcf helpers). Memoized frames are .cache()d (NOT checkpointed:
-# bench's between-query block release must stay survivable — a cache
-# recomputes, a truncated-lineage checkpoint cannot) and live for the
-# session; a long-lived driver releases them with its normal
-# between-pipeline block cleanup (see bench.py's _release_leaked_state).
-_RATINGS_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-# the pruned norm path's capped-contributor frame (canonical auto
-# derivation only — see _user_cosine_pairs): cached because the pairs
-# plan references it twice, tracked here so clear_memos releases it
-_PRUNED_B_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
-def _memo_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """(applicationId, dir): unlike id(spark), a stopped session's key
-    can never collide with a new session reusing the same address, and
-    the key itself holds no reference to the session."""
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
-def _evict_other_sessions(key: tuple[str, str]) -> None:
-    """Drop memo entries from any OTHER application: cached DataFrames
-    pin their (possibly stopped) SparkSession, so the memos hold at
-    most the live session's frames. Delegates to the central registry
-    (plans/memos.py) so every registered memo — including ones added
-    later — is swept; a hand-maintained tuple here once missed
-    _PRUNED_B_MEMO."""
-    from ..plans.memos import evict_other_sessions
-
-    evict_other_sessions(key)
-
-
-def clear_memos() -> None:
-    """Session-teardown / bench-cleanup hook, kept for API stability:
-    clears EVERY registered memo via the central registry (not just
-    this module's — callers use it as 'release all cached state')."""
-    from ..plans.memos import clear_all
-
-    clear_all()
+# Session memos (plans/memos.py) of the canonical ratings frame and
+# the ranked similarity frame: ml_als_recommend, knn_user_neighbors and
+# knn_user_recommend all consume them, and in a driver/test session they
+# run back-to-back — without the memo the second KNN query rebuilds the
+# whole capped self-join pipeline from scratch, and without the shared
+# ratings frame a single cold knn_user_recommend computes the
+# orders⨝lineitem aggregation twice (once for its own uses, once inside
+# the pairs pipeline). Both hold the canonical full derivation (no
+# parameters — a caller wanting a filtered split builds its own frames,
+# as ml/ranking_eval.py does with the itemcf helpers).
 
 
 def cached_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The canonical ratings frame, cached once per (session, dir).
-    In plan-audit mode (SPARK_GRAFT_NO_CHECKPOINT) returns the plain
-    uncached derivation so .explain shows the real pipeline."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_CHECKPOINT"):
-        return ratings(spark, sf_dir)
-    key = _memo_key(spark, sf_dir)
-    hit = _RATINGS_MEMO.get(key)
-    if hit is None:
-        _evict_other_sessions(key)
-        hit = ratings(spark, sf_dir).cache()
-        _RATINGS_MEMO[key] = hit
-    else:
-        note_warm_hit()
-    return hit
+    """The canonical ratings frame, a session memo."""
+    return memoized("ratings", spark, sf_dir, lambda: ratings(spark, sf_dir))
 
 
 def _user_cosine_pairs(
@@ -329,20 +275,14 @@ def _user_cosine_pairs(
     the catalog. ``full``/``pruned`` force a side for tests, bypassing
     the memo (which is keyed for the canonical auto derivation only
     — a forced path must never be served from, or stored into, it)."""
-    import os
+    if norm_path != "auto":
+        return _cosine_pairs_frame(spark, sf_dir, norm_path)
+    return memoized(
+        "knn_user_pairs", spark, sf_dir, lambda: _cosine_pairs_frame(spark, sf_dir, "auto")
+    )
 
-    # plan-audit mode (SPARK_GRAFT_NO_CHECKPOINT) bypasses the memo: a
-    # cache is a materialization barrier that would hide the pipeline
-    # from .explain exactly like the checkpoint the audit disables
-    audit_mode = bool(os.environ.get("SPARK_GRAFT_NO_CHECKPOINT"))
-    canonical = norm_path == "auto"
-    memo_key = _memo_key(spark, sf_dir)
-    if not audit_mode and canonical:
-        hit = _PAIRS_MEMO.get(memo_key)
-        if hit is not None:
-            note_warm_hit()
-            return hit
-        _evict_other_sessions(memo_key)
+
+def _cosine_pairs_frame(spark: SparkSession, sf_dir: str, norm_path: str) -> DataFrame:
     r = cached_ratings(spark, sf_dir)
     a = r.select(
         F.col("user_id").alias("u"), "item_id", F.col("rating").alias("ra")
@@ -378,15 +318,11 @@ def _user_cosine_pairs(
         # regressed knn at sf1 (r9: 2.2s -> 3.5s when the r8-advice fix
         # naively dropped the cache; an unpersist-after-materialize
         # variant ALSO regressed, because re-executions of the memoized
-        # pairs frame then rebuild b twice per action). So the
-        # canonical path caches b and REGISTERS it in _PRUNED_B_MEMO —
-        # the advice's clearable-memo option: bench/session hygiene
-        # (clear_memos) releases it between blocks, so nothing pins for
-        # the life of the session. Forced (non-canonical) calls skip
-        # the cache entirely: test-only, correctness-checked, no pin.
-        if not audit_mode and canonical:
-            b = b.cache()
-            _PRUNED_B_MEMO[memo_key] = b
+        # pairs frame then rebuild b twice per action). So b is a
+        # session memo of its own: it does not depend on norm_path, and
+        # clear_all() releases it with the pairs memo.
+        contributors = b
+        b = memoized("knn_pruned_contributors", spark, sf_dir, lambda: contributors)
         cand_users = (
             b.select(F.col("v").alias("user_id"))
             .union(a.select(F.col("u").alias("user_id")))
@@ -418,12 +354,7 @@ def _user_cosine_pairs(
         )
     )
     w = Window.partitionBy("u").orderBy(F.desc("sim"), F.asc("v"))
-    out = sims.withColumn("rn", F.row_number().over(w).cast("bigint"))
-    if audit_mode or not canonical:
-        return out
-    out = out.cache()
-    _PAIRS_MEMO[memo_key] = out
-    return out
+    return sims.withColumn("rn", F.row_number().over(w).cast("bigint"))
 
 
 @query(
@@ -523,12 +454,9 @@ def knn_user_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ratings cache is hot — unlike a driver collect(), the
     # recommendation set stays distributed (at 100 TB the per-user
     # top-k across all users is not driver-sized). The shared ratings
-    # cache is NOT unpersisted here: knn_user_neighbors' memoized pairs
-    # frame recomputes through it, and session-level block cleanup
-    # (bench.py's _release_leaked_state, or a real driver's
-    # between-pipeline hygiene) owns its lifetime.
-    out = result_checkpoint(out)
-    return out
+    # memo is NOT unpersisted here: knn_user_neighbors' memoized pairs
+    # frame recomputes through it.
+    return result_checkpoint(out)
 
 
 # --- ALS scale-form twin ---------------------------------------------------

@@ -25,14 +25,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to
+from ..plans.checkpointing import result_checkpoint
+from ..plans.memos import memoized
 from ..plans.registry import query
 from ..sources import load
 from .concurrency import run_concurrently
 
 SEED = 42
-
-
-_FEATURES_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def daily_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,15 +41,13 @@ def daily_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (M:327-352 trains one model per measure) plus the user's market
     segment (broadcast dim join) as a categorical feature for the GBT.
 
-    Memoized + cached per (session, sf_dir): five ML queries consume
-    this table; without the memo each rebuilt the rollup+window plan
-    from the raw events scan. Only the latest entry is kept — stale
-    keys would pin DataFrames of stopped sessions for process life."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _FEATURES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _FEATURES_CACHE.clear()
+    A session memo (plans/memos.py): five ML queries consume this
+    table; without the memo each rebuilt the rollup+window plan from
+    the raw events scan."""
+    return memoized("daily_features", spark, sf_dir, lambda: _feature_table(spark, sf_dir))
+
+
+def _feature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("ds"), "user_id").agg(
         F.count("*").alias("n_events"),
@@ -67,7 +64,7 @@ def daily_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "segment", F.coalesce("c_mktsegment", F.lit("NONE"))
     ).drop("c_mktsegment")
     w = Window.partitionBy("user_id").orderBy("ds")
-    out = (
+    return (
         daily.withColumn("dow", F.dayofweek("ds").cast("double"))
         .withColumn("prev_events", F.coalesce(F.lag("n_events").over(w), F.lit(0)).cast("double"))
         .withColumn("prev2_events", F.coalesce(F.lag("n_events", 2).over(w), F.lit(0)).cast("double"))
@@ -77,9 +74,7 @@ def daily_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("label_purchase", F.lead("n_purchase").over(w).cast("double"))
         .withColumn("label_morning", F.lead("n_morning").over(w).cast("double"))
         .withColumn("label_afternoon", F.lead("n_afternoon").over(w).cast("double"))
-    ).cache()
-    _FEATURES_CACHE[key] = out
-    return out
+    )
 
 
 FEATURES = ("n_events", "n_click", "n_purchase", "total_value", "dow", "prev_events", "prev2_events")
@@ -259,9 +254,8 @@ def _gbt_split(feats: DataFrame, label: str):
     # internal conversion AND the blend's two transform passes each
     # replayed the StringIndexer->assembler->VectorIndexer chain over
     # the features cache otherwise. Same rows, same partitioning ->
-    # identical seeded fits (A/B row-equality pinned); blocks are swept
-    # by the bench's between-query state release.
-    assembled = assembled.localCheckpoint(eager=True)
+    # identical seeded fits (A/B row-equality pinned).
+    assembled = result_checkpoint(assembled)
     train = assembled.filter(F.col("ds") < "2024-01-22")
     test = assembled.filter(F.col("ds") >= "2024-01-22")
     return train, test

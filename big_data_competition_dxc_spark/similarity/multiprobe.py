@@ -202,17 +202,23 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = result_checkpoint(
         j.agg(
             F.count("ex").cast("bigint").alias("exact_pairs"),
-            F.sum(F.when(F.col("pmin") == 0, 1).otherwise(0))
+            F.coalesce(F.sum(F.when(F.col("pmin") == 0, 1).otherwise(0)), F.lit(0))
             .cast("bigint")
             .alias("single_candidates"),
             F.count("pmin").cast("bigint").alias("multi_candidates"),
-            F.sum(
-                F.when((F.col("ex") == 1) & (F.col("pmin") == 0), 1).otherwise(0)
+            F.coalesce(
+                F.sum(
+                    F.when((F.col("ex") == 1) & (F.col("pmin") == 0), 1).otherwise(0)
+                ),
+                F.lit(0),
             )
             .cast("bigint")
             .alias("single_hits"),
-            F.sum(
-                F.when((F.col("ex") == 1) & F.col("pmin").isNotNull(), 1).otherwise(0)
+            F.coalesce(
+                F.sum(
+                    F.when((F.col("ex") == 1) & F.col("pmin").isNotNull(), 1).otherwise(0)
+                ),
+                F.lit(0),
             )
             .cast("bigint")
             .alias("multi_hits"),
@@ -227,10 +233,9 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # the 1-row summary is materialized eagerly (result_checkpoint) so
-    # the two corpus-sized caches — NOT cleared by bench's session
-    # hygiene, which only clears registered memos — can be unpersisted
-    # before returning (r8 advice). exact/cand are single-consumer now
-    # and no longer cached at all.
+    # the two corpus-sized caches can be unpersisted before returning
+    # (r8 advice). exact/cand are single-consumer now and no longer
+    # cached at all.
     for c in (qs, corpus):
         c.unpersist()
     return out

@@ -5,7 +5,12 @@
    through DuckDB — row count + sorted columns + order-insensitive
    value hash. Queries without an oracle get a rows-only check.
 
-Exit code 0 iff everything matches. Run from the repo root.
+3. leak check: after the query loop, ``plans.memos.clear_all()`` must
+   leave no persisted RDD in the session (a query that pins blocks
+   outside the memo store would show up here).
+
+Exit code 0 iff everything matches and nothing leaks. Run from the repo
+root.
 
 ``--only name1,name2`` restricts the t2 gate to the named queries (for
 targeted re-checks after editing one family; the smoke step still runs).
@@ -45,6 +50,7 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     import importlib
 
+    from big_data_competition_dxc_spark.plans.memos import clear_all
     from big_data_competition_dxc_spark.session import get_spark
     from big_data_competition_dxc_spark.sources import TABLES
 
@@ -102,6 +108,10 @@ def main() -> int:
         print(
             f"{'MATCH' if ok else 'FAIL '} {name}: spark={len(srows)} duck={len(drows)} ({dt:.1f}s)"
         )
+    clear_all()
+    leaked = len(spark.sparkContext._jsc.getPersistentRDDs())
+    if leaked:
+        failures.append(f"{leaked} persisted RDDs after clear_all()")
     if failures:
         print(f"\n{len(failures)} FAILURES: {failures}")
         return 1

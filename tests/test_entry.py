@@ -391,26 +391,36 @@ def test_stamping_invariant_at_judge_checkpoint_state():
 
 
 def test_central_memo_registry_clears_everything(spark):
-    """Every session memo (ml/recommend's three + dedup/simhash's pair
-    set) must register with plans/memos.py so one clear_all() releases
-    them — an unregistered free-floating cache is the r8-advice leak
-    class. Builds each memo, then asserts clear_all empties them."""
+    """Every session memo lives in the one central store of
+    plans/memos.py, so one clear_all() releases them all — a
+    free-floating module-level cache is the r8-advice leak class.
+    Builds the simhash pair set and the ratings memo, asserts both sit
+    in the store cached, then that clear_all empties the store and
+    releases their blocks, and that a rebuild after clearing works."""
+    from pyspark import StorageLevel
+
     from big_data_competition_dxc_spark import plans
-    from big_data_competition_dxc_spark.dedup import simhash
     from big_data_competition_dxc_spark.ml import recommend
     from big_data_competition_dxc_spark.plans import memos
+    from conftest import SF_TEST_DIR
 
-    plans.QUERIES["simhash_neardup_pairs"].fn(spark, "/root/testdata/sf0.001").count()
-    recommend.cached_ratings(spark, "/root/testdata/sf0.001").count()
-    assert simhash._PAIRS_MEMO and recommend._RATINGS_MEMO
-    assert simhash._PAIRS_MEMO in memos._REGISTRY
-    assert recommend._RATINGS_MEMO in memos._REGISTRY
-    assert recommend._PAIRS_MEMO in memos._REGISTRY
-    assert recommend._PRUNED_B_MEMO in memos._REGISTRY
+    plans.load_all()
+
+    def stored() -> set[str]:
+        return {k[0] for k in memos._MEMOS}
+
+    pairs = plans.QUERIES["simhash_neardup_pairs"].fn(spark, SF_TEST_DIR)
+    pairs.count()
+    ratings = recommend.cached_ratings(spark, SF_TEST_DIR)
+    ratings.count()
+    assert {"simhash_pairs", "ratings"} <= stored()
+    assert pairs.storageLevel != StorageLevel.NONE
+    assert ratings.storageLevel != StorageLevel.NONE
     memos.clear_all()
-    assert not simhash._PAIRS_MEMO
-    assert not recommend._RATINGS_MEMO
+    assert not memos._MEMOS
+    assert pairs.storageLevel == StorageLevel.NONE
+    assert ratings.storageLevel == StorageLevel.NONE
     # second build after clearing must work (no stale state)
-    plans.QUERIES["simhash_neardup_pairs"].fn(spark, "/root/testdata/sf0.001").count()
-    assert simhash._PAIRS_MEMO
+    plans.QUERIES["simhash_neardup_pairs"].fn(spark, SF_TEST_DIR).count()
+    assert "simhash_pairs" in stored()
     memos.clear_all()

@@ -90,3 +90,31 @@ def test_null_text_parity(name, spark, edge_dir):
     # produce a NULL-vs-'' divergence — pin the intended semantics too.
     if name == "udtf_word_chunks":
         assert all(r[0] != 0 for r in spark_rows), "NULL text must emit no chunks"
+
+
+def test_multiprobe_recall_empty_embeddings(spark, tmp_path):
+    """An empty embeddings input gives a summary row of zero counts in
+    both engines, never NULL (a SUM over no rows is NULL in Spark)."""
+    from conftest import SF_TEST_DIR
+
+    entry = plans.QUERIES["ann_multiprobe_recall"]
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * FROM read_parquet('{SF_TEST_DIR}/embeddings.parquet') LIMIT 0)"
+        f" TO '{tmp_path}/embeddings.parquet' (FORMAT PARQUET)"
+    )
+    con.execute(
+        f"CREATE VIEW embeddings AS "
+        f"SELECT * FROM read_parquet('{tmp_path}/embeddings.parquet')"
+    )
+    rel = con.execute(entry.oracle)
+    duck_cols = [dsc[0] for dsc in rel.description]
+    duck_rows = rel.fetchall()
+    con.close()
+
+    sdf = entry.fn(spark, str(tmp_path))
+    spark_rows = [tuple(r) for r in sdf.collect()]
+    assert len(spark_rows) == 1
+    counts = {c: v for c, v in zip(sdf.columns, spark_rows[0]) if c not in ("n_queries", "k")}
+    assert counts and all(v == 0 for v in counts.values()), counts
+    assert _rowset(sdf.columns, spark_rows) == _rowset(duck_cols, duck_rows)
