@@ -1,6 +1,6 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Thin shim over ``big_data_competition_dxc_spark.plans`` — the query
+Thin view of ``big_data_competition_dxc_spark.plans`` — the query
 registry is the single source of truth; every operator from SURVEY.md §2
 registers a ``queries()`` entry there and, when SQL-expressible, a DuckDB
 ``oracle_sql()`` twin.
@@ -8,14 +8,6 @@ registers a ``queries()`` entry there and, when SQL-expressible, a DuckDB
 
 from __future__ import annotations
 
-import ast
-import glob
-import hashlib
-import inspect
-import json
-import os
-import textwrap
-import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,186 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from big_data_competition_dxc_spark import plans
 
 plans.load_all()
-
-#: Sidecar recording, per query, the contract fingerprint that was
-#: current when the driver last proved the query green. Written by
-#: ``scripts/update_contracts.py`` (run at ROUND START, before any
-#: edits, when the tree is still byte-identical to what the driver
-#: tested); read by ``_rotation_order``.
-CONTRACTS_FILE = "CONTRACTS.json"
-
-
-#: Root package whose helpers participate in the transitive fingerprint.
-_PACKAGE = "big_data_competition_dxc_spark"
-
-#: Per-function memo of the transitive callee-source map (fn objects are
-#: import-stable, and _rotation_order fingerprints all ~245 entries on
-#: every queries()/oracle_sql() call). Weak-keyed on the function OBJECT
-#: (identity hash) rather than id(): a recycled id after a module reload
-#: or re-registration could otherwise serve a stale dependency map
-#: (r10 advice, __spark_entry__.py:161).
-_CALLEE_CACHE: "weakref.WeakKeyDictionary[object, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-#: Module-level constant types included in the fingerprint by repr — a
-#: referenced scalar like ANN_LSH_BITS changes query behavior exactly
-#: like a helper edit does. Mutable containers (memo dicts, caches) are
-#: deliberately excluded: their contents vary per session.
-_CONST_TYPES = (int, float, str, bytes, bool, tuple, frozenset)
-
-
-def _is_det_const(obj: object) -> bool:
-    """True for scalars and (recursively) all-scalar tuples/frozensets
-    — anything whose canonical repr is process-stable. An object
-    element would repr with a memory address and flip the fingerprint
-    per process."""
-    if type(obj) in (int, float, str, bytes, bool):
-        return True
-    if isinstance(obj, (tuple, frozenset)):
-        return all(_is_det_const(x) for x in obj)
-    return False
-
-
-def _has_frozenset(obj: object) -> bool:
-    if isinstance(obj, frozenset):
-        return True
-    if isinstance(obj, tuple):
-        return any(_has_frozenset(x) for x in obj)
-    return False
-
-
-def _const_repr(obj: object) -> str:
-    """Process-stable repr. Plain ``repr`` except where a frozenset is
-    present — set iteration order is salted per process for strings,
-    so frozensets are sorted before rendering. The repr-compatible
-    fast path matters: switching tuple rendering would spuriously flip
-    every stamped fingerprint that references a tuple constant."""
-    if not _has_frozenset(obj):
-        return repr(obj)
-    if isinstance(obj, frozenset):
-        return "frozenset({" + ",".join(sorted(_const_repr(x) for x in obj)) + "})"
-    return "(" + ",".join(_const_repr(x) for x in obj) + ")"
-
-
-def _collect_deps(fn: object, seen: set[str], out: dict[str, str]) -> None:
-    """AST-walk ``fn``'s source for referenced names, resolve them in
-    its module globals, and record the source of every same-package
-    function/class plus the repr of every referenced immutable constant
-    — recursively for functions, so an edit anywhere in a query's
-    same-package call graph flips its fingerprint (the r9 blind spot:
-    connected_components/jaccard_pairs_cached rewrites did not flip
-    their three registered callers)."""
-    try:
-        src = inspect.getsource(fn)
-        tree = ast.parse(textwrap.dedent(src))
-    except (OSError, TypeError, SyntaxError):
-        return
-    g = getattr(fn, "__globals__", {})
-    resolved: list[tuple[str, object]] = []
-    attrs: set[tuple[str, str]] = set()
-    names: set[str] = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Name):
-            names.add(node.id)
-        elif isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
-            attrs.add((node.value.id, node.attr))
-    for n in sorted(names):
-        if n in g:
-            resolved.append((n, g[n]))
-    for base, attr in sorted(attrs):
-        mod = g.get(base)
-        if inspect.ismodule(mod) and getattr(mod, "__name__", "").startswith(
-            _PACKAGE
-        ):
-            obj = getattr(mod, attr, None)
-            if obj is not None:
-                resolved.append((f"{base}.{attr}", obj))
-    for label, obj in resolved:
-        in_pkg = getattr(obj, "__module__", "") or ""
-        if inspect.isfunction(obj) and in_pkg.startswith(_PACKAGE):
-            key = f"{obj.__module__}.{getattr(obj, '__qualname__', label)}"
-            if key in seen:
-                continue
-            seen.add(key)
-            try:
-                out[key] = inspect.getsource(obj)
-            except (OSError, TypeError):
-                out[key] = repr(obj)
-            _collect_deps(obj, seen, out)
-        elif inspect.isclass(obj) and in_pkg.startswith(_PACKAGE):
-            key = f"{obj.__module__}.{getattr(obj, '__qualname__', label)}"
-            if key not in seen:
-                seen.add(key)
-                try:
-                    out[key] = inspect.getsource(obj)
-                except (OSError, TypeError):
-                    out[key] = repr(obj)
-        elif _is_det_const(obj):
-            # Qualify by the module the name was resolved IN — two
-            # same-named constants in different modules of one call
-            # graph must hash independently, or an edit to the
-            # shadowed one never flips the caller (r10 advice,
-            # __spark_entry__.py:136). For `mod.ATTR` references the
-            # defining module is the referenced one.
-            base = label.split(".", 1)[0]
-            owner = g.get(base) if "." in label else None
-            owner_name = (
-                getattr(owner, "__name__", None)
-                if inspect.ismodule(owner)
-                else None
-            ) or getattr(fn, "__module__", "?")
-            key_label = label.split(".", 1)[1] if "." in label else label
-            out.setdefault(
-                f"const:{owner_name}.{key_label}", _const_repr(obj)
-            )
-
-
-def _fingerprint(entry: plans.QueryEntry) -> str:
-    """Computed contract fingerprint: hash of the oracle SQL, the query
-    function's source, and (since r10) the transitive source of every
-    same-package function/class it references plus the repr of every
-    referenced module-level immutable constant. Any edit to any of
-    those changes the hash, so a driver-green row recorded against the
-    OLD fingerprint no longer vouches for the query —
-    ``_rotation_order`` ranks it stale-fail until the driver re-proves
-    it. Replaces the hand-maintained ``contract_bump_round`` dict,
-    whose failure mode (a rewrite nobody remembered to bump — r7's
-    stream_incremental_dedup) was that it relied on a human noticing;
-    the r9 registered-source-only variant's failure mode (helper edits
-    invisible — the neardup_components family) was the same thing one
-    level down."""
-    try:
-        src = inspect.getsource(entry.fn)
-    except (OSError, TypeError):  # builtins / REPL-defined: fall back
-        src = repr(entry.fn)
-    deps = _CALLEE_CACHE.get(entry.fn)
-    if deps is None:
-        deps = {}
-        _collect_deps(entry.fn, set(), deps)
-        try:
-            _CALLEE_CACHE[entry.fn] = deps
-        except TypeError:  # non-weakref-able callables: recompute each time
-            pass
-    dep_blob = "\x00".join(f"{k}\x01{deps[k]}" for k in sorted(deps))
-    payload = (entry.oracle or "<rows-only>") + "\x00" + src + "\x00" + dep_blob
-    return hashlib.sha256(payload.encode()).hexdigest()[:16]
-
-
-def _record_succeeded(rec: object) -> bool:
-    """True if a CORRECTNESS record is a successful run: rows-only
-    queries store the sentinel err='no_oracle' on SUCCESS; any recorded
-    False verdict (the r5 q12 lesson: hash mismatch with err=null) or a
-    real traceback is a failure."""
-    if not isinstance(rec, dict):
-        return False
-    if rec.get("err") and rec.get("err") != "no_oracle":
-        return False
-    if any(
-        rec.get(k) is False for k in ("rows_match", "schema_match", "hash_match")
-    ):
-        return False
-    return rec.get("spark_rows") is not None
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -214,100 +26,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return daily_user_rollup(spark, "/root/testdata/sf0.001")
 
 
-def _rotation_order(history_dir: str | None = None) -> list[str]:
-    """Registry names ordered stale-err first, then never-driver-checked.
-
-    The driver's correctness gate samples ~50 queries per round from the
-    front of this dict; every query is verified locally regardless
-    (tests/test_oracle_parity.py parametrizes all oracles), but the
-    driver's independent check is the hard signal. Priority classes,
-    derived from the recorded CORRECTNESS_r*.json history:
-
-    1. queries whose LATEST driver record is a FAILURE — either a real
-       `err` traceback or any of rows/schema/hash recorded False (the
-       round-5 q12 lesson: a hash mismatch with err=null is just as
-       red as a crash, and must be re-proven by the driver before
-       anything new is) — and queries whose computed contract
-       fingerprint no longer matches the one recorded in
-       CONTRACTS.json at their last driver-green (edited since proven;
-       see ``_fingerprint``);
-    2. queries the driver has never sampled;
-    3. everything already green, LEAST-RECENTLY-checked first (registry
-       order as tie-break) — so the ~50-query window genuinely rotates
-       through the registry instead of re-sampling the same green head
-       every round.
-
-    "Latest" wins by NUMERIC round (CORRECTNESS_r10 sorts after _r9
-    even though it sorts before lexicographically).
-    """
-    latest: dict[str, bool] = {}  # name -> latest recorded run failed
-    latest_round: dict[str, int] = {}  # name -> round of latest record
-
-    def _round_no(path: str) -> int:
-        stem = os.path.basename(path)
-        digits = "".join(ch for ch in stem if ch.isdigit())
-        return int(digits) if digits else -1
-
-    here = history_dir or os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(
-        glob.glob(os.path.join(here, "CORRECTNESS_r*.json")), key=_round_no
-    ):
-        try:
-            with open(path) as f:
-                records = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(records, dict):
-            # a truncated/legacy file (e.g. a bare list of names) must
-            # degrade to "unknown history", never crash the driver's
-            # queries() entry point
-            continue
-        for name, rec in records.items():
-            latest[name] = not _record_succeeded(rec)
-            latest_round[name] = _round_no(path)
-    # Computed contract staleness (replaces the r3-r7 hand-maintained
-    # contract_bump_round dict): CONTRACTS.json records, per query, the
-    # fingerprint (oracle SQL + function source) that was current when
-    # the driver last proved the query green. A query whose CURRENT
-    # fingerprint differs was edited since its proof — its green row
-    # vouches for code that no longer exists, so it ranks stale-fail
-    # until the driver re-proves it (after which the round-start
-    # updater re-stamps the sidecar and it rotates normally). Queries
-    # with no sidecar entry (never driver-green, or pre-bootstrap) fall
-    # through to the normal classes.
-    contract_stale: set[str] = set()
-    try:
-        with open(os.path.join(here, CONTRACTS_FILE)) as f:
-            contracts = json.load(f)
-    except (OSError, ValueError):
-        contracts = {}
-    if isinstance(contracts, dict):
-        for name, entry in plans.QUERIES.items():
-            rec = contracts.get(name)
-            if (
-                isinstance(rec, dict)
-                and rec.get("fingerprint")
-                and rec["fingerprint"] != _fingerprint(entry)
-            ):
-                contract_stale.add(name)
-    names = list(plans.QUERIES)
-    stale_fail = [n for n in names if latest.get(n) or n in contract_stale]
-    never = [n for n in names if n not in latest and n not in stale_fail]
-    idx = {n: i for i, n in enumerate(names)}
-    green = sorted(
-        (n for n in names if latest.get(n) is False and n not in stale_fail),
-        key=lambda n: (latest_round.get(n, 0), idx[n]),
-    )
-    return stale_fail + never + green
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: plans.QUERIES[name].fn for name in _rotation_order()}
+    return {name: e.fn for name, e in plans.QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: plans.QUERIES[name].oracle
-        for name in _rotation_order()
-        if plans.QUERIES[name].oracle is not None
-    }
+    return {name: e.oracle for name, e in plans.QUERIES.items() if e.oracle is not None}

@@ -94,7 +94,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             # advice), and df.rdd wraps a NEW deserializing RDD, not
             # the checkpointed one. Rounds are bounded (<= MAX_ROUNDS
             # O(V)-sized blocks); the ContextCleaner frees them on GC
-            # and bench releases all persistent RDDs between queries.
+            # and plans.memos.clear_all() unpersists every persisted RDD.
             return nodes.join(labels, "id", "left").select(
                 "id", F.coalesce("label", "id").alias("label")
             )

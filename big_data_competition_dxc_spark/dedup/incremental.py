@@ -20,7 +20,7 @@ Two registered variants, same pipeline:
   to traffic" shape.
 - ``incremental_dedup_fixed_delta``: delta = the FIXED first
   {FIXED_DELTA_DOCS} doc ids — |delta| is constant at every scale
-  factor, so the bench's sf1/sf0.1 wall ratio on this query MEASURES
+  factor, so the sf1/sf0.1 wall ratio on this query MEASURES
   the corpus-size dependence the design claims is sub-linear (the
   corpus side still pays one signature pass here because the fixture
   recomputes the index inline; at warehouse scale that side is a

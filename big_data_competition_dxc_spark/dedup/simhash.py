@@ -265,7 +265,7 @@ def simhash_neardup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming-distance histogram of the near-dup pair set (pairs and
     distinct docs per distance): the constant-size calibration form —
     at most HAMMING_THRESHOLD+1 output rows at ANY corpus size, so the
-    BENCH output_ratio stays ~1 while the listing form's grows with
+    output/input row ratio stays ~1 while the listing form's grows with
     the pair count. One extra shuffle (groupBy hamming) over the same
     pigeonhole candidate join."""
     pairs = simhash_neardup_pairs(spark, sf_dir)

@@ -167,8 +167,8 @@ def ml_cluster_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = per_cluster[0]
     for df in per_cluster[1:]:
         out = out.unionByName(df)
-    # the evaluation reads the checkpointed blocks directly; the bench's
-    # between-query state release sweeps them afterwards
+    # the evaluation reads the checkpointed blocks directly;
+    # plans.memos.clear_all() releases them afterwards
     rows = out.orderBy("cluster_id").collect()
     # audited scalar (r7): the total test-row count across clusters is
     # seed-stable (seeded KMeans assignment + fixed date split), so

@@ -294,7 +294,7 @@ def q12_priority_by_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate prunes the lineitem scan; the join shuffles once on
     orderkey and the two-row result needs no further exchange.
 
-    Round-6 hardening (the r5 driver hash mismatch, CORRECTNESS_r05):
+    Round-6 hardening (the r5 driver hash mismatch):
     this was the only oracle in the registry whose result carried
     DuckDB HUGEINT columns (uncast SUM over INTEGER), which an
     arrow/pandas canonicalizer renders as decimal128/float and

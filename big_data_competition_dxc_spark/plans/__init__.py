@@ -1,149 +1,28 @@
+import importlib
+import pkgutil
+from types import ModuleType
+
 from .registry import QUERIES, QueryEntry, query  # noqa: F401
+
+_ROOT = __name__.partition(".")[0]
 
 
 def load_all() -> None:
-    """Import every module that registers queries (idempotent).
+    """Import every module of the package, so each ``@query`` registers
+    (idempotent). A module joins the registry by existing; there is no
+    list to keep in step.
 
-    Registration order no longer drives the external correctness
-    sample: ``__spark_entry__.queries()`` re-sorts the registry at call
-    time, stably partitioning queries with no recorded
-    CORRECTNESS_r*.json row to the front, so the driver's ~50-query
-    window rotates through the whole registry across rounds. Module
-    order below is kept roughly flagship-first for readability. Every
-    query is verified locally regardless of order
-    (tests/test_oracle_parity.py parametrizes all oracles)."""
-    from ..operators import rollup  # noqa: F401  (flagship pipeline first)
+    The walk imports each module itself instead of using
+    ``pkgutil.walk_packages``, which swallows an ``ImportError`` raised
+    by a subpackage: a failed import is a broken build and must surface,
+    not silently shrink the registry. (``streaming/typed_state.py``
+    registers its query only when ``google.protobuf`` imports; that gate
+    sits inside the module, which itself always imports.)"""
+    _import_tree(importlib.import_module(_ROOT))
 
-    # Widened per phase; each import populates QUERIES via @query.
-    for modpath in (
-        # --- round-4 late additions (never yet in a driver window) ---
-        "big_data_competition_dxc_spark.graph.pagerank",
-        "big_data_competition_dxc_spark.ml.itemcf",
-        "big_data_competition_dxc_spark.streaming.outer_join",
-        "big_data_competition_dxc_spark.ml.seqmining",
-        "big_data_competition_dxc_spark.sources.pysource",
-        "big_data_competition_dxc_spark.operators.recursive_cte",
-        "big_data_competition_dxc_spark.functions.udtf_ops",
-        "big_data_competition_dxc_spark.operators.privacy",
-        "big_data_competition_dxc_spark.operators.cdc_deletes",
-        "big_data_competition_dxc_spark.ml.negative_sampling",
-        "big_data_competition_dxc_spark.similarity.hard_negatives",
-        "big_data_competition_dxc_spark.functions.grouped_pandas",
-        "big_data_competition_dxc_spark.textops.mixture",
-        "big_data_competition_dxc_spark.textops.span_corruption",
-        "big_data_competition_dxc_spark.operators.maintenance",
-        "big_data_competition_dxc_spark.ml.ranking_eval",
-        "big_data_competition_dxc_spark.streaming.lateness_audit",
-        # --- previously driver-unverified surface (round-3 reorder) ---
-        "big_data_competition_dxc_spark.dedup.exact",
-        "big_data_competition_dxc_spark.dedup.minhash",
-        "big_data_competition_dxc_spark.dedup.incremental",
-        "big_data_competition_dxc_spark.textops.vocab",
-        "big_data_competition_dxc_spark.similarity.centroids",
-        "big_data_competition_dxc_spark.operators.zorder",
-        "big_data_competition_dxc_spark.graph.triangles",
-        "big_data_competition_dxc_spark.functions.arrow_path",
-        "big_data_competition_dxc_spark.dedup.simhash",
-        "big_data_competition_dxc_spark.dedup.jaccard",
-        "big_data_competition_dxc_spark.similarity.cosine",
-        "big_data_competition_dxc_spark.similarity.ivf",
-        "big_data_competition_dxc_spark.textops.quality",
-        "big_data_competition_dxc_spark.textops.langid",
-        "big_data_competition_dxc_spark.textops.fingerprint",
-        "big_data_competition_dxc_spark.multimodal.binary_ops",
-        "big_data_competition_dxc_spark.ml.recommend",
-        "big_data_competition_dxc_spark.streaming.rollup_stream",
-        "big_data_competition_dxc_spark.streaming.sessionize",
-        "big_data_competition_dxc_spark.streaming.stateful",
-        "big_data_competition_dxc_spark.operators.timeseries",
-        "big_data_competition_dxc_spark.functions.datequeries",
-        "big_data_competition_dxc_spark.functions.stringqueries",
-        "big_data_competition_dxc_spark.functions.semistructured",
-        "big_data_competition_dxc_spark.operators.asof",
-        "big_data_competition_dxc_spark.operators.feature_pit",
-        "big_data_competition_dxc_spark.textops.bpe_learn",
-        "big_data_competition_dxc_spark.streaming.pit_enrich",
-        # --- round-4 training-data pipeline additions (never yet in a
-        # driver window; placed before the twice-verified relational core) ---
-        "big_data_competition_dxc_spark.textops.repetition",
-        "big_data_competition_dxc_spark.textops.contamination",
-        "big_data_competition_dxc_spark.textops.packing",
-        "big_data_competition_dxc_spark.textops.scrub",
-        "big_data_competition_dxc_spark.similarity.quantize",
-        # --- round-6 additions (never yet in a driver window) ---
-        "big_data_competition_dxc_spark.operators.tpch_classics",
-        "big_data_competition_dxc_spark.operators.tpch_classics_b",
-        "big_data_competition_dxc_spark.textops.boilerplate",
-        "big_data_competition_dxc_spark.streaming.trending",
-        "big_data_competition_dxc_spark.textops.lm_quality",
-        # --- round-8 additions (never yet in a driver window) ---
-        "big_data_competition_dxc_spark.streaming.ann_ingest",
-        "big_data_competition_dxc_spark.similarity.multiprobe",
-        "big_data_competition_dxc_spark.similarity.evolution",
-        # --- round-6 additions (never yet in a driver window) ---
-        "big_data_competition_dxc_spark.operators.dpp",
-        "big_data_competition_dxc_spark.streaming.dedup_ingest",
-        # --- round-5 additions (never yet in a driver window) ---
-        "big_data_competition_dxc_spark.operators.analytic_extras",
-        "big_data_competition_dxc_spark.textops.diversity",
-        "big_data_competition_dxc_spark.streaming.static_join",
-        "big_data_competition_dxc_spark.operators.bloom_join",
-        "big_data_competition_dxc_spark.functions.arrayqueries",
-        "big_data_competition_dxc_spark.similarity.pandas_path",
-        "big_data_competition_dxc_spark.textops.chunking",
-        # transformWithStateInPandas (the current typed-state API) is
-        # implemented in streaming/typed_state.py but self-gates on
-        # `import google.protobuf`: PySpark 4.1.2 ships the full API,
-        # yet its state-server wire protocol is protobuf-based and this
-        # container has no protobuf (execution dies with ImportError:
-        # cannot import name 'descriptor'). The module registers its
-        # query, and its test activates, the moment the runtime image
-        # gains the dependency; applyInPandasWithState
-        # (streaming/stateful.py) is the always-available path.
-        "big_data_competition_dxc_spark.streaming.typed_state",
-        # --- relational core (driver-verified green in rounds 1-2) ---
-        "big_data_competition_dxc_spark.operators.joins",
-        "big_data_competition_dxc_spark.operators.lags",
-        "big_data_competition_dxc_spark.operators.aggregates",
-        "big_data_competition_dxc_spark.operators.filters",
-        "big_data_competition_dxc_spark.operators.setops",
-        "big_data_competition_dxc_spark.operators.topk",
-        "big_data_competition_dxc_spark.sources.roundtrip",
-        "big_data_competition_dxc_spark.operators.bucketing",
-        "big_data_competition_dxc_spark.operators.sql_pipeline",
-        "big_data_competition_dxc_spark.operators.sampling",
-        "big_data_competition_dxc_spark.operators.subqueries",
-        "big_data_competition_dxc_spark.ml.features",
-        "big_data_competition_dxc_spark.ml.regression",
-        "big_data_competition_dxc_spark.ml.clustering",
-        "big_data_competition_dxc_spark.ml.forecast",
-        "big_data_competition_dxc_spark.streaming.sinks",
-        "big_data_competition_dxc_spark.operators.observability",
-        "big_data_competition_dxc_spark.textops.curation",
-        "big_data_competition_dxc_spark.dedup.clustering",
-        "big_data_competition_dxc_spark.textops.relevance",
-        "big_data_competition_dxc_spark.operators.funnel",
-        "big_data_competition_dxc_spark.operators.behavior",
-        "big_data_competition_dxc_spark.dedup.fuzzy",
-        "big_data_competition_dxc_spark.streaming.dedup_stream",
-        "big_data_competition_dxc_spark.operators.history",
-        "big_data_competition_dxc_spark.operators.audit",
-        "big_data_competition_dxc_spark.ml.fpm",
-        # --- round-12 additions (never yet in a driver window) ---
-        "big_data_competition_dxc_spark.dedup.spans",
-        "big_data_competition_dxc_spark.similarity.semdedup",
-        "big_data_competition_dxc_spark.operators.lateral",
-        "big_data_competition_dxc_spark.textops.dsir",
-        "big_data_competition_dxc_spark.streaming.pystream",
-        # --- round-13 additions ---
-        "big_data_competition_dxc_spark.sources.pysink",
-        "big_data_competition_dxc_spark.operators.scripting",
-        "big_data_competition_dxc_spark.streaming.state_reader",
-        # --- round-14 additions ---
-        "big_data_competition_dxc_spark.textops.release",
-        "big_data_competition_dxc_spark.operators.collations",
-        "big_data_competition_dxc_spark.similarity.ivfadc",
-    ):
-        # every listed module exists — a failed import is a broken build
-        # and must surface, not silently shrink the registry
-        __import__(modpath)
+
+def _import_tree(pkg: ModuleType) -> None:
+    for info in pkgutil.iter_modules(pkg.__path__, pkg.__name__ + "."):
+        mod = importlib.import_module(info.name)
+        if info.ispkg:
+            _import_tree(mod)

@@ -10,7 +10,7 @@ the slowest headline query invisible to plan review.
 ``result_checkpoint`` is the one place final-result checkpoints go
 through: scripts/gen_plan_audit.py sets ``SPARK_GRAFT_NO_CHECKPOINT=1``
 so the audited DataFrame keeps its full lineage (the real scan / join /
-exchange profile), while every other consumer (driver, bench, tests)
+exchange profile), while every other consumer (driver, perfbench, tests)
 gets the executor-side materialization unchanged.
 
 ITERATIVE checkpoints (dedup/clustering.py's per-iteration lineage

@@ -1,5 +1,5 @@
 """Query registry: the single source of truth consumed by
-``__spark_entry__.py`` (driver contract), ``bench.py`` and the tests.
+``__spark_entry__.py`` (driver contract), ``perfbench/`` and the tests.
 
 Each entry couples a PySpark implementation (spark, sf_dir) -> DataFrame
 with an optional ANSI-SQL oracle string DuckDB can run over the same
@@ -22,7 +22,7 @@ class QueryEntry:
     fn: QueryFn
     oracle: str | None = None
     doc: str = ""
-    bench: bool = False  # include in bench.py's headline set
+    bench: bool = False  # in the headline set scripts/gen_plan_audit.py audits
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
@@ -35,9 +35,18 @@ def query(
     bench: bool = False,
     tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
-    """Register a named query, optionally paired with its DuckDB oracle."""
+    """Register a named query, optionally paired with its DuckDB oracle.
+
+    A name registers once: ``plans.load_all`` imports modules in file
+    order, so a second registration would otherwise win by file name."""
 
     def deco(fn: QueryFn) -> QueryFn:
+        prev = QUERIES.get(name)
+        if prev is not None:
+            raise ValueError(
+                f"query {name!r} is already registered by "
+                f"{prev.fn.__module__}.{prev.fn.__qualname__}"
+            )
         QUERIES[name] = QueryEntry(
             fn=fn, oracle=oracle, doc=(fn.__doc__ or "").strip(), bench=bench, tags=tags
         )

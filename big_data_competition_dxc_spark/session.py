@@ -39,7 +39,7 @@ def _local_fixture_mode() -> bool:
 
     ``SPARK_GRAFT_LOCAL`` is an explicit override (``0``/``false`` forces
     cluster shape, anything else forces local shape); otherwise the driver
-    contract vars decide. The test/bench/driver entry points all set
+    contract vars decide. The test/perfbench/driver entry points all set
     ``SPARK_GRAFT_CPUS`` (or ``SPARK_GRAFT_SF_DIR``) before calling
     :func:`get_spark`, so a bare import on a real cluster gets stock
     defaults without editing source (r10 advice, session.py:45).
@@ -76,8 +76,8 @@ def _local_confs(cpus: str) -> dict[str, str]:
         "spark.sql.files.openCostInBytes": "256k",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         "spark.ui.enabled": "false",
-        # JVM unified-logging writes to the process stdout, which the
-        # bench/driver contract reserves for exactly one JSON line — an
+        # JVM unified-logging writes to the process stdout, whose last
+        # line perfbench/run.py reserves for its JSON result — an
         # r8 run saw "[warning][gc,alloc] ... GCLocker ..." land on
         # stdout ahead of the payload. Route JVM log output to stderr
         # instead of silencing it (warnings stay visible, stdout stays

@@ -210,10 +210,9 @@ def ann_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "n_cand", "n_adm", "c_id", "sim")
     )
     # Materialize the (|q2|-row) result eagerly so the corpus-sized
-    # signature cache can be unpersisted before returning — bench's
-    # session hygiene only clears the ml/recommend memos, so without
-    # this the cache pins executor memory for the whole driver session
-    # (r8 advice).
+    # signature cache can be unpersisted before returning — it is local
+    # to this query, not a session memo, so otherwise it would pin
+    # executor memory until the next plans.memos.clear_all() (r8 advice).
     out = result_checkpoint(
         q2.select(F.col("vec_id").alias("q_id"))
         .join(best, "q_id", "left")

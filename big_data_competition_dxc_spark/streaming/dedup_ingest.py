@@ -101,7 +101,7 @@ def _formatted_plan(df: DataFrame) -> str:
     this runs inside streaming ``foreachBatch`` — a concurrent thread
     printing during the capture window would have its output swallowed
     into the plan buffer (or plan text could leak onto real stdout,
-    breaking bench's one-JSON-line contract). Batches are sequential
+    breaking perfbench's JSON result line). Batches are sequential
     today, so the module lock is cheap insurance, not a hot path
     (r8 advice)."""
     import contextlib

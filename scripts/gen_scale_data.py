@@ -1,5 +1,6 @@
-"""Generate a 10x scale-up of the driver's sf0.1 fixtures for the
-bench's scale-check block (benchdata/sf1, gitignored, ~10x rows).
+"""Generate a 10x scale-up of the driver's sf0.1 fixtures for scale
+checks (benchdata/sf1, gitignored, ~10x rows): SCALING.md's sf1
+measurements and tests/test_fixture_layout.py read it.
 
 Deterministic DuckDB SQL over the read-only /root/testdata/sf0.1
 parquet: every fact table is replicated COPIES times with key strides

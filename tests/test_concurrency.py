@@ -1,6 +1,6 @@
 """Pins for the r14 optimization internals: ml/concurrency.py's
 thread-pool fit submission and streaming/confscope.py's scoped
-state-partition override (OPTIMIZATION_r14.md)."""
+state-partition override (commit 0278a8b)."""
 
 from __future__ import annotations
 

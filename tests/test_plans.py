@@ -182,6 +182,16 @@ def test_plan_audit(name, spark):
         )
 
 
+def test_registry_rejects_repeated_name(monkeypatch):
+    """load_all() imports modules in file order, so a name registered
+    twice must be an error rather than resolve by file name."""
+    original = plans.QUERIES["daily_rollup"]
+    monkeypatch.setitem(plans.QUERIES, "daily_rollup", original)
+    with pytest.raises(ValueError, match="daily_rollup"):
+        plans.query("daily_rollup")(lambda spark, sf_dir: None)
+    assert plans.QUERIES["daily_rollup"] is original
+
+
 def test_bucketed_join_has_no_exchange(spark):
     # At fixture scale the planner would broadcast (also correct);
     # disable broadcast so the co-located-bucket SMJ — the 100 TB shape
