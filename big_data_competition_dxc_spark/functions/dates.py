@@ -42,25 +42,6 @@ def day_of_week(col: Column | str) -> Column:
     return F.dayofweek(F.col(col) if isinstance(col, str) else col)
 
 
-def epoch_seconds_to_ts(col: Column | str) -> Column:
-    """F6 TimeStamp2Date (M:885-889): epoch-seconds string -> timestamp."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.timestamp_seconds(c.cast("long"))
-
-
-def ds_to_epoch_millis(col: Column | str) -> Column:
-    """F7 date2TimeStamp (M:892-897): yyyyMMdd -> epoch millis."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_timestamp(F.to_date(c, DS_FMT)) * F.lit(1000)
-
-
-def days_between(now: Column | str, earlier: Column | str) -> Column:
-    """F8 getDay (M:902-906): whole days between two dates (song age)."""
-    a = F.col(now) if isinstance(now, str) else now
-    b = F.col(earlier) if isinstance(earlier, str) else earlier
-    return F.datediff(a, b)
-
-
 def hour_bucket4(hour: Column | str) -> Column:
     """F9 getTime (M:909-919): 4-way bucket over hour-of-day.
     (8,12] -> 0 morning, (12,18] -> 1 afternoon, (18,23] -> 2 evening,
@@ -72,12 +53,6 @@ def hour_bucket4(hour: Column | str) -> Column:
         .when((h > 18) & (h <= 23), F.lit(2))
         .otherwise(F.lit(3))
     )
-
-
-def hour_bucket2(hour: Column | str) -> Column:
-    """F10 getTimes (M:115): binary split, hour < 8 -> morning flag."""
-    h = F.col(hour) if isinstance(hour, str) else hour
-    return F.when(h < 8, F.lit(1)).otherwise(F.lit(0))
 
 
 # DuckDB-oracle fragments for the same semantics (used by plans/*.py oracle

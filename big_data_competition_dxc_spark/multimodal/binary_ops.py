@@ -1,11 +1,10 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed
 metadata, processed with Arrow-batched ``mapInPandas``.
 
-The container has no image/audio codecs, so the DECODE step is stubbed
-(deterministic byte-level features / an explicit NotImplementedError for
-real codec paths) — but everything Spark-side is real and tested: binary
-column schema, Arrow batch transfer, per-batch pandas processing, and
-output schema stability. ``multimodal_byte_features`` is additionally
+No image/audio codec is a dependency, so the DECODE step is stubbed
+with deterministic byte-level features — but everything Spark-side is
+real and tested: binary column schema, Arrow batch transfer, per-batch
+pandas processing, and output schema stability. ``multimodal_byte_features`` is additionally
 oracle-checked: its byte arithmetic is reproduced in DuckDB over the
 UTF-8 text bytes, proving the Pandas-UDF path computes exactly what the
 declarative engine would.
@@ -101,15 +100,6 @@ _DECODE_SCHEMA = T.StructType(
 )
 
 FEATURE_DIM = 8
-
-
-def decode_image(payload: bytes) -> dict:
-    """Real codec path — unavailable in this container (no PIL/cv2).
-
-    The Spark pipeline around it (binary ingestion, Arrow batching,
-    schema) is real; swap this function for an actual decoder on a
-    cluster with codecs installed."""
-    raise NotImplementedError("image codecs not available in this environment")
 
 
 def _fake_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

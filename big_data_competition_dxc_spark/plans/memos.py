@@ -1,24 +1,33 @@
-"""Session memos (cached canonical DataFrames) and the one release call.
+"""Session memos (canonical DataFrames and table relations) and the one
+release call.
 
 Several query families derive one expensive canonical intermediate that
 multiple registered queries consume: the music feature table
 (ml/regression), the ratings matrix and its cosine pairs (ml/recommend),
 the minhash shingle/band/size frames and the simhash and Jaccard pair
 sets (dedup/). Production runs each derivation once per input; every
-such memo goes through ``memoized``.
+such memo goes through ``memoized``. The same store holds each fixture
+table's resolved relation (``sources.load``, ``cache=False``): the frame
+is kept uncached, so a warm lookup saves the parquet footer read and
+nothing is materialized.
 
 The contract:
 - memos hold PARAMETERLESS canonical derivations only — a forced or
   parameterized variant must never be served from, or stored into, one;
 - an entry is keyed ``(name, applicationId, sf_dir)`` and valid only for
   the input identity it was built from (name, size and ``mtime_ns`` of
-  every entry of ``sf_dir``): a table rewritten under the same path is
-  rebuilt, and the stale frame is unpersisted first, because Spark's
-  CacheManager matches cached data by plan and would otherwise serve the
-  old blocks to the rebuilt scan;
+  every entry under ``sf_dir``, descending into table directories): a
+  table rewritten under the same path is rebuilt, and a stale cached
+  frame is unpersisted first, because Spark's CacheManager matches
+  cached data by plan and would otherwise serve the old blocks to the
+  rebuilt scan;
 - each key has its own lock, so concurrent callers of one memo build it
-  once and the waiters count as warm hits; a memo may build on another
-  memo (locks nest outer-to-inner, never the reverse);
+  once; a memo may build on another memo (locks nest outer-to-inner,
+  never the reverse; a relation builds on nothing, so its lock is
+  always innermost);
+- a waiter or later caller served a cached memo counts as a warm hit;
+  one served an uncached relation does not, because the benchmarks read
+  the count to tell memo-warm readings from standalone query cost;
 - plan-audit mode (``SPARK_GRAFT_NO_CHECKPOINT``) bypasses them: the
   build runs uncached and nothing is stored (a cache is a
   materialization barrier that hides the pipeline from ``.explain``);
@@ -44,25 +53,42 @@ _LOCK = threading.Lock()  # guards the three globals below
 _MEMOS: dict[_Key, tuple[tuple, DataFrame]] = {}  # key -> (input identity, frame)
 _KEY_LOCKS: dict[_Key, threading.Lock] = {}
 
-#: Count of memo lookups served warm since the last ``consume_warm_hits``
+#: Count of cached-memo lookups served warm since the last ``consume_warm_hits``
 #: — the benchmarks read it to tell memo-warm readings from standalone
 #: query cost.
 _WARM_HITS = 0
 
 
-def _input_identity(sf_dir: str) -> tuple:
-    """Name, size and mtime of every entry of ``sf_dir``."""
-    with os.scandir(sf_dir) as it:
+def _input_identity(path: str) -> tuple:
+    """Name, size and mtime of every entry under ``path``. It descends
+    into directories: Spark's writer stores a table as a directory, and
+    a part file rewritten in place leaves the directory's own size and
+    mtime as they were."""
+    with os.scandir(path) as it:
         return tuple(
-            sorted((e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in it)
+            sorted(
+                (
+                    e.name,
+                    e.stat().st_size,
+                    e.stat().st_mtime_ns,
+                    _input_identity(e.path) if e.is_dir() else (),
+                )
+                for e in it
+            )
         )
 
 
 def memoized(
-    name: str, spark: SparkSession, sf_dir: str, build: Callable[[], DataFrame]
+    name: str,
+    spark: SparkSession,
+    sf_dir: str,
+    build: Callable[[], DataFrame],
+    *,
+    cache: bool = True,
 ) -> DataFrame:
-    """``build()`` cached once per (session, ``sf_dir``, input identity)
-    under ``name``; see the module docstring for the contract."""
+    """``build()`` stored once per (session, ``sf_dir``, input identity)
+    under ``name``, and cached unless ``cache`` is false; see the module
+    docstring for the contract."""
     global _WARM_HITS
     if os.environ.get("SPARK_GRAFT_NO_CHECKPOINT"):
         return build()
@@ -80,11 +106,14 @@ def memoized(
         with _LOCK:
             entry = _MEMOS.get(key)
             if entry is not None and entry[0] == identity:
-                _WARM_HITS += 1
+                if cache:
+                    _WARM_HITS += 1
                 return entry[1]
-        if entry is not None:
+        if cache and entry is not None:
             entry[1].unpersist()
-        df = build().cache()
+        df = build()
+        if cache:
+            df = df.cache()
         with _LOCK:
             _MEMOS[key] = (identity, df)
         return df

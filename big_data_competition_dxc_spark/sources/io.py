@@ -6,6 +6,11 @@ temp table per block (M:36). Here: schema-typed ``spark.read`` and one
 ``register_views`` call. Text round-trips between pipeline stages
 (M:98→106 etc.) are deliberately absent — a single lazy Catalyst plan
 replaces them (SURVEY §4).
+
+Each table's relation is resolved once per input identity, not once per
+call: ``load`` keeps the resolved frame in the session memo store
+(``plans.memos``), so a warm call costs a directory scan of ``sf_dir``
+instead of a parquet footer read.
 """
 
 from __future__ import annotations
@@ -13,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..plans.memos import memoized
 
 TABLES = (
     "region",
@@ -57,6 +64,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     filters/projections composed on top reach the scan (checked in
     tests/test_plans.py).
 
+    The relation is resolved once per (session, ``sf_dir``, input
+    identity) and the same uncached frame is returned to every later
+    caller, concurrent ones included; a table rewritten under the same
+    path is resolved anew (``plans.memos.memoized`` with ``cache=False``).
+
     ``events.parquet`` has been written with TIMESTAMP(NANOS) (which
     Spark's parquet reader rejects — read nanos as long, divide to us)
     in some driver generations and plain TIMESTAMP(US, no tz) in
@@ -66,6 +78,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     naive-as-UTC reading of the same file, and downstream epoch math
     (unix_micros) type-checks regardless of which variant the fixture
     carries."""
+    return memoized(
+        f"table:{name}", spark, sf_dir, lambda: _resolve(spark, sf_dir, name), cache=False
+    )
+
+
+def _resolve(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one table's footer and normalize its timestamp types."""
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # Scope the legacy conf to the schema resolution: spark.read

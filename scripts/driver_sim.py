@@ -9,6 +9,9 @@
    leave no persisted RDD in the session (a query that pins blocks
    outside the memo store would show up here).
 
+The last line gives the number of generated classes Janino compiled
+over the t2 sweep, the figure that sizes ``session.CODEGEN_CACHE_ENTRIES``.
+
 Exit code 0 iff everything matches and nothing leaks. Run from the repo
 root.
 
@@ -51,7 +54,7 @@ def main() -> int:
     import importlib
 
     from big_data_competition_dxc_spark.plans.memos import clear_all
-    from big_data_competition_dxc_spark.session import get_spark
+    from big_data_competition_dxc_spark.session import compiled_classes, get_spark
     from big_data_competition_dxc_spark.sources import TABLES
 
     mod = importlib.import_module("__spark_entry__")
@@ -77,6 +80,7 @@ def main() -> int:
         qs = {n: qs[n] for n in names}
     print(f"{len(qs)} queries, {len(oracles)} oracles")
     failures = []
+    compiled0 = compiled_classes(spark)
     for name, fn in sorted(qs.items()):
         t0 = time.perf_counter()
         try:
@@ -114,9 +118,10 @@ def main() -> int:
         failures.append(f"{leaked} persisted RDDs after clear_all()")
     if failures:
         print(f"\n{len(failures)} FAILURES: {failures}")
-        return 1
-    print("\nall good")
-    return 0
+    else:
+        print("\nall good")
+    print(f"codegen: {compiled_classes(spark) - compiled0} classes compiled over the sweep")
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":

@@ -1,7 +1,9 @@
 """The session memo contract of plans/memos.py: one build per input
-under concurrency, rebuilt when the input changes under the same path,
-bypassed in plan-audit mode, and one ``clear_all()`` that releases
-every cached frame and persisted RDD."""
+under concurrency, rebuilt when the input changes under the same path
+(a part file inside a table directory included), bypassed in plan-audit
+mode, and one ``clear_all()`` that releases every cached frame and
+persisted RDD. ``sources.load`` keeps each table's resolved relation in
+the same store, uncached."""
 
 from __future__ import annotations
 
@@ -18,6 +20,7 @@ from pyspark import StorageLevel
 
 from big_data_competition_dxc_spark import plans
 from big_data_competition_dxc_spark.plans import memos
+from big_data_competition_dxc_spark.sources import io
 
 from conftest import SF_TEST_DIR
 
@@ -28,10 +31,22 @@ def _persisted(spark) -> int:
     return len(spark.sparkContext._jsc.getPersistentRDDs())
 
 
-@pytest.mark.parametrize("n_threads", [4, 16])
-def test_concurrent_callers_build_once(spark, tmp_path, n_threads):
+def _copy_fixture(dst: Path) -> str:
+    for f in Path(SF_TEST_DIR).iterdir():
+        shutil.copyfile(f, dst / f.name)
+    return str(dst)
+
+
+@pytest.mark.parametrize(
+    ("n_threads", "via"),
+    [(4, "memoized"), (16, "memoized"), (4, "load"), (16, "load")],
+    ids=["4", "16", "4-load", "16-load"],
+)
+def test_concurrent_callers_build_once(spark, tmp_path, monkeypatch, n_threads, via):
     """Threads asking for one memo at once build it once; every caller
-    that waited on the lock counts as a warm hit."""
+    that waited on the lock counts as a warm hit. Threads loading one
+    table at once resolve it once and share the frame; an uncached
+    relation counts no warm hit."""
     builds = []
     start = threading.Barrier(n_threads, timeout=30)
 
@@ -40,9 +55,26 @@ def test_concurrent_callers_build_once(spark, tmp_path, n_threads):
         time.sleep(0.5)  # hold the lock while the others arrive
         return spark.range(3)
 
+    if via == "load":
+        shutil.copyfile(f"{SF_TEST_DIR}/nation.parquet", tmp_path / "nation.parquet")
+        resolve = io._resolve
+
+        def slow_resolve(*args):
+            build()
+            return resolve(*args)
+
+        monkeypatch.setattr(io, "_resolve", slow_resolve)
+
+        def lookup():
+            return io.load(spark, str(tmp_path), "nation")
+    else:
+
+        def lookup():
+            return memos.memoized("concurrency_probe", spark, str(tmp_path), build)
+
     def call(out: list):
         start.wait()
-        out.append(memos.memoized("concurrency_probe", spark, str(tmp_path), build))
+        out.append(lookup())
 
     got: list = []
     memos.consume_warm_hits()
@@ -56,34 +88,81 @@ def test_concurrent_callers_build_once(spark, tmp_path, n_threads):
             t.join(timeout=60)
         assert not any(t.is_alive() for t in threads)
         assert len(builds) == 1
-        assert memos.consume_warm_hits() == n_threads - 1
+        assert memos.consume_warm_hits() == (n_threads - 1 if via == "memoized" else 0)
         assert len(got) == n_threads and len({id(df) for df in got}) == 1
     finally:
         sys.setswitchinterval(interval)
         memos.clear_all()
 
 
+def _rewrite_a_third(part: Path, d: str, lineitem_glob: str) -> tuple[int, int]:
+    """Rewrite ``part`` in place with a third of its rows; return the
+    (ratings, lineitem) row counts DuckDB then reads from ``d``."""
+    table = pq.read_table(part)
+    pq.write_table(table.slice(0, table.num_rows // 3), part)
+    [(ratings, lineitem)] = duckdb.sql(
+        f"SELECT count(DISTINCT (o.o_custkey, l.l_partkey)),"
+        f" (SELECT count(*) FROM '{lineitem_glob}')"
+        f" FROM '{d}/orders.parquet' o JOIN '{lineitem_glob}' l"
+        f" ON o.o_orderkey = l.l_orderkey"
+    ).fetchall()
+    return ratings, lineitem
+
+
 def test_memo_rebuilds_when_input_rewritten(spark, tmp_path):
-    """A table rewritten under the same path is read anew: the memo is
-    keyed on the input's identity, and the stale cached frame is
-    unpersisted so Spark's plan-matched cache cannot serve its blocks."""
+    """A table rewritten under the same path is read anew: the memo and
+    the table's relation are keyed on the input's identity, and the
+    stale cached frame is unpersisted so Spark's plan-matched cache
+    cannot serve its blocks."""
     from big_data_competition_dxc_spark.ml import recommend
 
-    for f in Path(SF_TEST_DIR).iterdir():
-        shutil.copyfile(f, tmp_path / f.name)
-    d = str(tmp_path)
+    d = _copy_fixture(tmp_path)
     try:
         before = recommend.cached_ratings(spark, d).count()
         lineitem = tmp_path / "lineitem.parquet"
-        table = pq.read_table(lineitem)
-        pq.write_table(table.slice(0, table.num_rows // 3), lineitem)
-        [(want,)] = duckdb.sql(
-            f"SELECT count(DISTINCT (o.o_custkey, l.l_partkey))"
-            f" FROM '{d}/orders.parquet' o JOIN '{lineitem}' l"
-            f" ON o.o_orderkey = l.l_orderkey"
-        ).fetchall()
+        want, want_lineitem = _rewrite_a_third(lineitem, d, str(lineitem))
         assert 0 < want < before
         assert recommend.cached_ratings(spark, d).count() == want
+        assert io.load(spark, d, "lineitem").count() == want_lineitem
+    finally:
+        memos.clear_all()
+
+
+def test_memo_rebuilds_when_part_rewritten_in_table_dir(spark, tmp_path):
+    """A table stored as a directory (Spark's writer layout) whose part
+    file is rewritten in place keeps the directory's own size and mtime;
+    the input identity looks inside it, so memos and relations follow."""
+    from big_data_competition_dxc_spark.ml import recommend
+
+    d = _copy_fixture(tmp_path)
+    table_dir = tmp_path / "lineitem.parquet"
+    part = tmp_path / "part-00000.parquet"
+    table_dir.rename(part)
+    table_dir.mkdir()
+    part = part.rename(table_dir / part.name)
+    try:
+        before = recommend.cached_ratings(spark, d).count()
+        before_lineitem = io.load(spark, d, "lineitem").count()
+        want, want_lineitem = _rewrite_a_third(part, d, f"{table_dir}/*.parquet")
+        assert 0 < want < before and 0 < want_lineitem < before_lineitem
+        assert recommend.cached_ratings(spark, d).count() == want
+        assert io.load(spark, d, "lineitem").count() == want_lineitem
+    finally:
+        memos.clear_all()
+
+
+def test_load_resolves_once_per_input(spark, tmp_path):
+    """An unchanged input is resolved once: later calls return the same
+    frame, and count no warm hit. ``clear_all()`` forgets it."""
+    d = _copy_fixture(tmp_path)
+    try:
+        memos.consume_warm_hits()
+        first = io.load(spark, d, "nation")
+        assert io.load(spark, d, "nation") is first
+        assert io.load(spark, d, "region") is not first
+        assert memos.consume_warm_hits() == 0
+        memos.clear_all()
+        assert io.load(spark, d, "nation") is not first
     finally:
         memos.clear_all()
 

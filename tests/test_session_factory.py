@@ -31,6 +31,7 @@ def test_local_shape_under_env_contract(monkeypatch):
     assert "spark.sql.files.maxPartitionBytes" not in confs
     assert confs["spark.driver.memory"] == "16g"
     assert confs["spark.ui.enabled"] == "false"
+    assert confs["spark.sql.codegen.cache.maxEntries"] == str(S.CODEGEN_CACHE_ENTRIES)
 
 
 def test_cluster_shape_without_env_contract(monkeypatch):
@@ -47,6 +48,8 @@ def test_cluster_shape_without_env_contract(monkeypatch):
     assert confs["spark.sql.adaptive.enabled"] == "true"
     assert confs["spark.sql.session.timeZone"] == "UTC"
     assert confs["spark.sql.execution.arrow.pyspark.enabled"] == "true"
+    # executors compile generated code too: the cache size is portable
+    assert confs["spark.sql.codegen.cache.maxEntries"] == str(S.CODEGEN_CACHE_ENTRIES)
 
 
 def test_explicit_override_wins_both_ways(monkeypatch):
