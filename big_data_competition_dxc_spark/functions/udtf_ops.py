@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import udtf
 
 from ..plans.registry import query
-from ..sources import load
+from ..sources import table_sql
 
 CHUNK_WORDS = 10
 
@@ -68,11 +68,12 @@ def udtf_word_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every document exploded to (doc_id, chunk_idx, chunk, n_words)
     in {CHUNK_WORDS}-word chunks via a lateral-correlated Python UDTF;
     must equal DuckDB's list_slice chunking of the same text."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     spark.udtf.register("chunk_words", _ChunkWords)
-    return spark.sql(
+    return table_sql(
+        spark,
+        sf_dir,
         """
         SELECT d.doc_id, s.chunk_idx, s.chunk, s.n_words
-        FROM documents d, LATERAL chunk_words(d.text) s
-        """
+        FROM {documents} d, LATERAL chunk_words(d.text) s
+        """,
     )

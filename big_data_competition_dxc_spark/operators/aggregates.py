@@ -295,7 +295,6 @@ def grouping_sets_status_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtotal rows — one Expand + one shuffle for all three groupings."""
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
-    o.join(c, o.o_custkey == c.c_custkey).createOrReplaceTempView("_oc")
     # sql_fixed_sum emits engine-neutral text, so the Spark-side SQL and
     # the DuckDB oracle share the exact same measure expression
     return spark.sql(
@@ -305,9 +304,10 @@ def grouping_sets_status_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(GROUPING(c_mktsegment) AS INT) AS g_segment,
                COUNT(*) AS n_orders,
                {sql_fixed_sum('o_totalprice', 2, 2)} AS total_price
-        FROM _oc
+        FROM {{oc}}
         GROUP BY GROUPING SETS ((o_orderstatus), (c_mktsegment), ())
-        """
+        """,
+        oc=o.join(c, o.o_custkey == c.c_custkey),
     )
 
 

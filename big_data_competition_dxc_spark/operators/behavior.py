@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round, sql_units, to_units
 from ..plans.registry import query
-from ..sources import load
+from ..sources import load, table_sql
 
 _RETENTION_ORACLE = f"""
 WITH firsts AS (
@@ -367,7 +367,7 @@ _LISTAGG_SQL = """
 SELECT user_id, CAST(ts AS DATE) AS ds,
        listagg(event_type, '>') WITHIN GROUP (ORDER BY ts, event_id) AS path,
        COUNT(*) AS n_events
-FROM events
+FROM {events}
 GROUP BY user_id, CAST(ts AS DATE)
 """
 
@@ -391,7 +391,4 @@ def listagg_daily_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     spells the same aggregate string_agg(expr, delim ORDER BY ...).
     The WITHIN GROUP ordering makes the result deterministic under any
     shuffle layout (the property the struct-sort idiom exists for)."""
-    from ..sources import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_LISTAGG_SQL)
+    return table_sql(spark, sf_dir, _LISTAGG_SQL)

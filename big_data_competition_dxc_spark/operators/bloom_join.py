@@ -11,27 +11,28 @@ static DPP partition pruning in partition_overwrite_backfill).
 
 On the local fixture the probe side is far below the 10 GB
 applicationSideScanSizeThreshold that gates injection in production,
-so this query scopes the thresholds to zero (and disables
-autoBroadcastJoinThreshold, which would otherwise turn the tiny build
-side into a broadcast join where a Bloom filter is pointless) to
-materialize the exact plan a 100 TB run would get: filtered orders
-build a Bloom filter, lineitem probes it pre-shuffle.
-tests/test_plans.py pins ``might_contain`` into the physical plan, so
-the demonstration cannot silently degrade into a plain join. The
-result itself is conf-independent (Bloom false positives only let
-extra rows reach the join, never change its output) — the oracle is
-the plain join SQL.
+so this query runs on a child session (``session.scoped``) with the
+thresholds at zero (and autoBroadcastJoinThreshold disabled, which
+would otherwise turn the tiny build side into a broadcast join where a
+Bloom filter is pointless) to materialize the exact plan a 100 TB run
+would get: filtered orders build a Bloom filter, lineitem probes it
+pre-shuffle. The returned frame is bound to that child, so it is
+planned under these confs whenever it runs, and the shared session's
+confs never change. tests/test_plans.py pins ``might_contain`` into
+the physical plan of the registry entry's frame, so the demonstration
+cannot silently degrade into a plain join. The result itself is
+conf-independent (Bloom false positives only let extra rows reach the
+join, never change its output) — the oracle is the plain join SQL.
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_avg, sql_fixed_avg
 from ..plans.registry import query
+from ..session import scoped
 from ..sources import load
 
 _BLOOM_CONFS = {
@@ -40,23 +41,6 @@ _BLOOM_CONFS = {
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
     "spark.sql.autoBroadcastJoinThreshold": "-1",
 }
-
-
-@contextmanager
-def bloom_join_scope(spark: SparkSession):
-    """Hold the Bloom-injection confs for a plan's construction AND
-    execution, restoring previous session values on exit."""
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 _BLOOM_ORACLE = f"""
@@ -70,10 +54,12 @@ GROUP BY 1
 """
 
 
-def build_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The lazy join+rollup plan; must be constructed AND executed
-    inside :func:`bloom_join_scope` for the filter to inject
-    (tests/test_plans.py builds it here to pin ``might_contain``)."""
+@query("bloom_pruned_join", oracle=_BLOOM_ORACLE, tags=("J2", "optimizer", "scale"))
+def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem ⋈ selectively-filtered orders as a shuffle join with a
+    runtime Bloom filter pruning the lineitem side before its exchange;
+    result identical to the plain join (oracle), plan pinned in tests."""
+    spark = scoped(spark, _BLOOM_CONFS)
     orders = load(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     )
@@ -86,26 +72,3 @@ def build_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             fixed_avg(F.col("l_extendedprice"), 2, 4).alias("avg_price"),
         )
     )
-
-
-def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem ⋈ selectively-filtered orders as a shuffle join with a
-    runtime Bloom filter pruning the lineitem side before its exchange;
-    result identical to the plain join (oracle), plan pinned in tests."""
-    with bloom_join_scope(spark):
-        # Force planning + execution inside the conf scope; the rollup
-        # is 2 rows, so the localCheckpoint materialization is trivial.
-        # Deliberately NOT result_checkpoint: the audit-mode no-op would
-        # defer planning until after the scope's finally-block restores
-        # the bloom confs, and the audited plan would silently lose the
-        # might_contain filter. This query's real (in-scope) plan is
-        # pinned by tests/test_plans.py::test_bloom_filter_injected,
-        # which explains inside the scope.
-        return build_bloom_join(spark, sf_dir).localCheckpoint(eager=True)
-
-
-query(
-    "bloom_pruned_join",
-    oracle=_BLOOM_ORACLE,
-    tags=("J2", "optimizer", "scale"),
-)(bloom_pruned_join)

@@ -12,16 +12,21 @@ hot key across SALT_BUCKETS shuffle partitions.
 from __future__ import annotations
 
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
 from ..plans.registry import query
+from ..session import scoped
 from ..sources import load
 
 N_BUCKETS = 8
 SALT_BUCKETS = 8
+#: Off where a bucketed table is read for bucket-filter pruning; see
+#: bucket_pruned_scan_frames.
+AUTO_BUCKETED_SCAN = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
 
 _BUCKETED_ORACLE = f"""
 SELECT o.o_orderstatus,
@@ -37,31 +42,32 @@ def bucketed_join_frames(spark: SparkSession, sf_dir: str):
     via the catalog, and join — Spark recognizes the co-located layout
     and plans the sort-merge join WITHOUT a shuffle on either side.
     Returns (joined_df, cleanup) — call cleanup() once the result is
-    materialized to drop the scratch tables and files."""
+    materialized to drop the scratch tables and files. The tables are
+    named per call, as the catalog is shared by every session."""
     base = tempfile.mkdtemp(prefix="bucketed_")
+    suffix = uuid.uuid4().hex[:8]
+    orders, lineitem = f"bt_orders_{suffix}", f"bt_lineitem_{suffix}"
 
     def cleanup() -> None:
         import shutil
 
-        spark.sql("DROP TABLE IF EXISTS bt_orders")
-        spark.sql("DROP TABLE IF EXISTS bt_lineitem")
+        spark.sql(f"DROP TABLE IF EXISTS {orders}")
+        spark.sql(f"DROP TABLE IF EXISTS {lineitem}")
         shutil.rmtree(base, ignore_errors=True)
 
     try:
         for name, src, key in (
-            ("bt_orders", load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus"), "o_orderkey"),
-            ("bt_lineitem", load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice"), "l_orderkey"),
+            (orders, load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus"), "o_orderkey"),
+            (lineitem, load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice"), "l_orderkey"),
         ):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
             (
                 src.write.bucketBy(N_BUCKETS, key)
                 .sortBy(key)
                 .option("path", f"{base}/{name}")
-                .mode("overwrite")
                 .saveAsTable(name)
             )
-        o = spark.table("bt_orders")
-        l = spark.table("bt_lineitem")
+        o = spark.table(orders)
+        l = spark.table(lineitem)
     except BaseException:
         cleanup()
         raise
@@ -143,37 +149,32 @@ def bucket_pruned_scan_frames(spark: SparkSession, sf_dir: str):
     (SelectedBucketsCount in the plan), reading 1/{N_BUCKETS} of the
     files per key instead of the whole table. Returns (df, cleanup).
 
-    autoBucketedScan is scoped OFF: that heuristic keeps the bucketed
-    read only when an operator consumes the bucketed OUTPUT partitioning
+    autoBucketedScan is OFF for this frame (it is built on a child
+    session, ``session.scoped``): that heuristic keeps the bucketed read
+    only when an operator consumes the bucketed OUTPUT partitioning
     (join/agg shuffle elimination) and is blind to the bucket-FILTER
     read-cost benefit — with it on, this scan plans as
     'Bucketed: false (disabled by query planner)' and reads every file.
-    The conf is restored in cleanup(); callers must keep planning AND
-    execution inside the frames/cleanup scope (same discipline as
-    bloom_join_scope)."""
+    The table is named per call; cleanup() drops it."""
+    spark = scoped(spark, {AUTO_BUCKETED_SCAN: "false"})
     base = tempfile.mkdtemp(prefix="bucketprune_")
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old_auto = spark.conf.get(auto_key, "true")
+    table = f"bp_lineitem_{uuid.uuid4().hex[:8]}"
 
     def cleanup() -> None:
         import shutil
 
-        spark.conf.set(auto_key, old_auto)
-        spark.sql("DROP TABLE IF EXISTS bp_lineitem")
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
         shutil.rmtree(base, ignore_errors=True)
 
-    spark.conf.set(auto_key, "false")
     try:
-        spark.sql("DROP TABLE IF EXISTS bp_lineitem")
         (
             load(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_extendedprice")
             .write.bucketBy(N_BUCKETS, "l_orderkey")
-            .option("path", f"{base}/bp_lineitem")
-            .mode("overwrite")
-            .saveAsTable("bp_lineitem")
+            .option("path", f"{base}/{table}")
+            .saveAsTable(table)
         )
-        li = spark.table("bp_lineitem").filter(
+        li = spark.table(table).filter(
             F.col("l_orderkey").isin(*_PROBE_KEYS)
         )
         orders = load(spark, sf_dir, "orders").select("o_orderkey").filter(

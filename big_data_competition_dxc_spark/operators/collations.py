@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from ..sources import load
+from ..sources import table_sql
 
 #: The deterministic mixed-case derivation (SQL text shared by both
 #: engines modulo nothing — identical ANSI).
@@ -52,19 +52,15 @@ def collated_group_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence). The emitted ``lang_ci`` is the lower() canonical
     form, which is identical for every representative of a collated
     group, so the output is deterministic."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView(
-        "docs_for_collation"
-    )
-    try:
-        return spark.sql(
-            f"""
+    return table_sql(
+        spark,
+        sf_dir,
+        f"""
 SELECT lower(k) AS lang_ci,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources
 FROM (SELECT CAST({_MIXED} AS STRING COLLATE UTF8_LCASE) AS k, source
-      FROM docs_for_collation)
+      FROM {{documents}})
 GROUP BY k
-"""
-        )
-    finally:
-        spark.catalog.dropTempView("docs_for_collation")
+""",
+    )

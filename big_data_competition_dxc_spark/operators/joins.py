@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_avg, fixed_sum, sql_fixed_avg, sql_fixed_sum
 from ..plans.registry import query
-from ..sources import load, register_views
+from ..sources import load, plain_tables, table_sql
 
 
 @query(
@@ -74,19 +74,19 @@ _THETA_SQL = f"""
 SELECT p.p_brand AS brand,
        COUNT(*) AS n_items,
        {sql_fixed_sum('l.l_quantity', 0, 2)} AS sum_qty
-FROM lineitem l, part p
+FROM {{lineitem}} l, {{part}} p
 WHERE l.l_partkey = p.p_partkey AND p.p_size > 30
 GROUP BY p.p_brand
 """
 
 
-@query("join_theta_sql", oracle=_THETA_SQL, tags=("J3", "P2", "S5"))
+@query("join_theta_sql", oracle=plain_tables(_THETA_SQL), tags=("J3", "P2", "S5"))
 def join_theta_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 (M:97): implicit-cross-plus-WHERE join written as raw SQL on temp
-    views — Catalyst extracts the equi-keys from the conjunction, same as
-    the reference relied on. Identical text runs on DuckDB."""
-    register_views(spark, sf_dir)
-    return spark.sql(_THETA_SQL)
+    """J3 (M:97): implicit-cross-plus-WHERE join written as raw SQL over
+    the tables — Catalyst extracts the equi-keys from the conjunction,
+    same as the reference relied on. Identical text, with the table
+    fields spelled as table names, runs on DuckDB."""
+    return table_sql(spark, sf_dir, _THETA_SQL)
 
 
 @query(

@@ -8,8 +8,9 @@ the lowest-keyed supplier to every supplier reachable within MAX_HOPS,
 over the same co-supply edge projection as graph/pagerank.py.
 
 DuckDB runs the IDENTICAL statement (both engines implement the
-standard UNION ALL recursion), so the oracle is a literal copy — the
-strongest possible cross-engine pin.
+standard UNION ALL recursion), so the oracle is the same text with the
+table field spelled as the table name — the strongest possible
+cross-engine pin.
 
 Scale notes (100 TB): raw UNION ALL recursion enumerates WALKS, so
 work grows with degree^depth — found empirically: without dedup this
@@ -30,15 +31,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.registry import query
-from ..sources import load
+from ..sources import plain_tables, table_sql
 
 MAX_HOPS = 3
 
 _REACH_SQL = f"""
 WITH RECURSIVE pairs AS (
   SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-  FROM lineitem a
-  JOIN lineitem b
+  FROM {{lineitem}} a
+  JOIN {{lineitem}} b
     ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
 ),
 reach(node, hops) AS (
@@ -57,12 +58,11 @@ GROUP BY node
 
 @query(
     "recursive_cte_reach",
-    oracle=_REACH_SQL,
+    oracle=plain_tables(_REACH_SQL),
     tags=("iterative", "J2", "A1", "extension"),
 )
 def recursive_cte_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min hops (and reached-level count) from the lowest-keyed
     supplier to each supplier within {MAX_HOPS} co-supply hops — the
     SAME SQL text executes on Spark and DuckDB."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_REACH_SQL)
+    return table_sql(spark, sf_dir, _REACH_SQL)

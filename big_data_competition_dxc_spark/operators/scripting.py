@@ -32,33 +32,12 @@ per-iteration cost.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..session import scoped
 from ..sources import load
-
-
-@contextmanager
-def scripting_conf_scope(spark: SparkSession):
-    """Hold ``spark.sql.scripting.enabled`` for the duration of the
-    script call, restoring the prior session value on exit (the same
-    no-leaked-confs discipline as streaming's ``nanos_conf_scope``).
-    Safe to scope around the ``spark.sql`` call alone: a SQL script
-    executes eagerly inside that call (DECLARE/WHILE run then; only the
-    final statement's result comes back as a DataFrame)."""
-    key = "spark.sql.scripting.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 #: Clip width in standard deviations. 1.0 (aggressive) so every pass
 #: moves the bounds on the fixture's wide price distribution — 2.5
@@ -139,21 +118,21 @@ def sql_scripting_sigma_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty result. The unrolled oracle assumes the non-empty regime —
     the guard keeps the procedural side total without adding scans.
 
-    Session hygiene: ``spark.sql.scripting.enabled`` is held only for
-    the script call (``scripting_conf_scope``) and the ``li_cents``
-    temp view is dropped before returning — analysis is eager, so the
-    returned DataFrame's resolved plan no longer needs the view."""
-    load(spark, sf_dir, "lineitem").select(
+    Session hygiene: the script runs on a child session holding
+    ``spark.sql.scripting.enabled`` (``session.scoped``), so the shared
+    session's conf never changes, and the cents column reaches the
+    script as a DataFrame argument, whose view PySpark drops once the
+    script has run (it executes eagerly inside the ``sql`` call)."""
+    spark = scoped(spark, {"spark.sql.scripting.enabled": "true"})
+    li_cents = load(spark, sf_dir, "lineitem").select(
         F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
         .cast("bigint")
         .alias("c")
-    ).createOrReplaceTempView("li_cents")
+    )
     lo = _BOUND.format(sign="-", sq=_SPARK_SQ)
     hi = _BOUND.format(sign="+", sq=_SPARK_SQ)
-    try:
-        with scripting_conf_scope(spark):
-            return spark.sql(
-                f"""
+    return spark.sql(
+        f"""
 BEGIN
   DECLARE lo BIGINT DEFAULT -9223372036854775807;
   DECLARE hi BIGINT DEFAULT  9223372036854775807;
@@ -161,16 +140,15 @@ BEGIN
   DECLARE it INT DEFAULT 0;
   clip: WHILE it < {N_PASSES} DO
     SET (nlo, nhi, n) = (SELECT {lo}, {hi}, COUNT(*)
-                         FROM li_cents WHERE c BETWEEN lo AND hi);
+                         FROM {{li_cents}} WHERE c BETWEEN lo AND hi);
     IF n = 0 THEN LEAVE clip; END IF;
     SET lo = nlo; SET hi = nhi;
     SET it = it + 1;
   END WHILE clip;
   {_FINAL},
          lo AS lo_cents, hi AS hi_cents
-  FROM li_cents WHERE c BETWEEN lo AND hi;
+  FROM {{li_cents}} WHERE c BETWEEN lo AND hi;
 END
-"""
-            )
-    finally:
-        spark.catalog.dropTempView("li_cents")
+""",
+        li_cents=li_cents,
+    )

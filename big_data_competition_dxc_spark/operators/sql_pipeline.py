@@ -1,10 +1,11 @@
 """EP1: the reference's dominant pattern — SQL on registered temp views
-(SURVEY §3) — run end-to-end as ONE multi-CTE spark.sql statement.
+(SURVEY §3) — run end-to-end as ONE multi-CTE spark.sql statement, the
+tables passed to it as DataFrame arguments (``sources.table_sql``).
 
 The reference executes this as five notebook blocks with text-file
 round-trips between them (流行音乐趋势预测.md:42-98: dedup -> per-key
 counts -> when-pivot -> sum -> shifted-date self-join -> dim join);
-here the same dataflow is a single SQL statement over views, so
+here the same dataflow is a single SQL statement over the tables, so
 Catalyst sees the whole pipeline (column pruning + pushdown cross the
 old block boundaries, SURVEY §4).
 
@@ -18,11 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.rounding import sql_fixed_sum
 from ..plans.registry import query
-from ..sources import register_views
+from ..sources import plain_tables, table_sql
 
 _PIPELINE = """
 WITH deduped AS (
-  SELECT DISTINCT * FROM events              -- M:42 dedup
+  SELECT DISTINCT * FROM {{events}}          -- M:42 dedup
 ),
 daily AS (                                   -- M:68-86 count + when-pivot
   SELECT CAST(ts AS DATE) AS ds, user_id,
@@ -42,30 +43,35 @@ SELECT d.ds, d.user_id, c.c_mktsegment,      -- M:45 dim join
        CAST(COALESCE(s.prev_events, 0) AS BIGINT) AS prev_events
 FROM daily d
 LEFT JOIN shifted s ON s.ds = d.ds AND s.user_id = d.user_id
-LEFT JOIN customer c ON d.user_id = c.c_custkey
+LEFT JOIN {{customer}} c ON d.user_id = c.c_custkey
 """
+
+_ORACLE = plain_tables(
+    _PIPELINE.format(
+        total_value=sql_fixed_sum("value", 2, 2),
+        next_day="CAST(ds + INTERVAL 1 DAY AS DATE)",
+    )
+)
 
 
 @query(
     "sql_pipeline_daily",
-    oracle=_PIPELINE.format(
-        total_value=sql_fixed_sum("value", 2, 2),
-        next_day="CAST(ds + INTERVAL 1 DAY AS DATE)",
-    ),
+    oracle=_ORACLE,
     tags=("P2", "S5", "J1", "J7", "A2", "A6", "A7"),
 )
 def sql_pipeline_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full EP1 dataflow as one spark.sql statement over registered
-    views — identical SQL text on both engines up to the date-add
+    """The full EP1 dataflow as one spark.sql statement over the
+    tables — identical SQL text on both engines up to the date-add
     spelling (sql_fixed_sum emits engine-neutral text: exact integer
     accumulation, divisors CAST to DOUBLE so Spark's decimal-literal
     parsing doesn't change the result type)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return table_sql(
+        spark,
+        sf_dir,
         _PIPELINE.format(
             total_value=sql_fixed_sum("value", 2, 2),
             next_day="date_add(ds, 1)",
-        )
+        ),
     )
 
 
@@ -76,7 +82,7 @@ def sql_pipeline_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the two syntaxes are the same plan semantics.
 _PIPE_FORM = """
 WITH daily AS (
-  FROM events
+  FROM {{events}}
   |> SELECT DISTINCT *
   |> AGGREGATE
        CAST(SUM(CASE WHEN event_type = 'click'    THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
@@ -90,7 +96,7 @@ FROM daily AS d
      FROM daily
      |> SELECT date_add(ds, 1) AS ds, user_id, n_events AS prev_events
    ) AS s ON s.ds = d.ds AND s.user_id = d.user_id
-|> LEFT JOIN customer AS c ON d.user_id = c.c_custkey
+|> LEFT JOIN {{customer}} AS c ON d.user_id = c.c_custkey
 |> SELECT d.ds, d.user_id, c.c_mktsegment,
           d.n_click, d.n_purchase, d.n_events, d.total_value,
           CAST(COALESCE(s.prev_events, 0) AS BIGINT) AS prev_events
@@ -99,10 +105,7 @@ FROM daily AS d
 
 @query(
     "sql_pipe_syntax_daily",
-    oracle=_PIPELINE.format(
-        total_value=sql_fixed_sum("value", 2, 2),
-        next_day="CAST(ds + INTERVAL 1 DAY AS DATE)",
-    ),
+    oracle=_ORACLE,
     tags=("P2", "S5", "extension"),
 )
 def sql_pipe_syntax_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,5 +116,6 @@ def sql_pipe_syntax_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation — hash-equality proves the pipe surface produces the
     identical result, which is the whole point of the seam (zero new
     semantics, pure syntax parity)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_PIPE_FORM.format(total_value=sql_fixed_sum("value", 2, 2)))
+    return table_sql(
+        spark, sf_dir, _PIPE_FORM.format(total_value=sql_fixed_sum("value", 2, 2))
+    )

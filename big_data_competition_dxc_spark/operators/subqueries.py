@@ -6,8 +6,8 @@ core engine capability: scalar subqueries become cross joins against a
 1-row aggregate, IN becomes a left-semi join, NOT EXISTS becomes a
 null-aware left-anti join — all visible in .explain and all shuffling
 like their join equivalents at 100 TB. Identical SQL text runs on both
-engines (spark.sql == DuckDB), so these are also dialect-parity
-checks.
+engines (spark.sql == DuckDB, up to the table fields ``table_sql``
+binds), so these are also dialect-parity checks.
 """
 
 from __future__ import annotations
@@ -15,22 +15,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.registry import query
-from ..sources import register_views
+from ..sources import plain_tables, table_sql
 
 _SCALAR = """
 SELECT o_orderstatus,
        CAST(COUNT(*) AS BIGINT) AS n_above_avg
-FROM orders
-WHERE o_totalprice > (SELECT AVG(o_totalprice) FROM orders)
+FROM {orders}
+WHERE o_totalprice > (SELECT AVG(o_totalprice) FROM {orders})
 GROUP BY o_orderstatus
 """
 
 _IN_SUBQ = """
 SELECT c_mktsegment,
        CAST(COUNT(*) AS BIGINT) AS n_customers
-FROM customer
+FROM {customer}
 WHERE c_custkey IN (
-  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+  SELECT o_custkey FROM {orders} WHERE o_orderpriority = '1-URGENT'
 )
 GROUP BY c_mktsegment
 """
@@ -38,9 +38,9 @@ GROUP BY c_mktsegment
 _NOT_EXISTS = """
 SELECT s.s_nationkey AS nationkey,
        CAST(COUNT(*) AS BIGINT) AS n_idle_suppliers
-FROM supplier s
+FROM {supplier} s
 WHERE NOT EXISTS (
-  SELECT 1 FROM lineitem l WHERE l.l_suppkey = s.s_suppkey
+  SELECT 1 FROM {lineitem} l WHERE l.l_suppkey = s.s_suppkey
 )
 GROUP BY s.s_nationkey
 """
@@ -48,12 +48,11 @@ GROUP BY s.s_nationkey
 
 def _sql_query(sql: str, doc: str, name: str, tags: tuple[str, ...]):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(sql)
+        return table_sql(spark, sf_dir, sql)
 
     fn.__doc__ = doc
     fn.__name__ = name
-    query(name, oracle=sql, tags=tags)(fn)
+    query(name, oracle=plain_tables(sql), tags=tags)(fn)
     return fn
 
 

@@ -14,13 +14,21 @@ nothing is materialized.
 The contract:
 - memos hold PARAMETERLESS canonical derivations only — a forced or
   parameterized variant must never be served from, or stored into, one;
-- an entry is keyed ``(name, applicationId, sf_dir)`` and valid only for
-  the input identity it was built from (name, size and ``mtime_ns`` of
-  every entry under ``sf_dir``, descending into table directories): a
-  table rewritten under the same path is rebuilt, and a stale cached
-  frame is unpersisted first, because Spark's CacheManager matches
-  cached data by plan and would otherwise serve the old blocks to the
-  rebuilt scan;
+- a cached memo is keyed ``(name, applicationId, sf_dir)``: every
+  session of the application shares it, as they share the
+  CacheManager that holds its blocks;
+- a relation (``cache=False``) is keyed per session as well. A frame
+  is bound to the session that built it, and a join built on it is
+  planned under that session's confs. A child session made for one
+  request's confs (``session.scoped``) therefore resolves relations of
+  its own: served the root's relations, the Bloom-filter join planned
+  a plain broadcast join;
+- an entry is valid only for the input identity it was built from
+  (name, size and ``mtime_ns`` of every entry under ``sf_dir``,
+  descending into table directories): a table rewritten under the
+  same path is rebuilt, and a stale cached frame is unpersisted first,
+  because Spark's CacheManager matches cached data by plan and would
+  otherwise serve the old blocks to the rebuilt scan;
 - each key has its own lock, so concurrent callers of one memo build it
   once; a memo may build on another memo (locks nest outer-to-inner,
   never the reverse; a relation builds on nothing, so its lock is
@@ -47,7 +55,7 @@ from collections.abc import Callable
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-_Key = tuple[str, str, str]  # (name, applicationId, sf_dir)
+_Key = tuple[str, str, int | None, str]  # (name, applicationId, id(session) or None, sf_dir)
 
 _LOCK = threading.Lock()  # guards the three globals below
 _MEMOS: dict[_Key, tuple[tuple, DataFrame]] = {}  # key -> (input identity, frame)
@@ -93,7 +101,9 @@ def memoized(
     if os.environ.get("SPARK_GRAFT_NO_CHECKPOINT"):
         return build()
     app = spark.sparkContext.applicationId
-    key = (name, app, sf_dir)
+    # the memo's frame holds its session, so the id is not reused while
+    # the entry lives
+    key = (name, app, None if cache else id(spark), sf_dir)
     identity = _input_identity(sf_dir)
     with _LOCK:
         # cached frames pin their (possibly stopped) session: drop other

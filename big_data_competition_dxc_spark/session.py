@@ -22,6 +22,8 @@ The factory has two shapes (r10 verdict item 5):
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -140,3 +142,49 @@ def compiled_classes(spark: SparkSession) -> int:
     codegen-cache hit does not count."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+_SCOPES_LOCK = threading.Lock()  # guards the two dicts below
+#: (applicationId, id(root), conf set) -> the child holding that conf set
+_CHILDREN: dict[tuple[str, int, frozenset], SparkSession] = {}
+#: id(child) -> (root, conf set): how a child was made, to nest scopes
+_ORIGINS: dict[int, tuple[SparkSession, frozenset]] = {}
+
+
+def scoped(spark: SparkSession, confs: Mapping[str, str]) -> SparkSession:
+    """A session with ``confs`` applied, for one request's queries.
+
+    This is the package's one way to hold a conf for a request. A
+    session conf set on the shared session would hold for every other
+    client's queries too, so the request instead builds and runs its
+    query on a child of the root session (``newSession()``: same
+    SparkContext and cached data, its own SQL conf and temp views). A
+    frame built on the child keeps its confs for as long as it lives,
+    planning included.
+
+    A child starts from the confs ``get_spark`` created the session
+    with, not from confs set at runtime, so a scope opened on a child
+    merges its confs over the child's (``confs`` win) and branches from
+    the root again.
+
+    Children are kept, one per (root, full conf set). A child whose
+    streaming manager is touched adds a listener to the context's
+    listener bus that is never removed, so a child per call would grow
+    the bus without bound.
+    """
+    with _SCOPES_LOCK:
+        root, held = _ORIGINS.get(id(spark), (spark, frozenset()))
+        merged = frozenset({**dict(held), **confs}.items())
+        app = root.sparkContext.applicationId
+        # a stopped context's children are dead: forget them
+        for key in [k for k in _CHILDREN if k[0] != app]:
+            del _ORIGINS[id(_CHILDREN.pop(key))]
+        key = (app, id(root), merged)
+        child = _CHILDREN.get(key)
+        if child is None:
+            child = root.newSession()
+            for k, v in merged:
+                child.conf.set(k, v)
+            _CHILDREN[key] = child
+            _ORIGINS[id(child)] = (root, merged)
+        return child

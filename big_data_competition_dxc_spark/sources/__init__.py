@@ -1,1 +1,1 @@
-from .io import TABLES, load, register_views  # noqa: F401
+from .io import TABLES, load, plain_tables, table_sql  # noqa: F401

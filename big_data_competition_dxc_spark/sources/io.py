@@ -2,10 +2,11 @@
 
 The reference ingests everything as ``sc.textFile → split(",") → arity
 filter → case class`` (流行音乐趋势预测.md:29-31,38-40) and re-registers a
-temp table per block (M:36). Here: schema-typed ``spark.read`` and one
-``register_views`` call. Text round-trips between pipeline stages
-(M:98→106 etc.) are deliberately absent — a single lazy Catalyst plan
-replaces them (SURVEY §4).
+temp table per block (M:36). Here: schema-typed ``spark.read``, and SQL
+text reaches the tables through ``table_sql``, which passes each one as
+a DataFrame argument instead of registering a session-wide view. Text
+round-trips between pipeline stages (M:98→106 etc.) are deliberately
+absent — a single lazy Catalyst plan replaces them (SURVEY §4).
 
 Each table's relation is resolved once per input identity, not once per
 call: ``load`` keeps the resolved frame in the session memo store
@@ -15,11 +16,14 @@ instead of a parquet footer read.
 
 from __future__ import annotations
 
+from string import Formatter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.memos import memoized
+from ..session import scoped
 
 TABLES = (
     "region",
@@ -87,25 +91,16 @@ def _resolve(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table's footer and normalize its timestamp types."""
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        # Scope the legacy conf to the schema resolution: spark.read
-        # .parquet resolves the footer schema EAGERLY, and the reader's
-        # hadoop conf is captured with the relation, so restoring the
-        # session value immediately afterwards is safe (later actions on
-        # the returned DataFrame still decode nanos as long — pinned by
-        # tests/test_plans.py::test_load_scopes_nanos_conf). Without the
-        # restore, every unrelated parquet read in the session would
-        # silently decode TIMESTAMP(NANOS) as bigint instead of failing
-        # loudly.
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
-            df = spark.read.parquet(path)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        # Footer schema inference rejects TIMESTAMP(NANOS) unless the
+        # legacy conf reads it as long, so infer the schema on a child
+        # session holding that conf. The relation itself is then read
+        # on the caller's session with the inferred schema: a declared
+        # schema needs no inference, and the file decodes as bigint
+        # without the conf. Every table's relation so stays bound to
+        # the session that asked for it, and no conf of that session
+        # changes (tests/test_plans.py::test_load_scopes_nanos_conf).
+        nanos = scoped(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
+        df = spark.read.schema(nanos.read.parquet(path).schema).parquet(path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return _tz_normalize(df)
@@ -148,7 +143,18 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return parsed
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """S5: one temp view per table (replaces registerTempTable, M:36)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
+def table_sql(
+    spark: SparkSession, sf_dir: str, text: str, args: dict | None = None
+) -> DataFrame:
+    """``spark.sql(text, args)`` with each ``{table}`` field of ``text``
+    bound to ``load(spark, sf_dir, table)``. PySpark registers each
+    frame as a uniquely named view for the analysis and drops it after,
+    so concurrent callers never see each other's tables."""
+    names = {field for _, field, _, _ in Formatter().parse(text) if field}
+    return spark.sql(text, args, **{n: load(spark, sf_dir, n) for n in names})
+
+
+def plain_tables(text: str) -> str:
+    """``text`` with each ``{table}`` field spelled as the bare table
+    name: the DuckDB oracle of a ``table_sql`` text."""
+    return text.format(**{t: t for t in TABLES})

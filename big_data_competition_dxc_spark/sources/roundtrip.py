@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
 from ..plans.registry import query
-from . import load
+from . import load, table_sql
 
 @contextlib.contextmanager
 def _scratch_dir(prefix: str) -> Iterator[str]:
@@ -206,11 +206,12 @@ def sql_templated_peek(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameterized spark.sql — named-parameter binding instead of the
     reference's injection-prone string template — returning the first
     row by deterministic order."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(
+    return table_sql(
+        spark,
+        sf_dir,
         """
         SELECT event_id, user_id, event_type, value
-        FROM events WHERE event_type = :etype
+        FROM {events} WHERE event_type = :etype
         ORDER BY event_id LIMIT 1
         """,
         args={"etype": "purchase"},
@@ -251,24 +252,23 @@ def partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events")
     )
     with _scratch_dir("pq_backfill_") as out:
-        old_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "STATIC"
+        daily.write.mode("overwrite").partitionBy("ds").parquet(out)
+        patch = daily.filter(
+            F.col("ds") == F.lit("2024-01-05").cast("date")
+        ).withColumn("n_events", F.col("n_events") * 2)
+        # dynamic mode, for this write only: ONLY the ds=2024-01-05
+        # partition is replaced
+        (
+            patch.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("ds")
+            .parquet(out)
         )
-        try:
-            daily.write.mode("overwrite").partitionBy("ds").parquet(out)
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            patch = daily.filter(
-                F.col("ds") == F.lit("2024-01-05").cast("date")
-            ).withColumn("n_events", F.col("n_events") * 2)
-            # dynamic mode: ONLY the ds=2024-01-05 partition is replaced
-            patch.write.mode("overwrite").partitionBy("ds").parquet(out)
-            back = spark.read.parquet(out)
-            agg = back.groupBy("ds").agg(
-                F.count("*").alias("n_types"), F.sum("n_events").alias("n_events")
-            )
-            rows = agg.collect()
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+        back = spark.read.parquet(out)
+        agg = back.groupBy("ds").agg(
+            F.count("*").alias("n_types"), F.sum("n_events").alias("n_events")
+        )
+        rows = agg.collect()
     return spark.createDataFrame(rows, "ds date, n_types bigint, n_events bigint")
 
 

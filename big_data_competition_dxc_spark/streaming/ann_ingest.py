@@ -46,13 +46,16 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
 from ..ml.concurrency import run_concurrently
+from ..operators.bucketing import AUTO_BUCKETED_SCAN
 from ..plans.registry import query
+from ..session import scoped
 from ..similarity.cosine import SQL_COS, as_double, dot
 from ..sources import load
 from .dedup_ingest import _formatted_plan
@@ -69,8 +72,6 @@ N_ANN_BUCKETS = 8  # storage buckets of the postings table
 N_VEC_BUCKETS = 32  # storage buckets of the vector table
 MAX_PRUNE_IDS = 10_000
 
-_INDEX_TABLE = "stream_ann_index"
-_VECTOR_TABLE = "stream_ann_vectors"
 
 # test seams, same contract as dedup_ingest's
 LAST_BATCH_IDS: list[int] = []
@@ -133,6 +134,15 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector table pruned to the batch's matched vec_ids, best-neighbor
     rows overwritten to a per-batch directory (idempotent replay).
     Union of batches must hash-match the one-shot oracle."""
+    # bucket-FILTER pruning of the rerank scan needs autoBucketedScan
+    # OFF (the auto heuristic is blind to IN-list pruning —
+    # operators/bucketing.py). The whole stream is built, planned and
+    # run on a child session holding that.
+    spark = scoped(spark, {AUTO_BUCKETED_SCAN: "false"})
+    # the stored tables are named per call: the catalog is shared
+    suffix = uuid.uuid4().hex[:8]
+    index_table = f"stream_ann_index_{suffix}"
+    vector_table = f"stream_ann_vectors_{suffix}"
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
@@ -143,21 +153,12 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_dir = os.path.join(stage, "idx")
     vec_dir = os.path.join(stage, "vec")
 
-    # bucket-FILTER pruning of the rerank scan needs autoBucketedScan
-    # scoped OFF (the auto heuristic is blind to IN-list pruning —
-    # operators/bucketing.py). Restored in cleanup(); the whole stream
-    # plans AND executes inside the scope.
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old_auto = spark.conf.get(auto_key, "true")
-
     def cleanup() -> None:
-        spark.conf.set(auto_key, old_auto)
-        spark.sql(f"DROP TABLE IF EXISTS {_INDEX_TABLE}")
-        spark.sql(f"DROP TABLE IF EXISTS {_VECTOR_TABLE}")
+        spark.sql(f"DROP TABLE IF EXISTS {index_table}")
+        spark.sql(f"DROP TABLE IF EXISTS {vector_table}")
         shutil.rmtree(stage, ignore_errors=True)
 
     q = None
-    spark.conf.set(auto_key, "false")
     try:
         corpus = emb.filter(F.col("vec_id") >= N_STREAM_QUERIES)
 
@@ -168,7 +169,6 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _build_index() -> tuple[DataFrame, DataFrame]:
             # --- stored table 1: full vectors + precomputed norms,
             # bucketed on vec_id for the pruned rerank reads.
-            spark.sql(f"DROP TABLE IF EXISTS {_VECTOR_TABLE}")
             (
                 corpus.select(
                     "vec_id", "v", F.sqrt(dot(F.col("v"), F.col("v"))).alias("nrm")
@@ -177,26 +177,23 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .write.bucketBy(N_VEC_BUCKETS, "vec_id")
                 .sortBy("vec_id")
                 .option("path", vec_dir)
-                .mode("overwrite")
-                .saveAsTable(_VECTOR_TABLE)
+                .saveAsTable(vector_table)
             )
-            tbl = spark.table(_VECTOR_TABLE)
+            tbl = spark.table(vector_table)
 
             # --- stored table 2: the sign-LSH postings, bucketed on
             # bucket. Built FROM the stored vector table (one read),
             # bucket strings recomputed — postings rows are
             # (bucket, vec_id) only.
-            spark.sql(f"DROP TABLE IF EXISTS {_INDEX_TABLE}")
             (
                 tbl.select(_bucket_col("v").alias("bucket"), "vec_id")
                 .repartition(N_ANN_BUCKETS, "bucket")
                 .write.bucketBy(N_ANN_BUCKETS, "bucket")
                 .sortBy("bucket")
                 .option("path", idx_dir)
-                .mode("overwrite")
-                .saveAsTable(_INDEX_TABLE)
+                .saveAsTable(index_table)
             )
-            return tbl, spark.table(_INDEX_TABLE)
+            return tbl, spark.table(index_table)
 
         def _stage_queries() -> None:
             queries_df = emb.filter(F.col("vec_id") < N_STREAM_QUERIES).select(

@@ -1,47 +1,41 @@
-"""Scoped session-conf overrides for streaming runs.
+"""State-store partition counts for stateful streaming runs.
 
-The tree's conf-scope discipline (see rollup_stream.nanos_conf_scope,
-operators/scripting.scripting_conf_scope): a registered query may
-adjust session conf only for the duration of its own execution and
-must restore the previous value — nothing leaks into later queries.
+A registered query that needs a conf for its own run builds and runs
+that query on a child session holding the conf (``session.scoped``);
+the shared session's confs never change, so nothing leaks into other
+clients' queries, concurrent ones included. ``state_scope`` is that
+child for a stateful stream's state-store count, which is the
+``spark.sql.shuffle.partitions`` value at the checkpoint's first
+micro-batch.
 
-``state_partitions_scope`` pins ``spark.sql.shuffle.partitions`` to a
-stateful streaming query's KEY DOMAIN for one stream run. A streaming
-aggregation creates one state store per shuffle partition, fixed at
-the checkpoint's first micro-batch; with the session default (32) a
-query whose key domain is a small CONSTANT set (tick-feed buckets,
-event types) commits 32 snapshot+delta stores per micro-batch to hold
-a handful of rows — most of them empty. Pinning to the domain size
-removes that per-batch commit fan-out. This is NOT a core-count tune:
-it only applies where the key domain is a schema constant independent
-of data scale, the reduce side of the aggregation only ever merges
-map-side partials (≤ domain-size rows per map task at any scale), and
-batch queries' partitioning is untouched. State keyed by a SCALING
-domain (users, sessions) must keep the session default — documented
-per call site.
+A streaming aggregation creates one state store per shuffle
+partition; with the session default (32) a query whose key domain is
+a small CONSTANT set (tick-feed buckets, event types) commits 32
+snapshot+delta stores per micro-batch to hold a handful of rows — most
+of them empty. Scoping the count to the domain size removes that
+per-batch commit fan-out. This is NOT a core-count tune: it only
+applies where the key domain is a schema constant independent of data
+scale, the reduce side of the aggregation only ever merges map-side
+partials (≤ domain-size rows per map task at any scale), and batch
+queries' partitioning is untouched. State keyed by a SCALING domain
+(users, sessions) takes a count derived from input bytes instead
+(``scaled_state_partitions``) — documented per call site.
 """
 
 from __future__ import annotations
 
 import math
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+from ..session import scoped
 
-@contextmanager
-def state_partitions_scope(spark: SparkSession, n: int):
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+
+def state_scope(spark: SparkSession, n: int) -> SparkSession:
+    """A child of ``spark`` whose stateful streams keep ``n`` state
+    stores per operator (``session.scoped``)."""
+    return scoped(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 #: Advisory input bytes per state partition for SCALING-domain streams.
@@ -61,7 +55,7 @@ def scaled_state_partitions(
 ) -> int:
     """Scale-ADAPTIVE state-partition count for a stateful stream whose
     key domain GROWS with input (users, sessions, join keys) — the
-    complement of the constant-domain pin above.
+    complement of a constant-domain count.
 
     A streaming stateful operator creates one state store per shuffle
     partition, fixed at the checkpoint's first micro-batch, and EVERY
@@ -103,13 +97,3 @@ def scaled_state_partitions(
     session_default = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     derived = max(floor, math.ceil(total / advisory_bytes))
     return min(derived, session_default)
-
-
-@contextmanager
-def scaled_state_scope(spark: SparkSession, *paths: str):
-    """``state_partitions_scope`` at the size-derived count for the
-    inputs at ``paths`` (see :func:`scaled_state_partitions`)."""
-    with state_partitions_scope(
-        spark, scaled_state_partitions(spark, *paths)
-    ):
-        yield

@@ -55,6 +55,7 @@ import os
 import shutil
 import tempfile
 import threading
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,7 +64,9 @@ from ..dedup.incremental import FIXED_DELTA_DOCS, _IS_FIXED_DELTA_SQL, _incremen
 from ..dedup.jaccard import shingle_rows
 from ..dedup.minhash import _band_rows, _signature
 from ..ml.concurrency import run_concurrently
+from ..operators.bucketing import AUTO_BUCKETED_SCAN
 from ..plans.registry import query
+from ..session import scoped
 from ..sources import load
 
 INGEST_SLICES = 4  # micro-batches the staged delta splits into
@@ -71,8 +74,6 @@ N_INDEX_BUCKETS = 8  # buckets of the stored corpus band index
 N_SHINGLE_BUCKETS = 16  # buckets of the stored corpus shingle table
 # above this many matched corpus ids, skip the IN-list and scan unpruned
 MAX_PRUNE_IDS = 10_000
-_INDEX_TABLE = "stream_corpus_bands"
-_SHINGLE_TABLE = "stream_corpus_shingles"
 
 # batch ids seen by the LAST run's foreachBatch — test seam proving the
 # stream really executed several micro-batches (an availableNow stream
@@ -129,7 +130,17 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay). Union of batches must hash-match the batch pipeline's
     oracle — micro-batching is equivalence-preserving by construction,
     and this query proves it."""
+    # bucket-FILTER pruning needs autoBucketedScan OFF: the auto
+    # heuristic keeps bucketed reads only for join/agg partitioning
+    # benefits and is blind to IN-list scan pruning (see
+    # operators/bucketing.py:bucket_pruned_scan_frames). The whole
+    # stream is built, planned and run on a child session holding that.
+    spark = scoped(spark, {AUTO_BUCKETED_SCAN: "false"})
     docs = load(spark, sf_dir, "documents")
+    # the stored tables are named per call: the catalog is shared
+    suffix = uuid.uuid4().hex[:8]
+    index_table = f"stream_corpus_bands_{suffix}"
+    shingle_table = f"stream_corpus_shingles_{suffix}"
     stage = tempfile.mkdtemp(prefix="stream_ingest_")
     in_dir = os.path.join(stage, "in")
     res_dir = os.path.join(stage, "out")
@@ -137,22 +148,12 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_dir = os.path.join(stage, "idx")
     sh_dir = os.path.join(stage, "sh")
 
-    # bucket-FILTER pruning needs autoBucketedScan scoped OFF: the auto
-    # heuristic keeps bucketed reads only for join/agg partitioning
-    # benefits and is blind to IN-list scan pruning (see
-    # operators/bucketing.py:bucket_pruned_scan_frames). Restored in
-    # cleanup(); the whole stream plans AND executes inside the scope.
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old_auto = spark.conf.get(auto_key, "true")
-
     def cleanup() -> None:
-        spark.conf.set(auto_key, old_auto)
-        spark.sql(f"DROP TABLE IF EXISTS {_INDEX_TABLE}")
-        spark.sql(f"DROP TABLE IF EXISTS {_SHINGLE_TABLE}")
+        spark.sql(f"DROP TABLE IF EXISTS {index_table}")
+        spark.sql(f"DROP TABLE IF EXISTS {shingle_table}")
         shutil.rmtree(stage, ignore_errors=True)
 
     q = None
-    spark.conf.set(auto_key, "false")
     try:
         # The corpus-index build chain and the delta staging write are
         # INDEPENDENT jobs — overlap them (guide §2.6) so the staging
@@ -164,32 +165,28 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # The verify stage's per-batch reads prune to matched ids;
             # building the band index below reads it ONCE,
             # exchange-free (groupBy on the bucket key).
-            spark.sql(f"DROP TABLE IF EXISTS {_SHINGLE_TABLE}")
             (
                 shingle_rows(docs.filter(F.col("doc_id") >= FIXED_DELTA_DOCS))
                 .repartition(N_SHINGLE_BUCKETS, "doc_id")
                 .write.bucketBy(N_SHINGLE_BUCKETS, "doc_id")
                 .sortBy("doc_id")
                 .option("path", sh_dir)
-                .mode("overwrite")
-                .saveAsTable(_SHINGLE_TABLE)
+                .saveAsTable(shingle_table)
             )
-            tbl = spark.table(_SHINGLE_TABLE)
+            tbl = spark.table(shingle_table)
 
             # --- stored table 2: the band index, bucketed on
             # (band, band_key). repartition by the bucket columns first
             # (same Murmur3 hash the bucketing layer uses) so each
             # bucket is ONE file and bucket-sorted reads need no
             # re-sort.
-            spark.sql(f"DROP TABLE IF EXISTS {_INDEX_TABLE}")
             (
                 _band_rows(_signature(tbl))
                 .repartition(N_INDEX_BUCKETS, "band", "band_key")
                 .write.bucketBy(N_INDEX_BUCKETS, "band", "band_key")
                 .sortBy("band", "band_key")
                 .option("path", idx_dir)
-                .mode("overwrite")
-                .saveAsTable(_INDEX_TABLE)
+                .saveAsTable(index_table)
             )
             # --- stored property 3: per-doc shingle counts — derived
             # once at index-build time (exchange-free: groupBy on the
@@ -201,7 +198,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").alias("n"))
                 .localCheckpoint(eager=True)
             )
-            return tbl, spark.table(_INDEX_TABLE), sizes
+            return tbl, spark.table(index_table), sizes
 
         def _stage_delta() -> None:
             delta = docs.filter(F.col("doc_id") < FIXED_DELTA_DOCS).select(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import query
 from ..sources import load
+from .confscope import scaled_state_partitions, state_scope
 from .rollup_stream import drain_to_memory
 
 DUP_USERS_BELOW = 30
@@ -49,6 +50,12 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # at-least-once ingest: one clean copy + a replayed slice
     ev.unionAll(ev.filter(F.col("user_id") < DUP_USERS_BELOW)).write.parquet(in_dir)
+    # Size-derived state partitioning — same rationale and oracle pin
+    # as the stream-stream joins (confscope.scaled_state_partitions):
+    # the dedup key domain (event ids) scales with data, so the store
+    # count follows input bytes; dedup state lives within a key's hash
+    # partition, so the emitted row set is partition-count independent.
+    spark = state_scope(spark, scaled_state_partitions(spark, in_dir))
     schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
     deduped = (
         spark.readStream.schema(schema)
@@ -56,15 +63,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    # Size-derived state partitioning — same rationale and oracle pin
-    # as the stream-stream joins (confscope.scaled_state_scope): the
-    # dedup key domain (event ids) scales with data, so the store
-    # count follows input bytes; dedup state lives within a key's hash
-    # partition, so the emitted row set is partition-count independent.
-    from .confscope import scaled_state_scope
-
-    with scaled_state_scope(spark, in_dir):
-        rows = drain_to_memory(spark, deduped, stage, "append")
+    rows = drain_to_memory(deduped, stage, "append")
     return spark.createDataFrame(rows, schema)
 
 
@@ -109,7 +108,7 @@ def hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    rows = drain_to_memory(spark, agg, stage, "complete")
+    rows = drain_to_memory(agg, stage, "complete")
     return spark.createDataFrame(
         rows,
         "window_start timestamp, window_end timestamp, n_events bigint",

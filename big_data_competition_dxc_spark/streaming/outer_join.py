@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import query
 from ..sources import load
+from .confscope import scaled_state_partitions, state_scope
 from .rollup_stream import drain_to_memory, staged_events_stream
 from .sessionize import ATTRIB_MINUTES
 
@@ -90,7 +91,13 @@ def stream_stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFra
         ).alias("c")
     ).collect()[0]["c"]
 
-    stream, stage = staged_events_stream(spark, sf_dir)
+    # Size-derived state partitioning — same rationale and oracle pin
+    # as stream_stream_attribution_join (confscope.scaled_state_partitions):
+    # scaling key domain, so the store count follows input bytes
+    # instead of a constant; NULL emission depends only on the global
+    # watermark, which is partition-count independent.
+    n_state = scaled_state_partitions(spark, f"{sf_dir}/events.parquet")
+    stream, stage = staged_events_stream(state_scope(spark, n_state), sf_dir)
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(
@@ -132,15 +139,7 @@ def stream_stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFra
             ),
         )
     )
-    # Size-derived state partitioning — same rationale and oracle pin
-    # as stream_stream_attribution_join (confscope.scaled_state_scope):
-    # scaling key domain, so the store count follows input bytes
-    # instead of a constant; NULL emission depends only on the global
-    # watermark, which is partition-count independent.
-    from .confscope import scaled_state_scope
-
-    with scaled_state_scope(spark, stage):
-        rows = drain_to_memory(spark, joined, stage, "append")
+    rows = drain_to_memory(joined, stage, "append")
     return spark.createDataFrame(
         rows, "purchase_id bigint, user_id bigint, click_id bigint, lag_seconds bigint"
     )

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from ..plans.registry import query
-from .confscope import state_partitions_scope
+from .confscope import state_scope
 
 # State-store commit fan-out (see confscope.py): the feed's key domain
 # is the CONSTANT {N_BUCKETS} buckets, but the session default (32
@@ -114,6 +114,7 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches the JVM's md5 of the same id — {N_BATCHES} offset steps x
     {BATCH_ROWS} rows, all verified. (sf_dir unused: the source IS the
     data; the oracle rebuilds the feed from range().)"""
+    spark = state_scope(spark, N_BUCKETS)
     spark.dataSource.register(TickFeedSource)
     agg = (
         spark.readStream.format("tickfeed")
@@ -132,18 +133,17 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="tickfeed_ckpt_")
     q = None
     try:
-        with state_partitions_scope(spark, N_BUCKETS):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            # availableNow would stop after the first prefetched slice
-            # (see module docstring); processAllAvailable loops
-            # micro-batches until read() stops advancing the offset.
-            q.processAllAvailable()
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        # availableNow would stop after the first prefetched slice
+        # (see module docstring); processAllAvailable loops
+        # micro-batches until read() stops advancing the offset.
+        q.processAllAvailable()
         rows = spark.table(sink).collect()
     finally:
         if q is not None and q.isActive:

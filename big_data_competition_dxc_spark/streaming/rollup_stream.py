@@ -24,32 +24,13 @@ from __future__ import annotations
 
 import os
 import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
 from ..plans.registry import query
-
-
-@contextmanager
-def nanos_conf_scope(spark: SparkSession):
-    """Hold the TIMESTAMP(NANOS)-as-long legacy conf for the duration of
-    a streaming query's EXECUTION (micro-batches decode the staged
-    parquet at run time, unlike batch reads whose schema resolves
-    eagerly), restoring the previous session value on exit so the conf
-    never leaks."""
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+from ..session import scoped
 
 
 def staged_events_stream(spark: SparkSession, sf_dir: str):
@@ -60,7 +41,12 @@ def staged_events_stream(spark: SparkSession, sf_dir: str):
     exactly how an unbounded ingest dir would look in production. Same
     TIMESTAMP(NANOS) workaround as sources/io.py: read ns as long,
     convert to timestamp in-plan (lossless at fixture precision).
-    Remove stage_dir once the stream has terminated."""
+    Remove stage_dir once the stream has terminated.
+
+    The stream is built on a child of ``spark`` holding the legacy
+    nanos-as-long conf (``session.scoped``), so every query started from
+    it runs with that conf; the child also keeps any conf ``spark``
+    itself was scoped to (a state-store count, say)."""
     stage = tempfile.mkdtemp(prefix="stream_events_")
     src = os.path.abspath(f"{sf_dir}/events.parquet")
     os.symlink(src, f"{stage}/events.parquet")
@@ -75,15 +61,12 @@ def staged_events_stream(spark: SparkSession, sf_dir: str):
     import pyarrow.parquet as _pq
 
     ts_is_nanos = str(_pq.read_schema(src).field("ts").type) == "timestamp[ns]"
-    # nanosAsLong is NOT set here: readStream is declared with an
-    # explicit schema (no eager footer inference), and the file decode
-    # happens during micro-batch execution — drain_to_memory scopes the
-    # conf around the stream's actual run instead.
     raw_ts = "bigint" if ts_is_nanos else "timestamp_ntz"
     raw_schema = (
         f"event_id bigint, ts {raw_ts}, user_id bigint, "
         "event_type string, value double, props string"
     )
+    spark = scoped(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
     stream = spark.readStream.schema(raw_schema).parquet(stage)
     if ts_is_nanos:
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -92,35 +75,36 @@ def staged_events_stream(spark: SparkSession, sf_dir: str):
     return stream, stage
 
 
-def drain_to_memory(spark: SparkSession, agg: DataFrame, stage: str, mode: str) -> list:
+def drain_to_memory(agg: DataFrame, stage: str, mode: str) -> list:
     """Run a streaming aggregate with availableNow into a throwaway
     memory sink, collect its rows, and clean up the sink table and the
-    staging dir."""
+    staging dir. The query runs on the session ``agg`` was built on,
+    which also holds the sink's view."""
     import shutil
     import uuid as _uuid
 
+    spark = agg.sparkSession
     sink = f"sink_{_uuid.uuid4().hex[:8]}"
     q = None
-    with nanos_conf_scope(spark):
+    try:
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(sink).collect()
+    finally:
+        # a failed stream must not leak the query, sink view, or stage dir
+        if q is not None and q.isActive:
+            q.stop()
         try:
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return spark.table(sink).collect()
-        finally:
-            # a failed stream must not leak the query, sink view, or stage dir
-            if q is not None and q.isActive:
-                q.stop()
-            try:
-                spark.catalog.dropTempView(sink)
-            except Exception:
-                pass
-            shutil.rmtree(stage, ignore_errors=True)
+            spark.catalog.dropTempView(sink)
+        except Exception:
+            pass
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,7 +127,7 @@ def streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Memory-sink contents are driver-local and small (one row per
     # (day, event_type)); snapshot them into a plain DataFrame.
-    rows = drain_to_memory(spark, agg, stage, "complete")
+    rows = drain_to_memory(agg, stage, "complete")
     return spark.createDataFrame(
         rows, "ds date, event_type string, n_events bigint, total_value double"
     )

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import fixed_sum, sql_fixed_sum
 from ..plans.registry import query
 from ..sources import load
+from .confscope import scaled_state_partitions, state_scope
 
 GAP_MINUTES = 30
 
@@ -98,7 +99,14 @@ def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried as max(ts) (window.end would add the gap)."""
     from .rollup_stream import drain_to_memory, staged_events_stream
 
-    stream, stage = staged_events_stream(spark, sf_dir)
+    # Size-derived state partitioning — same rationale and oracle pin
+    # as the stream-stream joins (confscope.scaled_state_partitions):
+    # the session-window key domain (users) scales with data, so the
+    # store count follows input bytes instead of a constant; session
+    # merging happens within a user's hash partition, so the session
+    # set is partition-count independent.
+    n_state = scaled_state_partitions(spark, f"{sf_dir}/events.parquet")
+    stream, stage = staged_events_stream(state_scope(spark, n_state), sf_dir)
     agg = (
         stream.groupBy(
             F.session_window("ts", f"{GAP_MINUTES} minutes").alias("win"), "user_id"
@@ -116,16 +124,7 @@ def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    # Size-derived state partitioning — same rationale and oracle pin
-    # as the stream-stream joins (confscope.scaled_state_scope): the
-    # session-window key domain (users) scales with data, so the store
-    # count follows input bytes instead of a constant; session merging
-    # happens within a user's hash partition, so the session set is
-    # partition-count independent.
-    from .confscope import scaled_state_scope
-
-    with scaled_state_scope(spark, stage):
-        rows = drain_to_memory(spark, agg, stage, "complete")
+    rows = drain_to_memory(agg, stage, "complete")
     return spark.createDataFrame(
         rows,
         "user_id bigint, session_start timestamp, session_end timestamp, "
@@ -161,8 +160,18 @@ def stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFram
     oracle)."""
     from .rollup_stream import drain_to_memory, staged_events_stream
 
+    # Size-derived state partitioning (confscope.scaled_state_partitions):
+    # the join key domain SCALES with data, so a constant count is
+    # forbidden — instead the store count follows input bytes (floor 4,
+    # capped at the session default). At the old session default the
+    # availableNow run committed 32 partitions x 4 join stores x 2
+    # micro-batches = 256 store commits for ~40k state rows; the
+    # zero-input watermark-flush batch alone cost ~5.7s of pure store
+    # fan-out. Hash partitioning only decides where a key's state
+    # lives — the emitted row set is identical (oracle-pinned).
+    n_state = scaled_state_partitions(spark, f"{sf_dir}/events.parquet")
     # one staged dir; both sides read the same file source independently
-    stream, stage = staged_events_stream(spark, sf_dir)
+    stream, stage = staged_events_stream(state_scope(spark, n_state), sf_dir)
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(
@@ -192,19 +201,7 @@ def stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFram
         "user_id",
         (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias("lag_seconds"),
     )
-    # Size-derived state partitioning (confscope.scaled_state_scope):
-    # the join key domain SCALES with data, so a constant pin is
-    # forbidden — instead the store count follows input bytes (floor 4,
-    # capped at the session default). At the old session default the
-    # availableNow run committed 32 partitions x 4 join stores x 2
-    # micro-batches = 256 store commits for ~40k state rows; the
-    # zero-input watermark-flush batch alone cost ~5.7s of pure store
-    # fan-out. Hash partitioning only decides where a key's state
-    # lives — the emitted row set is identical (oracle-pinned).
-    from .confscope import scaled_state_scope
-
-    with scaled_state_scope(spark, stage):
-        rows = drain_to_memory(spark, joined, stage, "append")
+    rows = drain_to_memory(joined, stage, "append")
     return spark.createDataFrame(
         rows, "purchase_id bigint, click_id bigint, user_id bigint, lag_seconds bigint"
     )

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
 from ..plans.registry import query
-from .rollup_stream import nanos_conf_scope, staged_events_stream
+from .rollup_stream import staged_events_stream
 
 
 @query(
@@ -62,14 +62,13 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = None
     try:
-        with nanos_conf_scope(spark):
-            q = (
-                agg.writeStream.foreachBatch(upsert_snapshot)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q = (
+            agg.writeStream.foreachBatch(upsert_snapshot)
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
         assert seen_batches, "foreachBatch callback never fired"
         rows = spark.read.parquet(f"{out}/snapshot").collect()
     finally:

@@ -36,8 +36,8 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import to_units
 from ..plans.registry import query
-from .confscope import state_partitions_scope
-from .rollup_stream import nanos_conf_scope, staged_events_stream
+from .confscope import state_scope
+from .rollup_stream import staged_events_stream
 
 #: The state key domain: event_type is a 5-value schema constant, so
 #: the stateful aggregation needs 8, not 32, state stores per
@@ -67,7 +67,7 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-cents sum buffers. Must equal the oracle's batch aggregate
     over the raw table: the exactly-once state audit, computed from
     the checkpoint rather than the sink."""
-    stream, stage = staged_events_stream(spark, sf_dir)
+    stream, stage = staged_events_stream(state_scope(spark, STATE_PARTITIONS), sf_dir)
     agg = stream.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum(to_units(F.col("value"), 2)).alias("cents"),
@@ -76,18 +76,15 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = f"sink_{uuid.uuid4().hex[:8]}"
     q = None
     try:
-        with nanos_conf_scope(spark), state_partitions_scope(
-            spark, STATE_PARTITIONS
-        ):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
         # the offline read: state rows decoded from the checkpoint,
         # NOT the sink table — the sink is only the drain target
         state = spark.read.format("statestore").load(ckpt)
@@ -100,7 +97,7 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         if q is not None and q.isActive:
             q.stop()
         try:
-            spark.catalog.dropTempView(sink)
+            agg.sparkSession.catalog.dropTempView(sink)
         except Exception:
             pass
         shutil.rmtree(ckpt, ignore_errors=True)

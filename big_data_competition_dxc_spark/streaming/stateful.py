@@ -84,7 +84,7 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    rows = drain_to_memory(spark, updated, stage, "update")
+    rows = drain_to_memory(updated, stage, "update")
     return spark.createDataFrame(
         rows, "user_id bigint, n_events bigint, total_value double"
     )

@@ -7,7 +7,9 @@
 
 3. leak check: after the query loop, ``plans.memos.clear_all()`` must
    leave no persisted RDD in the session (a query that pins blocks
-   outside the memo store would show up here).
+   outside the memo store would show up here), and the session's
+   catalog must list no table or view (a query that leaves a temp view
+   or a scratch table behind would show up here).
 
 The last line gives the number of generated classes Janino compiled
 over the t2 sweep, the figure that sizes ``session.CODEGEN_CACHE_ENTRIES``.
@@ -116,6 +118,9 @@ def main() -> int:
     leaked = len(spark.sparkContext._jsc.getPersistentRDDs())
     if leaked:
         failures.append(f"{leaked} persisted RDDs after clear_all()")
+    tables = [t.name for t in spark.catalog.listTables()]
+    if tables:
+        failures.append(f"tables or views left in the catalog: {tables}")
     if failures:
         print(f"\n{len(failures)} FAILURES: {failures}")
     else:

@@ -1,6 +1,7 @@
 """Pins for the r14 optimization internals: ml/concurrency.py's
-thread-pool fit submission and streaming/confscope.py's scoped
-state-partition override (commit 0278a8b)."""
+thread-pool fit submission, and the child sessions that hold a
+request's confs (session.scoped), through which streaming/confscope.py
+scopes state-partition counts."""
 
 from __future__ import annotations
 
@@ -10,9 +11,7 @@ from big_data_competition_dxc_spark.ml.concurrency import (
     MAX_CONCURRENT_FITS,
     run_concurrently,
 )
-from big_data_competition_dxc_spark.streaming.confscope import (
-    state_partitions_scope,
-)
+from big_data_competition_dxc_spark.session import scoped
 
 
 def test_results_preserve_input_order(spark):
@@ -58,21 +57,35 @@ def test_spark_actions_from_threads_are_correct(spark):
     assert counts == [10, 20, 30, 40]
 
 
-def test_state_partitions_scope_restores_previous_value(spark):
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    with state_partitions_scope(spark, 7):
-        assert spark.conf.get(key) == "7"
-    assert spark.conf.get(key) == prev
+SHUFFLE = "spark.sql.shuffle.partitions"
+BLOOM = "spark.sql.optimizer.runtime.bloomFilter.enabled"
 
 
-def test_state_partitions_scope_restores_on_error(spark):
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    with pytest.raises(RuntimeError):
-        with state_partitions_scope(spark, 7):
-            raise RuntimeError("stream died")
-    assert spark.conf.get(key) == prev
+def test_scoped_child_carries_the_confs_and_the_parent_never_changes(spark):
+    prev = spark.conf.get(SHUFFLE)
+    child = scoped(spark, {SHUFFLE: "7"})
+    assert child is not spark
+    assert child.conf.get(SHUFFLE) == "7"
+    assert spark.conf.get(SHUFFLE) == prev
+    # a frame built on the child is planned under the child's confs
+    plan = child.range(100).repartition("id")._jdf.queryExecution().executedPlan()
+    assert "hashpartitioning(id#" in plan.toString() and ", 7)" in plan.toString()
+
+
+def test_scoped_same_conf_set_returns_same_child(spark):
+    a = scoped(spark, {SHUFFLE: "7", BLOOM: "true"})
+    assert scoped(spark, {BLOOM: "true", SHUFFLE: "7"}) is a
+    assert scoped(spark, {SHUFFLE: "6"}) is not a
+
+
+def test_scoped_nested_scope_merges_its_confs(spark):
+    outer = scoped(spark, {SHUFFLE: "7", BLOOM: "true"})
+    inner = scoped(outer, {SHUFFLE: "5"})
+    assert inner.conf.get(SHUFFLE) == "5"  # the inner scope's value wins
+    assert inner.conf.get(BLOOM) == "true"  # the outer scope's conf holds
+    assert outer.conf.get(SHUFFLE) == "7"
+    # branched from the root: the same merged set from the root is the same child
+    assert scoped(spark, {SHUFFLE: "5", BLOOM: "true"}) is inner
 
 
 def test_run_concurrently_max_workers_override(spark):
@@ -102,7 +115,7 @@ def test_scaled_state_partitions_derive_from_bytes(spark, tmp_path):
     the session default — never a constant, never the core count."""
     from big_data_competition_dxc_spark.streaming.confscope import (
         scaled_state_partitions,
-        scaled_state_scope,
+        state_scope,
     )
 
     small = tmp_path / "small.bin"
@@ -120,9 +133,9 @@ def test_scaled_state_partitions_derive_from_bytes(spark, tmp_path):
     huge_n = scaled_state_partitions(spark, str(big), advisory_bytes=1)
     assert huge_n == default
 
-    # directory inputs are walked; the scope sets and restores the conf
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    with scaled_state_scope(spark, str(tmp_path)):
-        assert spark.conf.get(key) == "4"
-    assert spark.conf.get(key) == prev
+    # directory inputs are walked; the scope's child holds the count
+    # and the shared session keeps its own
+    prev = spark.conf.get(SHUFFLE)
+    child = state_scope(spark, scaled_state_partitions(spark, str(tmp_path)))
+    assert child.conf.get(SHUFFLE) == "4"
+    assert spark.conf.get(SHUFFLE) == prev

@@ -135,12 +135,13 @@ def test_statestore_metadata_describes_the_operator(spark, tmp_path):
     stateStoreSave operator, batch ids covering the availableNow
     drain, state partition count equal to the session's shuffle
     partitions, and the offline state row count equal to the number
-    of distinct keys."""
+    of distinct keys. The stream runs on the child session
+    ``staged_events_stream`` builds it on, which holds the legacy nanos
+    conf and the shuffle partitions ``get_spark`` set."""
     import uuid
 
     from big_data_competition_dxc_spark.functions.rounding import to_units
     from big_data_competition_dxc_spark.streaming.rollup_stream import (
-        nanos_conf_scope,
         staged_events_stream,
     )
 
@@ -151,16 +152,17 @@ def test_statestore_metadata_describes_the_operator(spark, tmp_path):
     ckpt = str(tmp_path / "ck")
     sink = f"sink_{uuid.uuid4().hex[:8]}"
     try:
-        with nanos_conf_scope(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert stream.sparkSession.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+        assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) in (None, "false")
         meta = spark.read.format("state-metadata").load(ckpt).collect()
         assert len(meta) == 1
         m = meta[0]
@@ -178,7 +180,7 @@ def test_statestore_metadata_describes_the_operator(spark, tmp_path):
     finally:
         import shutil
 
-        spark.catalog.dropTempView(sink)
+        stream.sparkSession.catalog.dropTempView(sink)
         shutil.rmtree(stage, ignore_errors=True)
 
 
@@ -196,11 +198,12 @@ def test_sql_scripting_clip_matches_dataframe_loop(spark):
     )
 
     conf_before = spark.conf.get("spark.sql.scripting.enabled", None)
+    tables_before = spark.catalog.listTables()
     got = sql_scripting_sigma_clip(spark, SF_TEST_DIR).collect()[0]
 
-    # session hygiene: the query must not leak its temp view or the
+    # session hygiene: the query must not leak a temp view or the
     # scripting conf into the shared session
-    assert not spark.catalog.tableExists("li_cents")
+    assert spark.catalog.listTables() == tables_before
     assert spark.conf.get("spark.sql.scripting.enabled", None) == conf_before
 
     cents = [
@@ -314,7 +317,6 @@ def test_streaming_checkpoint_restart_exactly_once(spark, tmp_path):
     import os
 
     from big_data_competition_dxc_spark.streaming.rollup_stream import (
-        nanos_conf_scope,
         staged_events_stream,
     )
 
@@ -324,16 +326,15 @@ def test_streaming_checkpoint_restart_exactly_once(spark, tmp_path):
     out = stream.select("event_id", "user_id", "event_type")
 
     def run_once():
-        with nanos_conf_scope(spark):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q = (
+            out.writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
     try:
         run_once()

@@ -229,13 +229,33 @@ def test_bucketed_join_has_no_exchange(spark):
 def test_load_scopes_nanos_conf(spark):
     """load('events') must not leak the nanosAsLong legacy conf into the
     session (a leaked true silently decodes every later TIMESTAMP(NANOS)
-    read as bigint), AND the returned DataFrame must still execute after
-    the conf is restored."""
+    read as bigint), AND the returned DataFrame must execute on the
+    session that asked for it, which never holds the conf."""
     key = "spark.sql.legacy.parquet.nanosAsLong"
     df = load(spark, SF_TEST_DIR, "events")
     assert spark.conf.get(key, None) in (None, "false")
-    assert df.count() > 0  # execution works post-restore
+    assert df.sparkSession is spark
+    assert df.count() > 0
     assert dict(df.dtypes)["ts"] == "timestamp"
+
+
+def test_load_reads_nanos_timestamps(spark, tmp_path):
+    """An events file written with TIMESTAMP(NANOS), which a plain
+    parquet read rejects, loads as the session-tz TIMESTAMP type with
+    its microseconds intact."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = [1_700_000_000_123_456_000, 1_700_000_100_000_001_000]
+    pq.write_table(
+        pa.table({"event_id": [1, 2], "ts": pa.array(ts, type=pa.timestamp("ns"))}),
+        tmp_path / "events.parquet",
+    )
+    df = load(spark, str(tmp_path), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = [r.us for r in df.select(F.unix_micros("ts").alias("us")).orderBy("us").collect()]
+    assert got == [t // 1000 for t in ts]
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) in (None, "false")
 
 
 def test_read_csv_arity_and_cast_semantics(spark, tmp_path):
@@ -321,22 +341,21 @@ def test_shuffle_budget(name, budget, spark):
 
 
 def test_bloom_filter_injected(spark):
-    """bloom_pruned_join's scope must actually materialize the runtime
-    Bloom filter: the probe (lineitem) side carries a might_contain
-    predicate fed by a bloom_filter_agg over the filtered build side —
-    the pre-shuffle pruning a 100 TB big-big join depends on."""
-    from big_data_competition_dxc_spark.operators.bloom_join import (
-        bloom_join_scope,
-        build_bloom_join,
-    )
-
-    with bloom_join_scope(spark):
-        df = build_bloom_join(spark, SF_TEST_DIR)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    """bloom_pruned_join's child-session confs must actually materialize
+    the runtime Bloom filter: the probe (lineitem) side carries a
+    might_contain predicate fed by a bloom_filter_agg over the filtered
+    build side — the pre-shuffle pruning a 100 TB big-big join depends
+    on. The registry entry's frame carries the confs; the shared
+    session's stay as they were."""
+    key = "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
+    before = spark.conf.get(key)
+    df = plans.QUERIES["bloom_pruned_join"].fn(spark, SF_TEST_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "might_contain" in plan
     assert "bloom_filter_agg" in plan
-    assert "BroadcastHashJoin" not in plan  # scope forces the shuffle join
+    assert "BroadcastHashJoin" not in plan  # the child's confs force the shuffle join
+    assert spark.conf.get(key) == before
 
 
 def test_mode_median_modal_side_broadcasts(spark):
