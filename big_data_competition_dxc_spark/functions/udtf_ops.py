@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import udtf
 
 from ..plans.registry import query
+from ..session import scoped
 from ..sources import table_sql
 
 CHUNK_WORDS = 10
@@ -67,10 +68,15 @@ FROM (
 def udtf_word_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every document exploded to (doc_id, chunk_idx, chunk, n_words)
     in {CHUNK_WORDS}-word chunks via a lateral-correlated Python UDTF;
-    must equal DuckDB's list_slice chunking of the same text."""
-    spark.udtf.register("chunk_words", _ChunkWords)
+    must equal DuckDB's list_slice chunking of the same text.
+
+    The UDTF is registered on a child session, not the caller's: a
+    name registered there would stay in the shared session's function
+    registry after the request."""
+    child = scoped(spark, {})
+    child.udtf.register("chunk_words", _ChunkWords)
     return table_sql(
-        spark,
+        child,
         sf_dir,
         """
         SELECT d.doc_id, s.chunk_idx, s.chunk, s.n_words

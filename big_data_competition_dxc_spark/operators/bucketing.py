@@ -74,7 +74,7 @@ def bucketed_join_frames(spark: SparkSession, sf_dir: str):
     return o.join(l, o.o_orderkey == l.l_orderkey), cleanup
 
 
-@query("bucketed_colocated_join", oracle=_BUCKETED_ORACLE, tags=("J2", "S2", "S3"))
+@query("bucketed_colocated_join", oracle=_BUCKETED_ORACLE, tags=("J2", "S2", "S3"), writes=True)
 def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈fact via bucketed tables: the repeated-join workhorse at
     100 TB — pay the layout shuffle once at write, join shuffle-free
@@ -193,6 +193,7 @@ def bucket_pruned_scan_frames(spark: SparkSession, sf_dir: str):
     "bucket_pruned_scan",
     oracle=_BUCKET_PRUNE_ORACLE,
     tags=("S2", "S3", "P9", "scale"),
+    writes=True,
 )
 def bucket_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-lookup revenue for {len(_PROBE_KEYS)} order keys through a

@@ -103,6 +103,7 @@ def dpp_join_frames(spark: SparkSession, sf_dir: str):
     "dpp_partitioned_join",
     oracle=_DPP_ORACLE,
     tags=("S2", "S3", "J1", "P3", "scale"),
+    writes=True,
 )
 def dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event type over the odd-total days only: day count, event

@@ -1,15 +1,23 @@
-"""Session memos (canonical DataFrames and table relations) and the one
-release call.
+"""Session memos (canonical DataFrames, table relations and query
+results) and the one release call.
 
 Several query families derive one expensive canonical intermediate that
 multiple registered queries consume: the music feature table
 (ml/regression), the ratings matrix and its cosine pairs (ml/recommend),
 the minhash shingle/band/size frames and the simhash and Jaccard pair
 sets (dedup/). Production runs each derivation once per input; every
-such memo goes through ``memoized``. The same store holds each fixture
-table's resolved relation (``sources.load``, ``cache=False``): the frame
-is kept uncached, so a warm lookup saves the parquet footer read and
-nothing is materialized.
+such memo goes through ``memoized``, which holds a frame in one of
+three ways (``hold``):
+
+- ``"cached"``: the canonical intermediates above, ``.cache()``d;
+- ``"relation"``: each fixture table's resolved relation
+  (``sources.load``), kept uncached, so a warm lookup saves the parquet
+  footer read and nothing is materialized;
+- ``"result"``: a registered query's answer (``plans.registry``, the
+  entry's ``fn``). Its rows are collected to the driver once and served
+  as a local frame (a ``LocalRelation``): a hit runs no Spark job, and
+  the frame owns no cached blocks. At most ``N`` rows are held; a
+  larger answer is returned lazily and not held.
 
 The contract:
 - memos hold PARAMETERLESS canonical derivations only — a forced or
@@ -17,12 +25,13 @@ The contract:
 - a cached memo is keyed ``(name, applicationId, sf_dir)``: every
   session of the application shares it, as they share the
   CacheManager that holds its blocks;
-- a relation (``cache=False``) is keyed per session as well. A frame
-  is bound to the session that built it, and a join built on it is
+- a relation or a result is keyed per session as well. A frame is
+  bound to the session that built it, and a join built on it is
   planned under that session's confs. A child session made for one
   request's confs (``session.scoped``) therefore resolves relations of
   its own: served the root's relations, the Bloom-filter join planned
-  a plain broadcast join;
+  a plain broadcast join. A result is bound to the session that asked
+  for it, whichever session its builder ran on;
 - an entry is valid only for the input identity it was built from
   (name, size and ``mtime_ns`` of every entry under ``sf_dir``,
   descending into table directories): a table rewritten under the
@@ -31,18 +40,23 @@ The contract:
   otherwise serve the old blocks to the rebuilt scan;
 - each key has its own lock, so concurrent callers of one memo build it
   once; a memo may build on another memo (locks nest outer-to-inner,
-  never the reverse; a relation builds on nothing, so its lock is
-  always innermost);
-- a waiter or later caller served a cached memo counts as a warm hit;
-  one served an uncached relation does not, because the benchmarks read
-  the count to tell memo-warm readings from standalone query cost;
+  never the reverse; a result builds on memos and relations and
+  nothing builds on a result, so its lock is always outermost; a
+  relation builds on nothing, so its lock is always innermost);
+- a waiter or later caller served a cached memo or a result counts as
+  a warm hit; one served an uncached relation does not, because the
+  benchmarks read the count to tell memo-warm readings from standalone
+  query cost;
 - plan-audit mode (``SPARK_GRAFT_NO_CHECKPOINT``) bypasses them: the
-  build runs uncached and nothing is stored (a cache is a
-  materialization barrier that hides the pipeline from ``.explain``);
+  build runs uncached and nothing is stored (a cache or a collected
+  result is a materialization barrier that hides the pipeline from
+  ``.explain``);
 - ``clear_all()`` is a teardown call: it forgets every memo and releases
   every cached frame and persisted RDD of the live context, including
   ``localCheckpoint`` blocks, and every JVM object held only by Python
-  garbage. Frames returned before it are invalid after it.
+  garbage. A result frame returned before it still reads the same rows
+  after it (its rows live in its plan); other frames returned before it
+  may be invalid after it.
 """
 
 from __future__ import annotations
@@ -51,19 +65,29 @@ import gc
 import os
 import threading
 from collections.abc import Callable
+from typing import Literal
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 _Key = tuple[str, str, int | None, str]  # (name, applicationId, id(session) or None, sf_dir)
+Hold = Literal["cached", "relation", "result"]
+
+#: Rows a held result may have. A result is collected through
+#: ``limit(N + 1)``; one over ``N`` rows is returned lazily and not held,
+#: so no unbounded answer sits on the driver. The registry's largest
+#: answers are ``linear_interpolate_hourly``'s: 779,439 rows on the
+#: benchmark's seed-1 input and 105,171 on ``sf0.01``; the next largest
+#: have under 90,000.
+N = 1_000_000
 
 _LOCK = threading.Lock()  # guards the three globals below
 _MEMOS: dict[_Key, tuple[tuple, DataFrame]] = {}  # key -> (input identity, frame)
 _KEY_LOCKS: dict[_Key, threading.Lock] = {}
 
-#: Count of cached-memo lookups served warm since the last ``consume_warm_hits``
-#: — the benchmarks read it to tell memo-warm readings from standalone
-#: query cost.
+#: Count of cached-memo and result lookups served warm since the last
+#: ``consume_warm_hits`` — the benchmarks read it to tell memo-warm
+#: readings from standalone query cost.
 _WARM_HITS = 0
 
 
@@ -92,18 +116,18 @@ def memoized(
     sf_dir: str,
     build: Callable[[], DataFrame],
     *,
-    cache: bool = True,
+    hold: Hold = "cached",
 ) -> DataFrame:
     """``build()`` stored once per (session, ``sf_dir``, input identity)
-    under ``name``, and cached unless ``cache`` is false; see the module
-    docstring for the contract."""
+    under ``name``, held as ``hold`` says; see the module docstring for
+    the contract."""
     global _WARM_HITS
     if os.environ.get("SPARK_GRAFT_NO_CHECKPOINT"):
         return build()
     app = spark.sparkContext.applicationId
     # the memo's frame holds its session, so the id is not reused while
     # the entry lives
-    key = (name, app, None if cache else id(spark), sf_dir)
+    key = (name, app, None if hold == "cached" else id(spark), sf_dir)
     identity = _input_identity(sf_dir)
     with _LOCK:
         # cached frames pin their (possibly stopped) session: drop other
@@ -116,17 +140,37 @@ def memoized(
         with _LOCK:
             entry = _MEMOS.get(key)
             if entry is not None and entry[0] == identity:
-                if cache:
+                if hold != "relation":
                     _WARM_HITS += 1
                 return entry[1]
-        if cache and entry is not None:
+        if hold == "cached" and entry is not None:
             entry[1].unpersist()
         df = build()
-        if cache:
-            df = df.cache()
+        if hold == "cached":
+            held = df.cache()
+        elif hold == "result":
+            held = _local(spark, df)
+        else:
+            held = df
         with _LOCK:
-            _MEMOS[key] = (identity, df)
-        return df
+            if held is None:  # over N rows: served lazily, not held
+                _MEMOS.pop(key, None)
+                return df
+            _MEMOS[key] = (identity, held)
+        return held
+
+
+def _local(spark: SparkSession, df: DataFrame) -> DataFrame | None:
+    """``df``'s rows as a local frame of ``spark``, or None if it has
+    more than ``N``. The rows stay JVM-side: collected as Java rows and
+    handed back to ``createDataFrame``, the round trip is exact for
+    every column type. (``toDF()``: a ``spark.range`` frame is a
+    ``Dataset[Long]`` on the JVM side, not one of rows.)"""
+    jdf = df._jdf.toDF()
+    rows = jdf.limit(N + 1).collectAsList()
+    if rows.size() > N:
+        return None
+    return DataFrame(spark._jsparkSession.createDataFrame(rows, jdf.schema()), spark)
 
 
 def consume_warm_hits() -> int:

@@ -160,7 +160,8 @@ def scoped(spark: SparkSession, confs: Mapping[str, str]) -> SparkSession:
     query on a child of the root session (``newSession()``: same
     SparkContext and cached data, its own SQL conf and temp views). A
     frame built on the child keeps its confs for as long as it lives,
-    planning included.
+    planning included. A child has its own function registry as well,
+    so a query that registers a UDTF does it on ``scoped(spark, {})``.
 
     A child starts from the confs ``get_spark`` created the session
     with, not from confs set at runtime, so a scope opened on a child

@@ -71,7 +71,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The relation is resolved once per (session, ``sf_dir``, input
     identity) and the same uncached frame is returned to every later
     caller, concurrent ones included; a table rewritten under the same
-    path is resolved anew (``plans.memos.memoized`` with ``cache=False``).
+    path is resolved anew (``plans.memos.memoized``, ``hold="relation"``).
 
     ``events.parquet`` has been written with TIMESTAMP(NANOS) (which
     Spark's parquet reader rejects — read nanos as long, divide to us)
@@ -83,7 +83,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (unix_micros) type-checks regardless of which variant the fixture
     carries."""
     return memoized(
-        f"table:{name}", spark, sf_dir, lambda: _resolve(spark, sf_dir, name), cache=False
+        f"table:{name}", spark, sf_dir, lambda: _resolve(spark, sf_dir, name), hold="relation"
     )
 
 

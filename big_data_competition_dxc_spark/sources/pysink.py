@@ -147,6 +147,7 @@ FROM orders
 GROUP BY o_orderstatus
 """,
     tags=("S4", "S6", "extension"),
+    writes=True,
 )
 def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trip ``orders`` through the custom Python sink: a 4-task
@@ -156,6 +157,11 @@ def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the oracle (which reads the clean parquet directly) holds iff
     the commit protocol published every real row exactly once and
     nothing else."""
+    # Registered on the caller's session, not a child's: the writer
+    # looks a Python data source up in the JVM thread's active session,
+    # not in the session of the frame it writes, so a sink registered on
+    # a child is not found (DATA_SOURCE_NOT_FOUND). On the caller's
+    # session a repeat replaces the same class.
     spark.dataSource.register(AuditedSinkSource)
     src = load(spark, sf_dir, "orders").select(
         "o_orderkey",

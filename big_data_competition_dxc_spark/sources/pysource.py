@@ -93,6 +93,11 @@ def python_datasource_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the custom Python datasource and aggregate per id-suffix
     bucket; min/max digest per bucket pins the Python reader's content
     byte-for-byte against DuckDB's md5 over the same id range."""
+    # Registered on the caller's session, not a child's: registration
+    # checks the name against the JVM thread's active session, so a
+    # child cannot register a source its root already has
+    # (DATA_SOURCE_ALREADY_EXISTS), and the child would not see the
+    # root's. On the caller's session a repeat replaces the same class.
     spark.dataSource.register(DeterministicFeedSource)
     feed = spark.read.format("deterministic_feed").load()
     return feed.groupBy((F.col("id") % 10).cast("bigint").alias("bucket")).agg(

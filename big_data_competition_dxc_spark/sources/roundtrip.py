@@ -56,6 +56,7 @@ GROUP BY o_orderstatus
     "csv_roundtrip_malformed",
     oracle=_ORDERS_AGG_ORACLE,
     tags=("S1", "S4", "P6", "P14"),
+    writes=True,
 )
 def csv_roundtrip_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1+S4 (M:29-31 textFile→split→arity filter; M:98 saveAsTextFile):
@@ -124,6 +125,7 @@ FROM daily WHERE ds >= DATE '2024-01-10' GROUP BY ds
 """,
     bench=True,
     tags=("S2", "S3", "P3"),
+    writes=True,
 )
 def parquet_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2+S3 (M:129→132 write.parquet / read.parquet checkpoint), done
@@ -237,6 +239,7 @@ SELECT ds, CAST(COUNT(*) AS BIGINT) AS n_types,
 FROM patched GROUP BY ds
 """,
     tags=("S2", "S3", "P3"),
+    writes=True,
 )
 def partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Idempotent partition backfill — the production write pattern a
@@ -282,6 +285,7 @@ FROM orders
 GROUP BY 1, 2
 """,
     tags=("S1", "S4", "json"),
+    writes=True,
 )
 def json_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines as a source/sink format (the S1/S4 surface beyond CSV
@@ -321,6 +325,7 @@ FROM orders
 GROUP BY 1
 """,
     tags=("S2", "S3", "format"),
+    writes=True,
 )
 def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2/S3 widened to the ORC columnar format (built into Spark, no
@@ -357,6 +362,7 @@ FROM orders
 GROUP BY 1
 """,
     tags=("S1", "S4", "xml"),
+    writes=True,
 )
 def xml_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S4 widened to Spark 4's NATIVE XML source (rowTag-based, no
@@ -411,6 +417,7 @@ FROM unified
 GROUP BY 1
 """,
     tags=("S2", "S3", "format", "evolution"),
+    writes=True,
 )
 def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution across parquet batches: an early batch (even
@@ -462,6 +469,7 @@ SELECT CAST(COUNT(DISTINCT ds) AS BIGINT) AS n_files_after,
 FROM daily
 """,
     tags=("S2", "S3", "compaction", "scale"),
+    writes=True,
 )
 def small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The small-files maintenance operation every long-lived 100 TB
@@ -518,6 +526,7 @@ FROM nation
     "binaryfile_ingest_audit",
     oracle=_BINARYFILE_ORACLE,
     tags=("S1", "multimodal"),
+    writes=True,
 )
 def binaryfile_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's ``binaryFile`` source as the multimodal RAW-INGESTION

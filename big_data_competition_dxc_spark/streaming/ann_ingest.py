@@ -125,6 +125,7 @@ def _bucket_col(v: str) -> F.Column:
     "stream_ann_ingest",
     oracle=_ANN_INGEST_ORACLE,
     tags=("streaming", "similarity", "ann", "lsh"),
+    writes=True,
 )
 def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH ANN lookups run as a STREAM: query vectors staged one

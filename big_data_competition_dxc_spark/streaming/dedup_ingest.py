@@ -118,6 +118,7 @@ def _formatted_plan(df: DataFrame) -> str:
     "stream_incremental_dedup",
     oracle=_incremental_oracle(_IS_FIXED_DELTA_SQL),
     tags=("streaming", "dedup", "minhash", "cdc"),
+    writes=True,
 )
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fixed-delta ingest dedup run as a STREAM: delta docs staged

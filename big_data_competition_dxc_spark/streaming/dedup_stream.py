@@ -35,6 +35,7 @@ DUP_USERS_BELOW = 30
     "stream_dedup_watermark",
     oracle="SELECT event_id, ts, user_id, event_type, value FROM events",
     tags=("streaming", "dedup", "A7"),
+    writes=True,
 )
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once over an at-least-once stream: events of users below
@@ -86,6 +87,7 @@ GROUP BY ws
     "hopping_window_stream",
     oracle=_HOPPING_STREAM_ORACLE,
     tags=("streaming", "window"),
+    writes=True,
 )
 def hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch hopping-window rollup (operators/behavior.py) run as a

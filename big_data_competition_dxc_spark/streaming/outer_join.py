@@ -73,6 +73,7 @@ WHERE p.event_type = 'purchase'
   AND p.ts <= (SELECT cutoff FROM horizon)
 """,
     tags=("streaming", "J2", "P10"),
+    writes=True,
 )
 def stream_stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every closed-horizon purchase with its attributing clicks, or a

@@ -56,7 +56,7 @@ ASOF LEFT JOIN fb b ON l.user_id = b.user_id AND l.label_ds > b.ds
 """
 
 
-@query("stream_pit_enrich", oracle=_PIT_ORACLE, tags=("streaming", "J7", "asof"))
+@query("stream_pit_enrich", oracle=_PIT_ORACLE, tags=("streaming", "J7", "asof"), writes=True)
 def stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming purchases enriched with the user's most recent daily
     order spend STRICTLY BEFORE the purchase date, via the periodized

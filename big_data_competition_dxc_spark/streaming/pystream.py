@@ -106,6 +106,7 @@ GROUP BY 1
     # counts actual Python-hash-vs-JVM-md5 matches, so a content
     # corruption shows up as a value-hash mismatch against this oracle.
     tags=("streaming", "source", "extension"),
+    writes=True,
 )
 def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the deterministic tick feed through a stateful streaming

@@ -143,4 +143,5 @@ FROM events
 GROUP BY 1, 2
 """,
     tags=("streaming",),
+    writes=True,
 )(streaming_daily_rollup)

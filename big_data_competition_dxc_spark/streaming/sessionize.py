@@ -90,7 +90,7 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("sid")
 
 
-@query("sessionize_stream", oracle=_SESSION_ORACLE, tags=("streaming", "sessionize"))
+@query("sessionize_stream", oracle=_SESSION_ORACLE, tags=("streaming", "sessionize"), writes=True)
 def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionization with the native ``session_window``
     state-store operator (gap {GAP_MINUTES} min), availableNow over the
@@ -148,6 +148,7 @@ FROM events p JOIN events c
  AND c.ts <= p.ts
 """,
     tags=("streaming", "J2"),
+    writes=True,
 )
 def stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join (click-to-purchase attribution): each

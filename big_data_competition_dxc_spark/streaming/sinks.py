@@ -39,6 +39,7 @@ FROM events
 GROUP BY event_type
 """,
     tags=("streaming", "sink"),
+    writes=True,
 )
 def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming aggregate delivered through a foreachBatch parquet

@@ -58,6 +58,7 @@ FROM events
 GROUP BY event_type
 """,
     tags=("streaming", "extension", "A9"),
+    writes=True,
 )
 def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the per-event_type running aggregate over the events

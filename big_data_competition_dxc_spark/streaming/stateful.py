@@ -68,6 +68,7 @@ FROM events
 GROUP BY user_id
 """,
     tags=("streaming", "pandas-udf", "stateful"),
+    writes=True,
 )
 def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """applyInPandasWithState per-user totals, drained with availableNow

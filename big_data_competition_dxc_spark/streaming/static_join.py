@@ -40,7 +40,7 @@ GROUP BY 1
 """
 
 
-@query("stream_static_enrich", oracle=_ENRICH_ORACLE, tags=("streaming", "J1"))
+@query("stream_static_enrich", oracle=_ENRICH_ORACLE, tags=("streaming", "J1"), writes=True)
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming events enriched with the static customer dimension,
     rolled up per market segment; exact-cents value sum keeps the

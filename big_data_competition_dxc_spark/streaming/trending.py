@@ -74,4 +74,5 @@ SELECT window_start, event_type, n_events, CAST(rk AS BIGINT) AS rk
 FROM r WHERE rk <= 3
 """,
     tags=("streaming", "O3", "W4"),
+    writes=True,
 )(streaming_trending_topk)

@@ -117,4 +117,5 @@ FROM events
 GROUP BY user_id
 """,
         tags=("streaming", "pandas-udf", "stateful", "typed-state"),
+        writes=True,
     )(typed_state_user_totals)

@@ -4,6 +4,10 @@
 2. t2 gate: every ``queries()[name]`` at sf0.01 vs ``oracle_sql()[name]``
    through DuckDB — row count + sorted columns + order-insensitive
    value hash. Queries without an oracle get a rows-only check.
+   Each oracle query is then asked a second time: the answer must hash
+   the same, and it must be a warm hit of the registry's answer memo
+   (``plans.memos``) unless the query is declared ``writes=True``, whose
+   body runs on every call.
 
 3. leak check: after the query loop, ``plans.memos.clear_all()`` must
    leave no persisted RDD in the session (a query that pins blocks
@@ -55,7 +59,8 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     import importlib
 
-    from big_data_competition_dxc_spark.plans.memos import clear_all
+    from big_data_competition_dxc_spark.plans import QUERIES
+    from big_data_competition_dxc_spark.plans.memos import clear_all, consume_warm_hits
     from big_data_competition_dxc_spark.session import compiled_classes, get_spark
     from big_data_competition_dxc_spark.sources import TABLES
 
@@ -82,6 +87,7 @@ def main() -> int:
         qs = {n: qs[n] for n in names}
     print(f"{len(qs)} queries, {len(oracles)} oracles")
     failures = []
+    warm, rerun = 0, 0  # second answers served warm / run again (writes=True)
     compiled0 = compiled_classes(spark)
     for name, fn in sorted(qs.items()):
         t0 = time.perf_counter()
@@ -114,6 +120,18 @@ def main() -> int:
         print(
             f"{'MATCH' if ok else 'FAIL '} {name}: spark={len(srows)} duck={len(drows)} ({dt:.1f}s)"
         )
+        consume_warm_hits()
+        again = fn(spark, sf)
+        hit = consume_warm_hits() == 1
+        same = hash_result(again.columns, [tuple(r) for r in again.collect()]) == hash_result(
+            sdf.columns, srows
+        )
+        writes = QUERIES[name].writes
+        warm += hit and not writes
+        rerun += writes
+        if not same or not (hit or writes):
+            failures.append(name)
+            print(f"FAIL  {name}: second answer {'differs' if not same else 'was not a warm hit'}")
     clear_all()
     leaked = len(spark.sparkContext._jsc.getPersistentRDDs())
     if leaked:
@@ -125,6 +143,7 @@ def main() -> int:
         print(f"\n{len(failures)} FAILURES: {failures}")
     else:
         print("\nall good")
+    print(f"second answers: {warm} warm hits, {rerun} writing queries run again")
     print(f"codegen: {compiled_classes(spark) - compiled0} classes compiled over the sweep")
     return 1 if failures else 0
 

@@ -86,7 +86,7 @@ def main() -> None:
         # Initial with distinct node ids); scan detail sections render
         # once per distinct source, so PushedFilters is deduplicated;
         # codegen spans only render in simple mode ("*(n)" prefixes).
-        a = audit(entry.fn(spark, sf_dir))
+        a = audit(entry.build(spark, sf_dir))
         out.append(f"## {name}")
         out.append("")
         out.append(
@@ -126,7 +126,7 @@ def main() -> None:
     )
     out.append("|---|---|---|---|---|---|---|---|---|---|")
     for name in suite:
-        a = audit(plans.QUERIES[name].fn(spark, sf_dir))
+        a = audit(plans.QUERIES[name].build(spark, sf_dir))
         out.append(
             f"| `{name}` | {a['scans']} | {a['pushed']} | {a['bhj']} "
             f"| {a['smj']} | {a['shj']} | {a['bnlj']} | {a['exch']} "
@@ -225,7 +225,7 @@ def main() -> None:
     for name in extras:
         if name not in plans.QUERIES:
             continue
-        a = audit(plans.QUERIES[name].fn(spark, sf_dir))
+        a = audit(plans.QUERIES[name].build(spark, sf_dir))
         if a["scans"] == 0 and a["exch"] == 0:
             local_result.append(name)
         out.append(

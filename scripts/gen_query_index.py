@@ -32,10 +32,10 @@ def main() -> None:
     for name in sorted(plans.QUERIES):
         e = plans.QUERIES[name]
         doc = re.sub(r"\s+", " ", (e.doc or "").strip())
-        # expand {CONST} placeholders from the query fn's module globals
+        # expand {CONST} placeholders from the query builder's module globals
         consts = {
             k: v
-            for k, v in getattr(e.fn, "__globals__", {}).items()
+            for k, v in getattr(e.build, "__globals__", {}).items()
             if isinstance(v, (int, float, str)) and k.isupper()
         }
         try:

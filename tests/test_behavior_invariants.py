@@ -348,7 +348,7 @@ def test_bpe_learn_merges_laws(spark):
         assert r.n > 0
     ns = [r.n for r in rows]
     assert ns == sorted(ns, reverse=True)
-    rerun = _df("bpe_learn_merges", spark).collect()
+    rerun = plans.QUERIES["bpe_learn_merges"].build(spark, SF_TEST_DIR).collect()  # runs again
     assert [tuple(r) for r in rerun] == [tuple(r) for r in rows]
 
 
@@ -529,7 +529,7 @@ def test_epoch_shuffle_orders_differ_and_are_stable(spark):
         parts = h.split(",")
         assert len(parts) == HEAD_K
         assert all(int(p) in doc_ids for p in parts)
-    rerun = _df("epoch_shuffle_order", spark).collect()
+    rerun = plans.QUERIES["epoch_shuffle_order"].build(spark, SF_TEST_DIR).collect()  # runs again
     assert sorted(map(tuple, rerun)) == sorted(map(tuple, rows))
 
 

@@ -21,7 +21,9 @@ plans.load_all()
 
 def test_mix_rotation_compiles_nothing_once_warm(spark):
     """Three rotations of the mix's ten queries, one after another: by
-    the third, every class the rotation needs is cached."""
+    the third, every class the rotation needs is cached. Each rotation
+    runs the builders: the registry's held answers would compile
+    nothing on a repeat."""
     # the counter moves on a shape no earlier test compiled
     before = compiled_classes(spark)
     spark.range(3).selectExpr(f"id * {time.time_ns() % 10**9 + 7}").collect()
@@ -32,7 +34,7 @@ def test_mix_rotation_compiles_nothing_once_warm(spark):
         for _ in range(3):
             before = compiled_classes(spark)
             for q in MIX_QUERIES:
-                plans.QUERIES[q].fn(spark, SF_TEST_DIR).collect()
+                plans.QUERIES[q].build(spark, SF_TEST_DIR).collect()
             compiles.append(compiled_classes(spark) - before)
     finally:
         memos.clear_all()

@@ -26,6 +26,7 @@ def test_entry_contract(spark):
     qs = mod.queries()
     oracles = mod.oracle_sql()
     assert set(qs) == set(plans.QUERIES)
+    assert all(qs[n] is e.fn for n, e in plans.QUERIES.items())  # the memoized answers
     assert set(oracles) == {n for n, e in plans.QUERIES.items() if e.oracle is not None}
     assert all(oracles[n] == plans.QUERIES[n].oracle for n in oracles)
     assert "daily_rollup" in qs and "daily_rollup" in oracles
@@ -79,7 +80,7 @@ def test_central_memo_registry_clears_everything(spark):
     def stored() -> set[str]:
         return {k[0] for k in memos._MEMOS}
 
-    pairs = plans.QUERIES["simhash_neardup_pairs"].fn(spark, SF_TEST_DIR)
+    pairs = plans.QUERIES["simhash_neardup_pairs"].build(spark, SF_TEST_DIR)
     pairs.count()
     ratings = recommend.cached_ratings(spark, SF_TEST_DIR)
     ratings.count()
@@ -91,6 +92,6 @@ def test_central_memo_registry_clears_everything(spark):
     assert pairs.storageLevel == StorageLevel.NONE
     assert ratings.storageLevel == StorageLevel.NONE
     # second build after clearing must work (no stale state)
-    plans.QUERIES["simhash_neardup_pairs"].fn(spark, SF_TEST_DIR).count()
+    plans.QUERIES["simhash_neardup_pairs"].build(spark, SF_TEST_DIR).count()
     assert "simhash_pairs" in stored()
     memos.clear_all()

@@ -3,10 +3,15 @@ under concurrency, rebuilt when the input changes under the same path
 (a part file inside a table directory included), bypassed in plan-audit
 mode, and one ``clear_all()`` that releases every cached frame and
 persisted RDD. ``sources.load`` keeps each table's resolved relation in
-the same store, uncached."""
+the same store, uncached; the registry keeps each query's answer there
+as a local frame of at most ``memos.N`` rows, except for the queries
+declared ``writes=True``."""
 
 from __future__ import annotations
 
+import importlib
+import inspect
+import re
 import shutil
 import sys
 import threading
@@ -23,6 +28,7 @@ from big_data_competition_dxc_spark.plans import memos
 from big_data_competition_dxc_spark.sources import io
 
 from conftest import SF_TEST_DIR
+from test_oracle_parity import _rowset
 
 plans.load_all()
 
@@ -39,14 +45,14 @@ def _copy_fixture(dst: Path) -> str:
 
 @pytest.mark.parametrize(
     ("n_threads", "via"),
-    [(4, "memoized"), (16, "memoized"), (4, "load"), (16, "load")],
-    ids=["4", "16", "4-load", "16-load"],
+    [(4, "memoized"), (16, "memoized"), (4, "load"), (16, "load"), (4, "result"), (16, "result")],
+    ids=["4", "16", "4-load", "16-load", "4-result", "16-result"],
 )
 def test_concurrent_callers_build_once(spark, tmp_path, monkeypatch, n_threads, via):
     """Threads asking for one memo at once build it once; every caller
-    that waited on the lock counts as a warm hit. Threads loading one
-    table at once resolve it once and share the frame; an uncached
-    relation counts no warm hit."""
+    that waited on the lock counts as a warm hit, a held result's
+    included. Threads loading one table at once resolve it once and
+    share the frame; an uncached relation counts no warm hit."""
     builds = []
     start = threading.Barrier(n_threads, timeout=30)
 
@@ -68,9 +74,10 @@ def test_concurrent_callers_build_once(spark, tmp_path, monkeypatch, n_threads, 
         def lookup():
             return io.load(spark, str(tmp_path), "nation")
     else:
+        hold = "result" if via == "result" else "cached"
 
         def lookup():
-            return memos.memoized("concurrency_probe", spark, str(tmp_path), build)
+            return memos.memoized("concurrency_probe", spark, str(tmp_path), build, hold=hold)
 
     def call(out: list):
         start.wait()
@@ -88,7 +95,7 @@ def test_concurrent_callers_build_once(spark, tmp_path, monkeypatch, n_threads, 
             t.join(timeout=60)
         assert not any(t.is_alive() for t in threads)
         assert len(builds) == 1
-        assert memos.consume_warm_hits() == (n_threads - 1 if via == "memoized" else 0)
+        assert memos.consume_warm_hits() == (0 if via == "load" else n_threads - 1)
         assert len(got) == n_threads and len({id(df) for df in got}) == 1
     finally:
         sys.setswitchinterval(interval)
@@ -218,3 +225,160 @@ def test_clear_all_frees_cyclic_py4j_proxies(spark):
         assert ref() is None
     finally:
         gc.enable()
+
+
+def _held(df) -> bool:
+    """Whether ``df`` is a held answer: a frame over local rows."""
+    return df._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
+
+
+def _rows(df) -> list:
+    return _rowset(df.columns, [tuple(r) for r in df.collect()])
+
+
+def test_answer_follows_a_rewritten_input(spark, tmp_path):
+    """A held answer is keyed on the input's identity: after a table is
+    rewritten under the same path, ``fn`` returns the new answer."""
+    entry = plans.QUERIES["pricing_summary"]
+    d = _copy_fixture(tmp_path)
+
+    def oracle() -> list:
+        con = duckdb.connect()
+        try:
+            con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{d}/lineitem.parquet'")
+            rel = con.execute(entry.oracle)
+            return _rowset([c[0] for c in rel.description], rel.fetchall())
+        finally:
+            con.close()
+
+    try:
+        first = entry.fn(spark, d)
+        assert _held(first) and _rows(first) == oracle()
+        assert entry.fn(spark, d) is first
+        _rewrite_a_third(tmp_path / "lineitem.parquet", d, f"{d}/lineitem.parquet")
+        second = entry.fn(spark, d)
+        assert second is not first and _rows(second) == oracle() != _rows(first)
+    finally:
+        memos.clear_all()
+
+
+def test_writing_query_runs_its_body_on_every_call(spark, tmp_path):
+    """``writes=True`` makes ``fn`` the builder itself: every call runs
+    the body; an undeclared query's body runs once per input."""
+    bodies = []
+
+    def body(spark, sf_dir):
+        bodies.append(sf_dir)
+        return spark.range(3)
+
+    names = ("probe_writes", "probe_reads")
+    try:
+        plans.query(names[0], writes=True)(body)
+        plans.query(names[1])(body)
+        for name in names:
+            for _ in range(3):
+                assert plans.QUERIES[name].fn(spark, str(tmp_path)).count() == 3
+        assert len(bodies) == 3 + 1
+        assert plans.QUERIES[names[0]].fn is body
+        entry = plans.QUERIES["parquet_partitioned_roundtrip"]
+        assert entry.writes and entry.fn is entry.build
+    finally:
+        for name in names:
+            plans.QUERIES.pop(name, None)
+        memos.clear_all()
+
+
+def test_answer_over_the_bound_is_served_lazily(spark, monkeypatch):
+    """An answer of more than ``N`` rows is returned as the lazy frame
+    and not held: the next call builds it again."""
+    entry = plans.QUERIES["daily_rollup"]
+    build = entry.build
+    want = _rows(build(spark, SF_TEST_DIR))
+    builds = []
+
+    def counted(spark, sf_dir):
+        builds.append(sf_dir)
+        return build(spark, sf_dir)
+
+    monkeypatch.setattr(entry, "build", counted)
+    monkeypatch.setattr(memos, "N", len(want) - 1)
+    memos.clear_all()
+    try:
+        first = entry.fn(spark, SF_TEST_DIR)
+        assert not _held(first) and _rows(first) == want
+        assert not any(k[0] == "query:daily_rollup" for k in memos._MEMOS)
+        entry.fn(spark, SF_TEST_DIR)
+        assert len(builds) == 2
+        monkeypatch.setattr(memos, "N", len(want))
+        assert _held(entry.fn(spark, SF_TEST_DIR))
+    finally:
+        memos.clear_all()
+
+
+def test_audit_mode_serves_the_lazy_answer(spark, monkeypatch):
+    """Plan-audit mode bypasses the answer memo: ``fn`` returns the
+    builder's lazy frame, whose plan reads the parquet scan."""
+    monkeypatch.setenv("SPARK_GRAFT_NO_CHECKPOINT", "1")
+    df = plans.QUERIES["pricing_summary"].fn(spark, SF_TEST_DIR)
+    assert not _held(df)
+    assert not any(k[0] == "query:pricing_summary" for k in memos._MEMOS)
+
+
+#: The mix's nine reads, and the recommender whose rows once lived only
+#: in localCheckpoint blocks.
+_SURVIVORS = (
+    "daily_rollup",
+    "hour_bucket_rollup",
+    "dayofweek_rollup",
+    "lag_window",
+    "topk_days_per_user",
+    "join_snowflake_rollup",
+    "pricing_summary",
+    "ratings_matrix_stats",
+    "knn_user_neighbors",
+    "knn_user_recommend",
+)
+
+
+def test_answers_survive_clear_all(spark):
+    """A frame ``fn`` returned reads the same rows after ``clear_all()``
+    released every memo, cached block and checkpoint."""
+    memos.clear_all()
+    frames = {q: plans.QUERIES[q].fn(spark, SF_TEST_DIR) for q in _SURVIVORS}
+    before = {q: _rows(df) for q, df in frames.items()}
+    memos.clear_all()
+    assert _persisted(spark) == 0
+    assert {q: _rows(df) for q, df in frames.items()} == before
+    assert all(before.values())
+
+
+#: A writer call: a DataFrame or stream writer, or the package's memory
+#: sink drain (which starts a stream).
+_WRITER = re.compile(r"\.(write|writeStream|writeTo)\b|\b(saveAsTable|insertInto|drain_to_memory)\(")
+
+#: Queries registered from a module that calls a writer, whose own body
+#: writes nothing.
+_READS_ONLY = {
+    "local_rows_to_df": "a driver-side list joined to events; no write",
+    "sql_templated_peek": "a parameterized SELECT over events; no write",
+    "salted_skew_join": "a salted join of two relations; no write",
+    "sessionize_batch": "the batch twin of sessionize_stream; no stream",
+}
+
+
+def test_writing_modules_declare_their_writers():
+    """A held answer skips its body on a repeat, so every query whose
+    module calls a writer is declared ``writes=True``, or listed in
+    ``_READS_ONLY`` with the reason its body writes nothing."""
+    undeclared, stale = [], []
+    for name, entry in sorted(plans.QUERIES.items()):
+        module = importlib.import_module(entry.build.__module__)
+        if not _WRITER.search(inspect.getsource(module)):
+            continue
+        if name in _READS_ONLY:
+            if entry.writes:
+                stale.append(name)
+        elif not entry.writes:
+            undeclared.append(f"{name} ({module.__name__})")
+    assert not undeclared, "not declared writes=True: " + ", ".join(undeclared)
+    assert not stale, "declared writes=True but listed as reads only: " + ", ".join(stale)

@@ -17,6 +17,12 @@ def _run(name, spark):
     return plans.QUERIES[name].fn(spark, SF_TEST_DIR)
 
 
+def _rerun(name, spark):
+    """A second execution: the registry holds ``fn``'s answer, so a
+    determinism pin runs the builder again."""
+    return plans.QUERIES[name].build(spark, SF_TEST_DIR)
+
+
 def test_features_scaled(spark):
     df = _run("ml_features_scaled", spark)
     # scalar-only contract (driver canonicalizer rejects array cells):
@@ -40,7 +46,7 @@ def test_features_scaled(spark):
     # rows/columns — constant across rows, nonzero, identical on rerun
     audits = {r["audit_abs_units"] for r in rows}
     assert len(audits) == 1 and audits.pop() > 0
-    rerun = _run("ml_features_scaled", spark).collect()
+    rerun = _rerun("ml_features_scaled", spark).collect()
     assert {r["audit_abs_units"] for r in rerun} == {
         rows[0]["audit_abs_units"]
     }
@@ -62,7 +68,7 @@ def test_pca_embeddings(spark):
     # free (abs), constant across rows, identical on rerun
     audits = {r["audit_abs_units"] for r in rows}
     assert len(audits) == 1 and audits.pop() > 0
-    rerun = _run("ml_pca_embeddings", spark).collect()
+    rerun = _rerun("ml_pca_embeddings", spark).collect()
     assert {r["audit_abs_units"] for r in rerun} == {
         rows[0]["audit_abs_units"]
     }
@@ -84,7 +90,7 @@ def test_linear_regression_battery(spark):
     assert audits == {
         sum(int(round(r["mse_test"] * 10_000)) for r in rows.values())
     }
-    rerun = _run("ml_linear_regression", spark).collect()
+    rerun = _rerun("ml_linear_regression", spark).collect()
     assert {r["audit_mse_units"] for r in rerun} == audits
 
 
@@ -108,7 +114,7 @@ def test_random_forest_battery(spark):
     # consistent with the per-row values, identical on rerun (seeded RF)
     audits = {r["audit_importance_units"] for r in rows}
     assert audits == {sum(int(round(r["importance"] * 10_000)) for r in rows)}
-    rerun = _run("ml_random_forest", spark).collect()
+    rerun = _rerun("ml_random_forest", spark).collect()
     assert {r["audit_importance_units"] for r in rerun} == audits
 
 
@@ -121,7 +127,7 @@ def test_gbt_horizon_blend(spark):
     # 4-decimal units, consistent and identical on rerun (seeded GBT)
     want = int(round((r["mse_h1"] + r["mse_h2"] + r["mse_blend"]) * 10_000))
     assert r["audit_mse_units"] == want
-    [r2] = _run("ml_gbt_horizon_blend", spark).collect()
+    [r2] = _rerun("ml_gbt_horizon_blend", spark).collect()
     assert r2["audit_mse_units"] == r["audit_mse_units"]
 
 
@@ -135,7 +141,7 @@ def test_kmeans_embeddings(spark):
     audits = {r["audit_sse_cents"] for r in rows}
     want = int(round(rows[0]["sse_total"] * 100)) + sum(r["n_vecs"] for r in rows)
     assert audits == {want}
-    rerun = _run("ml_kmeans_embeddings", spark).collect()
+    rerun = _rerun("ml_kmeans_embeddings", spark).collect()
     assert {r["audit_sse_cents"] for r in rerun} == audits
 
 
@@ -148,7 +154,7 @@ def test_cluster_ensemble(spark):
     # KMeans + fixed split — a seed/split regression changes it)
     audits = {r["audit_n_test_total"] for r in rows}
     assert audits == {sum(r["n_test"] for r in rows)}
-    rows2 = _run("ml_cluster_ensemble", spark).collect()
+    rows2 = _rerun("ml_cluster_ensemble", spark).collect()
     assert {r["audit_n_test_total"] for r in rows2} == audits
 
 
@@ -162,7 +168,7 @@ def test_als_recommend(spark):
     # whenever any recs were produced, and identical on a second run
     # (seeded ALS + seeded split — a seed/ranking regression changes it)
     assert r["audit_topk_score_units"] != 0
-    [r2] = _run("ml_als_recommend", spark).collect()
+    [r2] = _rerun("ml_als_recommend", spark).collect()
     assert r2["audit_topk_score_units"] == r["audit_topk_score_units"]
     assert r2["n_hits"] == r["n_hits"]
 
@@ -179,7 +185,7 @@ def test_autoregressive_forecast(spark):
     audits = {r["audit_forecast_cents"] for r in rows}
     want = int(round(sum(r["predicted_events"] for r in rows) * 100))
     assert audits == {want}
-    rows2 = _run("ml_autoregressive_forecast", spark).collect()
+    rows2 = _rerun("ml_autoregressive_forecast", spark).collect()
     assert {r["audit_forecast_cents"] for r in rows2} == audits
 
 
@@ -200,7 +206,7 @@ def test_ann_ivf_recall(spark):
     audits = {r["audit_total_hits"] for r in rows}
     assert audits == {sum(r["n_hits"] for r in rows)}
     assert all(r["n_hits"] == round(r["recall_at_k"] * 10) for r in rows)
-    rerun = _run("ann_ivf_recall", spark).collect()
+    rerun = _rerun("ann_ivf_recall", spark).collect()
     assert {r["audit_total_hits"] for r in rerun} == audits
 
 
@@ -278,7 +284,7 @@ def test_als_recommend_sampled(spark):
     assert math.isfinite(r["mse_test"])
     assert 0.0 <= r["hit_rate"] <= 1.0
     assert r["audit_topk_score_units"] != 0
-    [r2] = _run("ml_als_recommend_sampled", spark).collect()
+    [r2] = _rerun("ml_als_recommend_sampled", spark).collect()
     assert r2["audit_topk_score_units"] == r["audit_topk_score_units"]
     assert r2["n_hits"] == r["n_hits"]
     # the sample is a strict subset of the anchor's user universe

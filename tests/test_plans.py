@@ -2,7 +2,9 @@
 engine promises — predicate pushdown to the parquet scan, column
 pruning, broadcast joins for dims, whole-stage codegen, partition
 pruning on partitioned layouts — asserted on the actual executed plans,
-not taken on faith."""
+not taken on faith. Plans are read from each entry's lazy builder
+(``build``): the registry's ``fn`` serves a held answer, whose plan is a
+local table scan."""
 
 from __future__ import annotations
 
@@ -29,7 +31,7 @@ def _formatted(df) -> str:
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    df = plans.QUERIES["pricing_summary"].fn(spark, SF_TEST_DIR)
+    df = plans.QUERIES["pricing_summary"].build(spark, SF_TEST_DIR)
     plan = _formatted(df)
     assert "PushedFilters: [" in plan
     assert "l_shipdate" in plan.split("PushedFilters:")[1].split("]")[0]
@@ -44,14 +46,14 @@ def test_column_pruning(spark):
 
 
 def test_dim_join_broadcasts(spark):
-    df = plans.QUERIES["join_left_broadcast"].fn(spark, SF_TEST_DIR)
+    df = plans.QUERIES["join_left_broadcast"].build(spark, SF_TEST_DIR)
     plan = _formatted(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_whole_stage_codegen(spark):
-    df = plans.QUERIES["daily_rollup"].fn(spark, SF_TEST_DIR)
+    df = plans.QUERIES["daily_rollup"].build(spark, SF_TEST_DIR)
     df.collect()  # AQE finalizes the physical plan only on execution
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
@@ -63,7 +65,7 @@ def test_whole_stage_codegen(spark):
 def test_no_cartesian_in_relational_queries(spark):
     # Theta-join (J3) must be planned as an equi-hash join, not a
     # nested-loop cross product (SURVEY §2.3).
-    df = plans.QUERIES["join_theta_sql"].fn(spark, SF_TEST_DIR)
+    df = plans.QUERIES["join_theta_sql"].build(spark, SF_TEST_DIR)
     plan = _formatted(df)
     assert "CartesianProduct" not in plan
 
@@ -169,7 +171,7 @@ import pytest  # noqa: E402
 @pytest.mark.parametrize("name", _auditable())
 def test_plan_audit(name, spark):
     entry = plans.QUERIES[name]
-    df = entry.fn(spark, SF_TEST_DIR)
+    df = entry.build(spark, SF_TEST_DIR)
     plan = _formatted(df)
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     if name not in _BNLJ_OK:
@@ -334,7 +336,7 @@ _SHUFFLE_BUDGETS = {
 
 @pytest.mark.parametrize("name,budget", sorted(_SHUFFLE_BUDGETS.items()))
 def test_shuffle_budget(name, budget, spark):
-    df = plans.QUERIES[name].fn(spark, SF_TEST_DIR)
+    df = plans.QUERIES[name].build(spark, SF_TEST_DIR)
     plan = _formatted(df)
     n = len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M))
     assert n <= budget, f"{name}: {n} shuffle exchanges, budget {budget}"
@@ -349,7 +351,7 @@ def test_bloom_filter_injected(spark):
     session's stay as they were."""
     key = "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
     before = spark.conf.get(key)
-    df = plans.QUERIES["bloom_pruned_join"].fn(spark, SF_TEST_DIR)
+    df = plans.QUERIES["bloom_pruned_join"].build(spark, SF_TEST_DIR)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "might_contain" in plan
@@ -361,7 +363,7 @@ def test_bloom_filter_injected(spark):
 def test_mode_median_modal_side_broadcasts(spark):
     """The two-row modal frame joins back to the stats as a broadcast,
     never a shuffle."""
-    df = plans.QUERIES["mode_median_stats"].fn(spark, SF_TEST_DIR)
+    df = plans.QUERIES["mode_median_stats"].build(spark, SF_TEST_DIR)
     plan = _formatted(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -371,7 +373,7 @@ def test_diversity_stays_jvm_side(spark):
     """token_diversity_stats is pure JVM expressions (explode + two hash
     aggs) — no Python row boundary — and prunes the documents scan to
     the two columns it reads."""
-    df = plans.QUERIES["token_diversity_stats"].fn(spark, SF_TEST_DIR)
+    df = plans.QUERIES["token_diversity_stats"].build(spark, SF_TEST_DIR)
     plan = _formatted(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
@@ -382,7 +384,7 @@ def test_diversity_stays_jvm_side(spark):
 def test_shuffle_hash_hint_respected(spark):
     """join_hint_shuffle_hash must actually plan a ShuffledHashJoin —
     the hint is the point of the query."""
-    df = plans.QUERIES["join_hint_shuffle_hash"].fn(spark, SF_TEST_DIR)
+    df = plans.QUERIES["join_hint_shuffle_hash"].build(spark, SF_TEST_DIR)
     plan = _formatted(df)
     assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -394,7 +396,7 @@ def test_jaccard_intersect_join_is_shuffled_hash(spark):
     vs SHJ's 3s on the same exchange at sf1 (SCALING.md). The join
     condition includes the `s = s` equi-key, so a regression to SMJ is
     silent — pin the physical strategy."""
-    df = plans.QUERIES["ngram_jaccard_pairs"].fn(spark, SF_TEST_DIR)
+    df = plans.QUERIES["ngram_jaccard_pairs"].build(spark, SF_TEST_DIR)
     plan = _formatted(df)
     assert "ShuffledHashJoin" in plan
 
