@@ -46,7 +46,6 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bigint, sql_md5_bigint
 from ..functions.rounding import round_to, sql_round
-from ..plans.checkpointing import result_checkpoint
 from ..plans.registry import query
 from ..sources import load
 from .jaccard import JACCARD_THRESHOLD
@@ -205,7 +204,7 @@ def _incremental_pipeline(
     # materialize the small per-delta-doc decision frame while the
     # shingle memo is hot; the memo itself stays live for the family's
     # other queries (between-block hygiene releases it)
-    return result_checkpoint(out)
+    return out.localCheckpoint(eager=True)
 
 
 # --- index evolution: two consecutive ingests, the second probing an
@@ -347,16 +346,12 @@ def dedup_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         sizes_c=sizes, sizes_d=sizes,
     )
     # shingle/band memos stay live for the family (plans/memos.py)
-    return result_checkpoint(dec2)
+    return dec2.localCheckpoint(eager=True)
 
 
 @query(
     "incremental_minhash_dedup",
     oracle=_incremental_oracle(_IS_DELTA_SQL),
-    # bench=True (r6): the production dedup shape belongs in the scale
-    # block — its claim is "per-ingest cost tracks |delta|, not corpus
-    # size", and the sf1/sf0.1 wall ratio is the measurement of that.
-    bench=True,
     tags=("dedup", "minhash", "cdc", "J8"),
 )
 def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,13 +366,6 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "incremental_dedup_fixed_delta",
     oracle=_incremental_oracle(_IS_FIXED_DELTA_SQL),
-    # bench=True: |delta| is CONSTANT across scale factors (the first
-    # {FIXED_DELTA_DOCS} doc ids exist at every sf), so this query's
-    # sf1/sf0.1 wall ratio isolates corpus-size dependence — the
-    # empirical answer to "is per-ingest cost independent of corpus
-    # size?" that the proportional-delta variant cannot give (there
-    # delta and corpus grow together).
-    bench=True,
     tags=("dedup", "minhash", "cdc", "J8", "scale"),
 )
 def incremental_dedup_fixed_delta(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,7 +23,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
-from ..plans.checkpointing import result_checkpoint
 from ..plans.registry import query
 from ..sources import load
 from ..plans.memos import memoized
@@ -215,7 +214,7 @@ WHERE i.i * 1.0 / (sa.n + sb.n - i.i) >= {JACCARD_THRESHOLD}
 """
 
 
-@query("minhash_dedup_verified", oracle=_VERIFIED_ORACLE, bench=True, tags=("dedup", "minhash"))
+@query("minhash_dedup_verified", oracle=_VERIFIED_ORACLE, tags=("dedup", "minhash"))
 def minhash_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact Jaccard on the
     candidate pairs only -> keep >= 0.5. This is the 100 TB shape: the
@@ -240,7 +239,8 @@ def minhash_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # NO candidate-id prune of the verify sides: measured slower for
-    # the third time in r15 (plans/r15/ab_minhash_prune.json) — even
+    # the third time in r15 (plans/r15/ab_minhash_prune.json, deleted
+    # since; read it with git show cfb9b5f:<path>) — even
     # with the candidate pairs cache-materialized, the semi-join prune
     # costs more than it saves while the shingle frame is memo-resident
     # (r14 tried the lazy and persisted forms; same verdict). The §3.2
@@ -270,7 +270,7 @@ def minhash_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for the family's other queries. A driver collect() here would be
     # a scale bug: at 100 TB the verified near-dup pair set is not
     # driver-sized.
-    return result_checkpoint(out)
+    return out.localCheckpoint(eager=True)
 
 
 # Bounded-output twin of the verified pair listing (see the simhash

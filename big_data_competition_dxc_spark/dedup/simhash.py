@@ -117,7 +117,7 @@ def _chunk_bounds() -> list[tuple[int, int]]:
 # ml/recommend's cosine pairs.
 
 
-@query("simhash_neardup_pairs", oracle=_PAIRS_ORACLE, bench=True, tags=("dedup", "simhash"))
+@query("simhash_neardup_pairs", oracle=_PAIRS_ORACLE, tags=("dedup", "simhash"))
 def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document pairs within Hamming distance {HAMMING_THRESHOLD} of each
     other's SimHash, found WITHOUT an all-pairs scan: pigeonhole — any
@@ -205,7 +205,6 @@ FROM ranked WHERE match_rank <= {TOP_K_MATCHES}
 @query(
     "simhash_neardup_topk_per_doc",
     oracle=_TOPK_ORACLE,
-    bench=True,
     tags=("dedup", "simhash", "bounded"),
 )
 def simhash_neardup_topk_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,7 +257,6 @@ FROM sym GROUP BY hamming
 @query(
     "simhash_neardup_summary",
     oracle=_SUMMARY_ORACLE,
-    bench=True,
     tags=("dedup", "simhash", "bounded"),
 )
 def simhash_neardup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,7 +44,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
-from ..plans.checkpointing import result_checkpoint
 from ..plans.registry import query
 from ..sources import load
 
@@ -160,7 +159,7 @@ def pagerank_cosupply_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the (TOP_N-row) result eagerly so the edge cache can
     # release before returning instead of pinning for the session — the
     # same leak class the r8 advice flagged on multiprobe/evolution
-    out = result_checkpoint(
+    out = (
         ranks.orderBy(F.col("r").desc(), F.col("node"))
         .limit(TOP_N)
         .select(
@@ -168,6 +167,6 @@ def pagerank_cosupply_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r").alias("rank_scaled"),
             round_to(F.col("r") / F.lit(float(SCALE)), 6).alias("rank"),
         )
-    )
+    ).localCheckpoint(eager=True)
     edges.unpersist()
     return out

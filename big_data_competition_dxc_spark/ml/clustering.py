@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to
-from ..plans.checkpointing import result_checkpoint
 from ..plans.registry import query
 from .concurrency import run_concurrently
 from ..sources import load
@@ -127,7 +126,7 @@ def ml_cluster_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rollup+window+assembler lineage through the cache lookup. The
     # checkpointed blocks hold the same rows in the same partitioning,
     # so the seeded fits are bit-identical (A/B row-equality pinned).
-    data = result_checkpoint(assembled.join(F.broadcast(clusters), "user_id"))
+    data = assembled.join(F.broadcast(clusters), "user_id").localCheckpoint(eager=True)
     train = data.filter(F.col("ds") < "2024-01-22")
     test = data.filter(F.col("ds") >= "2024-01-22")
 

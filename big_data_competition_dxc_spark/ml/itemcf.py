@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
-from ..plans.checkpointing import result_checkpoint
 from ..plans.registry import query
 from .recommend import _RATINGS_SQL, cached_ratings
 
@@ -175,9 +174,9 @@ def itemcf_item_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{K_NEIGHBORS} most-similar items for each of the
     {N_QUERY_USERS} most-popular items (popularity DESC, item_id
     tie-break — deterministic on every engine). The capped frame is
-    materialized once (executor-side, audit-transparent) and shared by
+    materialized once (executor-side) and shared by
     pop, top_items, and both sides of the pair join."""
-    capped = result_checkpoint(_capped(spark, sf_dir))
+    capped = _capped(spark, sf_dir).localCheckpoint(eager=True)
     pop = capped.groupBy("item_id").agg(F.count("*").alias("n"))
     top_items = (
         pop.orderBy(F.col("n").desc(), F.col("item_id"))
@@ -236,7 +235,7 @@ def itemcf_user_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     rated (anti-join). BIGINT micro-unit sums keep the score exact and
     order-independent; ties break on item_id."""
     r = cached_ratings(spark, sf_dir)
-    capped = result_checkpoint(_capped(spark, sf_dir))
+    capped = _capped(spark, sf_dir).localCheckpoint(eager=True)
     qratings = capped.filter(F.col("user_id") <= N_QUERY_USERS)
     # neighbor lists are only read for the query users' capped items
     focus = qratings.select("item_id").distinct()

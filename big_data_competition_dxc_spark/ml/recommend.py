@@ -39,7 +39,6 @@ from ..functions.rounding import (
     sql_round,
     to_units,
 )
-from ..plans.checkpointing import result_checkpoint
 from ..plans.memos import memoized
 from ..plans.registry import query
 from ..sources import load
@@ -105,7 +104,11 @@ FROM r
 def ratings_matrix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's first step: distinct-count users/books of the
     ratings matrix (D:41-45 — 251,053 users x 76,377 books there)."""
-    r = ratings(spark, sf_dir)
+    # The memo's columns keep their ids from one call to the next.
+    # Spark orders the two distinct counts' Expand groups by a hash of
+    # those ids, so a fresh derivation per call planned either of two
+    # orders and compiled the other one's classes when it first came up.
+    r = cached_ratings(spark, sf_dir)
     return r.agg(
         F.count("*").alias("n_ratings"),
         F.countDistinct("user_id").alias("n_users"),
@@ -219,8 +222,8 @@ _COS_PAIRS_SQL = f"""
 
 # Session memos (plans/memos.py) of the canonical ratings frame and
 # the ranked similarity frame: ml_als_recommend, knn_user_neighbors and
-# knn_user_recommend all consume them, and in a driver/test session they
-# run back-to-back — without the memo the second KNN query rebuilds the
+# knn_user_recommend all consume them (ratings_matrix_stats the first),
+# and in a driver/test session they run back-to-back — without the memo the second KNN query rebuilds the
 # whole capped self-join pipeline from scratch, and without the shared
 # ratings frame a single cold knn_user_recommend computes the
 # orders⨝lineitem aggregation twice (once for its own uses, once inside
@@ -406,7 +409,6 @@ rr AS (
 )
 SELECT user_id, item_id, score, rn FROM rr WHERE rn <= {TOPK_RECS}
 """,
-    bench=True,
     tags=("ML9", "J8"),
 )
 def knn_user_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,7 +458,7 @@ def knn_user_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-k across all users is not driver-sized). The shared ratings
     # memo is NOT unpersisted here: knn_user_neighbors' memoized pairs
     # frame recomputes through it.
-    return result_checkpoint(out)
+    return out.localCheckpoint(eager=True)
 
 
 # --- ALS scale-form twin ---------------------------------------------------

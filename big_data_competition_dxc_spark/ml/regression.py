@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to
-from ..plans.checkpointing import result_checkpoint
 from ..plans.memos import memoized
 from ..plans.registry import query
 from ..sources import load
@@ -255,7 +254,7 @@ def _gbt_split(feats: DataFrame, label: str):
     # replayed the StringIndexer->assembler->VectorIndexer chain over
     # the features cache otherwise. Same rows, same partitioning ->
     # identical seeded fits (A/B row-equality pinned).
-    assembled = result_checkpoint(assembled)
+    assembled = assembled.localCheckpoint(eager=True)
     train = assembled.filter(F.col("ds") < "2024-01-22")
     test = assembled.filter(F.col("ds") >= "2024-01-22")
     return train, test

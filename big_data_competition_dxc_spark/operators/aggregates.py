@@ -40,7 +40,6 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
 """,
-    bench=True,
     tags=("A4", "A5", "P3"),
 )
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,7 +231,6 @@ SELECT o_orderstatus, o_orderpriority,
 FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """,
-    bench=True,
     tags=("A4", "cube"),
 )
 def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,7 +256,6 @@ SELECT l_returnflag,
 FROM lineitem
 GROUP BY l_returnflag
 """,
-    bench=True,
     tags=("A9", "percentile"),
 )
 def percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:

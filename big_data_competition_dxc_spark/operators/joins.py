@@ -47,7 +47,6 @@ JOIN nation n ON c.c_nationkey = n.n_nationkey
 JOIN region r ON n.n_regionkey = r.r_regionkey
 GROUP BY r.r_name, n.n_name
 """,
-    bench=True,
     tags=("J4", "A4"),
 )
 def join_snowflake_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -67,7 +67,7 @@ def daily_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-query("daily_rollup", oracle=_DAILY_ROLLUP_ORACLE, bench=True, tags=("A2", "A6", "A7", "W1", "W3", "F19"))(
+query("daily_rollup", oracle=_DAILY_ROLLUP_ORACLE, tags=("A2", "A6", "A7", "W1", "W3", "F19"))(
     daily_user_rollup
 )
 

@@ -32,7 +32,6 @@ ranked AS (
 )
 SELECT user_id, ds, total_value, rn FROM ranked WHERE rn <= 3
 """,
-    bench=True,
     tags=("O3",),
 )
 def topk_days_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:

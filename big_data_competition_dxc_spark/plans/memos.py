@@ -47,10 +47,6 @@ The contract:
   a warm hit; one served an uncached relation does not, because the
   benchmarks read the count to tell memo-warm readings from standalone
   query cost;
-- plan-audit mode (``SPARK_GRAFT_NO_CHECKPOINT``) bypasses them: the
-  build runs uncached and nothing is stored (a cache or a collected
-  result is a materialization barrier that hides the pipeline from
-  ``.explain``);
 - ``clear_all()`` is a teardown call: it forgets every memo and releases
   every cached frame and persisted RDD of the live context, including
   ``localCheckpoint`` blocks, and every JVM object held only by Python
@@ -122,8 +118,6 @@ def memoized(
     under ``name``, held as ``hold`` says; see the module docstring for
     the contract."""
     global _WARM_HITS
-    if os.environ.get("SPARK_GRAFT_NO_CHECKPOINT"):
-        return build()
     app = spark.sparkContext.applicationId
     # the memo's frame holds its session, so the id is not reused while
     # the entry lives

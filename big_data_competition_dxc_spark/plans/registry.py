@@ -43,7 +43,6 @@ class QueryEntry:
     build: QueryFn
     oracle: str | None = None
     doc: str = ""
-    bench: bool = False  # in the headline set scripts/gen_plan_audit.py audits
     tags: tuple[str, ...] = field(default_factory=tuple)
     writes: bool = False
     fn: QueryFn = field(init=False)  # the answer; the builder if ``writes``
@@ -72,7 +71,6 @@ QUERIES: dict[str, QueryEntry] = {}
 def query(
     name: str,
     oracle: str | None = None,
-    bench: bool = False,
     tags: tuple[str, ...] = (),
     writes: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
@@ -94,7 +92,6 @@ def query(
             build=fn,
             oracle=oracle,
             doc=(fn.__doc__ or "").strip(),
-            bench=bench,
             tags=tags,
             writes=writes,
         )

@@ -64,7 +64,6 @@ r AS (
 )
 SELECT q_id, vec_id AS neighbor_id, sim, rn FROM r WHERE rn <= {TOPK}
 """,
-    bench=True,
     tags=("similarity", "ann"),
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
-from ..plans.checkpointing import result_checkpoint
 from ..plans.registry import query
 from ..similarity.cosine import SQL_COS, as_double, dot
 from ..sources import load
@@ -157,13 +156,12 @@ def ann_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The evolved index feeds TWO consumers below (the phase-2
     # candidate probe and the scoring join), and each replayed the
     # whole phase-1 probe/aggregate subtree that decides admission.
-    # Materialize the tiny admitted id set once (result_checkpoint:
-    # ≤{EVO_ADMIT} rows; plan-audit mode keeps the full lineage) so
-    # phase 1 executes exactly once — rebuilding `evolved` per
-    # consumer is then just a filter + broadcast semi-join over the
-    # cached signature frame (guide §1.2).
-    admitted = result_checkpoint(
-        q1.select("vec_id").join(p1, "vec_id", "left_anti")
+    # Materialize the tiny admitted id set once (localCheckpoint:
+    # ≤{EVO_ADMIT} rows) so phase 1 executes exactly once — rebuilding
+    # `evolved` per consumer is then just a filter + broadcast
+    # semi-join over the cached signature frame (guide §1.2).
+    admitted = q1.select("vec_id").join(p1, "vec_id", "left_anti").localCheckpoint(
+        eager=True
     )
     evolved = corpus.unionByName(
         sig.join(F.broadcast(admitted), "vec_id", "left_semi")
@@ -213,7 +211,7 @@ def ann_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature cache can be unpersisted before returning — it is local
     # to this query, not a session memo, so otherwise it would pin
     # executor memory until the next plans.memos.clear_all() (r8 advice).
-    out = result_checkpoint(
+    out = (
         q2.select(F.col("vec_id").alias("q_id"))
         .join(best, "q_id", "left")
         .select(
@@ -225,6 +223,6 @@ def ann_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_id").cast("bigint").alias("best_neighbor"),
             F.col("sim").alias("best_sim"),
         )
-    )
+    ).localCheckpoint(eager=True)
     sig.unpersist()
     return out

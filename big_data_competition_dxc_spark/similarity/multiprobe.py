@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
-from ..plans.checkpointing import result_checkpoint
 from ..plans.registry import query
 from ..similarity.cosine import SQL_COS, as_double, dot
 from ..sources import load
@@ -199,7 +198,7 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = cm.join(
         exact.withColumn("ex", F.lit(1)), ["q_id", "c_id"], "full_outer"
     )
-    out = result_checkpoint(
+    out = (
         j.agg(
             F.count("ex").cast("bigint").alias("exact_pairs"),
             F.coalesce(F.sum(F.when(F.col("pmin") == 0, 1).otherwise(0)), F.lit(0))
@@ -231,8 +230,8 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "single_hits",
             "multi_hits",
         )
-    )
-    # the 1-row summary is materialized eagerly (result_checkpoint) so
+    ).localCheckpoint(eager=True)
+    # the 1-row summary is materialized eagerly (localCheckpoint) so
     # the two corpus-sized caches can be unpersisted before returning
     # (r8 advice). exact/cand are single-consumer now and no longer
     # cached at all.

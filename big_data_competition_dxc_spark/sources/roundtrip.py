@@ -123,7 +123,6 @@ SELECT ds, CAST(COUNT(*) AS BIGINT) AS n_types,
        {sql_fixed_sum('total_value', 2, 2)} AS total_value
 FROM daily WHERE ds >= DATE '2024-01-10' GROUP BY ds
 """,
-    bench=True,
     tags=("S2", "S3", "P3"),
     writes=True,
 )

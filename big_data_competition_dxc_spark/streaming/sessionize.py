@@ -56,7 +56,7 @@ GROUP BY user_id, sid
 """
 
 
-@query("sessionize_batch", oracle=_SESSION_ORACLE, bench=True, tags=("W1", "A2", "sessionize"))
+@query("sessionize_batch", oracle=_SESSION_ORACLE, tags=("W1", "A2", "sessionize"))
 def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch gaps-and-islands: a new session starts after a
     {GAP_MINUTES}-minute silence; islands numbered by a running sum of

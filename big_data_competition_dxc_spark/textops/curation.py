@@ -84,7 +84,6 @@ GROUP BY lang_pred
 @query(
     "corpus_curation_pipeline",
     oracle=_CURATION_ORACLE,
-    bench=True,
     tags=("textops", "dedup", "sampling", "pipeline"),
 )
 def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -37,7 +37,7 @@ FROM toks
 """
 
 
-@query("text_quality", oracle=_QUALITY_ORACLE, bench=True, tags=("textops", "quality"))
+@query("text_quality", oracle=_QUALITY_ORACLE, tags=("textops", "quality"))
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality heuristics: token count, mean token length,
     stopword ratio, and a composite keep/drop flag — the standard

@@ -46,7 +46,7 @@ can never sit on a float knife edge in either engine.
 
 Scale shape (100 TB): the exact-dedup window shuffles the text once on
 the content hash, and the flagged frame is materialized executor-side
-(``result_checkpoint``) before fanning out — four downstream branches
+(``localCheckpoint``) before fanning out — four downstream branches
 (keeper tokens, keeper spans, the dup ledger, the final join) consume
 it, and without the checkpoint each re-runs the full-text window
 shuffle (measured: 4 Window nodes, 0 ReusedExchange — per-branch
@@ -67,7 +67,6 @@ from pyspark.sql import functions as F
 
 from ..dedup.spans import SPAN_TOKENS, _words, spans_of
 from ..functions.hashing import md5_bigint, sql_md5_bigint
-from ..plans.checkpointing import result_checkpoint
 from ..plans.registry import query
 from ..sources import load
 from .dsir import _SQL_DSIR, SQL_KEEP_BPS, SQL_KEEP_U, dsir_doc_units, keep_bps_col
@@ -182,13 +181,12 @@ def corpus_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_empty = F.col("text").isNull() | (F.trim("text") == "")
     ne = docs.filter(~is_empty)
     # one full-text window shuffle, materialized executor-side before
-    # the four-branch fan-out (see module docstring; plan audits see
-    # the un-truncated lineage via SPARK_GRAFT_NO_CHECKPOINT)
-    flagged = result_checkpoint(
+    # the four-branch fan-out (see module docstring)
+    flagged = (
         ne.withColumn(
             "keeper", F.min("doc_id").over(Window.partitionBy(F.md5("text")))
         )
-    )
+    ).localCheckpoint(eager=True)
     keepers = flagged.filter(F.col("doc_id") == F.col("keeper")).select(
         "doc_id", "text"
     )

@@ -26,8 +26,8 @@ def main() -> None:
         f"{sum(1 for e in plans.QUERIES.values() if e.oracle)} oracle-paired "
         "(DuckDB hash-compare), the rest rows-only with self-validating tests.",
         "",
-        "| query | SURVEY §2 tags | oracle | bench | summary |",
-        "|---|---|---|---|---|",
+        "| query | SURVEY §2 tags | oracle | summary |",
+        "|---|---|---|---|",
     ]
     for name in sorted(plans.QUERIES):
         e = plans.QUERIES[name]
@@ -47,8 +47,7 @@ def main() -> None:
             first = first[:140].rsplit(" ", 1)[0] + "…"
         tags = " ".join(e.tags)
         lines.append(
-            f"| `{name}` | {tags} | {'✓' if e.oracle else 'rows-only'} |"
-            f" {'✓' if e.bench else ''} | {first} |"
+            f"| `{name}` | {tags} | {'✓' if e.oracle else 'rows-only'} | {first} |"
         )
     lines.append("")
 

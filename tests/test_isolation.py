@@ -221,6 +221,25 @@ def test_only_the_scope_helper_touches_session_state():
     assert not hits, "\n".join(hits)
 
 
+#: Reading the environment: ``os.environ``, ``os.getenv`` or either
+#: imported bare.
+_ENV_READ = re.compile(r"\b(environ|getenv)\b")
+
+
+def test_only_the_session_factory_reads_the_environment():
+    """Deployment settings (cores, local mode, input directory, driver
+    memory) are read in session.py alone; no other module switches its
+    behaviour on an environment variable."""
+    hits = [
+        f"{path.relative_to(PACKAGE)}:{n}: {line.strip()}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != PACKAGE / "session.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if _ENV_READ.search(line) and not line.strip().startswith("#")
+    ]
+    assert not hits, "\n".join(hits)
+
+
 def test_udtf_registration_stays_off_the_callers_session(spark):
     """The UDTF a query registers lands on a child session: the
     caller's function registry does not gain its name."""

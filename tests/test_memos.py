@@ -1,10 +1,10 @@
 """The session memo contract of plans/memos.py: one build per input
 under concurrency, rebuilt when the input changes under the same path
-(a part file inside a table directory included), bypassed in plan-audit
-mode, and one ``clear_all()`` that releases every cached frame and
-persisted RDD. ``sources.load`` keeps each table's resolved relation in
-the same store, uncached; the registry keeps each query's answer there
-as a local frame of at most ``memos.N`` rows, except for the queries
+(a part file inside a table directory included), and one
+``clear_all()`` that releases every cached frame and persisted RDD.
+``sources.load`` keeps each table's resolved relation in the same
+store, uncached; the registry keeps each query's answer there as a
+local frame of at most ``memos.N`` rows, except for the queries
 declared ``writes=True``."""
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from pathlib import Path
 import duckdb
 import pyarrow.parquet as pq
 import pytest
-from pyspark import StorageLevel
 
 from big_data_competition_dxc_spark import plans
 from big_data_competition_dxc_spark.plans import memos
@@ -174,24 +173,6 @@ def test_load_resolves_once_per_input(spark, tmp_path):
         memos.clear_all()
 
 
-def test_audit_mode_stores_nothing(spark, tmp_path, monkeypatch):
-    """Plan-audit mode returns the plain build, uncached, every time."""
-    monkeypatch.setenv("SPARK_GRAFT_NO_CHECKPOINT", "1")
-    builds = []
-
-    def build():
-        builds.append(1)
-        return spark.range(3)
-
-    memos.consume_warm_hits()
-    a = memos.memoized("audit_probe", spark, str(tmp_path), build)
-    b = memos.memoized("audit_probe", spark, str(tmp_path), build)
-    assert len(builds) == 2 and a is not b
-    assert a.storageLevel == StorageLevel.NONE
-    assert memos.consume_warm_hits() == 0
-    assert not any(k[0] == "audit_probe" for k in memos._MEMOS)
-
-
 def test_clear_all_releases_pipeline_state(spark):
     """The paper pipelines' memos and checkpoints (the feature table,
     the cluster ensemble's and GBT horizons' localCheckpoints, the
@@ -313,15 +294,6 @@ def test_answer_over_the_bound_is_served_lazily(spark, monkeypatch):
         assert _held(entry.fn(spark, SF_TEST_DIR))
     finally:
         memos.clear_all()
-
-
-def test_audit_mode_serves_the_lazy_answer(spark, monkeypatch):
-    """Plan-audit mode bypasses the answer memo: ``fn`` returns the
-    builder's lazy frame, whose plan reads the parquet scan."""
-    monkeypatch.setenv("SPARK_GRAFT_NO_CHECKPOINT", "1")
-    df = plans.QUERIES["pricing_summary"].fn(spark, SF_TEST_DIR)
-    assert not _held(df)
-    assert not any(k[0] == "query:pricing_summary" for k in memos._MEMOS)
 
 
 #: The mix's nine reads, and the recommender whose rows once lived only
