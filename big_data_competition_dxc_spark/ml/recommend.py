@@ -237,9 +237,7 @@ def cached_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memoized("ratings", spark, sf_dir, lambda: ratings(spark, sf_dir))
 
 
-def _user_cosine_pairs(
-    spark: SparkSession, sf_dir: str, norm_path: str = "auto"
-) -> DataFrame:
+def _user_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse user-user cosine over the canonical ratings derivation:
     shared-item self-join -> exact integer dot products -> normalize.
     Returns (u, v, sim, rn) ranked per u, memoized per (session, dir).
@@ -253,39 +251,16 @@ def _user_cosine_pairs(
     tiny by construction), so the pair join adds no exchange at all:
     the capped side streams straight out of its window shuffle.
 
-    Cold-path cost analysis (r7, sf0.1, steady-state): a cold
-    knn_user_recommend is ~4.8s vs ~1.3s warm-memo, decomposing into
-    ratings cache fill ~1.6s (the orders⨝lineitem aggregation, 600k
-    rows), this pairs pipeline ~2.2s, final scoring ~1.4s — three
-    sequential shuffle stages each doing irreducible work; the gap IS
-    the memo's value, not hidden waste. The r5 hypothesis that the
-    norms aggregation (a separate groupBy over the cached ratings,
-    ~1.2s standalone) should instead read the capped side's parent was
-    tested and REJECTED at this scale: pruning the norm input to
-    candidate users (cache the capped frame, distinct its users,
-    semi-join ratings before the norm groupBy) measured 4.6s vs 2.9s
-    for the pairs stage — the cache barrier + distinct outweigh
-    pruning 15k users to 13k, because at fixture scale nearly every
-    user rates a query item. The pruned variant only wins when
-    |capped contributors| << |users| (highly selective query sets on a
-    100 TB catalog) — that switch is CODE, not prose (r8): ``auto``
-    compares a cheap upper bound on the capped-contributor count
-    (|query items| x ITEM_CAP, from two sub-second counts over the
-    cached ratings) against the catalog user count with a 4x guard
-    band, so the pruned norm source
-    (``r.join(broadcast(candidate_users), "user_id", "left_semi")``)
-    only engages when contributors are provably a small fraction of
-    the catalog. ``full``/``pruned`` force a side for tests, bypassing
-    the memo (which is keyed for the canonical auto derivation only
-    — a forced path must never be served from, or stored into, it)."""
-    if norm_path != "auto":
-        return _cosine_pairs_frame(spark, sf_dir, norm_path)
+    The norms read the whole ratings frame. Restricting them to the
+    users that appear in pairs gives the same rows, but it pays only
+    when those are a small fraction of all users: on every input up to
+    sf0.1 nearly every user rates a query item."""
     return memoized(
-        "knn_user_pairs", spark, sf_dir, lambda: _cosine_pairs_frame(spark, sf_dir, "auto")
+        "knn_user_pairs", spark, sf_dir, lambda: _cosine_pairs_frame(spark, sf_dir)
     )
 
 
-def _cosine_pairs_frame(spark: SparkSession, sf_dir: str, norm_path: str) -> DataFrame:
+def _cosine_pairs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = cached_ratings(spark, sf_dir)
     a = r.select(
         F.col("user_id").alias("u"), "item_id", F.col("rating").alias("ra")
@@ -305,36 +280,7 @@ def _cosine_pairs_frame(spark: SparkSession, sf_dir: str, norm_path: str) -> Dat
         .filter(F.col("cr") <= ITEM_CAP)
         .select(F.col("user_id").alias("v"), "item_id", F.col("rating").alias("rb"))
     )
-    # Norm-source switch (docstring): |query items| x ITEM_CAP bounds
-    # the capped-contributor count from above; only when that bound is
-    # well under the catalog user count can pruning the norm input win
-    # (the r7 measurement: at fixture scale contributors ~= catalog and
-    # the pruned path's cache barrier + distinct LOST 4.6s vs 2.9s).
-    if norm_path == "auto":
-        n_users = r.select("user_id").distinct().count()
-        n_qitems = qitems.count()
-        norm_path = "pruned" if n_qitems * ITEM_CAP * 4 < n_users else "full"
-    if norm_path == "pruned":
-        # selective regime: b feeds BOTH the cand_users branch and the
-        # pair join, and its subtree pays a window over the
-        # item-restricted ratings — recomputing it twice measurably
-        # regressed knn at sf1 (r9: 2.2s -> 3.5s when the r8-advice fix
-        # naively dropped the cache; an unpersist-after-materialize
-        # variant ALSO regressed, because re-executions of the memoized
-        # pairs frame then rebuild b twice per action). So b is a
-        # session memo of its own: it does not depend on norm_path, and
-        # clear_all() releases it with the pairs memo.
-        contributors = b
-        b = memoized("knn_pruned_contributors", spark, sf_dir, lambda: contributors)
-        cand_users = (
-            b.select(F.col("v").alias("user_id"))
-            .union(a.select(F.col("u").alias("user_id")))
-            .distinct()
-        )
-        norm_src = r.join(F.broadcast(cand_users), "user_id", "left_semi")
-    else:
-        norm_src = r
-    norms = norm_src.groupBy("user_id").agg(
+    norms = r.groupBy("user_id").agg(
         F.sqrt(F.sum(F.col("rating") * F.col("rating"))).alias("nrm")
     )
     pairs = (

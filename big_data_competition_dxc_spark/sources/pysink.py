@@ -43,6 +43,7 @@ from pyspark.sql.datasource import (
 )
 
 from ..plans.registry import query
+from ..session import python_source
 from . import load
 from .roundtrip import _scratch_dir
 
@@ -157,12 +158,7 @@ def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the oracle (which reads the clean parquet directly) holds iff
     the commit protocol published every real row exactly once and
     nothing else."""
-    # Registered on the caller's session, not a child's: the writer
-    # looks a Python data source up in the JVM thread's active session,
-    # not in the session of the frame it writes, so a sink registered on
-    # a child is not found (DATA_SOURCE_NOT_FOUND). On the caller's
-    # session a repeat replaces the same class.
-    spark.dataSource.register(AuditedSinkSource)
+    sink = python_source(spark, AuditedSinkSource)
     src = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -177,7 +173,7 @@ def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write("999999999|Z|123456\n")
         (
             src.repartition(N_SINK_PARTS, "o_orderkey")
-            .write.format("audited_sink")
+            .write.format(sink)
             .option("path", out)
             .mode("append")
             .save()

@@ -1,5 +1,10 @@
 """Local simulation of the competition driver's verify pass:
 
+0. start-up: one line with the driver JVM's class sharing (see
+   ``session.class_sharing_state``): ``using <archive>``, ``dumping``
+   (no archive for this JDK and classpath yet; this run writes it at
+   exit) or ``off`` (none given, or one the JVM rejected and silently
+   ran without).
 1. smoke: ``entry(spark)`` at sf0.001 must return >=0 rows, stable schema
 2. t2 gate: every ``queries()[name]`` at sf0.01 vs ``oracle_sql()[name]``
    through DuckDB — row count + sorted columns + order-insensitive
@@ -61,12 +66,17 @@ def main() -> int:
 
     from big_data_competition_dxc_spark.plans import QUERIES
     from big_data_competition_dxc_spark.plans.memos import clear_all, consume_warm_hits
-    from big_data_competition_dxc_spark.session import compiled_classes, get_spark
+    from big_data_competition_dxc_spark.session import (
+        class_sharing_state,
+        compiled_classes,
+        get_spark,
+    )
     from big_data_competition_dxc_spark.sources import TABLES
 
     mod = importlib.import_module("__spark_entry__")
     spark = get_spark("driver-sim")
     spark.sparkContext.setLogLevel("ERROR")
+    print(f"class sharing: {class_sharing_state(spark)}")
 
     df = mod.entry(spark)
     n = len(df.collect())

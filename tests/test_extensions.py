@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from big_data_competition_dxc_spark import plans
 from big_data_competition_dxc_spark.ml.seqmining import MIN_SUPPORT
 from big_data_competition_dxc_spark.operators.recursive_cte import MAX_HOPS
+from big_data_competition_dxc_spark.session import python_source
 from big_data_competition_dxc_spark.sources import load
 
 from conftest import SF_TEST_DIR
@@ -44,8 +45,7 @@ def test_python_datasource_plans_parallel_partitions(spark):
         DeterministicFeedSource,
     )
 
-    spark.dataSource.register(DeterministicFeedSource)
-    feed = spark.read.format("deterministic_feed").load()
+    feed = spark.read.format(python_source(spark, DeterministicFeedSource)).load()
     assert feed.rdd.getNumPartitions() == N_PARTS
     assert feed.count() == N_ROWS
 
@@ -65,7 +65,7 @@ def test_python_datasource_sink_commit_protocol(spark, tmp_path):
         AuditedSinkSource,
     )
 
-    spark.dataSource.register(AuditedSinkSource)
+    python_source(spark, AuditedSinkSource)
     out = str(tmp_path / "ok")
     os.makedirs(out)
     with open(os.path.join(out, "part-deadbeefdecoy.txt"), "w") as f:

@@ -191,16 +191,15 @@ PACKAGE = Path(plans.__file__).resolve().parents[1]
 #: sink's own ``sink_<uuid>`` view may be dropped; a UDTF or a Python
 #: data source is registered only on a session the same file assigns
 #: from ``scoped`` or ``state_scope`` (which calls it). The batch Python
-#: source and sink stay on the caller's session: registration and the
-#: writer consult the thread's active session, not a child (see each
-#: site).
+#: source and sink stay on the caller's session, registered once per
+#: session by ``session.python_source``: registration and the writer
+#: consult the thread's active session, not a child (see there).
 _SHARED_STATE = re.compile(
     r"conf\.(set|unset)\(|TempView\(|register_views|(\w+)\.(udtf|dataSource)\.register\("
 )
 _ALLOWED = {
     ("session.py", "child.conf.set(k, v)"),
-    ("pysink.py", "spark.dataSource.register(AuditedSinkSource)"),
-    ("pysource.py", "spark.dataSource.register(DeterministicFeedSource)"),
+    ("session.py", "spark.dataSource.register(source)"),
 }
 
 

@@ -657,43 +657,6 @@ def test_bucketed_index_append_preserves_layout(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_knn_norm_path_switch(spark):
-    """The r7 cold-path analysis documented WHEN the pruned norm source
-    wins (|capped contributors| << |catalog users|); r8 wires the
-    switch as code. Both forced paths must produce identical pair sets
-    (norms are only consumed for users that appear in pairs, so
-    restricting the norm input to candidate users is result-neutral),
-    and the pruned plan must actually contain the extra LeftSemi joins
-    (candidate-user semi into the norms aggregate) the full plan
-    lacks."""
-    from big_data_competition_dxc_spark.ml import recommend
-
-    full = recommend._user_cosine_pairs(spark, SF_TEST_DIR, norm_path="full")
-    pruned = recommend._user_cosine_pairs(spark, SF_TEST_DIR, norm_path="pruned")
-
-    def canon(df):
-        return sorted(
-            (r["u"], r["v"], round(r["sim"], 9), r["rn"]) for r in df.collect()
-        )
-
-    rows_full = canon(full)
-    assert rows_full and rows_full == canon(pruned)
-
-    # plan shape: the formatted tree prints a cached frame's plan under
-    # its InMemoryRelation, so the pruned path's b.cache() barrier
-    # leaves its LeftSemi joins visible
-    tree_full = _formatted(
-        recommend._user_cosine_pairs(spark, SF_TEST_DIR, norm_path="full")
-    ).split("\n\n")[0]
-    tree_pruned = _formatted(
-        recommend._user_cosine_pairs(spark, SF_TEST_DIR, norm_path="pruned")
-    ).split("\n\n")[0]
-    n_full = tree_full.count("LeftSemi")
-    n_pruned = tree_pruned.count("LeftSemi")
-    assert n_full >= 1  # the qitems pre-prune both paths share
-    assert n_pruned > n_full, (tree_pruned, tree_full)
-
-
 def test_stream_ann_probe_and_rerank_plans(spark):
     """The streaming ANN ingest's plan contract, mirroring the dedup
     ingest's: every micro-batch probe reads the PERSISTED postings
