@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bigint, sql_md5_bigint
 from ..functions.rounding import round_to, sql_round
+from ..plans.memos import local
 from ..plans.registry import query
 from ..sources import load
 from .jaccard import JACCARD_THRESHOLD
@@ -200,11 +201,12 @@ def _incremental_pipeline(
     # both verify sides read the family's cached size memo — one
     # aggregation per session instead of two per run (r15, guide §1.2)
     sizes = cached_sizes(spark, sf_dir)
-    out = verify_decisions(cand, sh, sh, delta_ids, sizes_c=sizes, sizes_d=sizes)
-    # materialize the small per-delta-doc decision frame while the
-    # shingle memo is hot; the memo itself stays live for the family's
-    # other queries (between-block hygiene releases it)
-    return out.localCheckpoint(eager=True)
+    # the small per-delta-doc decision frame, held while the shingle
+    # memo is hot; the memo itself stays live for the family's other
+    # queries (plans.memos.clear_all() releases it)
+    return local(
+        spark, verify_decisions(cand, sh, sh, delta_ids, sizes_c=sizes, sizes_d=sizes)
+    )
 
 
 # --- index evolution: two consecutive ingests, the second probing an
@@ -346,7 +348,7 @@ def dedup_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         sizes_c=sizes, sizes_d=sizes,
     )
     # shingle/band memos stay live for the family (plans/memos.py)
-    return dec2.localCheckpoint(eager=True)
+    return local(spark, dec2)
 
 
 @query(

@@ -259,18 +259,14 @@ def minhash_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("i"))
     )
     jac = F.col("i") * F.lit(1.0) / (F.col("na") + F.col("nb") - F.col("i"))
-    out = (
+    # lazy over the shingle/band/size memos: at 100 TB the verified
+    # near-dup pair set is not driver-sized, so it is not collected
+    return (
         inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
         .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
         .filter(jac >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", round_to(jac, 4).alias("jaccard"))
     )
-    # localCheckpoint materializes the verified pairs ON THE EXECUTORS
-    # while the shingle cache is hot; the shingle/band memos stay live
-    # for the family's other queries. A driver collect() here would be
-    # a scale bug: at 100 TB the verified near-dup pair set is not
-    # driver-sized.
-    return out.localCheckpoint(eager=True)
 
 
 # Bounded-output twin of the verified pair listing (see the simhash
@@ -311,7 +307,7 @@ def minhash_dedup_topk_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc top-{TOP_K_MATCHES} verified near-dup matches by exact
     Jaccard (desc; ties broken by the other doc's id), plus the doc's
     total verified-match count. Reuses the full LSH->verify pipeline
-    (shingle cache, band equi-join, localCheckpoint) and adds one
+    (shingle cache, band equi-join) and adds one
     doc_id-partitioned window — ordering on the ROUNDED jaccard both
     engines already hash-agree on keeps ranks deterministic."""
     from pyspark.sql.window import Window

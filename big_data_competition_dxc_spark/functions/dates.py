@@ -7,7 +7,7 @@ closures (M:54-62) forfeit both.
 
 Date columns here are proper DATE/TIMESTAMP types; ``yyyyMMdd`` string
 form (the reference's universal date encoding, M:48) exists only at the
-edges via ``to_ds``/``from_ds``.
+exit edge via ``to_ds``.
 """
 
 from __future__ import annotations
@@ -16,11 +16,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DS_FMT = "yyyyMMdd"
-
-
-def from_ds(col: Column | str) -> Column:
-    """yyyyMMdd string -> DateType (entry edge)."""
-    return F.to_date(F.col(col) if isinstance(col, str) else col, DS_FMT)
 
 
 def to_ds(col: Column | str) -> Column:

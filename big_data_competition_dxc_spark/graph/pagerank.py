@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
+from ..plans.memos import local
 from ..plans.registry import query
 from ..sources import load
 
@@ -105,7 +106,8 @@ def pagerank_cosupply_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 suppliers by 3-iteration fixed-point PageRank over the
     co-supply graph. The driver loop only CONSTRUCTS the plan (fixed
     N_ITER=3); no data touches the driver except the node count, a
-    single scalar needed to embed the exact teleport constant."""
+    single scalar needed to embed the exact teleport constant, and the
+    top-20 rows it returns."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     a = li.alias("a")
     b = li.alias("b")
@@ -156,17 +158,17 @@ def pagerank_cosupply_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("r"),
         )
 
-    # materialize the (TOP_N-row) result eagerly so the edge cache can
-    # release before returning instead of pinning for the session — the
-    # same leak class the r8 advice flagged on multiprobe/evolution
-    out = (
+    # hold the (TOP_N-row) result as a local frame so the edge cache can
+    # release before returning instead of pinning for the session
+    out = local(
+        spark,
         ranks.orderBy(F.col("r").desc(), F.col("node"))
         .limit(TOP_N)
         .select(
             F.col("node").alias("s_suppkey"),
             F.col("r").alias("rank_scaled"),
             round_to(F.col("r") / F.lit(float(SCALE)), 6).alias("rank"),
-        )
-    ).localCheckpoint(eager=True)
+        ),
+    )
     edges.unpersist()
     return out

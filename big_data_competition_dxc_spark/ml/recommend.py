@@ -393,18 +393,14 @@ def knn_user_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy(
         F.desc("score"), F.asc("item_id")
     )
-    out = (
+    # lazy over the family memos (ratings, cosine pairs): the caller
+    # reads it once, and at 100 TB the per-user top-k across all users
+    # is not driver-sized, so it is neither collected nor checkpointed
+    return (
         unseen.select("user_id", "item_id", F.col("raw_score").alias("score"))
         .withColumn("rn", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rn") <= TOPK_RECS)
     )
-    # localCheckpoint materializes the result ON THE EXECUTORS while the
-    # ratings cache is hot — unlike a driver collect(), the
-    # recommendation set stays distributed (at 100 TB the per-user
-    # top-k across all users is not driver-sized). The shared ratings
-    # memo is NOT unpersisted here: knn_user_neighbors' memoized pairs
-    # frame recomputes through it.
-    return out.localCheckpoint(eager=True)
 
 
 # --- ALS scale-form twin ---------------------------------------------------

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
+from ..plans.memos import local
 from ..plans.registry import query
 from ..session import scoped
 from ..sources import load
@@ -81,16 +82,15 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     forever after. Result identical to the plain join (the oracle)."""
     joined, cleanup = bucketed_join_frames(spark, sf_dir)
     try:
-        out = joined.groupBy("o_orderstatus").agg(
-            F.count("*").alias("n_items"),
-            fixed_sum(F.col("l_extendedprice"), 2, 2).alias("revenue"),
+        return local(
+            spark,
+            joined.groupBy("o_orderstatus").agg(
+                F.count("*").alias("n_items"),
+                fixed_sum(F.col("l_extendedprice"), 2, 2).alias("revenue"),
+            ),
         )
-        rows = out.collect()
     finally:
         cleanup()
-    return spark.createDataFrame(
-        rows, "o_orderstatus string, n_items bigint, revenue double"
-    )
 
 
 _SALTED_ORACLE = f"""
@@ -208,13 +208,12 @@ def bucket_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the same totals from the pristine tables."""
     joined, cleanup = bucket_pruned_scan_frames(spark, sf_dir)
     try:
-        agg = joined.groupBy("o_orderkey").agg(
-            F.count("*").alias("n_items"),
-            fixed_sum(F.col("l_extendedprice"), 2, 2).alias("revenue"),
+        return local(
+            spark,
+            joined.groupBy("o_orderkey").agg(
+                F.count("*").alias("n_items"),
+                fixed_sum(F.col("l_extendedprice"), 2, 2).alias("revenue"),
+            ),
         )
-        rows = agg.collect()
     finally:
         cleanup()
-    return spark.createDataFrame(
-        rows, "o_orderkey bigint, n_items bigint, revenue double"
-    )

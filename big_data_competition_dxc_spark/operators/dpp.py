@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
+from ..plans.memos import local
 from ..plans.registry import query
 from ..sources import load
 
@@ -115,15 +116,13 @@ def dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     be value-identical to the full scan."""
     joined, cleanup = dpp_join_frames(spark, sf_dir)
     try:
-        agg = joined.groupBy("event_type").agg(
-            F.count("*").alias("n_days"),
-            F.sum("n_events").alias("n_events"),
-            fixed_sum(F.col("total_value"), 2, 2).alias("total_value"),
+        return local(
+            spark,
+            joined.groupBy("event_type").agg(
+                F.count("*").alias("n_days"),
+                F.sum("n_events").alias("n_events"),
+                fixed_sum(F.col("total_value"), 2, 2).alias("total_value"),
+            ),
         )
-        rows = agg.collect()
     finally:
         cleanup()
-    return spark.createDataFrame(
-        rows,
-        "event_type string, n_days bigint, n_events bigint, total_value double",
-    )

@@ -5,9 +5,10 @@ Several query families derive one expensive canonical intermediate that
 multiple registered queries consume: the music feature table
 (ml/regression), the ratings matrix and its cosine pairs (ml/recommend),
 the minhash shingle/band/size frames and the simhash and Jaccard pair
-sets (dedup/). Production runs each derivation once per input; every
-such memo goes through ``memoized``, which holds a frame in one of
-three ways (``hold``):
+sets (dedup/), and the release ledger's exact-dup flags, which four of
+its branches read (textops/release). Production runs each derivation
+once per input; every such memo goes through ``memoized``, which holds
+a frame in one of three ways (``hold``):
 
 - ``"cached"``: the canonical intermediates above, ``.cache()``d;
 - ``"relation"``: each fixture table's resolved relation
@@ -15,9 +16,15 @@ three ways (``hold``):
   footer read and nothing is materialized;
 - ``"result"``: a registered query's answer (``plans.registry``, the
   entry's ``fn``). Its rows are collected to the driver once and served
-  as a local frame (a ``LocalRelation``): a hit runs no Spark job, and
-  the frame owns no cached blocks. At most ``N`` rows are held; a
-  larger answer is returned lazily and not held.
+  as a local frame (``local``): a hit runs no Spark job, and the frame
+  owns no cached blocks. At most ``N`` rows are held; a larger answer
+  is returned lazily and not held.
+
+``local`` is also the one way a builder hands back a finished, bounded
+result (a write-and-read-back aggregate, a drained stream, a top-k
+computed over query-local caches it then releases): its Java rows
+become a ``LocalRelation`` of the caller's session with the frame's own
+schema, so no Python worker runs when it is read.
 
 The contract:
 - memos hold PARAMETERLESS canonical derivations only — a forced or
@@ -50,9 +57,11 @@ The contract:
 - ``clear_all()`` is a teardown call: it forgets every memo and releases
   every cached frame and persisted RDD of the live context, including
   ``localCheckpoint`` blocks, and every JVM object held only by Python
-  garbage. A result frame returned before it still reads the same rows
-  after it (its rows live in its plan); other frames returned before it
-  may be invalid after it.
+  garbage. Every frame a builder or ``fn`` returned before it still
+  reads the same rows after it: a local frame's rows live in its plan,
+  and a lazy frame over a memo recomputes from its lineage. No builder
+  returns a frame backed by checkpoint blocks
+  (``tests/test_memos.py``).
 """
 
 from __future__ import annotations
@@ -143,7 +152,7 @@ def memoized(
         if hold == "cached":
             held = df.cache()
         elif hold == "result":
-            held = _local(spark, df)
+            held = _local_or_none(spark, df)
         else:
             held = df
         with _LOCK:
@@ -154,12 +163,22 @@ def memoized(
         return held
 
 
-def _local(spark: SparkSession, df: DataFrame) -> DataFrame | None:
-    """``df``'s rows as a local frame of ``spark``, or None if it has
-    more than ``N``. The rows stay JVM-side: collected as Java rows and
-    handed back to ``createDataFrame``, the round trip is exact for
-    every column type. (``toDF()``: a ``spark.range`` frame is a
-    ``Dataset[Long]`` on the JVM side, not one of rows.)"""
+def local(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df``'s rows as a local frame of ``spark`` (a ``LocalRelation``
+    with ``df``'s schema); raises ``ValueError`` if it has more than
+    ``N`` rows."""
+    held = _local_or_none(spark, df)
+    if held is None:
+        raise ValueError(f"more than {N} rows: too many to hold as a local frame")
+    return held
+
+
+def _local_or_none(spark: SparkSession, df: DataFrame) -> DataFrame | None:
+    """``local``, or None if ``df`` has more than ``N`` rows. The rows
+    stay JVM-side: collected as Java rows and handed back to
+    ``createDataFrame``, the round trip is exact for every column type.
+    (``toDF()``: a ``spark.range`` frame is a ``Dataset[Long]`` on the
+    JVM side, not one of rows.)"""
     jdf = df._jdf.toDF()
     rows = jdf.limit(N + 1).collectAsList()
     if rows.size() > N:

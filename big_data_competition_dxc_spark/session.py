@@ -147,8 +147,11 @@ def _local_confs(cpus: str) -> dict[str, str]:
         # r8 run saw "[warning][gc,alloc] ... GCLocker ..." land on
         # stdout ahead of the payload. Route JVM log output to stderr
         # instead of silencing it (warnings stay visible, stdout stays
-        # machine-parseable).
-        "spark.driver.extraJavaOptions": "-Xlog:all=warning:stderr:uptime,level,tags",
+        # machine-parseable). A stderr output is added next to the
+        # default stdout one, so ``-Xlog:disable`` turns that off first.
+        "spark.driver.extraJavaOptions": (
+            "-Xlog:disable -Xlog:all=warning:stderr:uptime,level,tags"
+        ),
     }
 
 
@@ -176,10 +179,9 @@ DUMP_WAIT_S = 120
 #: Classpath entries the Spark launcher adds from the environment; any
 #: of them may be a non-empty directory, which stops a dump.
 _EXTRA_CLASSPATH = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
-#: A dump warns once per class it skips (about 600 lines), on stdout,
-#: where the JVM logs by default, and on stderr, where
-#: ``_local_confs`` routes warnings: class-sharing logs are off on both.
-_CDS_LOG_OFF = "-Xlog:cds*=off -Xlog:cds*=off:stderr"
+#: A dump warns once per class it skips (about 600 lines) on stderr,
+#: where ``_local_confs`` routes warnings: class-sharing logs are off.
+_CDS_LOG_OFF = "-Xlog:cds*=off:stderr"
 
 
 @dataclass(frozen=True)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
+from ..plans.memos import local
 from ..plans.registry import query
 from ..similarity.cosine import SQL_COS, as_double, dot
 from ..sources import load
@@ -207,11 +208,12 @@ def ann_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("q_id", "n_cand", "n_adm", "c_id", "sim")
     )
-    # Materialize the (|q2|-row) result eagerly so the corpus-sized
+    # Hold the (|q2|-row) result as a local frame so the corpus-sized
     # signature cache can be unpersisted before returning — it is local
     # to this query, not a session memo, so otherwise it would pin
-    # executor memory until the next plans.memos.clear_all() (r8 advice).
-    out = (
+    # executor memory until the next plans.memos.clear_all().
+    out = local(
+        spark,
         q2.select(F.col("vec_id").alias("q_id"))
         .join(best, "q_id", "left")
         .select(
@@ -222,7 +224,7 @@ def ann_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_admitted_candidates"),
             F.col("c_id").cast("bigint").alias("best_neighbor"),
             F.col("sim").alias("best_sim"),
-        )
-    ).localCheckpoint(eager=True)
+        ),
+    )
     sig.unpersist()
     return out

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
+from ..plans.memos import local
 from ..plans.registry import query
 from ..similarity.cosine import SQL_COS, as_double, dot
 from ..sources import load
@@ -198,7 +199,11 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = cm.join(
         exact.withColumn("ex", F.lit(1)), ["q_id", "c_id"], "full_outer"
     )
-    out = (
+    # the 1-row summary is held as a local frame so the two corpus-sized
+    # caches can be unpersisted before returning. exact/cand are
+    # single-consumer and not cached at all.
+    out = local(
+        spark,
         j.agg(
             F.count("ex").cast("bigint").alias("exact_pairs"),
             F.coalesce(F.sum(F.when(F.col("pmin") == 0, 1).otherwise(0)), F.lit(0))
@@ -229,12 +234,8 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "multi_candidates",
             "single_hits",
             "multi_hits",
-        )
-    ).localCheckpoint(eager=True)
-    # the 1-row summary is materialized eagerly (localCheckpoint) so
-    # the two corpus-sized caches can be unpersisted before returning
-    # (r8 advice). exact/cand are single-consumer now and no longer
-    # cached at all.
+        ),
+    )
     for c in (qs, corpus):
         c.unpersist()
     return out

@@ -127,10 +127,10 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
 
     NOT the builtin csv reader with DROPMALFORMED: modern Spark's
     DROPMALFORMED only drops type-cast failures — wrong-arity rows are
-    padded/truncated permissively (proven in
-    sources/roundtrip.py:csv_roundtrip_malformed, which pins the same
-    shape against a DuckDB oracle). The explicit filter reproduces the
-    reference's `e.length==n` semantics (M:31, M:40) exactly."""
+    padded/truncated permissively (``csv_roundtrip_malformed`` runs
+    this reader against a DuckDB oracle). The explicit filter
+    reproduces the reference's `e.length==n` semantics (M:31, M:40)
+    exactly."""
     lines = spark.read.text(path)
     parts = F.split(F.col("value"), ",")
     fields = schema.fields

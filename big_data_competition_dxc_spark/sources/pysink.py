@@ -42,6 +42,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from ..plans.memos import local
 from ..plans.registry import query
 from ..session import python_source
 from . import load
@@ -182,7 +183,8 @@ def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             manifest = json.load(f)
         files = [os.path.join(out, name) for name in manifest["files"]]
         parts = F.split(F.col("value"), r"\|")
-        agg = (
+        return local(
+            spark,
             spark.read.text(files)
             .select(
                 parts[1].alias("o_orderstatus"),
@@ -192,9 +194,5 @@ def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count("*").alias("n_orders"),
                 F.sum("cents").alias("total_cents"),
-            )
+            ),
         )
-        rows = agg.collect()
-    return spark.createDataFrame(
-        rows, "o_orderstatus string, n_orders bigint, total_cents bigint"
-    )

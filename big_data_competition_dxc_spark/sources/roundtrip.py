@@ -26,10 +26,13 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
+from ..plans.memos import local
 from ..plans.registry import query
 from . import load, table_sql
+from .io import read_csv
 
 @contextlib.contextmanager
 def _scratch_dir(prefix: str) -> Iterator[str]:
@@ -52,6 +55,16 @@ GROUP BY o_orderstatus
 """
 
 
+_ORDERS_CSV_SCHEMA = T.StructType(
+    [
+        T.StructField("o_orderkey", T.LongType(), False),
+        T.StructField("o_custkey", T.LongType(), True),
+        T.StructField("o_orderstatus", T.StringType(), True),
+        T.StructField("o_totalprice", T.DoubleType(), True),
+    ]
+)
+
+
 @query(
     "csv_roundtrip_malformed",
     oracle=_ORDERS_AGG_ORACLE,
@@ -61,7 +74,7 @@ GROUP BY o_orderstatus
 def csv_roundtrip_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1+S4 (M:29-31 textFile→split→arity filter; M:98 saveAsTextFile):
     export orders to CSV, append malformed short/long/bad-typed rows,
-    re-ingest with the reference's LITERAL parse shape — text lines →
+    re-ingest through ``read_csv``, the reference's LITERAL parse shape — text lines →
     split(",") → arity filter (P6, `filter(e.length==4)` M:40) → typed
     casts (P14) with cast-failure rows dropped (what CSV DROPMALFORMED
     does for type errors; token-count errors need the explicit arity
@@ -85,28 +98,13 @@ def csv_roundtrip_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         for p in os.listdir(out):
             if p.endswith(".crc"):
                 os.remove(f"{out}/{p}")
-        lines = spark.read.text(out)
-        parts = F.split(F.col("value"), ",")
-        parsed = (
-            lines.filter(F.size(parts) == 4)  # P6: the arity filter, verbatim
-            .select(
-                # try_cast: ANSI mode throws on bad input; NULL-then-drop
-                # reproduces the reference's silent bad-row behavior (P14)
-                parts[0].try_cast("long").alias("o_orderkey"),
-                parts[1].try_cast("long").alias("o_custkey"),
-                parts[2].alias("o_orderstatus"),
-                parts[3].try_cast("double").alias("o_totalprice"),
-            )
-            .filter(F.col("o_orderkey").isNotNull())  # cast-failure drop
-        )
-        agg = parsed.groupBy("o_orderstatus").agg(
+        # o_orderkey is the one non-nullable field: a row whose key
+        # fails its cast is dropped
+        agg = read_csv(spark, out, _ORDERS_CSV_SCHEMA).groupBy("o_orderstatus").agg(
             F.count("*").alias("n_orders"),
             fixed_sum(F.col("o_totalprice"), 2, 2).alias("total_price"),
         )
-        rows = agg.collect()
-    return spark.createDataFrame(
-        rows, "o_orderstatus string, n_orders bigint, total_price double"
-    )
+        return local(spark, agg)
 
 
 @query(
@@ -152,10 +150,7 @@ def parquet_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
                 fixed_sum(F.col("total_value"), 2, 2).alias("total_value"),
             )
         )
-        rows = agg.collect()
-    return spark.createDataFrame(
-        rows, "ds date, n_types bigint, n_events bigint, total_value double"
-    )
+        return local(spark, agg)
 
 
 @query(
@@ -270,8 +265,7 @@ def partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy("ds").agg(
             F.count("*").alias("n_types"), F.sum("n_events").alias("n_events")
         )
-        rows = agg.collect()
-    return spark.createDataFrame(rows, "ds date, n_types bigint, n_events bigint")
+        return local(spark, agg)
 
 
 @query(
@@ -306,12 +300,7 @@ def json_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_orders"),
             fixed_sum(F.col("o_totalprice"), 2, 2).alias("total_price"),
         )
-        rows = agg.collect()
-    return spark.createDataFrame(
-        rows,
-        "o_orderstatus string, o_orderpriority string, n_orders bigint, "
-        "total_price double",
-    )
+        return local(spark, agg)
 
 
 @query(
@@ -345,10 +334,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_orders"),
             fixed_sum(F.col("o_totalprice"), 2, 2).alias("total_price"),
         )
-        rows = agg.collect()
-    return spark.createDataFrame(
-        rows, "o_orderpriority string, n_orders bigint, total_price double"
-    )
+        return local(spark, agg)
 
 
 @query(
@@ -393,10 +379,7 @@ def xml_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_orders"),
             fixed_sum(F.col("o_totalprice"), 2, 2).alias("total_price"),
         )
-        rows = agg.collect()
-    return spark.createDataFrame(
-        rows, "o_orderstatus string, n_orders bigint, total_price double"
-    )
+        return local(spark, agg)
 
 
 @query(
@@ -447,12 +430,7 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("o_year").alias("n_with_year"),
             fixed_sum(F.col("o_totalprice"), 2, 2).alias("total_price"),
         )
-        rows = agg.collect()
-    return spark.createDataFrame(
-        rows,
-        "o_orderstatus string, n_orders bigint, n_with_year bigint, "
-        "total_price double",
-    )
+        return local(spark, agg)
 
 
 @query(
@@ -562,7 +540,4 @@ def binaryfile_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("length").cast("bigint").alias("n_bytes"),
             F.md5("content").alias("content_md5"),
         )
-        rows = audited.collect()
-    return spark.createDataFrame(
-        rows, "file_name string, n_bytes bigint, content_md5 string"
-    )
+        return local(spark, audited)

@@ -23,8 +23,7 @@ bucketed tables, split by payload weight:
    it into the scan as an IN-list — bucket-filter pruning reads ONLY
    the buckets those ids hash into (``LAST_RERANK_PLANS`` records
    SelectedBucketsCount). Per-batch vector-payload touch is
-   O(candidates), never O(corpus); a pathological collision storm
-   above ``MAX_PRUNE_IDS`` falls back to the unpruned bucketed scan.
+   O(candidates), never O(corpus).
 
 Equivalence is the oracle: the query set (vec_id < N_STREAM_QUERIES)
 is staged one file per slice and consumed maxFilesPerTrigger=1, so the
@@ -54,6 +53,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import round_to, sql_round
 from ..ml.concurrency import run_concurrently
 from ..operators.bucketing import AUTO_BUCKETED_SCAN
+from ..plans.memos import local
 from ..plans.registry import query
 from ..session import scoped
 from ..similarity.cosine import SQL_COS, as_double, dot
@@ -70,7 +70,6 @@ N_STREAM_QUERIES = 32  # vec_id < 32 are the streamed lookups
 ANN_SLICES = 4  # micro-batches the staged query set splits into
 N_ANN_BUCKETS = 8  # storage buckets of the postings table
 N_VEC_BUCKETS = 32  # storage buckets of the vector table
-MAX_PRUNE_IDS = 10_000
 
 
 # test seams, same contract as dedup_ingest's
@@ -230,13 +229,8 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             cand = probe_join.select("q_id", F.col("vec_id").alias("c_id")).cache()
             try:
                 matched = [r[0] for r in cand.select("c_id").distinct().collect()]
-                if not matched:
-                    vec_side = vectors_tbl.filter(F.lit(False))
-                elif len(matched) <= MAX_PRUNE_IDS:
-                    vec_side = vectors_tbl.filter(F.col("vec_id").isin(*matched))
-                    LAST_RERANK_PLANS.append(_formatted_plan(vec_side))
-                else:  # collision storm: unpruned bucketed scan
-                    vec_side = vectors_tbl
+                vec_side = vectors_tbl.filter(F.col("vec_id").isin(*matched))
+                LAST_RERANK_PLANS.append(_formatted_plan(vec_side))
                 # exact-cosine rerank: candidates x pruned vectors, the
                 # query vector re-joined from the tiny cached batch
                 scored = (
@@ -298,15 +292,11 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        rows = spark.read.parquet(os.path.join(res_dir, "b*")).collect()
+        out = local(spark, spark.read.parquet(os.path.join(res_dir, "b*")))
     finally:
         if q is not None and q.isActive:
             q.stop()
         cleanup()
-    assert len(rows) == N_STREAM_QUERIES, (
-        f"stream dropped query vectors: {len(rows)}/{N_STREAM_QUERIES}"
-    )
-    return spark.createDataFrame(
-        rows,
-        "q_id bigint, n_candidates bigint, best_neighbor bigint, best_sim double",
-    )
+    n = out.count()
+    assert n == N_STREAM_QUERIES, f"stream dropped query vectors: {n}/{N_STREAM_QUERIES}"
+    return out

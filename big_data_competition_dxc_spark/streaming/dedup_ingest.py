@@ -30,9 +30,7 @@ layout), each serving one stage of the per-batch probe:
 At 100 TB both tables are written once per compaction cycle and every
 ingest batch pays |batch| shuffle cost plus a few pruned bucket reads,
 never |corpus|. The matched-id collect is bounded by the batch's
-collision count (kilobytes); if a pathological batch matched more than
-``MAX_PRUNE_IDS`` corpus docs the probe falls back to the unpruned
-bucketed scan rather than building a megabyte IN-list.
+collision count (kilobytes).
 
 Equivalence is the oracle: the delta (the FIXED_DELTA_DOCS slice,
 same split as `incremental_dedup_fixed_delta`) is staged as one file
@@ -65,6 +63,7 @@ from ..dedup.jaccard import shingle_rows
 from ..dedup.minhash import _band_rows, _signature
 from ..ml.concurrency import run_concurrently
 from ..operators.bucketing import AUTO_BUCKETED_SCAN
+from ..plans.memos import local
 from ..plans.registry import query
 from ..session import scoped
 from ..sources import load
@@ -72,8 +71,6 @@ from ..sources import load
 INGEST_SLICES = 4  # micro-batches the staged delta splits into
 N_INDEX_BUCKETS = 8  # buckets of the stored corpus band index
 N_SHINGLE_BUCKETS = 16  # buckets of the stored corpus shingle table
-# above this many matched corpus ids, skip the IN-list and scan unpruned
-MAX_PRUNE_IDS = 10_000
 
 # batch ids seen by the LAST run's foreachBatch — test seam proving the
 # stream really executed several micro-batches (an availableNow stream
@@ -84,8 +81,7 @@ LAST_BATCH_IDS: list[int] = []
 # corpus-side Exchange (the whole point of persisting it)
 LAST_PROBE_PLANS: list[str] = []
 # formatted physical plan of each batch's PRUNED verify-side shingle
-# scan (recorded only for batches with >=1 matched corpus doc) — test
-# seam proving SelectedBucketsCount < N_SHINGLE_BUCKETS
+# scan — test seam proving SelectedBucketsCount < N_SHINGLE_BUCKETS
 LAST_VERIFY_PLANS: list[str] = []
 
 
@@ -247,15 +243,8 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 matched = [
                     r[0] for r in cand.select("doc_c").distinct().collect()
                 ]
-                if not matched:
-                    corpus_side = corpus_sh_tbl.filter(F.lit(False))
-                elif len(matched) <= MAX_PRUNE_IDS:
-                    corpus_side = corpus_sh_tbl.filter(
-                        F.col("doc_id").isin(*matched)
-                    )
-                    LAST_VERIFY_PLANS.append(_formatted_plan(corpus_side))
-                else:  # pathological collision storm: unpruned bucketed scan
-                    corpus_side = corpus_sh_tbl
+                corpus_side = corpus_sh_tbl.filter(F.col("doc_id").isin(*matched))
+                LAST_VERIFY_PLANS.append(_formatted_plan(corpus_side))
                 out = verify_decisions(
                     cand, bsh, corpus_side, b.select("doc_id"),
                     sizes_c=corpus_sizes,
@@ -278,16 +267,11 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        rows = spark.read.parquet(os.path.join(res_dir, "b*")).collect()
+        out = local(spark, spark.read.parquet(os.path.join(res_dir, "b*")))
     finally:
         if q is not None and q.isActive:
             q.stop()
         cleanup()
-    assert len(rows) == FIXED_DELTA_DOCS, (
-        f"stream dropped delta docs: {len(rows)}/{FIXED_DELTA_DOCS}"
-    )
-    return spark.createDataFrame(
-        rows,
-        "doc_id bigint, n_corpus_matches bigint, best_match bigint, "
-        "best_jaccard double",
-    )
+    n = out.count()
+    assert n == FIXED_DELTA_DOCS, f"stream dropped delta docs: {n}/{FIXED_DELTA_DOCS}"
+    return out

@@ -56,16 +56,16 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the dedup key domain (event ids) scales with data, so the store
     # count follows input bytes; dedup state lives within a key's hash
     # partition, so the emitted row set is partition-count independent.
-    spark = state_scope(spark, scaled_state_partitions(spark, in_dir))
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
+    scope = state_scope(spark, scaled_state_partitions(spark, in_dir))
     deduped = (
-        spark.readStream.schema(schema)
+        scope.readStream.schema(
+            "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
+        )
         .parquet(in_dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    rows = drain_to_memory(deduped, stage, "append")
-    return spark.createDataFrame(rows, schema)
+    return drain_to_memory(spark, deduped, stage, "append")
 
 
 from ..operators.behavior import HOP_S, WIN_S
@@ -110,8 +110,4 @@ def hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    rows = drain_to_memory(agg, stage, "complete")
-    return spark.createDataFrame(
-        rows,
-        "window_start timestamp, window_end timestamp, n_events bigint",
-    )
+    return drain_to_memory(spark, agg, stage, "complete")

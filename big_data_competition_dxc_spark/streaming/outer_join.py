@@ -140,7 +140,4 @@ def stream_stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFra
             ),
         )
     )
-    rows = drain_to_memory(joined, stage, "append")
-    return spark.createDataFrame(
-        rows, "purchase_id bigint, user_id bigint, click_id bigint, lag_seconds bigint"
-    )
+    return drain_to_memory(spark, joined, stage, "append")

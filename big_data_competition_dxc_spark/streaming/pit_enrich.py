@@ -86,7 +86,4 @@ def stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("next_ds").isNull() | (F.col("label_ds") <= F.col("next_ds"))),
         "left",
     ).select("event_id", "user_id", "label_ds", F.col("day_spend").alias("spend_before"))
-    rows = drain_to_memory(enriched, stage, "append")
-    return spark.createDataFrame(
-        rows, "event_id bigint, user_id bigint, label_ds date, spend_before double"
-    )
+    return drain_to_memory(spark, enriched, stage, "append")

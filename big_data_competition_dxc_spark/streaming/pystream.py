@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
+from ..plans.memos import local
 from ..plans.registry import query
 from .confscope import state_scope
 
@@ -115,10 +116,10 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches the JVM's md5 of the same id — {N_BATCHES} offset steps x
     {BATCH_ROWS} rows, all verified. (sf_dir unused: the source IS the
     data; the oracle rebuilds the feed from range().)"""
-    spark = state_scope(spark, N_BUCKETS)
-    spark.dataSource.register(TickFeedSource)
+    scope = state_scope(spark, N_BUCKETS)
+    scope.dataSource.register(TickFeedSource)
     agg = (
-        spark.readStream.format("tickfeed")
+        scope.readStream.format("tickfeed")
         .load()
         .groupBy((F.col("id") % N_BUCKETS).alias("bucket"))
         .agg(
@@ -145,15 +146,12 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (see module docstring); processAllAvailable loops
         # micro-batches until read() stops advancing the offset.
         q.processAllAvailable()
-        rows = spark.table(sink).collect()
+        return local(spark, scope.table(sink))
     finally:
         if q is not None and q.isActive:
             q.stop()
         try:
-            spark.catalog.dropTempView(sink)
+            scope.catalog.dropTempView(sink)
         except Exception:
             pass
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "bucket bigint, n bigint, min_id bigint, max_id bigint, n_verified bigint"
-    )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
+from ..plans.memos import local
 from ..plans.registry import query
 from ..session import scoped
 
@@ -75,15 +76,18 @@ def staged_events_stream(spark: SparkSession, sf_dir: str):
     return stream, stage
 
 
-def drain_to_memory(agg: DataFrame, stage: str, mode: str) -> list:
+def drain_to_memory(
+    spark: SparkSession, agg: DataFrame, stage: str, mode: str
+) -> DataFrame:
     """Run a streaming aggregate with availableNow into a throwaway
-    memory sink, collect its rows, and clean up the sink table and the
+    memory sink, return its rows as a local frame of ``spark``
+    (``plans.memos.local``), and clean up the sink table and the
     staging dir. The query runs on the session ``agg`` was built on,
     which also holds the sink's view."""
     import shutil
     import uuid as _uuid
 
-    spark = agg.sparkSession
+    session = agg.sparkSession
     sink = f"sink_{_uuid.uuid4().hex[:8]}"
     q = None
     try:
@@ -95,13 +99,13 @@ def drain_to_memory(agg: DataFrame, stage: str, mode: str) -> list:
             .start()
         )
         q.awaitTermination()
-        return spark.table(sink).collect()
+        return local(spark, session.table(sink))
     finally:
         # a failed stream must not leak the query, sink view, or stage dir
         if q is not None and q.isActive:
             q.stop()
         try:
-            spark.catalog.dropTempView(sink)
+            session.catalog.dropTempView(sink)
         except Exception:
             pass
         shutil.rmtree(stage, ignore_errors=True)
@@ -125,12 +129,7 @@ def streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    # Memory-sink contents are driver-local and small (one row per
-    # (day, event_type)); snapshot them into a plain DataFrame.
-    rows = drain_to_memory(agg, stage, "complete")
-    return spark.createDataFrame(
-        rows, "ds date, event_type string, n_events bigint, total_value double"
-    )
+    return drain_to_memory(spark, agg, stage, "complete")
 
 
 query(

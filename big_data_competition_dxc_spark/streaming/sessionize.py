@@ -124,12 +124,7 @@ def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    rows = drain_to_memory(agg, stage, "complete")
-    return spark.createDataFrame(
-        rows,
-        "user_id bigint, session_start timestamp, session_end timestamp, "
-        "n_events bigint, total_value double",
-    )
+    return drain_to_memory(spark, agg, stage, "complete")
 
 
 ATTRIB_MINUTES = 30
@@ -202,7 +197,4 @@ def stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFram
         "user_id",
         (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias("lag_seconds"),
     )
-    rows = drain_to_memory(joined, stage, "append")
-    return spark.createDataFrame(
-        rows, "purchase_id bigint, click_id bigint, user_id bigint, lag_seconds bigint"
-    )
+    return drain_to_memory(spark, joined, stage, "append")

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
+from ..plans.memos import local
 from ..plans.registry import query
 from .rollup_stream import staged_events_stream
 
@@ -71,12 +72,9 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         assert seen_batches, "foreachBatch callback never fired"
-        rows = spark.read.parquet(f"{out}/snapshot").collect()
+        return local(spark, spark.read.parquet(f"{out}/snapshot"))
     finally:
         if q is not None and q.isActive:
             q.stop()
         shutil.rmtree(stage, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_events bigint, total_value double"
-    )

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import to_units
+from ..plans.memos import local
 from ..plans.registry import query
 from .confscope import state_scope
 from .rollup_stream import staged_events_stream
@@ -89,11 +90,14 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the offline read: state rows decoded from the checkpoint,
         # NOT the sink table — the sink is only the drain target
         state = spark.read.format("statestore").load(ckpt)
-        rows = state.select(
-            F.col("key.event_type").alias("event_type"),
-            F.col("value.count").cast("bigint").alias("n_events"),
-            F.col("value.sum").cast("bigint").alias("total_cents"),
-        ).collect()
+        return local(
+            spark,
+            state.select(
+                F.col("key.event_type").alias("event_type"),
+                F.col("value.count").cast("bigint").alias("n_events"),
+                F.col("value.sum").cast("bigint").alias("total_cents"),
+            ),
+        )
     finally:
         if q is not None and q.isActive:
             q.stop()
@@ -103,6 +107,3 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(stage, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_events bigint, total_cents bigint"
-    )

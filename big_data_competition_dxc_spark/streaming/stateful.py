@@ -85,7 +85,4 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    rows = drain_to_memory(updated, stage, "update")
-    return spark.createDataFrame(
-        rows, "user_id bigint, n_events bigint, total_value double"
-    )
+    return drain_to_memory(spark, updated, stage, "update")

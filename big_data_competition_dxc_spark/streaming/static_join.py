@@ -57,7 +57,4 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             fixed_sum(F.col("value"), 2, 2).alias("total_value"),
         )
     )
-    rows = drain_to_memory(agg, stage, "complete")
-    return spark.createDataFrame(
-        rows, "c_mktsegment string, n_events bigint, total_value double"
-    )
+    return drain_to_memory(spark, agg, stage, "complete")

@@ -43,10 +43,7 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("win.start").alias("window_start"), "event_type", "n_events"
         )
     )
-    rows = drain_to_memory(agg, stage, "complete")
-    snap = spark.createDataFrame(
-        rows, "window_start timestamp, event_type string, n_events bigint"
-    )
+    snap = drain_to_memory(spark, agg, stage, "complete")
     w = Window.partitionBy("window_start").orderBy(
         F.desc("n_events"), F.col("event_type")
     )

@@ -100,10 +100,7 @@ def typed_state_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeMode="none",
     )
-    rows = drain_to_memory(updated, stage, "update")
-    return spark.createDataFrame(
-        rows, "user_id bigint, n_events bigint, total_value double"
-    )
+    return drain_to_memory(spark, updated, stage, "update")
 
 
 if TYPED_STATE_AVAILABLE:

@@ -45,10 +45,10 @@ INTEGER arithmetic (``lo*n_tok <= n_chars <= hi*n_tok``), so the gate
 can never sit on a float knife edge in either engine.
 
 Scale shape (100 TB): the exact-dedup window shuffles the text once on
-the content hash, and the flagged frame is materialized executor-side
-(``localCheckpoint``) before fanning out — four downstream branches
+the content hash, and the flagged frame is cached as a session memo
+(``plans.memos``) before fanning out — four downstream branches
 (keeper tokens, keeper spans, the dup ledger, the final join) consume
-it, and without the checkpoint each re-runs the full-text window
+it, and without the cache each re-runs the full-text window
 shuffle (measured: 4 Window nodes, 0 ReusedExchange — per-branch
 column pruning makes the exchanges non-identical, so Catalyst cannot
 reuse them). A stage-boundary materialization is also what a
@@ -67,6 +67,7 @@ from pyspark.sql import functions as F
 
 from ..dedup.spans import SPAN_TOKENS, _words, spans_of
 from ..functions.hashing import md5_bigint, sql_md5_bigint
+from ..plans.memos import memoized
 from ..plans.registry import query
 from ..sources import load
 from .dsir import _SQL_DSIR, SQL_KEEP_BPS, SQL_KEEP_U, dsir_doc_units, keep_bps_col
@@ -179,14 +180,16 @@ def corpus_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('empty' | 'exact_dup' | 'quality' | 'lang' | 'dsir')."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     is_empty = F.col("text").isNull() | (F.trim("text") == "")
-    ne = docs.filter(~is_empty)
-    # one full-text window shuffle, materialized executor-side before
-    # the four-branch fan-out (see module docstring)
-    flagged = (
-        ne.withColumn(
+    # one full-text window shuffle, held as a session memo for the
+    # four-branch fan-out (see module docstring)
+    flagged = memoized(
+        "release_flagged",
+        spark,
+        sf_dir,
+        lambda: docs.filter(~is_empty).withColumn(
             "keeper", F.min("doc_id").over(Window.partitionBy(F.md5("text")))
-        )
-    ).localCheckpoint(eager=True)
+        ),
+    )
     keepers = flagged.filter(F.col("doc_id") == F.col("keeper")).select(
         "doc_id", "text"
     )

@@ -12,6 +12,7 @@ races show as WRONG or ERROR calls.
 
 from __future__ import annotations
 
+import ast
 import re
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
@@ -217,6 +218,48 @@ def test_only_the_scope_helper_touches_session_state():
             if m[2] and re.search(rf"\b{m[2]} = (scoped|state_scope)\(", text):
                 continue
             hits.append(f"{path.relative_to(PACKAGE)}:{n}: {code}")
+    assert not hits, "\n".join(hits)
+
+
+def _own_nodes(fn: ast.FunctionDef):
+    """The nodes of ``fn``'s body, not of the functions nested in it (a
+    thunk's checkpointed intermediate is not a frame ``fn`` hands back)."""
+    todo = list(fn.body)
+    while todo:
+        node = todo.pop()
+        yield node
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)):
+            todo.extend(ast.iter_child_nodes(node))
+
+
+def _checkpoints(node) -> bool:
+    return isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "localCheckpoint"
+
+
+def test_no_function_returns_a_checkpointed_frame():
+    """``localCheckpoint`` blocks die at ``plans.memos.clear_all()``, so
+    no module-level function hands one back, directly or through a name
+    it bound: a bounded result is a local frame (``plans.memos.local``),
+    anything else stays lazy."""
+    hits = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            nodes = list(_own_nodes(fn))
+            bound = {
+                t.id
+                for n in nodes
+                if isinstance(n, ast.Assign) and _checkpoints(n.value)
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
+            hits += [
+                f"{path.relative_to(PACKAGE)}:{n.lineno}: {fn.name}"
+                for n in nodes
+                if isinstance(n, ast.Return)
+                and (_checkpoints(n.value) or getattr(n.value, "id", None) in bound)
+            ]
     assert not hits, "\n".join(hits)
 
 

@@ -296,6 +296,18 @@ def test_answer_over_the_bound_is_served_lazily(spark, monkeypatch):
         memos.clear_all()
 
 
+def test_local_frame_is_bounded(spark, monkeypatch):
+    """``local`` holds a result's rows with its own schema, and raises
+    for one of more than ``N`` rows instead of holding it."""
+    df = spark.range(3).selectExpr("id", "CAST(id AS STRING) AS s")
+    monkeypatch.setattr(memos, "N", 3)
+    held = memos.local(spark, df)
+    assert _held(held) and held.schema == df.schema and _rows(held) == _rows(df)
+    monkeypatch.setattr(memos, "N", 2)
+    with pytest.raises(ValueError, match="more than 2 rows"):
+        memos.local(spark, df)
+
+
 #: The mix's nine reads, and the recommender whose rows once lived only
 #: in localCheckpoint blocks.
 _SURVIVORS = (
@@ -322,6 +334,18 @@ def test_answers_survive_clear_all(spark):
     assert _persisted(spark) == 0
     assert {q: _rows(df) for q, df in frames.items()} == before
     assert all(before.values())
+
+
+@pytest.mark.parametrize("name", sorted(plans.QUERIES))
+def test_built_frames_survive_clear_all(spark, name):
+    """Every frame a builder returns owns no session state: it reads the
+    same rows after ``clear_all()`` released every memo, cached block
+    and checkpoint. A bounded result is a local frame; a lazy one
+    recomputes from its lineage."""
+    df = plans.QUERIES[name].build(spark, SF_TEST_DIR)
+    before = _rows(df)
+    memos.clear_all()
+    assert _rows(df) == before
 
 
 #: A writer call: a DataFrame or stream writer, or the package's memory

@@ -132,7 +132,7 @@ def test_local_launch_keeps_stderr_log_routing(monkeypatch, tmp_path):
     _, confs, got = S.launch_plan()
     opts = confs["spark.driver.extraJavaOptions"]
     assert got is sharing
-    assert opts.startswith("-Xlog:all=warning:stderr:uptime,level,tags ")
+    assert opts.startswith("-Xlog:disable -Xlog:all=warning:stderr:uptime,level,tags ")
     assert opts.endswith(sharing.options)
     assert "-Xlog:cds*=off:stderr" in opts
 
