@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.memos import local
 from ..plans.registry import query
 from ..sources import load
 from .jaccard import _JACCARD_ORACLE, jaccard_pairs_cached
@@ -95,6 +96,9 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             # the checkpointed one. Rounds are bounded (<= MAX_ROUNDS
             # O(V)-sized blocks); the ContextCleaner frees them on GC
             # and plans.memos.clear_all() unpersists every persisted RDD.
+            # So the returned frame must not rest on them: the final
+            # labels (edge-touched nodes only) become a local frame.
+            labels = local(nodes.sparkSession, labels)
             return nodes.join(labels, "id", "left").select(
                 "id", F.coalesce("label", "id").alias("label")
             )

@@ -155,9 +155,7 @@ def ml_cluster_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     per_cluster = [
         df
-        for df in run_concurrently(
-            [lambda c=c: _branch(c) for c in range(K)], max_workers=K
-        )
+        for df in run_concurrently([lambda c=c: _branch(c) for c in range(K)])
         if df is not None
     ]
     schema = "cluster_id int, n_test bigint, mse_test double"

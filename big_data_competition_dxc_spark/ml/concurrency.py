@@ -28,41 +28,30 @@ from pyspark.sql import SparkSession
 
 T = TypeVar("T")
 
-#: Independent fits in flight at once. The guide's own number — "2-3
-#: jobs in flight is plenty: enough to fill the tail, not so many that
-#: they fight for executors" — measured here too: the 5-model RF
-#: battery at 5-way concurrency read a 218s outlier under external
-#: throttle (oversubscribed heavy stages amplify CPU scarcity), while
-#: 3-way keeps the back-fill win without the fight.
-MAX_CONCURRENT_FITS = 3
-
 
 def run_concurrently(
     thunks: Sequence[Callable[[], T]],
     spark: SparkSession | None = None,
-    max_workers: int | None = None,
 ) -> list[T]:
-    """Run independent thunks on driver threads; results in input order.
+    """Run independent thunks on driver threads, all at once; results
+    in input order.
 
     Exceptions propagate (first failing thunk raises at its position).
     A single thunk runs inline — no pool, no thread overhead. Passing
     the session lets ``inheritable_thread_target`` also inherit session
-    tags (and silences its advisory warning when one is active).
-
-    ``max_workers`` overrides :data:`MAX_CONCURRENT_FITS` for call
-    sites whose measured sweet spot differs (r15: the 4-branch cluster
-    ensemble pays a whole second wave — the longest branch's full wall
-    again — when capped at 3; a clean-window sweep picked its cap).
+    tags (and silences its advisory warning when one is active). Every
+    caller submits 2 to 5 thunks, so the pool has one thread per
+    thunk: a cap below that would only add a second wave that waits
+    out the longest thunk again.
     """
     if len(thunks) <= 1:
         return [t() for t in thunks]
-    cap = MAX_CONCURRENT_FITS if max_workers is None else max_workers
     session = spark or SparkSession.getActiveSession()
     wrap = (
         inheritable_thread_target(session)
         if session is not None
         else inheritable_thread_target
     )
-    with ThreadPoolExecutor(max_workers=min(cap, len(thunks))) as pool:
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(wrap(t)) for t in thunks]
         return [f.result() for f in futures]

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
+from ..plans.memos import local
 from ..plans.registry import query
 from .recommend import _RATINGS_SQL, cached_ratings
 
@@ -186,13 +187,16 @@ def itemcf_item_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb = _neighbors(spark, sf_dir, capped=capped, focus_items=top_items).filter(
         F.col("rn") <= K_NEIGHBORS
     )
-    return nb.join(
-        F.broadcast(top_items), nb.i == top_items.item_id
-    ).select(
-        F.col("i").alias("item_id"),
-        F.col("j").alias("neighbor_id"),
-        round_to(F.col("sim_u") / F.lit(float(MICRO)), 6).alias("sim"),
-        "rn",
+    # a bounded result: handed back as a local frame, since a lazy one
+    # would rest on the checkpoint blocks that clear_all() releases
+    return local(
+        spark,
+        nb.join(F.broadcast(top_items), nb.i == top_items.item_id).select(
+            F.col("i").alias("item_id"),
+            F.col("j").alias("neighbor_id"),
+            round_to(F.col("sim_u") / F.lit(float(MICRO)), 6).alias("sim"),
+            "rn",
+        ),
     )
 
 
@@ -254,7 +258,9 @@ def itemcf_user_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("sim_u").alias("score_u"))
     )
     w = Window.partitionBy("user_id").orderBy(F.col("score_u").desc(), F.col("item_id"))
-    return (
+    # bounded, and over checkpoint blocks: a local frame (see above)
+    return local(
+        spark,
         cand.withColumn("rn", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rn") <= TOPK_RECS)
         .select(
@@ -262,5 +268,5 @@ def itemcf_user_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "item_id",
             round_to(F.col("score_u") / F.lit(float(MICRO)), 6).alias("score"),
             "rn",
-        )
+        ),
     )

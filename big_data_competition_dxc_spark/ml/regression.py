@@ -197,8 +197,7 @@ def ml_random_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         row
         for per_model in run_concurrently(
-            [lambda t=t, l=l: _battery(t, l) for t, l in RF_TARGETS.items()],
-            max_workers=len(RF_TARGETS),
+            [lambda t=t, l=l: _battery(t, l) for t, l in RF_TARGETS.items()]
         )
         for row in per_model
     ]

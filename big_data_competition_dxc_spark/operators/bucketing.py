@@ -7,12 +7,19 @@ Both queries produce results identical to the plain join (oracle-
 verified) — the POINT is the physical plan, which tests/test_plans.py
 asserts: the bucketed join has no Exchange, the salted join spreads a
 hot key across SALT_BUCKETS shuffle partitions.
+
+The two bucketed layouts are written as per-call catalog tables
+(``session.scratch_tables``) over files in a request scratch dir
+(``session.scratch_dir``). ``bucketed_join_frames`` and
+``bucket_pruned_scan_frames`` are context managers: the frame they
+yield is valid inside the ``with`` block, and the tables and files are
+dropped when it exits, on success or error alike.
 """
 
 from __future__ import annotations
 
-import tempfile
-import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,7 +27,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import fixed_sum, sql_fixed_sum
 from ..plans.memos import local
 from ..plans.registry import query
-from ..session import scoped
+from ..session import scoped, scratch_dir, scratch_tables
 from ..sources import load
 
 N_BUCKETS = 8
@@ -38,25 +45,17 @@ GROUP BY o.o_orderstatus
 """
 
 
-def bucketed_join_frames(spark: SparkSession, sf_dir: str):
+@contextmanager
+def bucketed_join_frames(spark: SparkSession, sf_dir: str) -> Iterator[DataFrame]:
     """Write both fact tables bucketed+sorted on the join key, re-read
-    via the catalog, and join — Spark recognizes the co-located layout
-    and plans the sort-merge join WITHOUT a shuffle on either side.
-    Returns (joined_df, cleanup) — call cleanup() once the result is
-    materialized to drop the scratch tables and files. The tables are
-    named per call, as the catalog is shared by every session."""
-    base = tempfile.mkdtemp(prefix="bucketed_")
-    suffix = uuid.uuid4().hex[:8]
-    orders, lineitem = f"bt_orders_{suffix}", f"bt_lineitem_{suffix}"
-
-    def cleanup() -> None:
-        import shutil
-
-        spark.sql(f"DROP TABLE IF EXISTS {orders}")
-        spark.sql(f"DROP TABLE IF EXISTS {lineitem}")
-        shutil.rmtree(base, ignore_errors=True)
-
-    try:
+    via the catalog, and yield their join for the ``with`` block —
+    Spark recognizes the co-located layout and plans the sort-merge
+    join WITHOUT a shuffle on either side. The scratch tables (named
+    per call, ``session.scratch_tables``) and their files are dropped
+    when the block exits."""
+    with scratch_dir("bucketed_") as base, scratch_tables(
+        spark, "bt_orders", "bt_lineitem"
+    ) as (orders, lineitem):
         for name, src, key in (
             (orders, load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus"), "o_orderkey"),
             (lineitem, load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice"), "l_orderkey"),
@@ -69,10 +68,7 @@ def bucketed_join_frames(spark: SparkSession, sf_dir: str):
             )
         o = spark.table(orders)
         l = spark.table(lineitem)
-    except BaseException:
-        cleanup()
-        raise
-    return o.join(l, o.o_orderkey == l.l_orderkey), cleanup
+        yield o.join(l, o.o_orderkey == l.l_orderkey)
 
 
 @query("bucketed_colocated_join", oracle=_BUCKETED_ORACLE, tags=("J2", "S2", "S3"), writes=True)
@@ -80,8 +76,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈fact via bucketed tables: the repeated-join workhorse at
     100 TB — pay the layout shuffle once at write, join shuffle-free
     forever after. Result identical to the plain join (the oracle)."""
-    joined, cleanup = bucketed_join_frames(spark, sf_dir)
-    try:
+    with bucketed_join_frames(spark, sf_dir) as joined:
         return local(
             spark,
             joined.groupBy("o_orderstatus").agg(
@@ -89,8 +84,6 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fixed_sum(F.col("l_extendedprice"), 2, 2).alias("revenue"),
             ),
         )
-    finally:
-        cleanup()
 
 
 _SALTED_ORACLE = f"""
@@ -143,11 +136,13 @@ GROUP BY o.o_orderkey
 """
 
 
-def bucket_pruned_scan_frames(spark: SparkSession, sf_dir: str):
+@contextmanager
+def bucket_pruned_scan_frames(spark: SparkSession, sf_dir: str) -> Iterator[DataFrame]:
     """Write lineitem bucketed on the key, probe it with an IN-list —
     Spark's scan prunes to the buckets the literals hash into
     (SelectedBucketsCount in the plan), reading 1/{N_BUCKETS} of the
-    files per key instead of the whole table. Returns (df, cleanup).
+    files per key instead of the whole table. Yields the probe joined
+    to its orders for the ``with`` block.
 
     autoBucketedScan is OFF for this frame (it is built on a child
     session, ``session.scoped``): that heuristic keeps the bucketed read
@@ -155,18 +150,10 @@ def bucket_pruned_scan_frames(spark: SparkSession, sf_dir: str):
     (join/agg shuffle elimination) and is blind to the bucket-FILTER
     read-cost benefit — with it on, this scan plans as
     'Bucketed: false (disabled by query planner)' and reads every file.
-    The table is named per call; cleanup() drops it."""
+    The table is named per call and dropped, with its files, when the
+    block exits."""
     spark = scoped(spark, {AUTO_BUCKETED_SCAN: "false"})
-    base = tempfile.mkdtemp(prefix="bucketprune_")
-    table = f"bp_lineitem_{uuid.uuid4().hex[:8]}"
-
-    def cleanup() -> None:
-        import shutil
-
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(base, ignore_errors=True)
-
-    try:
+    with scratch_dir("bucketprune_") as base, scratch_tables(spark, "bp_lineitem") as (table,):
         (
             load(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_extendedprice")
@@ -180,13 +167,7 @@ def bucket_pruned_scan_frames(spark: SparkSession, sf_dir: str):
         orders = load(spark, sf_dir, "orders").select("o_orderkey").filter(
             F.col("o_orderkey").isin(*_PROBE_KEYS)
         )
-        joined = li.join(
-            F.broadcast(orders), li.l_orderkey == orders.o_orderkey
-        )
-    except BaseException:
-        cleanup()
-        raise
-    return joined, cleanup
+        yield li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey)
 
 
 @query(
@@ -206,8 +187,7 @@ def bucket_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranges): partitioning prunes by VALUE ranges you chose at write
     time, bucketing prunes by HASH for arbitrary key lookups. The
     oracle computes the same totals from the pristine tables."""
-    joined, cleanup = bucket_pruned_scan_frames(spark, sf_dir)
-    try:
+    with bucket_pruned_scan_frames(spark, sf_dir) as joined:
         return local(
             spark,
             joined.groupBy("o_orderkey").agg(
@@ -215,5 +195,3 @@ def bucket_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fixed_sum(F.col("l_extendedprice"), 2, 2).alias("revenue"),
             ),
         )
-    finally:
-        cleanup()

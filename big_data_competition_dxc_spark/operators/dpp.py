@@ -10,9 +10,9 @@ selects are ever listed/read. Static predicate pushdown cannot do this
 — the qualifying partition set is only known after the dimension is
 evaluated.
 
-Here the fact is the daily (ds-partitioned) rollup written to scratch
-(same layout as `parquet_partitioned_roundtrip` — repartition("ds")
-then partitionBy("ds")), and the dimension selects the days whose
+Here the fact is the daily (ds-partitioned) rollup written to a
+request scratch dir (same layout as `parquet_partitioned_roundtrip` —
+repartition("ds") then partitionBy("ds")), and the dimension selects the days whose
 TOTAL event count is odd — a DATA-DEPENDENT property of each day. The
 choice is deliberate: a dim filter that is a pure function of the join
 key itself (a weekday test, a date range) gets propagated through the
@@ -24,6 +24,9 @@ which-days-qualify set that only exists after aggregating data is
 exactly what static analysis cannot know and runtime pruning can.
 tests/test_plans.py asserts the `dynamicpruningexpression` is in the
 fact scan's PartitionFilters AND that no static ds predicate is.
+`dpp_join_frames` is a context manager: the joined frame is valid
+inside its ``with`` block, and the scratch dir goes when the block
+exits, on success or error alike.
 
 At 100 TB this is the difference between scanning a year and scanning
 the qualifying days a data-driven dimension selects — for free, with
@@ -32,7 +35,8 @@ no layout change beyond the partitioning the table already has.
 
 from __future__ import annotations
 
-import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +44,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import fixed_sum, sql_fixed_sum
 from ..plans.memos import local
 from ..plans.registry import query
+from ..session import scratch_dir
 from ..sources import load
 
 _DPP_ORACLE = f"""
@@ -61,26 +66,21 @@ GROUP BY event_type
 """
 
 
-def dpp_join_frames(spark: SparkSession, sf_dir: str):
-    """Write the ds-partitioned daily fact to scratch, build the
-    odd-total-days dim, and return (joined_df, cleanup). The join is on
+@contextmanager
+def dpp_join_frames(spark: SparkSession, sf_dir: str) -> Iterator[DataFrame]:
+    """Write the ds-partitioned daily fact to a scratch dir, build the
+    odd-total-days dim, and yield their join for the ``with`` block;
+    the fact's files are removed when the block exits. The join is on
     the PARTITION column with the dim filtered on a data-dependent
     aggregate — the shape where ONLY runtime pruning can shrink the
-    fact scan. Callers assert on/aggregate the returned plan, then call
-    cleanup()."""
+    fact scan. Callers assert on or aggregate the plan inside the
+    block."""
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("ds"), "event_type").agg(
         F.count("*").alias("n_events"),
         fixed_sum(F.col("value"), 2, 2).alias("total_value"),
     )
-    out = tempfile.mkdtemp(prefix="dpp_fact_")
-
-    def cleanup() -> None:
-        import shutil
-
-        shutil.rmtree(out, ignore_errors=True)
-
-    try:
+    with scratch_dir("dpp_fact_") as out:
         # one file per ds partition (the parquet_partitioned_roundtrip layout)
         daily.repartition("ds").write.mode("overwrite").partitionBy("ds").parquet(out)
         fact = spark.read.parquet(out)
@@ -93,11 +93,7 @@ def dpp_join_frames(spark: SparkSession, sf_dir: str):
             .filter(F.col("n_day") % 2 == 1)
             .select("ds")
         )
-        joined = fact.join(F.broadcast(odd_days), "ds")
-    except BaseException:
-        cleanup()
-        raise
-    return joined, cleanup
+        yield fact.join(F.broadcast(odd_days), "ds")
 
 
 @query(
@@ -114,8 +110,7 @@ def dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DPP; plan-asserted in test_plans). The oracle recomputes from the
     raw events with the same HAVING predicate, so the pruned read must
     be value-identical to the full scan."""
-    joined, cleanup = dpp_join_frames(spark, sf_dir)
-    try:
+    with dpp_join_frames(spark, sf_dir) as joined:
         return local(
             spark,
             joined.groupBy("event_type").agg(
@@ -124,5 +119,3 @@ def dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fixed_sum(F.col("total_value"), 2, 2).alias("total_value"),
             ),
         )
-    finally:
-        cleanup()

@@ -61,7 +61,9 @@ import hashlib
 import os
 import shutil
 import subprocess
+import tempfile
 import threading
+import uuid
 import weakref
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
@@ -455,3 +457,38 @@ def python_source(spark: SparkSession, source: type[DataSource]) -> str:
             spark.dataSource.register(source)
             names.add(name)
     return name
+
+
+#: The name every scratch dir of a request starts with, so a leak check
+#: can tell the package's own entries in the temp dir from anyone else's.
+SCRATCH_PREFIX = "spark-graft-"
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh temp dir for one request, removed on every way out of the
+    ``with`` block, an error included.
+
+    This is the package's one way to hold files for a request: staged
+    inputs, written round-trips, bucketed tables' files and stream
+    checkpoints all live in one, so a failed request leaves nothing in
+    the temp dir of a long-lived driver."""
+    out = tempfile.mkdtemp(prefix=f"{SCRATCH_PREFIX}{prefix}")
+    try:
+        yield out
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+@contextmanager
+def scratch_tables(spark: SparkSession, *names: str) -> Iterator[tuple[str, ...]]:
+    """Per-call catalog table names for ``names``, dropped on every way
+    out of the ``with`` block. The catalog is shared by every session,
+    so each name gets a suffix unique to the call."""
+    suffix = uuid.uuid4().hex[:8]
+    tables = tuple(f"{name}_{suffix}" for name in names)
+    try:
+        yield tables
+    finally:
+        for table in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")

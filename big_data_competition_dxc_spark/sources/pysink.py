@@ -44,9 +44,8 @@ from pyspark.sql.datasource import (
 
 from ..plans.memos import local
 from ..plans.registry import query
-from ..session import python_source
+from ..session import python_source, scratch_dir
 from . import load
-from .roundtrip import _scratch_dir
 
 #: Sink tasks in the demo write (repartition width — the point is a
 #: MULTI-part commit; the reference's repartition(1) is the anti-shape).
@@ -167,7 +166,7 @@ def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    with _scratch_dir("pysink_") as out:
+    with scratch_dir("pysink_") as out:
         # a zombie task's orphan: valid-looking name and content, but
         # no commit message ever mentioned it — must stay invisible
         with open(os.path.join(out, "part-deadbeefdecoy.txt"), "w") as f:

@@ -18,11 +18,7 @@ fixture output is tiny; the partitioned form is the 100 TB path.
 
 from __future__ import annotations
 
-import contextlib
 import os
-import shutil
-import tempfile
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,19 +27,9 @@ from pyspark.sql import types as T
 from ..functions.rounding import fixed_sum, sql_fixed_sum
 from ..plans.memos import local
 from ..plans.registry import query
+from ..session import scratch_dir
 from . import load, table_sql
 from .io import read_csv
-
-@contextlib.contextmanager
-def _scratch_dir(prefix: str) -> Iterator[str]:
-    """mkdtemp that is ALWAYS removed, even when the write/read/collect
-    under test raises — a failed round-trip must not leak scratch dirs
-    into /tmp across a long driver session."""
-    out = tempfile.mkdtemp(prefix=prefix)
-    try:
-        yield out
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 _ORDERS_AGG_ORACLE = f"""
@@ -84,7 +70,7 @@ def csv_roundtrip_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    with _scratch_dir("csv_rt_") as out:
+    with scratch_dir("csv_rt_") as out:
         orders.coalesce(1).write.mode("overwrite").csv(out)
         # Inject malformed rows (wrong arity / wrong types) — the
         # reference's raw inputs contained these and silently dropped
@@ -138,7 +124,7 @@ def parquet_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count("*").alias("n_events"),
         fixed_sum(F.col("value"), 2, 2).alias("total_value"),
     )
-    with _scratch_dir("pq_rt_") as out:
+    with scratch_dir("pq_rt_") as out:
         daily.repartition("ds").write.mode("overwrite").partitionBy("ds").parquet(out)
         back = spark.read.parquet(out)
         agg = (
@@ -248,7 +234,7 @@ def partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(F.to_date("ts").alias("ds"), "event_type").agg(
         F.count("*").alias("n_events")
     )
-    with _scratch_dir("pq_backfill_") as out:
+    with scratch_dir("pq_backfill_") as out:
         daily.write.mode("overwrite").partitionBy("ds").parquet(out)
         patch = daily.filter(
             F.col("ds") == F.lit("2024-01-05").cast("date")
@@ -290,7 +276,7 @@ def json_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
     )
-    with _scratch_dir("json_rt_") as out:
+    with scratch_dir("json_rt_") as out:
         orders.write.mode("overwrite").json(out)
         back = spark.read.schema(
             "o_orderkey long, o_orderstatus string, o_orderpriority string, "
@@ -327,7 +313,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    with _scratch_dir("orc_rt_") as out:
+    with scratch_dir("orc_rt_") as out:
         orders.write.mode("overwrite").orc(out)
         back = spark.read.orc(out)
         agg = back.groupBy("o_orderpriority").agg(
@@ -363,7 +349,7 @@ def xml_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    with _scratch_dir("xml_rt_") as out:
+    with scratch_dir("xml_rt_") as out:
         orders.write.mode("overwrite").format("xml").option("rowTag", "row").save(
             out
         )
@@ -421,7 +407,7 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.year("o_orderdate").cast("bigint").alias("o_year"),
     )
-    with _scratch_dir("evolve_") as out:
+    with scratch_dir("evolve_") as out:
         old.write.mode("overwrite").parquet(f"{out}/batch=1")
         new.write.mode("overwrite").parquet(f"{out}/batch=2")
         back = spark.read.option("mergeSchema", "true").parquet(out)
@@ -467,7 +453,7 @@ def small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("ds"), "user_id", "value"
     )
     n_days = ev.select("ds").distinct().count()
-    with _scratch_dir("compact_") as out:
+    with scratch_dir("compact_") as out:
         # messy ingest: one file per (writer-bucket, ds) pair
         ev.repartition(8, "user_id").write.partitionBy("ds").parquet(f"{out}/ingest")
         # compaction: read the messy layout back, rewrite one file per ds
@@ -530,7 +516,7 @@ def binaryfile_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("n_nationkey", "n_name", "n_regionkey")
         .collect()  # 25 rows at every sf — bounded driver materialization
     )
-    with _scratch_dir("binfile_") as out:
+    with scratch_dir("binfile_") as out:
         for r in src:
             payload = f"{r.n_name}|{r.n_regionkey}".encode("utf-8")
             with open(os.path.join(out, f"nation_{r.n_nationkey}.bin"), "wb") as f:

@@ -43,9 +43,6 @@ cross-engine.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -55,10 +52,11 @@ from ..ml.concurrency import run_concurrently
 from ..operators.bucketing import AUTO_BUCKETED_SCAN
 from ..plans.memos import local
 from ..plans.registry import query
-from ..session import scoped
+from ..session import scoped, scratch_dir, scratch_tables
 from ..similarity.cosine import SQL_COS, as_double, dot
 from ..sources import load
 from .dedup_ingest import _formatted_plan
+from .rollup_stream import run_stream
 
 #: sign bits in the bucket key — 2^6 = 64 buckets keeps real candidate
 #: volume at the 500-vector fixture scale (~8 per bucket; LSH_BITS=12
@@ -139,27 +137,16 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operators/bucketing.py). The whole stream is built, planned and
     # run on a child session holding that.
     spark = scoped(spark, {AUTO_BUCKETED_SCAN: "false"})
-    # the stored tables are named per call: the catalog is shared
-    suffix = uuid.uuid4().hex[:8]
-    index_table = f"stream_ann_index_{suffix}"
-    vector_table = f"stream_ann_vectors_{suffix}"
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    stage = tempfile.mkdtemp(prefix="stream_ann_")
-    in_dir = os.path.join(stage, "in")
-    res_dir = os.path.join(stage, "out")
-    ckpt_dir = os.path.join(stage, "ckpt")
-    idx_dir = os.path.join(stage, "idx")
-    vec_dir = os.path.join(stage, "vec")
-
-    def cleanup() -> None:
-        spark.sql(f"DROP TABLE IF EXISTS {index_table}")
-        spark.sql(f"DROP TABLE IF EXISTS {vector_table}")
-        shutil.rmtree(stage, ignore_errors=True)
-
-    q = None
-    try:
+    with scratch_dir("stream_ann_") as stage, scratch_tables(
+        spark, "stream_ann_index", "stream_ann_vectors"
+    ) as (index_table, vector_table):
+        in_dir = os.path.join(stage, "in")
+        res_dir = os.path.join(stage, "out")
+        idx_dir = os.path.join(stage, "idx")
+        vec_dir = os.path.join(stage, "vec")
         corpus = emb.filter(F.col("vec_id") >= N_STREAM_QUERIES)
 
         # Index-build chain and query staging are INDEPENDENT jobs —
@@ -282,21 +269,16 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cand.unpersist()
                 b.unpersist()
 
-        q = (
+        writer = (
             spark.readStream.schema("vec_id bigint, v array<double>, slice int")
             .option("maxFilesPerTrigger", 1)
             .parquet(in_dir)
             .writeStream.foreachBatch(probe)
-            .option("checkpointLocation", ckpt_dir)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        with run_stream(writer) as q:
+            q.awaitTermination()
         out = local(spark, spark.read.parquet(os.path.join(res_dir, "b*")))
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        cleanup()
     n = out.count()
     assert n == N_STREAM_QUERIES, f"stream dropped query vectors: {n}/{N_STREAM_QUERIES}"
     return out

@@ -50,10 +50,7 @@ idempotent."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import threading
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,8 +62,9 @@ from ..ml.concurrency import run_concurrently
 from ..operators.bucketing import AUTO_BUCKETED_SCAN
 from ..plans.memos import local
 from ..plans.registry import query
-from ..session import scoped
+from ..session import scoped, scratch_dir, scratch_tables
 from ..sources import load
+from .rollup_stream import run_stream
 
 INGEST_SLICES = 4  # micro-batches the staged delta splits into
 N_INDEX_BUCKETS = 8  # buckets of the stored corpus band index
@@ -134,24 +132,14 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream is built, planned and run on a child session holding that.
     spark = scoped(spark, {AUTO_BUCKETED_SCAN: "false"})
     docs = load(spark, sf_dir, "documents")
-    # the stored tables are named per call: the catalog is shared
-    suffix = uuid.uuid4().hex[:8]
-    index_table = f"stream_corpus_bands_{suffix}"
-    shingle_table = f"stream_corpus_shingles_{suffix}"
-    stage = tempfile.mkdtemp(prefix="stream_ingest_")
-    in_dir = os.path.join(stage, "in")
-    res_dir = os.path.join(stage, "out")
-    ckpt_dir = os.path.join(stage, "ckpt")
-    idx_dir = os.path.join(stage, "idx")
-    sh_dir = os.path.join(stage, "sh")
 
-    def cleanup() -> None:
-        spark.sql(f"DROP TABLE IF EXISTS {index_table}")
-        spark.sql(f"DROP TABLE IF EXISTS {shingle_table}")
-        shutil.rmtree(stage, ignore_errors=True)
-
-    q = None
-    try:
+    with scratch_dir("stream_ingest_") as stage, scratch_tables(
+        spark, "stream_corpus_bands", "stream_corpus_shingles"
+    ) as (index_table, shingle_table):
+        in_dir = os.path.join(stage, "in")
+        res_dir = os.path.join(stage, "out")
+        idx_dir = os.path.join(stage, "idx")
+        sh_dir = os.path.join(stage, "sh")
         # The corpus-index build chain and the delta staging write are
         # INDEPENDENT jobs — overlap them (guide §2.6) so the staging
         # write back-fills the build stages' tails. The build chain
@@ -257,21 +245,16 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cand.unpersist()
                 bsh.unpersist()
 
-        q = (
+        writer = (
             spark.readStream.schema("doc_id bigint, text string, slice int")
             .option("maxFilesPerTrigger", 1)
             .parquet(in_dir)
             .writeStream.foreachBatch(probe)
-            .option("checkpointLocation", ckpt_dir)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        with run_stream(writer) as q:
+            q.awaitTermination()
         out = local(spark, spark.read.parquet(os.path.join(res_dir, "b*")))
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        cleanup()
     n = out.count()
     assert n == FIXED_DELTA_DOCS, f"stream dropped delta docs: {n}/{FIXED_DELTA_DOCS}"
     return out

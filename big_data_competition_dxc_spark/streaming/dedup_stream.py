@@ -18,12 +18,12 @@ the original events table — bounded replay in, exactly-once out.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..session import scratch_dir
 from ..sources import load
 from .confscope import scaled_state_partitions, state_scope
 from .rollup_stream import drain_to_memory
@@ -44,28 +44,28 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark removes the replays with per-key state that the watermark
     retires. availableNow over the bounded input must reproduce the
     pristine events table."""
-    stage = tempfile.mkdtemp(prefix="stream_dedup_")
-    in_dir = os.path.join(stage, "in")
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    # at-least-once ingest: one clean copy + a replayed slice
-    ev.unionAll(ev.filter(F.col("user_id") < DUP_USERS_BELOW)).write.parquet(in_dir)
-    # Size-derived state partitioning — same rationale and oracle pin
-    # as the stream-stream joins (confscope.scaled_state_partitions):
-    # the dedup key domain (event ids) scales with data, so the store
-    # count follows input bytes; dedup state lives within a key's hash
-    # partition, so the emitted row set is partition-count independent.
-    scope = state_scope(spark, scaled_state_partitions(spark, in_dir))
-    deduped = (
-        scope.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
+    with scratch_dir("stream_dedup_") as stage:
+        in_dir = os.path.join(stage, "in")
+        ev = load(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value"
         )
-        .parquet(in_dir)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    return drain_to_memory(spark, deduped, stage, "append")
+        # at-least-once ingest: one clean copy + a replayed slice
+        ev.unionAll(ev.filter(F.col("user_id") < DUP_USERS_BELOW)).write.parquet(in_dir)
+        # Size-derived state partitioning — same rationale and oracle pin
+        # as the stream-stream joins (confscope.scaled_state_partitions):
+        # the dedup key domain (event ids) scales with data, so the store
+        # count follows input bytes; dedup state lives within a key's hash
+        # partition, so the emitted row set is partition-count independent.
+        scope = state_scope(spark, scaled_state_partitions(spark, in_dir))
+        deduped = (
+            scope.readStream.schema(
+                "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
+            )
+            .parquet(in_dir)
+            .withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark(["event_id"])
+        )
+        return drain_to_memory(spark, deduped, "append")
 
 
 from ..operators.behavior import HOP_S, WIN_S
@@ -100,14 +100,14 @@ def hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality."""
     from .rollup_stream import staged_events_stream
 
-    stream, stage = staged_events_stream(spark, sf_dir)
-    agg = (
-        stream.groupBy(F.window("ts", f"{WIN_S} seconds", f"{HOP_S} seconds").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_events",
+    with staged_events_stream(spark, sf_dir) as stream:
+        agg = (
+            stream.groupBy(F.window("ts", f"{WIN_S} seconds", f"{HOP_S} seconds").alias("w"))
+            .agg(F.count("*").alias("n_events"))
+            .select(
+                F.col("w.start").alias("window_start"),
+                F.col("w.end").alias("window_end"),
+                "n_events",
+            )
         )
-    )
-    return drain_to_memory(spark, agg, stage, "complete")
+        return drain_to_memory(spark, agg, "complete")

@@ -98,46 +98,46 @@ def stream_stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFra
     # instead of a constant; NULL emission depends only on the global
     # watermark, which is partition-count independent.
     n_state = scaled_state_partitions(spark, f"{sf_dir}/events.parquet")
-    stream, stage = staged_events_stream(state_scope(spark, n_state), sf_dir)
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", WATERMARK)
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", WATERMARK)
-    )
-    joined = (
-        purchases.join(
-            clicks,
-            (F.col("user_id") == F.col("c_user"))
-            & (
-                F.col("c_ts")
-                >= F.col("p_ts") - F.expr(f"interval {ATTRIB_MINUTES} minutes")
+    with staged_events_stream(state_scope(spark, n_state), sf_dir) as stream:
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                F.col("user_id").alias("c_user"),
+                F.col("ts").alias("c_ts"),
             )
-            & (F.col("c_ts") <= F.col("p_ts")),
-            "left_outer",
+            .withWatermark("c_ts", WATERMARK)
         )
-        # OUTPUT-side horizon: stateless filter after the stateful join,
-        # so the purchase-side watermark still tracks the raw stream
-        .filter(F.col("p_ts") <= F.lit(cutoff))
-        .select(
-            "purchase_id",
-            "user_id",
-            "click_id",
-            (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias(
-                "lag_seconds"
-            ),
+        purchases = (
+            stream.filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id"),
+                F.col("ts").alias("p_ts"),
+            )
+            .withWatermark("p_ts", WATERMARK)
         )
-    )
-    return drain_to_memory(spark, joined, stage, "append")
+        joined = (
+            purchases.join(
+                clicks,
+                (F.col("user_id") == F.col("c_user"))
+                & (
+                    F.col("c_ts")
+                    >= F.col("p_ts") - F.expr(f"interval {ATTRIB_MINUTES} minutes")
+                )
+                & (F.col("c_ts") <= F.col("p_ts")),
+                "left_outer",
+            )
+            # OUTPUT-side horizon: stateless filter after the stateful join,
+            # so the purchase-side watermark still tracks the raw stream
+            .filter(F.col("p_ts") <= F.lit(cutoff))
+            .select(
+                "purchase_id",
+                "user_id",
+                "click_id",
+                (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias(
+                    "lag_seconds"
+                ),
+            )
+        )
+        return drain_to_memory(spark, joined, "append")

@@ -62,28 +62,28 @@ def stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     order spend STRICTLY BEFORE the purchase date, via the periodized
     stream-static range join (module docstring). Stateless — append
     mode, no watermark, no state store."""
-    stream, stage = staged_events_stream(spark, sf_dir)
-    labels = stream.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", F.to_date("ts").alias("label_ds")
-    )
-    snap = (
-        load(spark, sf_dir, "orders")
-        .groupBy(
-            F.col("o_custkey").alias("f_user"),
-            F.to_date("o_orderdate").alias("ds"),
+    with staged_events_stream(spark, sf_dir) as stream:
+        labels = stream.filter(F.col("event_type") == "purchase").select(
+            "event_id", "user_id", F.to_date("ts").alias("label_ds")
         )
-        .agg(fixed_sum(F.col("o_totalprice"), 2, 2).alias("day_spend"))
-    )
-    periods = F.broadcast(
-        snap.withColumn(
-            "next_ds", F.lead("ds").over(Window.partitionBy("f_user").orderBy("ds"))
+        snap = (
+            load(spark, sf_dir, "orders")
+            .groupBy(
+                F.col("o_custkey").alias("f_user"),
+                F.to_date("o_orderdate").alias("ds"),
+            )
+            .agg(fixed_sum(F.col("o_totalprice"), 2, 2).alias("day_spend"))
         )
-    )
-    enriched = labels.join(
-        periods,
-        (F.col("user_id") == F.col("f_user"))
-        & (F.col("ds") < F.col("label_ds"))
-        & (F.col("next_ds").isNull() | (F.col("label_ds") <= F.col("next_ds"))),
-        "left",
-    ).select("event_id", "user_id", "label_ds", F.col("day_spend").alias("spend_before"))
-    return drain_to_memory(spark, enriched, stage, "append")
+        periods = F.broadcast(
+            snap.withColumn(
+                "next_ds", F.lead("ds").over(Window.partitionBy("f_user").orderBy("ds"))
+            )
+        )
+        enriched = labels.join(
+            periods,
+            (F.col("user_id") == F.col("f_user"))
+            & (F.col("ds") < F.col("label_ds"))
+            & (F.col("next_ds").isNull() | (F.col("label_ds") <= F.col("next_ds"))),
+            "left",
+        ).select("event_id", "user_id", "label_ds", F.col("day_spend").alias("spend_before"))
+        return drain_to_memory(spark, enriched, "append")

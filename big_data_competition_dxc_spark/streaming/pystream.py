@@ -33,8 +33,6 @@ slice, so an availableNow run stops after ONE offset step (measured:
 from __future__ import annotations
 
 import hashlib
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +42,7 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from ..plans.memos import local
 from ..plans.registry import query
 from .confscope import state_scope
+from .rollup_stream import run_stream
 
 # State-store commit fan-out (see confscope.py): the feed's key domain
 # is the CONSTANT {N_BUCKETS} buckets, but the session default (32
@@ -132,26 +131,10 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"sink_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="tickfeed_ckpt_")
-    q = None
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+    writer = agg.writeStream.format("memory").queryName(sink).outputMode("complete")
+    with run_stream(writer) as q:
         # availableNow would stop after the first prefetched slice
         # (see module docstring); processAllAvailable loops
         # micro-batches until read() stops advancing the offset.
         q.processAllAvailable()
         return local(spark, scope.table(sink))
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        try:
-            scope.catalog.dropTempView(sink)
-        except Exception:
-            pass
-        shutil.rmtree(ckpt, ignore_errors=True)

@@ -13,6 +13,16 @@ batch-comparable and the query carries a FULL DuckDB oracle: streaming
 and batch must agree on a bounded input (the correctness property that
 matters; the watermark only drops rows on unbounded late arrivals).
 
+Every stream in the package runs through this module. ``staged_events_stream``
+yields the events stream for a ``with`` block and removes its stage dir
+when the block exits; ``run_stream`` starts a query, yields it for the
+caller to wait on, and on exit stops it and releases what it
+registered: its scratch checkpoint, a memory sink's view, and the
+listener bus its session clone added to the context.
+``drain_to_memory`` is the memory-sink drain most streaming queries
+use. A query's rows come back as a local frame, so nothing it made
+outlives the request.
+
 Scale notes: the windowed agg keeps one state row per (window,
 event_type) in the state store — bounded by cardinality, not input
 volume; watermark "1 hour" bounds state retention on a real unbounded
@@ -23,113 +33,128 @@ incremental batches with identical results.
 from __future__ import annotations
 
 import os
-import tempfile
+import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
 from ..plans.memos import local
 from ..plans.registry import query
-from ..session import scoped
+from ..session import scoped, scratch_dir
 
 
-def staged_events_stream(spark: SparkSession, sf_dir: str):
-    """readStream over the events fixture; returns (stream_df, stage_dir).
+@contextmanager
+def staged_events_stream(spark: SparkSession, sf_dir: str) -> Iterator[DataFrame]:
+    """readStream over the events fixture, for the ``with`` block.
 
     FileStreamSource requires a DIRECTORY (it derives basePath from
     it); the fixture is a single parquet file, so stage a symlink dir —
     exactly how an unbounded ingest dir would look in production. Same
     TIMESTAMP(NANOS) workaround as sources/io.py: read ns as long,
     convert to timestamp in-plan (lossless at fixture precision).
-    Remove stage_dir once the stream has terminated.
+    The stage dir is a scratch dir, removed when the block exits, so a
+    query over the stream must finish inside the block.
 
     The stream is built on a child of ``spark`` holding the legacy
     nanos-as-long conf (``session.scoped``), so every query started from
     it runs with that conf; the child also keeps any conf ``spark``
     itself was scoped to (a state-store count, say)."""
-    stage = tempfile.mkdtemp(prefix="stream_events_")
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    os.symlink(src, f"{stage}/events.parquet")
-    # The fixture's physical ts type has varied across driver
-    # generations: TIMESTAMP(NANOS) (Spark reads it only as bigint,
-    # under the legacy nanosAsLong conf) vs plain TIMESTAMP(US, no tz)
-    # (reads as TIMESTAMP_NTZ). readStream needs the matching declared
-    # schema up front — branch on the parquet footer, then normalize to
-    # the session-tz TIMESTAMP type in-plan (UTC session zone makes the
-    # NTZ cast value-identical; the ns->us division is lossless at the
-    # fixture's microsecond precision).
-    import pyarrow.parquet as _pq
+    with scratch_dir("stream_events_") as stage:
+        src = os.path.abspath(f"{sf_dir}/events.parquet")
+        os.symlink(src, f"{stage}/events.parquet")
+        # The fixture's physical ts type has varied across driver
+        # generations: TIMESTAMP(NANOS) (Spark reads it only as bigint,
+        # under the legacy nanosAsLong conf) vs plain TIMESTAMP(US, no tz)
+        # (reads as TIMESTAMP_NTZ). readStream needs the matching declared
+        # schema up front — branch on the parquet footer, then normalize to
+        # the session-tz TIMESTAMP type in-plan (UTC session zone makes the
+        # NTZ cast value-identical; the ns->us division is lossless at the
+        # fixture's microsecond precision).
+        import pyarrow.parquet as _pq
 
-    ts_is_nanos = str(_pq.read_schema(src).field("ts").type) == "timestamp[ns]"
-    raw_ts = "bigint" if ts_is_nanos else "timestamp_ntz"
-    raw_schema = (
-        f"event_id bigint, ts {raw_ts}, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    spark = scoped(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    if ts_is_nanos:
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream, stage
-
-
-def drain_to_memory(
-    spark: SparkSession, agg: DataFrame, stage: str, mode: str
-) -> DataFrame:
-    """Run a streaming aggregate with availableNow into a throwaway
-    memory sink, return its rows as a local frame of ``spark``
-    (``plans.memos.local``), and clean up the sink table and the
-    staging dir. The query runs on the session ``agg`` was built on,
-    which also holds the sink's view."""
-    import shutil
-    import uuid as _uuid
-
-    session = agg.sparkSession
-    sink = f"sink_{_uuid.uuid4().hex[:8]}"
-    q = None
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
+        ts_is_nanos = str(_pq.read_schema(src).field("ts").type) == "timestamp[ns]"
+        raw_ts = "bigint" if ts_is_nanos else "timestamp_ntz"
+        raw_schema = (
+            f"event_id bigint, ts {raw_ts}, user_id bigint, "
+            "event_type string, value double, props string"
         )
-        q.awaitTermination()
-        return local(spark, session.table(sink))
-    finally:
-        # a failed stream must not leak the query, sink view, or stage dir
-        if q is not None and q.isActive:
-            q.stop()
+        spark = scoped(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
+        stream = spark.readStream.schema(raw_schema).parquet(stage)
+        if ts_is_nanos:
+            stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        else:
+            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        yield stream
+
+
+@contextmanager
+def run_stream(writer: DataStreamWriter) -> Iterator[StreamingQuery]:
+    """Start ``writer``'s query and yield it; the caller waits for it
+    (``awaitTermination``, or ``processAllAvailable``).
+
+    This is the package's one way to run a stream. Its checkpoint lives
+    in a scratch dir: Spark deletes a temporary checkpoint of its own
+    only after a run with no error. On every way out of the block the
+    query is stopped, a memory sink's view (named by ``queryName``) is
+    dropped, and the listener bus that the query's session clone added
+    to the context is removed: a stateful query makes the clone's
+    streaming manager, whose bus would otherwise stay on the context's
+    listener bus for good, one per run. The bus is taken from the query
+    itself, never found by diffing the context's listeners, because
+    other requests run streams at the same time."""
+    with scratch_dir("stream_ckpt_") as ckpt:
+        q = writer.option("checkpointLocation", ckpt).start()
         try:
-            session.catalog.dropTempView(sink)
-        except Exception:
-            pass
-        shutil.rmtree(stage, ignore_errors=True)
+            yield q
+        finally:
+            q.stop()
+            jq = q._jsq
+            if q.name is not None:
+                jq.sparkSession().catalog().dropTempView(q.name)
+            clone = jq.streamingQuery().sparkSessionForStream()
+            clone.sparkContext().listenerBus().removeListener(clone.streams().listenerBus())
+
+
+def drain_to_memory(spark: SparkSession, agg: DataFrame, mode: str) -> DataFrame:
+    """Run a streaming aggregate with availableNow into a throwaway
+    memory sink and return its rows as a local frame of ``spark``
+    (``plans.memos.local``). The query runs on the session ``agg`` was
+    built on, which also holds the sink's view."""
+    sink = f"sink_{uuid.uuid4().hex[:8]}"
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+    )
+    with run_stream(writer) as q:
+        q.awaitTermination()
+        return local(spark, agg.sparkSession.table(sink))
 
 
 def streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream(events) -> watermark -> 1-day window x event_type agg,
     drained with availableNow into a memory sink; returns the sink."""
-    stream, stage = staged_events_stream(spark, sf_dir)
-    stream = stream.withWatermark("ts", "1 hour")
-    agg = (
-        stream.groupBy(F.window("ts", "1 day").alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            fixed_sum(F.col("value"), 2, 2).alias("total_value"),
+    with staged_events_stream(spark, sf_dir) as stream:
+        stream = stream.withWatermark("ts", "1 hour")
+        agg = (
+            stream.groupBy(F.window("ts", "1 day").alias("win"), "event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                fixed_sum(F.col("value"), 2, 2).alias("total_value"),
+            )
+            .select(
+                F.to_date(F.col("win.start")).alias("ds"),
+                "event_type",
+                "n_events",
+                "total_value",
+            )
         )
-        .select(
-            F.to_date(F.col("win.start")).alias("ds"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    return drain_to_memory(spark, agg, stage, "complete")
+        return drain_to_memory(spark, agg, "complete")
 
 
 query(

@@ -106,25 +106,25 @@ def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merging happens within a user's hash partition, so the session
     # set is partition-count independent.
     n_state = scaled_state_partitions(spark, f"{sf_dir}/events.parquet")
-    stream, stage = staged_events_stream(state_scope(spark, n_state), sf_dir)
-    agg = (
-        stream.groupBy(
-            F.session_window("ts", f"{GAP_MINUTES} minutes").alias("win"), "user_id"
+    with staged_events_stream(state_scope(spark, n_state), sf_dir) as stream:
+        agg = (
+            stream.groupBy(
+                F.session_window("ts", f"{GAP_MINUTES} minutes").alias("win"), "user_id"
+            )
+            .agg(
+                F.max("ts").alias("session_end"),
+                F.count("*").alias("n_events"),
+                fixed_sum(F.col("value"), 2, 2).alias("total_value"),
+            )
+            .select(
+                "user_id",
+                F.col("win.start").alias("session_start"),
+                "session_end",
+                "n_events",
+                "total_value",
+            )
         )
-        .agg(
-            F.max("ts").alias("session_end"),
-            F.count("*").alias("n_events"),
-            fixed_sum(F.col("value"), 2, 2).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("win.start").alias("session_start"),
-            "session_end",
-            "n_events",
-            "total_value",
-        )
-    )
-    return drain_to_memory(spark, agg, stage, "complete")
+        return drain_to_memory(spark, agg, "complete")
 
 
 ATTRIB_MINUTES = 30
@@ -167,34 +167,34 @@ def stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFram
     # lives — the emitted row set is identical (oracle-pinned).
     n_state = scaled_state_partitions(spark, f"{sf_dir}/events.parquet")
     # one staged dir; both sides read the same file source independently
-    stream, stage = staged_events_stream(state_scope(spark, n_state), sf_dir)
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
+    with staged_events_stream(state_scope(spark, n_state), sf_dir) as stream:
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                F.col("user_id").alias("c_user"),
+                F.col("ts").alias("c_ts"),
+            )
+            .withWatermark("c_ts", "1 hour")
         )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
+        purchases = (
+            stream.filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id"),
+                F.col("ts").alias("p_ts"),
+            )
+            .withWatermark("p_ts", "1 hour")
         )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"interval {ATTRIB_MINUTES} minutes"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-    ).select(
-        "purchase_id",
-        "click_id",
-        "user_id",
-        (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias("lag_seconds"),
-    )
-    return drain_to_memory(spark, joined, stage, "append")
+        joined = purchases.join(
+            clicks,
+            (F.col("user_id") == F.col("c_user"))
+            & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"interval {ATTRIB_MINUTES} minutes"))
+            & (F.col("c_ts") <= F.col("p_ts")),
+        ).select(
+            "purchase_id",
+            "click_id",
+            "user_id",
+            (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias("lag_seconds"),
+        )
+        return drain_to_memory(spark, joined, "append")

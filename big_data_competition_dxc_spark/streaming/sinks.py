@@ -18,16 +18,14 @@ idempotence) is exactly what an unbounded 100 TB deployment runs.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import fixed_sum, sql_fixed_sum
 from ..plans.memos import local
 from ..plans.registry import query
-from .rollup_stream import staged_events_stream
+from ..session import scratch_dir
+from .rollup_stream import run_stream, staged_events_stream
 
 
 @query(
@@ -48,33 +46,25 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink snapshot (idempotent under batch replay). The returned frame
     is read back FROM THE SINK, so parity with the oracle proves the
     whole write path, not just the aggregation."""
-    stream, stage = staged_events_stream(spark, sf_dir)
-    agg = stream.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        fixed_sum(F.col("value"), 2, 2).alias("total_value"),
-    )
-    out = tempfile.mkdtemp(prefix="febatch_")
     seen_batches: list[int] = []
+    with staged_events_stream(spark, sf_dir) as stream, scratch_dir("febatch_") as out:
+        agg = stream.groupBy("event_type").agg(
+            F.count("*").alias("n_events"),
+            fixed_sum(F.col("value"), 2, 2).alias("total_value"),
+        )
 
-    def upsert_snapshot(batch_df: DataFrame, batch_id: int) -> None:
-        # complete-mode batch = the aggregate's full current state;
-        # overwrite makes a batch-id replay rewrite identical bytes
-        seen_batches.append(batch_id)
-        batch_df.write.mode("overwrite").parquet(f"{out}/snapshot")
+        def upsert_snapshot(batch_df: DataFrame, batch_id: int) -> None:
+            # complete-mode batch = the aggregate's full current state;
+            # overwrite makes a batch-id replay rewrite identical bytes
+            seen_batches.append(batch_id)
+            batch_df.write.mode("overwrite").parquet(f"{out}/snapshot")
 
-    q = None
-    try:
-        q = (
+        writer = (
             agg.writeStream.foreachBatch(upsert_snapshot)
             .outputMode("complete")
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        with run_stream(writer) as q:
+            q.awaitTermination()
         assert seen_batches, "foreachBatch callback never fired"
         return local(spark, spark.read.parquet(f"{out}/snapshot"))
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)

@@ -27,10 +27,6 @@ engine — byte-identical to the oracle's integer-cent sum.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,7 +34,7 @@ from ..functions.rounding import to_units
 from ..plans.memos import local
 from ..plans.registry import query
 from .confscope import state_scope
-from .rollup_stream import staged_events_stream
+from .rollup_stream import run_stream, staged_events_stream
 
 #: The state key domain: event_type is a 5-value schema constant, so
 #: the stateful aggregation needs 8, not 32, state stores per
@@ -69,41 +65,29 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-cents sum buffers. Must equal the oracle's batch aggregate
     over the raw table: the exactly-once state audit, computed from
     the checkpoint rather than the sink."""
-    stream, stage = staged_events_stream(state_scope(spark, STATE_PARTITIONS), sf_dir)
-    agg = stream.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum(to_units(F.col("value"), 2)).alias("cents"),
-    )
-    ckpt = tempfile.mkdtemp(prefix="ssr_ck_")
-    sink = f"sink_{uuid.uuid4().hex[:8]}"
-    q = None
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
+    with staged_events_stream(state_scope(spark, STATE_PARTITIONS), sf_dir) as stream:
+        agg = stream.groupBy("event_type").agg(
+            F.count("*").alias("n_events"),
+            F.sum(to_units(F.col("value"), 2)).alias("cents"),
+        )
+        # the sink is only the drain target: the rows come from the
+        # checkpoint, so nothing needs to hold them
+        writer = (
+            agg.writeStream.format("noop")
             .outputMode("complete")
-            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        # the offline read: state rows decoded from the checkpoint,
-        # NOT the sink table — the sink is only the drain target
-        state = spark.read.format("statestore").load(ckpt)
-        return local(
-            spark,
-            state.select(
-                F.col("key.event_type").alias("event_type"),
-                F.col("value.count").cast("bigint").alias("n_events"),
-                F.col("value.sum").cast("bigint").alias("total_cents"),
-            ),
-        )
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        try:
-            agg.sparkSession.catalog.dropTempView(sink)
-        except Exception:
-            pass
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
+        with run_stream(writer) as q:
+            q.awaitTermination()
+            # the offline read: state rows decoded from the checkpoint
+            # run_stream gave the query, NOT from a sink
+            ckpt = q._jsq.streamingQuery().resolvedCheckpointRoot()
+            state = spark.read.format("statestore").load(ckpt)
+            return local(
+                spark,
+                state.select(
+                    F.col("key.event_type").alias("event_type"),
+                    F.col("value.count").cast("bigint").alias("n_events"),
+                    F.col("value.sum").cast("bigint").alias("total_cents"),
+                ),
+            )

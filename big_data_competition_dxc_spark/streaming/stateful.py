@@ -76,13 +76,13 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     one update per user == the batch aggregate (the oracle)."""
     from .rollup_stream import drain_to_memory, staged_events_stream
 
-    stream, stage = staged_events_stream(spark, sf_dir)
-    stream = stream.select("user_id", "value")
-    updated = stream.groupBy("user_id").applyInPandasWithState(
-        _update_user_totals,
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        stateStructType="n bigint, v bigint",  # v = exact integer cents
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return drain_to_memory(spark, updated, stage, "update")
+    with staged_events_stream(spark, sf_dir) as stream:
+        stream = stream.select("user_id", "value")
+        updated = stream.groupBy("user_id").applyInPandasWithState(
+            _update_user_totals,
+            outputStructType="user_id bigint, n_events bigint, total_value double",
+            stateStructType="n bigint, v bigint",  # v = exact integer cents
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        return drain_to_memory(spark, updated, "update")

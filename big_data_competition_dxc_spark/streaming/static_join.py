@@ -45,16 +45,16 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming events enriched with the static customer dimension,
     rolled up per market segment; exact-cents value sum keeps the
     result order-independent across micro-batch schedules."""
-    stream, stage = staged_events_stream(spark, sf_dir)
-    dim = F.broadcast(
-        load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    )
-    agg = (
-        stream.join(dim, stream.user_id == dim.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_events"),
-            fixed_sum(F.col("value"), 2, 2).alias("total_value"),
+    with staged_events_stream(spark, sf_dir) as stream:
+        dim = F.broadcast(
+            load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
         )
-    )
-    return drain_to_memory(spark, agg, stage, "complete")
+        agg = (
+            stream.join(dim, stream.user_id == dim.c_custkey)
+            .groupBy("c_mktsegment")
+            .agg(
+                F.count("*").alias("n_events"),
+                fixed_sum(F.col("value"), 2, 2).alias("total_value"),
+            )
+        )
+        return drain_to_memory(spark, agg, "complete")

@@ -34,16 +34,16 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream(events) -> watermark -> 1-hour window x event_type
     count, drained availableNow; then top-3 per window by count with a
     deterministic event_type tie-break."""
-    stream, stage = staged_events_stream(spark, sf_dir)
-    stream = stream.withWatermark("ts", "1 hour")
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("win.start").alias("window_start"), "event_type", "n_events"
+    with staged_events_stream(spark, sf_dir) as stream:
+        stream = stream.withWatermark("ts", "1 hour")
+        agg = (
+            stream.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
+            .agg(F.count("*").alias("n_events"))
+            .select(
+                F.col("win.start").alias("window_start"), "event_type", "n_events"
+            )
         )
-    )
-    snap = drain_to_memory(spark, agg, stage, "complete")
+        snap = drain_to_memory(spark, agg, "complete")
     w = Window.partitionBy("window_start").orderBy(
         F.desc("n_events"), F.col("event_type")
     )

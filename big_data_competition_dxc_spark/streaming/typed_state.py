@@ -92,15 +92,15 @@ def typed_state_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture means one update per user == the batch aggregate."""
     from .rollup_stream import drain_to_memory, staged_events_stream
 
-    stream, stage = staged_events_stream(spark, sf_dir)
-    stream = stream.select("user_id", "value")
-    updated = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserTotalsProcessor(),
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        outputMode="update",
-        timeMode="none",
-    )
-    return drain_to_memory(spark, updated, stage, "update")
+    with staged_events_stream(spark, sf_dir) as stream:
+        stream = stream.select("user_id", "value")
+        updated = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=UserTotalsProcessor(),
+            outputStructType="user_id bigint, n_events bigint, total_value double",
+            outputMode="update",
+            timeMode="none",
+        )
+        return drain_to_memory(spark, updated, "update")
 
 
 if TYPED_STATE_AVAILABLE:

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import sql_round
+from ..plans.memos import local
 from ..plans.registry import query
 from ..sources import load
 
@@ -254,7 +255,12 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w", (F.col("freq") * F.length("w")).alias("weighted"), F.lit(0).alias("src")
         )
     )
-    after = toks.select("w", F.col("freq").alias("weighted"), F.lit(1).alias("src"))
+    # the loop's tokens rest on checkpoint blocks, which clear_all()
+    # releases: their per-word totals (one row per word type, the same
+    # integer sums) are held as a local frame
+    after = local(
+        spark, toks.groupBy("w").agg(F.sum("freq").alias("weighted"))
+    ).withColumn("src", F.lit(1))
     u = before.unionByName(after)
     return u.agg(
         F.countDistinct("w").alias("n_word_types"),

@@ -12,13 +12,20 @@
    Each oracle query is then asked a second time: the answer must hash
    the same, and it must be a warm hit of the registry's answer memo
    (``plans.memos``) unless the query is declared ``writes=True``, whose
-   body runs on every call.
+   body runs on every call. The second call of a ``writes=True`` query
+   must leave the context's listener bus with as many listeners as its
+   first call left (a stream whose session clone's bus stays behind
+   would show up here).
 
 3. leak check: after the query loop, ``plans.memos.clear_all()`` must
    leave no persisted RDD in the session (a query that pins blocks
-   outside the memo store would show up here), and the session's
-   catalog must list no table or view (a query that leaves a temp view
-   or a scratch table behind would show up here).
+   outside the memo store would show up here), the session's catalog
+   must list no table or view (a query that leaves a temp view or a
+   scratch table behind would show up here), and the temp dir must
+   hold no entry named with ``session.SCRATCH_PREFIX`` that was not
+   there before the sweep (a scratch dir a query did not remove would
+   show up here). The final listener
+   count is printed.
 
 The last line gives the number of generated classes Janino compiled
 over the t2 sweep, the figure that sizes ``session.CODEGEN_CACHE_ENTRIES``.
@@ -38,6 +45,7 @@ import hashlib
 import math
 import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -59,6 +67,10 @@ def hash_result(cols, rows) -> str:
     return hashlib.md5("\n".join(lines).encode()).hexdigest()
 
 
+def _scratch_entries(prefix: str) -> list[str]:
+    return [p for p in os.listdir(tempfile.gettempdir()) if p.startswith(prefix)]
+
+
 def main() -> int:
     sys.path.insert(0, os.getcwd())
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
@@ -67,6 +79,7 @@ def main() -> int:
     from big_data_competition_dxc_spark.plans import QUERIES
     from big_data_competition_dxc_spark.plans.memos import clear_all, consume_warm_hits
     from big_data_competition_dxc_spark.session import (
+        SCRATCH_PREFIX,
         class_sharing_state,
         compiled_classes,
         get_spark,
@@ -77,6 +90,8 @@ def main() -> int:
     spark = get_spark("driver-sim")
     spark.sparkContext.setLogLevel("ERROR")
     print(f"class sharing: {class_sharing_state(spark)}")
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    scratch0 = set(_scratch_entries(SCRATCH_PREFIX))
 
     df = mod.entry(spark)
     n = len(df.collect())
@@ -131,6 +146,7 @@ def main() -> int:
             f"{'MATCH' if ok else 'FAIL '} {name}: spark={len(srows)} duck={len(drows)} ({dt:.1f}s)"
         )
         consume_warm_hits()
+        listeners = bus.listeners().size()
         again = fn(spark, sf)
         hit = consume_warm_hits() == 1
         same = hash_result(again.columns, [tuple(r) for r in again.collect()]) == hash_result(
@@ -142,6 +158,10 @@ def main() -> int:
         if not same or not (hit or writes):
             failures.append(name)
             print(f"FAIL  {name}: second answer {'differs' if not same else 'was not a warm hit'}")
+        if writes and bus.listeners().size() != listeners:
+            failures.append(name)
+            print(f"FAIL  {name}: listeners {listeners} after the first call, "
+                  f"{bus.listeners().size()} after the second")
     clear_all()
     leaked = len(spark.sparkContext._jsc.getPersistentRDDs())
     if leaked:
@@ -149,11 +169,15 @@ def main() -> int:
     tables = [t.name for t in spark.catalog.listTables()]
     if tables:
         failures.append(f"tables or views left in the catalog: {tables}")
+    scratch = sorted(set(_scratch_entries(SCRATCH_PREFIX)) - scratch0)
+    if scratch:
+        failures.append(f"scratch entries left in the temp dir: {scratch}")
     if failures:
         print(f"\n{len(failures)} FAILURES: {failures}")
     else:
         print("\nall good")
     print(f"second answers: {warm} warm hits, {rerun} writing queries run again")
+    print(f"listeners: {bus.listeners().size()} on the context's listener bus")
     print(f"codegen: {compiled_classes(spark) - compiled0} classes compiled over the sweep")
     return 1 if failures else 0
 

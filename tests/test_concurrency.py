@@ -7,10 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from big_data_competition_dxc_spark.ml.concurrency import (
-    MAX_CONCURRENT_FITS,
-    run_concurrently,
-)
+from big_data_competition_dxc_spark.ml.concurrency import run_concurrently
 from big_data_competition_dxc_spark.session import scoped
 
 
@@ -42,12 +39,6 @@ def test_exceptions_propagate(spark):
 
     with pytest.raises(ValueError, match="fit failed"):
         run_concurrently([lambda: 1, boom, lambda: 2], spark)
-
-
-def test_concurrency_cap_is_guides_number():
-    # Guide §2.6: "2-3 jobs in flight is plenty"; the 218s RF outlier
-    # at 5-way under throttle is why this must not silently grow.
-    assert MAX_CONCURRENT_FITS == 3
 
 
 def test_spark_actions_from_threads_are_correct(spark):
@@ -89,9 +80,8 @@ def test_scoped_nested_scope_merges_its_confs(spark):
 
 
 def test_run_concurrently_max_workers_override(spark):
-    """A call site may widen the cap past MAX_CONCURRENT_FITS (r15: the
-    4-branch cluster ensemble runs one wave at cap 4); the default cap
-    still applies when the override is absent."""
+    """Every thunk gets its own thread (the 4-branch cluster ensemble
+    runs in one wave, not two)."""
     import threading
     import time
 
@@ -105,7 +95,7 @@ def test_run_concurrently_max_workers_override(spark):
         return t
 
     barrier = threading.Barrier(4)
-    ids = run_concurrently([make(barrier) for _ in range(4)], spark, max_workers=4)
+    ids = run_concurrently([make(barrier) for _ in range(4)], spark)
     assert len(set(ids)) == 4
 
 

@@ -145,43 +145,40 @@ def test_statestore_metadata_describes_the_operator(spark, tmp_path):
         staged_events_stream,
     )
 
-    stream, stage = staged_events_stream(spark, SF_TEST_DIR)
-    agg = stream.groupBy("event_type").agg(
-        F.count("*").alias("n"), F.sum(to_units(F.col("value"), 2)).alias("c")
-    )
-    ckpt = str(tmp_path / "ck")
-    sink = f"sink_{uuid.uuid4().hex[:8]}"
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with staged_events_stream(spark, SF_TEST_DIR) as stream:
+        agg = stream.groupBy("event_type").agg(
+            F.count("*").alias("n"), F.sum(to_units(F.col("value"), 2)).alias("c")
         )
-        q.awaitTermination()
-        assert stream.sparkSession.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
-        assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) in (None, "false")
-        meta = spark.read.format("state-metadata").load(ckpt).collect()
-        assert len(meta) == 1
-        m = meta[0]
-        assert m["operatorName"] == "stateStoreSave"
-        assert m["minBatchId"] == 0 and m["maxBatchId"] >= 0
-        assert m["numPartitions"] == int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        state = spark.read.format("statestore").load(ckpt)
-        n_keys = load(spark, SF_TEST_DIR, "events").select(
-            "event_type"
-        ).distinct().count()
-        assert state.count() == n_keys
-        assert state.select(F.max("partition_id")).first()[0] < m["numPartitions"]
-    finally:
-        import shutil
-
-        stream.sparkSession.catalog.dropTempView(sink)
-        shutil.rmtree(stage, ignore_errors=True)
+        ckpt = str(tmp_path / "ck")
+        sink = f"sink_{uuid.uuid4().hex[:8]}"
+        try:
+            q = (
+                agg.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            assert stream.sparkSession.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+            assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) in (None, "false")
+            meta = spark.read.format("state-metadata").load(ckpt).collect()
+            assert len(meta) == 1
+            m = meta[0]
+            assert m["operatorName"] == "stateStoreSave"
+            assert m["minBatchId"] == 0 and m["maxBatchId"] >= 0
+            assert m["numPartitions"] == int(
+                spark.conf.get("spark.sql.shuffle.partitions")
+            )
+            state = spark.read.format("statestore").load(ckpt)
+            n_keys = load(spark, SF_TEST_DIR, "events").select(
+                "event_type"
+            ).distinct().count()
+            assert state.count() == n_keys
+            assert state.select(F.max("partition_id")).first()[0] < m["numPartitions"]
+        finally:
+            stream.sparkSession.catalog.dropTempView(sink)
 
 
 def test_sql_scripting_clip_matches_dataframe_loop(spark):
@@ -320,33 +317,28 @@ def test_streaming_checkpoint_restart_exactly_once(spark, tmp_path):
         staged_events_stream,
     )
 
-    stream, stage = staged_events_stream(spark, SF_TEST_DIR)
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    out = stream.select("event_id", "user_id", "event_type")
+    with staged_events_stream(spark, SF_TEST_DIR) as stream:
+        sink = str(tmp_path / "sink")
+        ckpt = str(tmp_path / "ckpt")
+        out = stream.select("event_id", "user_id", "event_type")
 
-    def run_once():
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        def run_once():
+            q = (
+                out.writeStream.format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
-    try:
         run_once()
         n_first = spark.read.parquet(sink).count()
         assert n_first > 0
         run_once()  # same checkpoint, no new files -> no new rows
         n_second = spark.read.parquet(sink).count()
         assert n_second == n_first
-    finally:
-        import shutil
-
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 def test_incremental_merge_overlaps_groups(spark):

@@ -13,7 +13,9 @@ races show as WRONG or ERROR calls.
 from __future__ import annotations
 
 import ast
+import os
 import re
+import tempfile
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
@@ -21,7 +23,9 @@ import duckdb
 import pyarrow.parquet as pq
 import pytest
 
-from big_data_competition_dxc_spark import plans
+from big_data_competition_dxc_spark import plans, session
+from big_data_competition_dxc_spark.plans import memos
+from big_data_competition_dxc_spark.session import SCRATCH_PREFIX
 from big_data_competition_dxc_spark.sources import TABLES
 
 from conftest import SF_TEST_DIR
@@ -167,31 +171,85 @@ def test_concurrent_clients_share_one_answer_per_input(spark, half_input, monkey
 
 
 def test_streaming_child_sessions_do_not_grow_the_listener_bus(spark, duck):
-    """A child session whose streaming manager is touched adds a
-    listener to the context's bus for good, so the child a streaming
-    query runs on must be reused, never made per call: after the first
-    call, which makes the child, the bus must not grow. The query is a
-    stateless stream; on PySpark 4.1 every run of a stateful stream
-    leaves one more listener behind on any session, the shared one
-    included."""
-    entry = plans.QUERIES["stream_pit_enrich"]
+    """A streaming query runs on a clone of its session, and a stateful
+    one makes the clone's streaming manager, which adds a listener bus
+    to the context's listener bus. ``rollup_stream.run_stream`` removes
+    that bus when the query stops, so after the first call, which may
+    make the request's cached child session (``session.scoped``), the
+    bus must not grow: neither for the stateless ``stream_pit_enrich``,
+    whose clone gets a manager only when the bus is looked up, nor for
+    the stateful ``streaming_daily_rollup``, which added one bus per
+    run before."""
     bus = spark.sparkContext._jsc.sc().listenerBus()
-    rel = duck.execute(entry.oracle)
-    expected = _rowset([d[0] for d in rel.description], rel.fetchall())
-    counts = []
-    for _ in range(3):
-        df = entry.fn(spark, SF_TEST_DIR)
-        assert _rowset(df.columns, [tuple(r) for r in df.collect()]) == expected
-        counts.append(bus.listeners().size())
-    assert counts[1:] == counts[:1] * 2, counts
+    for name in ("stream_pit_enrich", "streaming_daily_rollup"):
+        entry = plans.QUERIES[name]
+        rel = duck.execute(entry.oracle)
+        expected = _rowset([d[0] for d in rel.description], rel.fetchall())
+        counts = []
+        for _ in range(3):
+            df = entry.fn(spark, SF_TEST_DIR)
+            assert _rowset(df.columns, [tuple(r) for r in df.collect()]) == expected
+            counts.append(bus.listeners().size())
+        assert counts[1:] == counts[:1] * 2, (name, counts)
+
+
+WRITERS = sorted(name for name, entry in plans.QUERIES.items() if entry.writes)
+
+
+class _Injected(Exception):
+    """Raised in place of a builder's local frame."""
+
+
+def _scratch_state(spark) -> tuple:
+    """What a request may hold while it runs and must release when it
+    returns or raises: the package's scratch dirs in the temp dir, the
+    catalog's tables and each session's views (the root's and those of
+    every child ``session.scoped`` made), and running streams (counted
+    in the state every session shares, so no session's streaming
+    manager is made just to look)."""
+    sessions = [spark, *session._CHILDREN.values()]
+    return (
+        sorted(p for p in os.listdir(tempfile.gettempdir()) if p.startswith(SCRATCH_PREFIX)),
+        {t.name for s in sessions for t in s.catalog.listTables()},
+        spark._jsparkSession.sharedState().activeStreamingQueries().size(),
+    )
+
+
+@pytest.mark.parametrize("name", WRITERS)
+def test_writing_query_releases_its_scratch_state(spark, monkeypatch, name):
+    """A writing query leaves no scratch dir, table, view or running
+    stream behind, whether it returns or raises, and its second run
+    leaves the context's listener bus as its first did. The raise is
+    injected where the builder hands back its result: every
+    ``plans.memos.local`` call goes through ``_local_or_none``, which
+    then raises; a query that never calls it is checked on return
+    only."""
+    build = plans.QUERIES[name].build
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    before = _scratch_state(spark)
+    build(spark, SF_TEST_DIR)
+    assert _scratch_state(spark) == before
+    listeners = bus.listeners().size()
+
+    def fail(*_):
+        raise _Injected
+
+    monkeypatch.setattr(memos, "_local_or_none", fail)
+    try:
+        build(spark, SF_TEST_DIR)
+    except _Injected:
+        pass
+    assert _scratch_state(spark) == before
+    assert bus.listeners().size() == listeners
 
 
 PACKAGE = Path(plans.__file__).resolve().parents[1]
 #: Ways a request changes state other clients share. Only the helper
-#: that makes child sessions (session.scoped) may set a conf; a memory
-#: sink's own ``sink_<uuid>`` view may be dropped; a UDTF or a Python
-#: data source is registered only on a session the same file assigns
-#: from ``scoped`` or ``state_scope`` (which calls it). The batch Python
+#: that makes child sessions (session.scoped) may set a conf; the one
+#: way to run a stream (rollup_stream.run_stream) drops a memory sink's
+#: view; a UDTF or a Python data source is registered only on a
+#: session the same file assigns from ``scoped`` or ``state_scope``
+#: (which calls it). The batch Python
 #: source and sink stay on the caller's session, registered once per
 #: session by ``session.python_source``: registration and the writer
 #: consult the thread's active session, not a child (see there).
@@ -201,6 +259,7 @@ _SHARED_STATE = re.compile(
 _ALLOWED = {
     ("session.py", "child.conf.set(k, v)"),
     ("session.py", "spark.dataSource.register(source)"),
+    ("rollup_stream.py", "jq.sparkSession().catalog().dropTempView(q.name)"),
 }
 
 
@@ -213,7 +272,7 @@ def test_only_the_scope_helper_touches_session_state():
             m = _SHARED_STATE.search(code)
             if not m or code.startswith("#"):
                 continue
-            if (path.name, code) in _ALLOWED or "dropTempView(sink)" in code:
+            if (path.name, code) in _ALLOWED:
                 continue
             if m[2] and re.search(rf"\b{m[2]} = (scoped|state_scope)\(", text):
                 continue

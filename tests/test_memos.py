@@ -341,9 +341,13 @@ def test_built_frames_survive_clear_all(spark, name):
     """Every frame a builder returns owns no session state: it reads the
     same rows after ``clear_all()`` released every memo, cached block
     and checkpoint. A bounded result is a local frame; a lazy one
-    recomputes from its lineage."""
-    df = plans.QUERIES[name].build(spark, SF_TEST_DIR)
-    before = _rows(df)
+    recomputes from its lineage. The frame checked is a second build
+    that first runs after the release: re-collecting a frame that has
+    already run reuses its final plan's shuffle output, which would
+    hide a released checkpoint below a shuffle."""
+    build = plans.QUERIES[name].build
+    before = _rows(build(spark, SF_TEST_DIR))
+    df = build(spark, SF_TEST_DIR)
     memos.clear_all()
     assert _rows(df) == before
 

@@ -255,20 +255,17 @@ def test_bucketed_join_has_no_exchange(spark):
             "spark.sql.adaptive.autoBroadcastJoinThreshold",
         )
     }
-    cleanup = None
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        joined, cleanup = bucketed_join_frames(spark, SF_TEST_DIR)
-        plan = _formatted(joined)  # physical planning happens here
+        with bucketed_join_frames(spark, SF_TEST_DIR) as joined:
+            plan = _formatted(joined)  # physical planning happens here
     finally:
         for k, v in old.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-        if cleanup is not None:
-            cleanup()
     assert "SortMergeJoin" in plan
     assert "Exchange" not in plan  # co-located buckets: no shuffle at all
     assert "Bucketed: true" in plan
@@ -495,23 +492,20 @@ def test_dpp_prunes_partitions(spark):
 
     from big_data_competition_dxc_spark.operators.dpp import dpp_join_frames
 
-    joined, cleanup = dpp_join_frames(spark, SF_TEST_DIR)
-    try:
+    with dpp_join_frames(spark, SF_TEST_DIR) as joined:
         phys = joined._jdf.queryExecution().executedPlan().toString()
-        m = _re.search(r"PartitionFilters: \[[^\]]*\]", phys)
-        assert m, "fact scan lost its partitioned layout"
-        pf = m.group(0)
-        assert "dynamicpruningexpression" in pf
-        # nothing but the null guard and the runtime subquery
-        inner = pf.split("[", 1)[1].rstrip("]")
-        static = [
-            p
-            for p in inner.split(", ")
-            if "dynamicpruning" not in p and "isnotnull" not in p
-        ]
-        assert not static, f"static ds predicates leaked into the scan: {static}"
-    finally:
-        cleanup()
+    m = _re.search(r"PartitionFilters: \[[^\]]*\]", phys)
+    assert m, "fact scan lost its partitioned layout"
+    pf = m.group(0)
+    assert "dynamicpruningexpression" in pf
+    # nothing but the null guard and the runtime subquery
+    inner = pf.split("[", 1)[1].rstrip("]")
+    static = [
+        p
+        for p in inner.split(", ")
+        if "dynamicpruning" not in p and "isnotnull" not in p
+    ]
+    assert not static, f"static ds predicates leaked into the scan: {static}"
 
 
 def test_bucket_pruning_selects_buckets(spark):
@@ -525,16 +519,13 @@ def test_bucket_pruning_selects_buckets(spark):
         bucket_pruned_scan_frames,
     )
 
-    joined, cleanup = bucket_pruned_scan_frames(spark, SF_TEST_DIR)
-    try:
+    with bucket_pruned_scan_frames(spark, SF_TEST_DIR) as joined:
         plan = _formatted(joined)
-        m = _re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-        assert m, "scan lost its bucketed layout (no SelectedBucketsCount)"
-        selected, total = int(m.group(1)), int(m.group(2))
-        assert total == N_BUCKETS
-        assert selected < total, f"no pruning: {selected}/{total}"
-    finally:
-        cleanup()
+    m = _re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
+    assert m, "scan lost its bucketed layout (no SelectedBucketsCount)"
+    selected, total = int(m.group(1)), int(m.group(2))
+    assert total == N_BUCKETS
+    assert selected < total, f"no pruning: {selected}/{total}"
 
 
 def test_stream_dedup_probe_has_no_corpus_exchange(spark):
