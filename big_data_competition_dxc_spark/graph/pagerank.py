@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
-from ..plans.memos import local
+from ..plans.memos import held, local
 from ..plans.registry import query
 from ..sources import load
 
@@ -119,56 +119,53 @@ def pagerank_cosupply_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.l_suppkey").alias("src"), F.col("b.l_suppkey").alias("dst"))
         .distinct()
-        .cache()  # every iteration rescans the edge list (S8)
     )
-    # Per-node frames are |suppliers|-sized — broadcast them explicitly
-    # so NO iteration ever shuffles or sorts the edge list: the r13 plan
-    # sort-merge-joined edges⨝ranks each iteration (an Exchange + Sort
-    # of the full edge list per pass, 11 SMJs total at sf0.1); with the
-    # rank vector carrying its out-degree and broadcast, each iteration
-    # is one broadcast hash join over the cached edges plus the
-    # unavoidable partial-aggregated groupBy(dst) exchange (guide §2.4,
-    # §3.1). Integer arithmetic is unchanged — BIGINT sums are
-    # order-independent, so the ranks are bit-identical.
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    nodes = deg.select(F.col("src").alias("node"))  # same set: every node has outdeg >= 1
-    n_nodes = nodes.count()  # tiny scalar: pins the exact base constant
-    base = SCALE // n_nodes
-    teleport = (15 * base) // DAMP_DEN
+    # every iteration rescans the edge list (S8)
+    with held(edges.cache()):
+        # Per-node frames are |suppliers|-sized — broadcast them explicitly
+        # so NO iteration ever shuffles or sorts the edge list: the r13 plan
+        # sort-merge-joined edges⨝ranks each iteration (an Exchange + Sort
+        # of the full edge list per pass, 11 SMJs total at sf0.1); with the
+        # rank vector carrying its out-degree and broadcast, each iteration
+        # is one broadcast hash join over the cached edges plus the
+        # unavoidable partial-aggregated groupBy(dst) exchange (guide §2.4,
+        # §3.1). Integer arithmetic is unchanged — BIGINT sums are
+        # order-independent, so the ranks are bit-identical.
+        deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+        nodes = deg.select(F.col("src").alias("node"))  # same set: every node has outdeg >= 1
+        n_nodes = nodes.count()  # tiny scalar: pins the exact base constant
+        base = SCALE // n_nodes
+        teleport = (15 * base) // DAMP_DEN
 
-    ranks = nodes.withColumn("r", F.lit(base).cast("bigint"))
-    for _ in range(N_ITER):
-        rd = ranks.join(F.broadcast(deg), ranks.node == deg.src).select(
-            "node", "r", "outdeg"
-        )
-        contrib = (
-            edges.join(F.broadcast(rd), edges.src == rd.node)
-            .groupBy("dst")
-            .agg(F.sum(F.expr("r div outdeg")).alias("s"))
-        )
-        ranks = nodes.join(
-            F.broadcast(contrib), nodes.node == contrib.dst, "left"
-        ).select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.expr(f"({DAMP_NUM} * coalesce(s, CAST(0 AS BIGINT))) div {DAMP_DEN}")
+        ranks = nodes.withColumn("r", F.lit(base).cast("bigint"))
+        for _ in range(N_ITER):
+            rd = ranks.join(F.broadcast(deg), ranks.node == deg.src).select(
+                "node", "r", "outdeg"
             )
-            .cast("bigint")
-            .alias("r"),
-        )
+            contrib = (
+                edges.join(F.broadcast(rd), edges.src == rd.node)
+                .groupBy("dst")
+                .agg(F.sum(F.expr("r div outdeg")).alias("s"))
+            )
+            ranks = nodes.join(
+                F.broadcast(contrib), nodes.node == contrib.dst, "left"
+            ).select(
+                "node",
+                (
+                    F.lit(teleport)
+                    + F.expr(f"({DAMP_NUM} * coalesce(s, CAST(0 AS BIGINT))) div {DAMP_DEN}")
+                )
+                .cast("bigint")
+                .alias("r"),
+            )
 
-    # hold the (TOP_N-row) result as a local frame so the edge cache can
-    # release before returning instead of pinning for the session
-    out = local(
-        spark,
-        ranks.orderBy(F.col("r").desc(), F.col("node"))
-        .limit(TOP_N)
-        .select(
-            F.col("node").alias("s_suppkey"),
-            F.col("r").alias("rank_scaled"),
-            round_to(F.col("r") / F.lit(float(SCALE)), 6).alias("rank"),
-        ),
-    )
-    edges.unpersist()
-    return out
+        return local(
+            spark,
+            ranks.orderBy(F.col("r").desc(), F.col("node"))
+            .limit(TOP_N)
+            .select(
+                F.col("node").alias("s_suppkey"),
+                F.col("r").alias("rank_scaled"),
+                round_to(F.col("r") / F.lit(float(SCALE)), 6).alias("rank"),
+            ),
+        )

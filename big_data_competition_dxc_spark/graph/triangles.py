@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.memos import held
 from ..plans.registry import query
 from ..sources import load
 from .pagerank import _PAIRS_SQL
@@ -218,7 +219,6 @@ def _dense_counts(
     kernel (<=32 MiB at the gate), just held as JVM rows instead of a
     numpy array.
     """
-    und = und.persist()
     idx = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -227,7 +227,6 @@ def _dense_counts(
             "node",
             (F.row_number().over(Window.orderBy("node")) - 1).alias("i"),
         )
-        .persist()
     )
     edges_idx = (
         und.join(
@@ -239,9 +238,8 @@ def _dense_counts(
             "v",
         )
         .select("iu", "iv")
-        .persist()
     )
-    try:
+    with held(und.persist(), idx.persist(), edges_idx.persist()):
         n_nodes = idx.count()
         nw = (n_nodes + 63) // 64
 
@@ -269,47 +267,42 @@ def _dense_counts(
                     "wi -> coalesce(m[wi], CAST(0 AS BIGINT)))"
                 ).alias("words"),
             )
-            .persist()
         )
-        stat = (
-            rows.select(
-                F.expr(
-                    "aggregate(words, CAST(0 AS BIGINT), (acc, x) -> acc + bit_count(x))"
-                ).alias("d")
+        with held(rows.persist()):
+            stat = (
+                rows.select(
+                    F.expr(
+                        "aggregate(words, CAST(0 AS BIGINT), (acc, x) -> acc + bit_count(x))"
+                    ).alias("d")
+                )
+                .agg(
+                    F.sum("d").alias("s2e"),
+                    F.sum(F.expr("(d * (d - 1)) div 2")).alias("wedges"),
+                )
+                .first()
             )
-            .agg(
-                F.sum("d").alias("s2e"),
-                F.sum(F.expr("(d * (d - 1)) div 2")).alias("wedges"),
+            n_edges = int(stat["s2e"] or 0) // 2
+            wedges = int(stat["wedges"] or 0)
+            total = (
+                edges_idx.join(
+                    F.broadcast(rows.select("iu", F.col("words").alias("wu"))), "iu"
+                )
+                .join(
+                    F.broadcast(
+                        rows.select(F.col("iu").alias("iv"), F.col("words").alias("wv"))
+                    ),
+                    "iv",
+                )
+                .select(
+                    F.expr(
+                        "aggregate(zip_with(wu, wv, (x, y) -> bit_count(x & y)), "
+                        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+                    ).alias("c")
+                )
+                .agg(F.sum("c").alias("s"))
+                .collect()[0]["s"]
+                or 0
             )
-            .first()
-        )
-        n_edges = int(stat["s2e"] or 0) // 2
-        wedges = int(stat["wedges"] or 0)
-        total = (
-            edges_idx.join(
-                F.broadcast(rows.select("iu", F.col("words").alias("wu"))), "iu"
-            )
-            .join(
-                F.broadcast(
-                    rows.select(F.col("iu").alias("iv"), F.col("words").alias("wv"))
-                ),
-                "iv",
-            )
-            .select(
-                F.expr(
-                    "aggregate(zip_with(wu, wv, (x, y) -> bit_count(x & y)), "
-                    "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-                ).alias("c")
-            )
-            .agg(F.sum("c").alias("s"))
-            .collect()[0]["s"]
-            or 0
-        )
-        rows.unpersist()
-    finally:
-        edges_idx.unpersist()
-        idx.unpersist()
-        und.unpersist()
     return n_nodes, n_edges, int(total) // 3, wedges
 
 
@@ -449,12 +442,9 @@ def triangle_count_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The full projection feeds both the n_edges_full count and
         # (through the sample filter) the kernel — cache it so the
         # expensive pair-join + distinct materializes once.
-        und0 = und0.persist()
-        try:
+        with held(und0.persist()):
             n_full = und0.count()
             _, n_sampled, tri, _ = _dense_counts(spark, und)
-        finally:
-            und0.unpersist()
         return spark.createDataFrame(
             [(n_full, n_sampled, tri, tri * EST_SCALE)],
             schema=(

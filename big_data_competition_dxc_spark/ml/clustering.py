@@ -21,16 +21,15 @@ shuffle beyond each GBDT's own treeAggregate.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.ml.clustering import KMeans
 from pyspark.ml.feature import VectorAssembler
 from pyspark.ml.functions import array_to_vector
 from pyspark.ml.regression import GBTRegressor
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to
+from ..plans.memos import held, local
 from ..plans.registry import query
 from .concurrency import run_concurrently
 from ..sources import load
@@ -57,37 +56,36 @@ def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(F.col("embedding"), lambda x: x.cast("double"))
         ).alias("features"),
     )
-    emb = emb.cache()
-    model = fit_kmeans(emb)
-    cost = float(model.summary.trainingCost)
-    assigned = model.transform(emb)
-    out = (
-        assigned.groupBy("prediction")
-        .agg(
-            F.count("*").alias("n_vecs"),
-            round_to(F.avg("label"), 4).alias("avg_label"),
+    with held(emb.cache()):
+        model = fit_kmeans(emb)
+        cost = float(model.summary.trainingCost)
+        assigned = model.transform(emb)
+        # audited determinism scalar (r10): SSE in integer cents plus the
+        # occupancy histogram folded in (cluster ids are permutation-free
+        # under a fixed seed, but the audit is id-order-independent anyway:
+        # it sums per-cluster contributions). Any seed/init/convergence
+        # regression changes it.
+        # floor(x*100+0.5): the same half-up form as the sse_total column,
+        # so audit == round(sse_total*100) + sum(n_vecs) exactly
+        audit = F.floor(F.lit(cost) * 100 + 0.5) + F.sum("n_vecs").over(
+            Window.partitionBy()
         )
-        .withColumn("sse_total", round_to(F.lit(cost), 2))
-        .orderBy("prediction")
-        .select(
-            F.col("prediction").alias("cluster_id"), "n_vecs", "avg_label", "sse_total"
+        return local(
+            spark,
+            assigned.groupBy("prediction")
+            .agg(
+                F.count("*").alias("n_vecs"),
+                round_to(F.avg("label"), 4).alias("avg_label"),
+            )
+            .select(
+                F.col("prediction").alias("cluster_id"),
+                "n_vecs",
+                "avg_label",
+                round_to(F.lit(cost), 2).alias("sse_total"),
+                audit.alias("audit_sse_cents"),
+            )
+            .orderBy("cluster_id"),
         )
-    )
-    rows = out.collect()  # materialize before unpersist
-    emb.unpersist()
-    # audited determinism scalar (r10): SSE in integer cents plus the
-    # occupancy histogram folded in (cluster ids are permutation-free
-    # under a fixed seed, but the audit is id-order-independent anyway:
-    # it sums per-cluster contributions). Any seed/init/convergence
-    # regression changes it.
-    # floor(x*100+0.5): the same half-up form as the sse_total column,
-    # so audit == round(sse_total*100) + sum(n_vecs) exactly
-    audit = int(math.floor(cost * 100 + 0.5)) + sum(int(r["n_vecs"]) for r in rows)
-    return spark.createDataFrame(
-        [(*r, audit) for r in rows],
-        "cluster_id int, n_vecs bigint, avg_label double, sse_total double, "
-        "audit_sse_cents bigint",
-    )
 
 
 @query("ml_cluster_ensemble", tags=("ML10", "ML7", "ML6", "U1", "S8"))
@@ -126,53 +124,54 @@ def ml_cluster_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rollup+window+assembler lineage through the cache lookup. The
     # checkpointed blocks hold the same rows in the same partitioning,
     # so the seeded fits are bit-identical (A/B row-equality pinned).
-    data = assembled.join(F.broadcast(clusters), "user_id").localCheckpoint(eager=True)
-    train = data.filter(F.col("ds") < "2024-01-22")
-    test = data.filter(F.col("ds") >= "2024-01-22")
+    data = assembled.join(F.broadcast(clusters), "user_id")
+    with held(data.localCheckpoint(eager=True)) as data:
+        train = data.filter(F.col("ds") < "2024-01-22")
+        test = data.filter(F.col("ds") >= "2024-01-22")
 
-    # One thunk per cluster, submitted concurrently (guide §2.6 via
-    # ml/concurrency.py): the four seeded GBT fits are independent and
-    # each is a chain of tiny boosting stages — serial, they leave the
-    # pool idle; overlapped, they back-fill each other. Assembled in
-    # cid order, so the unioned output is row-identical to the serial
-    # loop (tests/test_ml.py pins the audited scalar across runs).
-    def _branch(cid: int) -> DataFrame | None:
-        tr = train.filter(F.col("cluster_id") == cid)
-        te = test.filter(F.col("cluster_id") == cid)
-        if tr.isEmpty() or te.isEmpty():
-            return None
-        gbt = GBTRegressor(
-            featuresCol="features", labelCol="label_next", maxIter=10, maxDepth=5,
-            seed=SEED,
-        )
-        pred = gbt.fit(tr).transform(te)
-        return pred.groupBy("cluster_id").agg(
-            F.count("*").alias("n_test"),
-            round_to(
-                F.avg(F.pow(F.col("label_next") - F.col("prediction"), 2)), 4
-            ).alias("mse_test"),
-        )
+        # One thunk per cluster, submitted concurrently (guide §2.6 via
+        # ml/concurrency.py): the four seeded GBT fits are independent and
+        # each is a chain of tiny boosting stages — serial, they leave the
+        # pool idle; overlapped, they back-fill each other. Assembled in
+        # cid order, so the unioned output is row-identical to the serial
+        # loop (tests/test_ml.py pins the audited scalar across runs).
+        def _branch(cid: int) -> DataFrame | None:
+            tr = train.filter(F.col("cluster_id") == cid)
+            te = test.filter(F.col("cluster_id") == cid)
+            if tr.isEmpty() or te.isEmpty():
+                return None
+            gbt = GBTRegressor(
+                featuresCol="features", labelCol="label_next", maxIter=10, maxDepth=5,
+                seed=SEED,
+            )
+            pred = gbt.fit(tr).transform(te)
+            return pred.groupBy("cluster_id").agg(
+                F.count("*").alias("n_test"),
+                round_to(
+                    F.avg(F.pow(F.col("label_next") - F.col("prediction"), 2)), 4
+                ).alias("mse_test"),
+            )
 
-    per_cluster = [
-        df
-        for df in run_concurrently([lambda c=c: _branch(c) for c in range(K)])
-        if df is not None
-    ]
-    schema = "cluster_id int, n_test bigint, mse_test double"
-    if not per_cluster:  # degenerate split: no cluster has both sides
-        return spark.createDataFrame([], schema + ", audit_n_test_total bigint")
-    out = per_cluster[0]
-    for df in per_cluster[1:]:
-        out = out.unionByName(df)
-    # the evaluation reads the checkpointed blocks directly;
-    # plans.memos.clear_all() releases them afterwards
-    rows = out.orderBy("cluster_id").collect()
-    # audited scalar (r7): the total test-row count across clusters is
-    # seed-stable (seeded KMeans assignment + fixed date split), so
-    # repeating it on every row turns the driver's rows/schema check
-    # into a determinism pin — tests/test_ml.py asserts it is identical
-    # across two runs, and a future seed/split regression changes it.
-    audit_total = sum(r["n_test"] for r in rows)
-    return spark.createDataFrame(
-        [(*r, audit_total) for r in rows], schema + ", audit_n_test_total bigint"
-    )
+        per_cluster = [
+            df
+            for df in run_concurrently([lambda c=c: _branch(c) for c in range(K)])
+            if df is not None
+        ]
+        if not per_cluster:  # degenerate split: no cluster has both sides
+            return spark.createDataFrame(
+                [], "cluster_id int, n_test bigint, mse_test double, audit_n_test_total bigint"
+            )
+        out = per_cluster[0]
+        for df in per_cluster[1:]:
+            out = out.unionByName(df)
+        # audited scalar (r7): the total test-row count across clusters is
+        # seed-stable (seeded KMeans assignment + fixed date split), so
+        # repeating it on every row turns the driver's rows/schema check
+        # into a determinism pin — tests/test_ml.py asserts it is identical
+        # across two runs, and a future seed/split regression changes it.
+        return local(
+            spark,
+            out.withColumn(
+                "audit_n_test_total", F.sum("n_test").over(Window.partitionBy())
+            ).orderBy("cluster_id"),
+        )

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
-from ..plans.memos import local
+from ..plans.memos import held, local
 from ..plans.registry import query
 from .recommend import _RATINGS_SQL, cached_ratings
 
@@ -177,27 +177,26 @@ def itemcf_item_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break — deterministic on every engine). The capped frame is
     materialized once (executor-side) and shared by
     pop, top_items, and both sides of the pair join."""
-    capped = _capped(spark, sf_dir).localCheckpoint(eager=True)
-    pop = capped.groupBy("item_id").agg(F.count("*").alias("n"))
-    top_items = (
-        pop.orderBy(F.col("n").desc(), F.col("item_id"))
-        .limit(N_QUERY_USERS)
-        .select("item_id")
-    )
-    nb = _neighbors(spark, sf_dir, capped=capped, focus_items=top_items).filter(
-        F.col("rn") <= K_NEIGHBORS
-    )
-    # a bounded result: handed back as a local frame, since a lazy one
-    # would rest on the checkpoint blocks that clear_all() releases
-    return local(
-        spark,
-        nb.join(F.broadcast(top_items), nb.i == top_items.item_id).select(
-            F.col("i").alias("item_id"),
-            F.col("j").alias("neighbor_id"),
-            round_to(F.col("sim_u") / F.lit(float(MICRO)), 6).alias("sim"),
-            "rn",
-        ),
-    )
+    capped = _capped(spark, sf_dir)
+    with held(capped.localCheckpoint(eager=True)) as capped:
+        pop = capped.groupBy("item_id").agg(F.count("*").alias("n"))
+        top_items = (
+            pop.orderBy(F.col("n").desc(), F.col("item_id"))
+            .limit(N_QUERY_USERS)
+            .select("item_id")
+        )
+        nb = _neighbors(spark, sf_dir, capped=capped, focus_items=top_items).filter(
+            F.col("rn") <= K_NEIGHBORS
+        )
+        return local(
+            spark,
+            nb.join(F.broadcast(top_items), nb.i == top_items.item_id).select(
+                F.col("i").alias("item_id"),
+                F.col("j").alias("neighbor_id"),
+                round_to(F.col("sim_u") / F.lit(float(MICRO)), 6).alias("sim"),
+                "rn",
+            ),
+        )
 
 
 @query(
@@ -239,34 +238,34 @@ def itemcf_user_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     rated (anti-join). BIGINT micro-unit sums keep the score exact and
     order-independent; ties break on item_id."""
     r = cached_ratings(spark, sf_dir)
-    capped = _capped(spark, sf_dir).localCheckpoint(eager=True)
-    qratings = capped.filter(F.col("user_id") <= N_QUERY_USERS)
-    # neighbor lists are only read for the query users' capped items
-    focus = qratings.select("item_id").distinct()
-    nb = _neighbors(spark, sf_dir, capped=capped, focus_items=focus).filter(
-        F.col("rn") <= K_NEIGHBORS
-    )
-    cand = (
-        qratings.join(nb, qratings.item_id == nb.i)
-        .select("user_id", F.col("j").alias("cand_item"), "sim_u")
-        .join(
-            r.select(F.col("user_id").alias("ru"), F.col("item_id").alias("ri")),
-            (F.col("user_id") == F.col("ru")) & (F.col("cand_item") == F.col("ri")),
-            "left_anti",
+    capped = _capped(spark, sf_dir)
+    with held(capped.localCheckpoint(eager=True)) as capped:
+        qratings = capped.filter(F.col("user_id") <= N_QUERY_USERS)
+        # neighbor lists are only read for the query users' capped items
+        focus = qratings.select("item_id").distinct()
+        nb = _neighbors(spark, sf_dir, capped=capped, focus_items=focus).filter(
+            F.col("rn") <= K_NEIGHBORS
         )
-        .groupBy("user_id", F.col("cand_item").alias("item_id"))
-        .agg(F.sum("sim_u").alias("score_u"))
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("score_u").desc(), F.col("item_id"))
-    # bounded, and over checkpoint blocks: a local frame (see above)
-    return local(
-        spark,
-        cand.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= TOPK_RECS)
-        .select(
-            "user_id",
-            "item_id",
-            round_to(F.col("score_u") / F.lit(float(MICRO)), 6).alias("score"),
-            "rn",
-        ),
-    )
+        cand = (
+            qratings.join(nb, qratings.item_id == nb.i)
+            .select("user_id", F.col("j").alias("cand_item"), "sim_u")
+            .join(
+                r.select(F.col("user_id").alias("ru"), F.col("item_id").alias("ri")),
+                (F.col("user_id") == F.col("ru")) & (F.col("cand_item") == F.col("ri")),
+                "left_anti",
+            )
+            .groupBy("user_id", F.col("cand_item").alias("item_id"))
+            .agg(F.sum("sim_u").alias("score_u"))
+        )
+        w = Window.partitionBy("user_id").orderBy(F.col("score_u").desc(), F.col("item_id"))
+        return local(
+            spark,
+            cand.withColumn("rn", F.row_number().over(w).cast("bigint"))
+            .filter(F.col("rn") <= TOPK_RECS)
+            .select(
+                "user_id",
+                "item_id",
+                round_to(F.col("score_u") / F.lit(float(MICRO)), 6).alias("score"),
+                "rn",
+            ),
+        )

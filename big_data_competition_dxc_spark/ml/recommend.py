@@ -39,7 +39,7 @@ from ..functions.rounding import (
     sql_round,
     to_units,
 )
-from ..plans.memos import memoized
+from ..plans.memos import held, memoized
 from ..plans.registry import query
 from ..sources import load
 
@@ -127,9 +127,19 @@ def ml_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference (fixture-scale runtime; documented deviation)."""
     r = cached_ratings(spark, sf_dir)
     train, test = r.randomSplit([0.6, 0.4], seed=11)
+    return _als_fit_and_score(spark, train, test, r.select("user_id").distinct(), 10)
+
+
+def _als_fit_and_score(
+    spark: SparkSession, train: DataFrame, test: DataFrame, users: DataFrame, max_iter: int
+) -> DataFrame:
+    """The two ALS queries' shared body: fit rank-10 ALS on ``train``,
+    then one summary row of the test MSE and the top-TOPK_RECS hit
+    rate of ``users`` against ``test``. The model's factor frames are
+    held while it scores."""
     als = ALS(
         rank=10,
-        maxIter=10,
+        maxIter=max_iter,
         regParam=0.01,
         userCol="user_id",
         itemCol="item_id",
@@ -138,46 +148,47 @@ def ml_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
         coldStartStrategy="drop",
     )
     model = als.fit(train)
-    mse = RegressionEvaluator(
-        labelCol="rating", predictionCol="prediction", metricName="mse"
-    ).evaluate(model.transform(test))
-
-    users = r.select("user_id").distinct()
-    recs = (
-        model.recommendForUserSubset(users, TOPK_RECS + 20)
-        .select("user_id", F.explode("recommendations").alias("rec"))
-        .select(
-            "user_id",
-            F.col("rec.item_id").alias("item_id"),
-            F.col("rec.rating").alias("score"),
+    with held(model.userFactors, model.itemFactors):
+        mse = RegressionEvaluator(
+            labelCol="rating", predictionCol="prediction", metricName="mse"
+        ).evaluate(model.transform(test))
+        recs = (
+            model.recommendForUserSubset(users, TOPK_RECS + 20)
+            .select("user_id", F.explode("recommendations").alias("rec"))
+            .select(
+                "user_id",
+                F.col("rec.item_id").alias("item_id"),
+                F.col("rec.rating").alias("score"),
+            )
         )
-    )
-    # D:21: never recommend what the user already rated (train side).
-    unseen = recs.join(train.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti")
-    # rank by the model's predicted score (physical row order after the
-    # anti-join shuffle is arbitrary — never rank on it)
-    w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_id"))
-    topk = unseen.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= TOPK_RECS
-    )
-    # D:89-99: hit = recommended item actually "read" in the held-out set.
-    hits = topk.join(test.select("user_id", "item_id"), ["user_id", "item_id"]).count()
-    n_users = users.count()
-    # audited determinism scalar (r8, the ML10/ML12 treatment): the
-    # top-k recommendation scores summed in exact 4-decimal integer
-    # units (to_units accumulates as DECIMAL, so the value is
-    # independent of row/partition order). The driver's rows-only check
-    # previously pinned only "1 row returned"; this column turns it
-    # into a determinism pin — tests/test_ml.py asserts it is identical
-    # across two runs, and any seed/split/ranking regression changes it.
-    units = topk.agg(F.sum(to_units(F.col("score"), 4)).alias("u")).collect()[0]["u"]
+        # D:21: never recommend what the user already rated (train side).
+        unseen = recs.join(
+            train.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti"
+        )
+        # rank by the model's predicted score (physical row order after the
+        # anti-join shuffle is arbitrary — never rank on it)
+        w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_id"))
+        topk = unseen.withColumn("rn", F.row_number().over(w)).filter(
+            F.col("rn") <= TOPK_RECS
+        )
+        # D:89-99: hit = recommended item actually "read" in the held-out set.
+        hits = topk.join(test.select("user_id", "item_id"), ["user_id", "item_id"]).count()
+        n_users = users.count()
+        # audited determinism scalar (r8, the ML10/ML12 treatment): the
+        # top-k recommendation scores summed in exact 4-decimal integer
+        # units (to_units accumulates as DECIMAL, so the value is
+        # independent of row/partition order). The driver's rows-only check
+        # previously pinned only "1 row returned"; this column turns it
+        # into a determinism pin — tests/test_ml.py asserts it is identical
+        # across two runs, and any seed/split/ranking regression changes it.
+        units = topk.agg(F.sum(to_units(F.col("score"), 4)).alias("u")).collect()[0]["u"]
     return spark.createDataFrame(
         [
             (
                 int(n_users),
                 round(float(mse), 4),
                 int(hits),
-                round(hits / float(n_users * TOPK_RECS), 4),
+                round(hits / float(n_users * TOPK_RECS), 4) if n_users else 0.0,
                 int(units or 0),
             )
         ],
@@ -460,54 +471,11 @@ def ml_als_recommend_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         < F.lit(3)
     )
     train = sampled.filter(is_train)
-    test = sampled.filter(~is_train)
-    train = train.cache()
-    als = ALS(
-        rank=10,
-        maxIter=ALS_SAMPLE_ITERS,
-        regParam=0.01,
-        userCol="user_id",
-        itemCol="item_id",
-        ratingCol="rating",
-        seed=11,
-        coldStartStrategy="drop",
-    )
-    model = als.fit(train)
-    mse = RegressionEvaluator(
-        labelCol="rating", predictionCol="prediction", metricName="mse"
-    ).evaluate(model.transform(test))
-
-    users = sampled.select("user_id").distinct()
-    recs = (
-        model.recommendForUserSubset(users, TOPK_RECS + 20)
-        .select("user_id", F.explode("recommendations").alias("rec"))
-        .select(
-            "user_id",
-            F.col("rec.item_id").alias("item_id"),
-            F.col("rec.rating").alias("score"),
+    with held(train.cache()):
+        return _als_fit_and_score(
+            spark,
+            train,
+            sampled.filter(~is_train),
+            sampled.select("user_id").distinct(),
+            ALS_SAMPLE_ITERS,
         )
-    )
-    unseen = recs.join(
-        train.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti"
-    )
-    w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_id"))
-    topk = unseen.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= TOPK_RECS
-    )
-    hits = topk.join(test.select("user_id", "item_id"), ["user_id", "item_id"]).count()
-    n_users = users.count()
-    units = topk.agg(F.sum(to_units(F.col("score"), 4)).alias("u")).collect()[0]["u"]
-    train.unpersist()
-    return spark.createDataFrame(
-        [
-            (
-                int(n_users),
-                round(float(mse), 4),
-                int(hits),
-                round(hits / float(n_users * TOPK_RECS), 4) if n_users else 0.0,
-                int(units or 0),
-            )
-        ],
-        "n_users bigint, mse_test double, n_hits bigint, hit_rate double,"
-        " audit_topk_score_units bigint",
-    )

@@ -18,6 +18,8 @@ whole verify run for no extra coverage — documented deviation).
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.feature import StringIndexer, VectorAssembler, VectorIndexer
 from pyspark.ml.regression import GBTRegressor, LinearRegression, RandomForestRegressor
@@ -25,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to
-from ..plans.memos import memoized
+from ..plans.memos import held, local, memoized
 from ..plans.registry import query
 from ..sources import load
 from .concurrency import run_concurrently
@@ -215,7 +217,7 @@ def ml_random_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
 GBT_MAX_CATEGORIES = 8
 
 
-def _gbt_split(feats: DataFrame, label: str):
+def _gbt_split(feats: DataFrame, label: str, frames: ExitStack):
     """Assembly for the GBT with CATEGORICAL features declared, the
     modern equivalent of the reference's mllib
     ``categoricalFeaturesInfo {(0,4),(1,8)}`` (M:697, M:1031):
@@ -233,7 +235,9 @@ def _gbt_split(feats: DataFrame, label: str):
 
     Indexers fit on the full feature table (dictionary building is
     unsupervised; fitting on train-only would crash on unseen test
-    categories), the model itself only ever sees train rows."""
+    categories), the model itself only ever sees train rows. The
+    assembled rows are checkpointed and held in ``frames``, so both
+    splits read until the caller's stack exits."""
     df = feats.filter(F.col(label).isNotNull())
     cols = list(BATTERY_FEATURES) + ["segment_ix"]
     df = StringIndexer(
@@ -253,7 +257,7 @@ def _gbt_split(feats: DataFrame, label: str):
     # replayed the StringIndexer->assembler->VectorIndexer chain over
     # the features cache otherwise. Same rows, same partitioning ->
     # identical seeded fits (A/B row-equality pinned).
-    assembled = assembled.localCheckpoint(eager=True)
+    assembled = frames.enter_context(held(assembled.localCheckpoint(eager=True)))
     train = assembled.filter(F.col("ds") < "2024-01-22")
     test = assembled.filter(F.col("ds") >= "2024-01-22")
     return train, test
@@ -272,33 +276,38 @@ def ml_gbt_horizon_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The two horizons are independent end-to-end (indexer fits + 20
     # boosting iterations each); overlap them (guide §2.6 via
     # ml/concurrency.py). Same splits, same seeds — identical models.
-    def _horizon(label: str):
-        train, test = _gbt_split(feats, label)
-        return GBTRegressor(labelCol=label, **gbt).fit(train), test
+    # Both horizons' checkpoints are held until the blend has run.
+    with ExitStack() as frames:
 
-    (m1, test1), (m2, _) = run_concurrently(
-        [lambda: _horizon("label_next"), lambda: _horizon("label_next2")]
-    )
-    p1 = m1.transform(test1).select(
-        "user_id", "ds", "label_next", F.col("prediction").alias("p1")
-    )
-    p2 = m2.transform(test1).select("user_id", "ds", F.col("prediction").alias("p2"))
-    both = p1.join(p2, ["user_id", "ds"]).withColumn(
-        "blend", (F.col("p1") + F.col("p2")) / 2
-    )
-    mse = both.agg(
-        round_to(F.avg(F.pow(F.col("label_next") - F.col("p1"), 2)), 4).alias("mse_h1"),
-        round_to(F.avg(F.pow(F.col("label_next") - F.col("p2"), 2)), 4).alias("mse_h2"),
-        round_to(F.avg(F.pow(F.col("label_next") - F.col("blend"), 2)), 4).alias("mse_blend"),
-        F.count("*").alias("n_test"),
-    )
-    # audited determinism scalar (r10): the three horizon MSEs summed
-    # in 4-decimal units — one row, so the collect is free, and any
-    # boosting/indexing/blend regression changes it.
-    [r] = mse.collect()
-    audit = int(round((r["mse_h1"] + r["mse_h2"] + r["mse_blend"]) * 10_000))
-    return spark.createDataFrame(
-        [(r["mse_h1"], r["mse_h2"], r["mse_blend"], r["n_test"], audit)],
-        "mse_h1 double, mse_h2 double, mse_blend double, n_test bigint, "
-        "audit_mse_units bigint",
-    )
+        def _horizon(label: str):
+            train, test = _gbt_split(feats, label, frames)
+            return GBTRegressor(labelCol=label, **gbt).fit(train), test
+
+        (m1, test1), (m2, _) = run_concurrently(
+            [lambda: _horizon("label_next"), lambda: _horizon("label_next2")]
+        )
+        p1 = m1.transform(test1).select(
+            "user_id", "ds", "label_next", F.col("prediction").alias("p1")
+        )
+        p2 = m2.transform(test1).select("user_id", "ds", F.col("prediction").alias("p2"))
+        both = p1.join(p2, ["user_id", "ds"]).withColumn(
+            "blend", (F.col("p1") + F.col("p2")) / 2
+        )
+        mse = both.agg(
+            round_to(F.avg(F.pow(F.col("label_next") - F.col("p1"), 2)), 4).alias("mse_h1"),
+            round_to(F.avg(F.pow(F.col("label_next") - F.col("p2"), 2)), 4).alias("mse_h2"),
+            round_to(F.avg(F.pow(F.col("label_next") - F.col("blend"), 2)), 4).alias(
+                "mse_blend"
+            ),
+            F.count("*").alias("n_test"),
+        )
+        # audited determinism scalar (r10): the three horizon MSEs summed
+        # in 4-decimal units — any boosting/indexing/blend regression
+        # changes it. The MSEs have 4 decimals, so the sum times 10,000
+        # lies within an ulp-sized error of an integer and the rounding
+        # never meets a tie.
+        units = (F.col("mse_h1") + F.col("mse_h2") + F.col("mse_blend")) * 10_000
+        return local(
+            spark,
+            mse.withColumn("audit_mse_units", F.round(units).cast("bigint")),
+        )

@@ -26,6 +26,17 @@ computed over query-local caches it then releases): its Java rows
 become a ``LocalRelation`` of the caller's session with the frame's own
 schema, so no Python worker runs when it is read.
 
+``held(*frames)`` is the one way a builder keeps an intermediate of its
+own: every ``.cache()``, ``.persist()`` and ``.localCheckpoint()``
+outside this module is its direct argument (``tests/test_isolation.py``
+guards it), and the ``with`` block encloses every consumer. On every
+way out, return or raise, it releases each frame: a cached frame's
+entry in the CacheManager, else the persisted RDD under each RDD leaf
+of its logical plan (a checkpoint's blocks, or an ALS model's factor
+RDDs). ``df.rdd`` would not reach them: it is a new RDD over the plan.
+Iterative builders enter each round's checkpoint into one
+``contextlib.ExitStack``.
+
 The contract:
 - memos hold PARAMETERLESS canonical derivations only — a forced or
   parameterized variant must never be served from, or stored into, one;
@@ -61,7 +72,9 @@ The contract:
   reads the same rows after it: a local frame's rows live in its plan,
   and a lazy frame over a memo recomputes from its lineage. No builder
   returns a frame backed by checkpoint blocks
-  (``tests/test_memos.py``).
+  (``tests/test_memos.py``). A builder's own intermediates are released
+  by ``held`` when it returns, so a serving session needs no teardown
+  call to get that memory back.
 """
 
 from __future__ import annotations
@@ -69,7 +82,8 @@ from __future__ import annotations
 import gc
 import os
 import threading
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import Literal
 
 from pyspark import SparkContext
@@ -150,17 +164,17 @@ def memoized(
             entry[1].unpersist()
         df = build()
         if hold == "cached":
-            held = df.cache()
+            kept = df.cache()
         elif hold == "result":
-            held = _local_or_none(spark, df)
+            kept = _local_or_none(spark, df)
         else:
-            held = df
+            kept = df
         with _LOCK:
-            if held is None:  # over N rows: served lazily, not held
+            if kept is None:  # over N rows: served lazily, not held
                 _MEMOS.pop(key, None)
                 return df
-            _MEMOS[key] = (identity, held)
-        return held
+            _MEMOS[key] = (identity, kept)
+        return kept
 
 
 def local(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -184,6 +198,26 @@ def _local_or_none(spark: SparkSession, df: DataFrame) -> DataFrame | None:
     if rows.size() > N:
         return None
     return DataFrame(spark._jsparkSession.createDataFrame(rows, jdf.schema()), spark)
+
+
+@contextmanager
+def held(*frames: DataFrame) -> Iterator:
+    """Yield ``frames`` (a lone frame as itself) and release each one on
+    exit, whether the block returns or raises: a cached frame's
+    CacheManager entry, else the persisted RDD at each ``LogicalRDD`` or
+    ``ExternalRDD`` leaf of its logical plan."""
+    try:
+        yield frames[0] if len(frames) == 1 else frames
+    finally:
+        for df in frames:
+            if df.is_cached:
+                df.unpersist()
+                continue
+            leaves = df._jdf.queryExecution().logical().collectLeaves().iterator()
+            while leaves.hasNext():
+                leaf = leaves.next()
+                if leaf.getClass().getSimpleName() in ("LogicalRDD", "ExternalRDD"):
+                    leaf.rdd().unpersist(True)
 
 
 def consume_warm_hits() -> int:

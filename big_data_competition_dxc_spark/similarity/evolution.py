@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
-from ..plans.memos import local
+from ..plans.memos import held, local
 from ..plans.registry import query
 from ..similarity.cosine import SQL_COS, as_double, dot
 from ..sources import load
@@ -121,7 +121,7 @@ def ann_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         F.sqrt(dot(F.col("v"), F.col("v"))).alias("nrm"),
         _bucket_col("v").alias("bucket"),
-    ).cache()  # probed by both phases + both scoring joins
+    )  # cached below: probed by both phases + both scoring joins
     q1 = sig.filter(F.col("vec_id") < EVO_ADMIT)
     q2 = sig.filter(
         (F.col("vec_id") >= EVO_ADMIT) & (F.col("vec_id") < EVO_PROBE)
@@ -161,70 +161,63 @@ def ann_index_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ≤{EVO_ADMIT} rows) so phase 1 executes exactly once — rebuilding
     # `evolved` per consumer is then just a filter + broadcast
     # semi-join over the cached signature frame (guide §1.2).
-    admitted = q1.select("vec_id").join(p1, "vec_id", "left_anti").localCheckpoint(
-        eager=True
-    )
-    evolved = corpus.unionByName(
-        sig.join(F.broadcast(admitted), "vec_id", "left_semi")
-    )
+    admitted = q1.select("vec_id").join(p1, "vec_id", "left_anti")
+    with held(sig.cache()), held(admitted.localCheckpoint(eager=True)) as admitted:
+        evolved = corpus.unionByName(
+            sig.join(F.broadcast(admitted), "vec_id", "left_semi")
+        )
 
-    # phase 2: Hamming-1 multi-probe of the evolved postings
-    probes = q2.select(
-        F.col("vec_id").alias("q_id"),
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[_flip(F.col("bucket"), i) for i in range(1, ANN_LSH_BITS + 1)],
+        # phase 2: Hamming-1 multi-probe of the evolved postings
+        probes = q2.select(
+            F.col("vec_id").alias("q_id"),
+            F.explode(
+                F.array(
+                    F.col("bucket"),
+                    *[_flip(F.col("bucket"), i) for i in range(1, ANN_LSH_BITS + 1)],
+                )
+            ).alias("probe"),
+        )
+        cand = (
+            probes.join(
+                evolved.select(
+                    F.col("bucket").alias("probe"), F.col("vec_id").alias("c_id")
+                ),
+                "probe",
             )
-        ).alias("probe"),
-    )
-    cand = (
-        probes.join(
-            evolved.select(
-                F.col("bucket").alias("probe"), F.col("vec_id").alias("c_id")
+            .select("q_id", "c_id")
+            .distinct()
+        )
+        scored = (
+            cand.join(
+                q_side(q2).drop("q_bucket"), "q_id"
+            )
+            .join(c_side(evolved).drop("c_bucket"), "c_id")
+            .select("q_id", "c_id", sim.alias("sim"))
+        )
+        w = Window.partitionBy("q_id")
+        best = (
+            scored.withColumn(
+                "rn", F.row_number().over(w.orderBy(F.desc("sim"), F.asc("c_id")))
+            )
+            .withColumn("n_cand", F.count("*").over(w))
+            .withColumn(
+                "n_adm",
+                F.sum(F.when(F.col("c_id") < EVO_ADMIT, 1).otherwise(0)).over(w),
+            )
+            .filter(F.col("rn") == 1)
+            .select("q_id", "n_cand", "n_adm", "c_id", "sim")
+        )
+        return local(
+            spark,
+            q2.select(F.col("vec_id").alias("q_id"))
+            .join(best, "q_id", "left")
+            .select(
+                "q_id",
+                F.coalesce(F.col("n_cand"), F.lit(0)).cast("bigint").alias("n_candidates"),
+                F.coalesce(F.col("n_adm"), F.lit(0))
+                .cast("bigint")
+                .alias("n_admitted_candidates"),
+                F.col("c_id").cast("bigint").alias("best_neighbor"),
+                F.col("sim").alias("best_sim"),
             ),
-            "probe",
         )
-        .select("q_id", "c_id")
-        .distinct()
-    )
-    scored = (
-        cand.join(
-            q_side(q2).drop("q_bucket"), "q_id"
-        )
-        .join(c_side(evolved).drop("c_bucket"), "c_id")
-        .select("q_id", "c_id", sim.alias("sim"))
-    )
-    w = Window.partitionBy("q_id")
-    best = (
-        scored.withColumn(
-            "rn", F.row_number().over(w.orderBy(F.desc("sim"), F.asc("c_id")))
-        )
-        .withColumn("n_cand", F.count("*").over(w))
-        .withColumn(
-            "n_adm",
-            F.sum(F.when(F.col("c_id") < EVO_ADMIT, 1).otherwise(0)).over(w),
-        )
-        .filter(F.col("rn") == 1)
-        .select("q_id", "n_cand", "n_adm", "c_id", "sim")
-    )
-    # Hold the (|q2|-row) result as a local frame so the corpus-sized
-    # signature cache can be unpersisted before returning — it is local
-    # to this query, not a session memo, so otherwise it would pin
-    # executor memory until the next plans.memos.clear_all().
-    out = local(
-        spark,
-        q2.select(F.col("vec_id").alias("q_id"))
-        .join(best, "q_id", "left")
-        .select(
-            "q_id",
-            F.coalesce(F.col("n_cand"), F.lit(0)).cast("bigint").alias("n_candidates"),
-            F.coalesce(F.col("n_adm"), F.lit(0))
-            .cast("bigint")
-            .alias("n_admitted_candidates"),
-            F.col("c_id").cast("bigint").alias("best_neighbor"),
-            F.col("sim").alias("best_sim"),
-        ),
-    )
-    sig.unpersist()
-    return out

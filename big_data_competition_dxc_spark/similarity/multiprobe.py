@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_to, sql_round
-from ..plans.memos import local
+from ..plans.memos import held, local
 from ..plans.registry import query
 from ..similarity.cosine import SQL_COS, as_double, dot
 from ..sources import load
@@ -138,8 +138,9 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sqrt(dot(F.col("v"), F.col("v"))).alias("nrm"),
         _bucket_col("v").alias("bucket"),
     )
-    qs = sig.filter(F.col("vec_id") < MP_QUERIES).cache()
-    corpus = sig.filter(F.col("vec_id") >= MP_QUERIES).cache()
+    # both cached while the summary below runs
+    qs = sig.filter(F.col("vec_id") < MP_QUERIES)
+    corpus = sig.filter(F.col("vec_id") >= MP_QUERIES)
 
     # exact ground truth: brute-force broadcast of the tiny query set
     sim = round_to(
@@ -199,43 +200,39 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = cm.join(
         exact.withColumn("ex", F.lit(1)), ["q_id", "c_id"], "full_outer"
     )
-    # the 1-row summary is held as a local frame so the two corpus-sized
-    # caches can be unpersisted before returning. exact/cand are
-    # single-consumer and not cached at all.
-    out = local(
-        spark,
-        j.agg(
-            F.count("ex").cast("bigint").alias("exact_pairs"),
-            F.coalesce(F.sum(F.when(F.col("pmin") == 0, 1).otherwise(0)), F.lit(0))
-            .cast("bigint")
-            .alias("single_candidates"),
-            F.count("pmin").cast("bigint").alias("multi_candidates"),
-            F.coalesce(
-                F.sum(
-                    F.when((F.col("ex") == 1) & (F.col("pmin") == 0), 1).otherwise(0)
-                ),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("single_hits"),
-            F.coalesce(
-                F.sum(
-                    F.when((F.col("ex") == 1) & F.col("pmin").isNotNull(), 1).otherwise(0)
-                ),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("multi_hits"),
-        ).select(
-            F.lit(MP_QUERIES).cast("bigint").alias("n_queries"),
-            F.lit(MP_K).cast("bigint").alias("k"),
-            "exact_pairs",
-            "single_candidates",
-            "multi_candidates",
-            "single_hits",
-            "multi_hits",
-        ),
-    )
-    for c in (qs, corpus):
-        c.unpersist()
-    return out
+    # exact/cand are single-consumer and not cached at all
+    with held(qs.cache(), corpus.cache()):
+        return local(
+            spark,
+            j.agg(
+                F.count("ex").cast("bigint").alias("exact_pairs"),
+                F.coalesce(F.sum(F.when(F.col("pmin") == 0, 1).otherwise(0)), F.lit(0))
+                .cast("bigint")
+                .alias("single_candidates"),
+                F.count("pmin").cast("bigint").alias("multi_candidates"),
+                F.coalesce(
+                    F.sum(
+                        F.when((F.col("ex") == 1) & (F.col("pmin") == 0), 1).otherwise(0)
+                    ),
+                    F.lit(0),
+                )
+                .cast("bigint")
+                .alias("single_hits"),
+                F.coalesce(
+                    F.sum(
+                        F.when((F.col("ex") == 1) & F.col("pmin").isNotNull(), 1).otherwise(0)
+                    ),
+                    F.lit(0),
+                )
+                .cast("bigint")
+                .alias("multi_hits"),
+            ).select(
+                F.lit(MP_QUERIES).cast("bigint").alias("n_queries"),
+                F.lit(MP_K).cast("bigint").alias("k"),
+                "exact_pairs",
+                "single_candidates",
+                "multi_candidates",
+                "single_hits",
+                "multi_hits",
+            ),
+        )

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import round_to, sql_round
 from ..ml.concurrency import run_concurrently
 from ..operators.bucketing import AUTO_BUCKETED_SCAN
-from ..plans.memos import local
+from ..plans.memos import held, local
 from ..plans.registry import query
 from ..session import scoped, scratch_dir, scratch_tables
 from ..similarity.cosine import SQL_COS, as_double, dot
@@ -203,71 +203,70 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "v",
                 F.sqrt(dot(F.col("v"), F.col("v"))).alias("qnrm"),
                 _bucket_col("v").alias("bucket"),
-            ).cache()  # feeds probe + rerank + the keep-all left join
-            # probe: batch buckets x stored postings — merge hint pins
-            # the SMJ whose corpus side reads bucketed with no Exchange
-            # (a broadcast of the tiny batch would ALSO be
-            # corpus-exchange-free but streams the whole index past the
-            # hash table; the SMJ is the plan that scales).
-            probe_join = b.select("q_id", "bucket").join(
-                index_tbl.hint("merge"), "bucket"
             )
-            LAST_PROBE_PLANS.append(_formatted_plan(probe_join))
-            cand = probe_join.select("q_id", F.col("vec_id").alias("c_id")).cache()
-            try:
-                matched = [r[0] for r in cand.select("c_id").distinct().collect()]
-                vec_side = vectors_tbl.filter(F.col("vec_id").isin(*matched))
-                LAST_RERANK_PLANS.append(_formatted_plan(vec_side))
-                # exact-cosine rerank: candidates x pruned vectors, the
-                # query vector re-joined from the tiny cached batch
-                scored = (
-                    cand.join(vec_side, cand.c_id == vec_side.vec_id)
-                    .join(
-                        F.broadcast(
-                            b.select("q_id", F.col("v").alias("qv"), "qnrm")
-                        ),
-                        "q_id",
-                    )
-                    .select(
-                        "q_id",
-                        "c_id",
-                        round_to(
-                            dot(F.col("qv"), F.col("v"))
-                            / (F.col("qnrm") * F.col("nrm")),
-                            4,
-                        ).alias("sim"),
-                    )
+            # b feeds probe + rerank + the keep-all left join
+            with held(b.cache()):
+                # probe: batch buckets x stored postings — merge hint pins
+                # the SMJ whose corpus side reads bucketed with no Exchange
+                # (a broadcast of the tiny batch would ALSO be
+                # corpus-exchange-free but streams the whole index past the
+                # hash table; the SMJ is the plan that scales).
+                probe_join = b.select("q_id", "bucket").join(
+                    index_tbl.hint("merge"), "bucket"
                 )
-                w = Window.partitionBy("q_id")
-                best = (
-                    scored.withColumn(
-                        "rn",
-                        F.row_number().over(
-                            w.orderBy(F.desc("sim"), F.asc("c_id"))
-                        ),
+                LAST_PROBE_PLANS.append(_formatted_plan(probe_join))
+                cand = probe_join.select("q_id", F.col("vec_id").alias("c_id"))
+                with held(cand.cache()):
+                    matched = [r[0] for r in cand.select("c_id").distinct().collect()]
+                    vec_side = vectors_tbl.filter(F.col("vec_id").isin(*matched))
+                    LAST_RERANK_PLANS.append(_formatted_plan(vec_side))
+                    # exact-cosine rerank: candidates x pruned vectors, the
+                    # query vector re-joined from the tiny cached batch
+                    scored = (
+                        cand.join(vec_side, cand.c_id == vec_side.vec_id)
+                        .join(
+                            F.broadcast(
+                                b.select("q_id", F.col("v").alias("qv"), "qnrm")
+                            ),
+                            "q_id",
+                        )
+                        .select(
+                            "q_id",
+                            "c_id",
+                            round_to(
+                                dot(F.col("qv"), F.col("v"))
+                                / (F.col("qnrm") * F.col("nrm")),
+                                4,
+                            ).alias("sim"),
+                        )
                     )
-                    .withColumn("n_cand", F.count("*").over(w))
-                    .filter(F.col("rn") == 1)
-                    .select("q_id", "n_cand", "c_id", "sim")
-                )
-                out = (
-                    b.select("q_id")
-                    .join(best, "q_id", "left")
-                    .select(
-                        "q_id",
-                        F.coalesce(F.col("n_cand"), F.lit(0))
-                        .cast("bigint")
-                        .alias("n_candidates"),
-                        F.col("c_id").cast("bigint").alias("best_neighbor"),
-                        F.col("sim").alias("best_sim"),
+                    w = Window.partitionBy("q_id")
+                    best = (
+                        scored.withColumn(
+                            "rn",
+                            F.row_number().over(
+                                w.orderBy(F.desc("sim"), F.asc("c_id"))
+                            ),
+                        )
+                        .withColumn("n_cand", F.count("*").over(w))
+                        .filter(F.col("rn") == 1)
+                        .select("q_id", "n_cand", "c_id", "sim")
                     )
-                )
-                out.write.mode("overwrite").parquet(
-                    os.path.join(res_dir, f"b{batch_id}")
-                )
-            finally:
-                cand.unpersist()
-                b.unpersist()
+                    out = (
+                        b.select("q_id")
+                        .join(best, "q_id", "left")
+                        .select(
+                            "q_id",
+                            F.coalesce(F.col("n_cand"), F.lit(0))
+                            .cast("bigint")
+                            .alias("n_candidates"),
+                            F.col("c_id").cast("bigint").alias("best_neighbor"),
+                            F.col("sim").alias("best_sim"),
+                        )
+                    )
+                    out.write.mode("overwrite").parquet(
+                        os.path.join(res_dir, f"b{batch_id}")
+                    )
 
         writer = (
             spark.readStream.schema("vec_id bigint, v array<double>, slice int")

@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import os
 import threading
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,7 +61,7 @@ from ..dedup.jaccard import shingle_rows
 from ..dedup.minhash import _band_rows, _signature
 from ..ml.concurrency import run_concurrently
 from ..operators.bucketing import AUTO_BUCKETED_SCAN
-from ..plans.memos import local
+from ..plans.memos import held, local
 from ..plans.registry import query
 from ..session import scoped, scratch_dir, scratch_tables
 from ..sources import load
@@ -135,7 +136,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with scratch_dir("stream_ingest_") as stage, scratch_tables(
         spark, "stream_corpus_bands", "stream_corpus_shingles"
-    ) as (index_table, shingle_table):
+    ) as (index_table, shingle_table), ExitStack() as corpus_frames:
         in_dir = os.path.join(stage, "in")
         res_dir = os.path.join(stage, "out")
         idx_dir = os.path.join(stage, "idx")
@@ -178,10 +179,12 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # shingle table's bucket key) and materialized tiny
             # (|corpus docs| rows), so each micro-batch's verify skips
             # a second aggregation pass over its pruned corpus scan.
-            sizes = (
-                tbl.groupBy("doc_id")
-                .agg(F.count("*").alias("n"))
-                .localCheckpoint(eager=True)
+            sizes = corpus_frames.enter_context(
+                held(
+                    tbl.groupBy("doc_id")
+                    .agg(F.count("*").alias("n"))
+                    .localCheckpoint(eager=True)
+                )
             )
             return tbl, spark.table(index_table), sizes
 
@@ -203,47 +206,42 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         def probe(batch_df: DataFrame, batch_id: int) -> None:
             LAST_BATCH_IDS.append(batch_id)
             b = batch_df.select("doc_id", "text")
-            bsh = shingle_rows(b).cache()  # feeds signature + verify + sizes
-            bbands = _band_rows(_signature(bsh)).alias("d")
-            # merge hint: at fixture scale the planner would broadcast the
-            # tiny batch side (also corpus-exchange-free, but vacuously —
-            # it streams the WHOLE index past the hash table); the SMJ
-            # against the bucketed layout is the plan that scales, with
-            # the batch side alone shuffling into the index's buckets.
-            probe_join = bbands.join(
-                corpus_bands.alias("c").hint("merge"),
-                (F.col("d.band") == F.col("c.band"))
-                & (F.col("d.band_key") == F.col("c.band_key")),
-            )
-            LAST_PROBE_PLANS.append(_formatted_plan(probe_join))
-            cand = (
-                probe_join.select(
+            bsh = shingle_rows(b)  # feeds signature + verify + sizes
+            with held(bsh.cache()):
+                bbands = _band_rows(_signature(bsh)).alias("d")
+                # merge hint: at fixture scale the planner would broadcast the
+                # tiny batch side (also corpus-exchange-free, but vacuously —
+                # it streams the WHOLE index past the hash table); the SMJ
+                # against the bucketed layout is the plan that scales, with
+                # the batch side alone shuffling into the index's buckets.
+                probe_join = bbands.join(
+                    corpus_bands.alias("c").hint("merge"),
+                    (F.col("d.band") == F.col("c.band"))
+                    & (F.col("d.band_key") == F.col("c.band_key")),
+                )
+                LAST_PROBE_PLANS.append(_formatted_plan(probe_join))
+                cand = probe_join.select(
                     F.col("d.doc_id").alias("doc_d"), F.col("c.doc_id").alias("doc_c")
-                )
-                .distinct()
-                .cache()  # consumed twice: matched-id collect + verify join
-            )
-            try:
-                # the batch's matched corpus docs — bounded by the batch's
-                # collision count, the dynamic filter the verify scan prunes
-                # buckets with. This collect is the probe result itself
-                # (O(|batch| x collisions)), not a corpus-sized pull.
-                matched = [
-                    r[0] for r in cand.select("doc_c").distinct().collect()
-                ]
-                corpus_side = corpus_sh_tbl.filter(F.col("doc_id").isin(*matched))
-                LAST_VERIFY_PLANS.append(_formatted_plan(corpus_side))
-                out = verify_decisions(
-                    cand, bsh, corpus_side, b.select("doc_id"),
-                    sizes_c=corpus_sizes,
-                )
-                # deterministic per-batch path + overwrite = idempotent replay
-                out.write.mode("overwrite").parquet(
-                    os.path.join(res_dir, f"b{batch_id}")
-                )
-            finally:
-                cand.unpersist()
-                bsh.unpersist()
+                ).distinct()
+                # consumed twice: matched-id collect + verify join
+                with held(cand.cache()):
+                    # the batch's matched corpus docs — bounded by the batch's
+                    # collision count, the dynamic filter the verify scan prunes
+                    # buckets with. This collect is the probe result itself
+                    # (O(|batch| x collisions)), not a corpus-sized pull.
+                    matched = [
+                        r[0] for r in cand.select("doc_c").distinct().collect()
+                    ]
+                    corpus_side = corpus_sh_tbl.filter(F.col("doc_id").isin(*matched))
+                    LAST_VERIFY_PLANS.append(_formatted_plan(corpus_side))
+                    out = verify_decisions(
+                        cand, bsh, corpus_side, b.select("doc_id"),
+                        sizes_c=corpus_sizes,
+                    )
+                    # deterministic per-batch path + overwrite = idempotent replay
+                    out.write.mode("overwrite").parquet(
+                        os.path.join(res_dir, f"b{batch_id}")
+                    )
 
         writer = (
             spark.readStream.schema("doc_id bigint, text string, slice int")

@@ -22,9 +22,10 @@ Spark-first shape, designed for the 100 TB corpus:
   the count step itself is the distributed aggregate, exactly the
   ML12-forecast-style bounded driver loop.
 - Per-iteration ``localCheckpoint`` truncates lineage (the iterative
-  pattern of dedup/clustering.py and graph/pagerank.py — part of the
-  algorithm, not a result memo: without it iteration N's plan nests
-  2^N window recomputations).
+  pattern of dedup/clustering.py — part of the algorithm, not a result
+  memo: without it iteration N's plan nests 2^N window
+  recomputations). Every round's checkpoint is held in one ExitStack
+  and released when the loop's ``with`` block exits.
 
 Documented semantic restriction: self-adjacent pairs (left == right)
 are excluded from merge candidacy. Greedy BPE resolves runs like
@@ -43,11 +44,14 @@ helper that fixes N_MERGES.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import ExitStack, contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import sql_round
-from ..plans.memos import local
+from ..plans.memos import held, local
 from ..plans.registry import query
 from ..sources import load
 
@@ -116,10 +120,12 @@ tok{i} AS MATERIALIZED (
     return "".join(blocks) + f"\nSELECT * FROM ({selects}) ORDER BY it"
 
 
+@contextmanager
 def _run_merge_loop(
     spark: SparkSession, sf_dir: str, n_merges: int
-) -> tuple[list[tuple], DataFrame]:
-    """The loop itself, returning (merge table rows, final token rows).
+) -> Iterator[tuple[list[tuple], DataFrame]]:
+    """The loop itself, yielding (merge table rows, final token rows);
+    every round's checkpoint is released when the ``with`` block exits.
     Exposed separately so tests can assert the reconstruction law:
     concatenating the surviving symbols of a word in position order
     must reproduce the word exactly, after every round — the merge
@@ -132,60 +138,65 @@ def _run_merge_loop(
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
     )
-    toks = (
-        wf.select(
-            "w",
-            "freq",
-            F.posexplode(
-                F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-            ).alias("pos", "sym"),
-        )
-        # posexplode is 0-based; the oracle's tok0 (generate_series) is
-        # 1-based. Only the ORDER matters inside the loop, but if zero
-        # merges ever apply the un-renumbered positions ARE the final
-        # output, so align the bases (caught by the random-corpus
-        # property test on the corpus "aa").
-        .withColumn("pos", (F.col("pos") + 1).cast("bigint"))
-        .localCheckpoint(eager=False)
-    )
-
-    wwin = Window.partitionBy("w").orderBy("pos")
-    merges = []
-    for it in range(1, n_merges + 1):
-        led = toks.select(
-            "w", "freq", "pos", "sym",
-            F.lead("sym").over(wwin).alias("nxt"),
-            F.lag("sym").over(wwin).alias("prv"),
-        )
-        top = (
-            led.filter(F.col("nxt").isNotNull() & (F.col("sym") != F.col("nxt")))
-            .groupBy("sym", "nxt")
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.col("n").desc(), "sym", "nxt")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b, n = top[0]["sym"], top[0]["nxt"], int(top[0]["n"])
-        merges.append((it, a, b, a + b, n))
-        absorbed = (F.col("prv") == F.lit(a)) & (F.col("sym") == F.lit(b))
-        toks = (
-            led.filter(F.col("prv").isNull() | ~absorbed)
-            .withColumn(
-                "sym",
-                F.when(
-                    (F.col("sym") == F.lit(a)) & (F.col("nxt") == F.lit(b)),
-                    F.lit(a + b),
-                ).otherwise(F.col("sym")),
+    with ExitStack() as rounds:
+        toks = rounds.enter_context(
+            held(
+                wf.select(
+                    "w",
+                    "freq",
+                    F.posexplode(
+                        F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
+                    ).alias("pos", "sym"),
+                )
+                # posexplode is 0-based; the oracle's tok0 (generate_series) is
+                # 1-based. Only the ORDER matters inside the loop, but if zero
+                # merges ever apply the un-renumbered positions ARE the final
+                # output, so align the bases (caught by the random-corpus
+                # property test on the corpus "aa").
+                .withColumn("pos", (F.col("pos") + 1).cast("bigint"))
+                .localCheckpoint(eager=False)
             )
-            .withColumn("pos", F.row_number().over(wwin).cast("bigint"))
-            .select("w", "freq", "pos", "sym")
-            # iterative lineage cut (see module docstring) — without it
-            # round N's two consumers re-expand 2^N nested windows
-            .localCheckpoint(eager=True)
         )
-    return merges, toks
+
+        wwin = Window.partitionBy("w").orderBy("pos")
+        merges = []
+        for it in range(1, n_merges + 1):
+            led = toks.select(
+                "w", "freq", "pos", "sym",
+                F.lead("sym").over(wwin).alias("nxt"),
+                F.lag("sym").over(wwin).alias("prv"),
+            )
+            top = (
+                led.filter(F.col("nxt").isNotNull() & (F.col("sym") != F.col("nxt")))
+                .groupBy("sym", "nxt")
+                .agg(F.sum("freq").alias("n"))
+                .orderBy(F.col("n").desc(), "sym", "nxt")
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            a, b, n = top[0]["sym"], top[0]["nxt"], int(top[0]["n"])
+            merges.append((it, a, b, a + b, n))
+            absorbed = (F.col("prv") == F.lit(a)) & (F.col("sym") == F.lit(b))
+            toks = rounds.enter_context(
+                held(
+                    led.filter(F.col("prv").isNull() | ~absorbed)
+                    .withColumn(
+                        "sym",
+                        F.when(
+                            (F.col("sym") == F.lit(a)) & (F.col("nxt") == F.lit(b)),
+                            F.lit(a + b),
+                        ).otherwise(F.col("sym")),
+                    )
+                    .withColumn("pos", F.row_number().over(wwin).cast("bigint"))
+                    .select("w", "freq", "pos", "sym")
+                    # iterative lineage cut (see module docstring) — without it
+                    # round N's two consumers re-expand 2^N nested windows
+                    .localCheckpoint(eager=True)
+                )
+            )
+        yield merges, toks
 
 
 @query(
@@ -198,10 +209,10 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the word-type table: (iteration, left, right, merged, weighted
     count). Distributed count + 1-row driver argmax per round;
     left != right restriction documented in the module docstring."""
-    merges, _ = _run_merge_loop(spark, sf_dir, N_MERGES)
-    return spark.createDataFrame(
-        merges, "it bigint, left_sym string, right_sym string, merged string, n bigint"
-    )
+    with _run_merge_loop(spark, sf_dir, N_MERGES) as (merges, _):
+        return spark.createDataFrame(
+            merges, "it bigint, left_sym string, right_sym string, merged string, n bigint"
+        )
 
 
 def _encode_oracle_sql(n_merges: int) -> str:
@@ -244,7 +255,6 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the loop output unioned with the round-zero table."""
     from ..functions.rounding import round_to
 
-    _, toks = _run_merge_loop(spark, sf_dir, N_MERGES)
     docs = load(spark, sf_dir, "documents").select("text")
     before = (
         docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
@@ -255,12 +265,12 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w", (F.col("freq") * F.length("w")).alias("weighted"), F.lit(0).alias("src")
         )
     )
-    # the loop's tokens rest on checkpoint blocks, which clear_all()
-    # releases: their per-word totals (one row per word type, the same
-    # integer sums) are held as a local frame
-    after = local(
-        spark, toks.groupBy("w").agg(F.sum("freq").alias("weighted"))
-    ).withColumn("src", F.lit(1))
+    # the loop's tokens are released when it exits: their per-word
+    # totals (one row per word type, the same integer sums) are held as
+    # a local frame
+    with _run_merge_loop(spark, sf_dir, N_MERGES) as (_, toks):
+        after = local(spark, toks.groupBy("w").agg(F.sum("freq").alias("weighted")))
+    after = after.withColumn("src", F.lit(1))
     u = before.unionByName(after)
     return u.agg(
         F.countDistinct("w").alias("n_word_types"),

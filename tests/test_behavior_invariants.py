@@ -364,29 +364,29 @@ def test_bpe_merge_apply_reconstructs_words(spark):
 
     from pyspark.sql import Window
 
-    merges, toks = _run_merge_loop(spark, SF_TEST_DIR, N_MERGES)
-    assert len(merges) == N_MERGES
-    # collect_list order is nondeterministic — sort (pos, sym) structs
-    # inside the array before joining, so the check is order-proof
-    rebuilt = (
-        toks.withColumn(
-            "joined",
-            F.concat_ws(
-                "",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "sym")).over(
-                            Window.partitionBy("w")
-                        )
+    with _run_merge_loop(spark, SF_TEST_DIR, N_MERGES) as (merges, toks):
+        assert len(merges) == N_MERGES
+        # collect_list order is nondeterministic — sort (pos, sym) structs
+        # inside the array before joining, so the check is order-proof
+        rebuilt = (
+            toks.withColumn(
+                "joined",
+                F.concat_ws(
+                    "",
+                    F.transform(
+                        F.array_sort(
+                            F.collect_list(F.struct("pos", "sym")).over(
+                                Window.partitionBy("w")
+                            )
+                        ),
+                        lambda s: s["sym"],
                     ),
-                    lambda s: s["sym"],
                 ),
-            ),
+            )
+            .select("w", "joined")
+            .distinct()
         )
-        .select("w", "joined")
-        .distinct()
-    )
-    assert rebuilt.filter(F.col("w") != F.col("joined")).count() == 0
+        assert rebuilt.filter(F.col("w") != F.col("joined")).count() == 0
 
 
 def test_bpe_encode_stats_consistency(spark):
@@ -429,7 +429,11 @@ def test_bpe_oracle_degenerate_corpus_matches_loop(spark, tmp_path):
         }
     ).to_parquet(tmp_path / "documents.parquet")
 
-    merges, toks = _run_merge_loop(spark, str(tmp_path), N_MERGES)
+    with _run_merge_loop(spark, str(tmp_path), N_MERGES) as (merges, toks):
+        tok_spark = [
+            tuple(r)
+            for r in toks.select("w", "freq", "pos", "sym").orderBy("w", "pos").collect()
+        ]
     assert len(merges) == 1  # the loop broke cleanly after the only merge
     assert merges[0][1:4] == ("a", "b", "ab")
 
@@ -446,9 +450,6 @@ def test_bpe_oracle_degenerate_corpus_matches_loop(spark, tmp_path):
     tok_oracle = con.execute(
         head + f"\nSELECT w, freq, pos, sym FROM tok{N_MERGES} ORDER BY w, pos"
     ).fetchall()
-    tok_spark = [
-        tuple(r) for r in toks.select("w", "freq", "pos", "sym").orderBy("w", "pos").collect()
-    ]
     assert tok_oracle == tok_spark == [("ab", 3, 1, "ab")]
     con.close()
 

@@ -13,6 +13,7 @@ races show as WRONG or ERROR calls.
 from __future__ import annotations
 
 import ast
+import inspect
 import os
 import re
 import tempfile
@@ -194,6 +195,13 @@ def test_streaming_child_sessions_do_not_grow_the_listener_bus(spark, duck):
 
 
 WRITERS = sorted(name for name, entry in plans.QUERIES.items() if entry.writes)
+#: The queries whose module holds intermediates of its own
+#: (``plans.memos.held``).
+HOLDERS = sorted(
+    name
+    for name, entry in plans.QUERIES.items()
+    if "held(" in Path(inspect.getfile(entry.build)).read_text()
+)
 
 
 class _Injected(Exception):
@@ -204,32 +212,51 @@ def _scratch_state(spark) -> tuple:
     """What a request may hold while it runs and must release when it
     returns or raises: the package's scratch dirs in the temp dir, the
     catalog's tables and each session's views (the root's and those of
-    every child ``session.scoped`` made), and running streams (counted
-    in the state every session shares, so no session's streaming
-    manager is made just to look)."""
+    every child ``session.scoped`` made), running streams (counted in
+    the state every session shares, so no session's streaming manager
+    is made just to look), the context's persisted RDDs (cached frames
+    and checkpoints) and each session's non-builtin functions."""
     sessions = [spark, *session._CHILDREN.values()]
     return (
         sorted(p for p in os.listdir(tempfile.gettempdir()) if p.startswith(SCRATCH_PREFIX)),
         {t.name for s in sessions for t in s.catalog.listTables()},
         spark._jsparkSession.sharedState().activeStreamingQueries().size(),
+        [sorted(r[0] for r in s.sql("SHOW USER FUNCTIONS").collect()) for s in sessions],
+        set(spark.sparkContext._jsc.getPersistentRDDs().keySet()),
     )
 
 
-@pytest.mark.parametrize("name", WRITERS)
+def _assert_left_as(spark, warm: tuple) -> None:
+    """The state is as ``warm`` recorded it. Persisted RDDs may only
+    have gone: the context cleaner unpersists an RDD some earlier test
+    left behind once the JVM collects it."""
+    now = _scratch_state(spark)
+    assert now[:-1] == warm[:-1]
+    assert now[-1] <= warm[-1], sorted(now[-1] - warm[-1])
+
+
+@pytest.mark.parametrize("name", sorted({*WRITERS, *HOLDERS}))
 def test_writing_query_releases_its_scratch_state(spark, monkeypatch, name):
-    """A writing query leaves no scratch dir, table, view or running
-    stream behind, whether it returns or raises, and its second run
-    leaves the context's listener bus as its first did. The raise is
-    injected where the builder hands back its result: every
-    ``plans.memos.local`` call goes through ``_local_or_none``, which
-    then raises; a query that never calls it is checked on return
-    only."""
+    """A writing query, or one that holds intermediates of its own,
+    leaves no scratch dir, table, view, running stream, persisted RDD or
+    function behind, whether it returns or raises, and its later runs
+    leave the context's listener bus as its first did. The first run
+    warms the memos (and may make a ``session.scoped`` child), so the
+    later runs are compared with the state it left; it must itself
+    leave no scratch dir, table, view or stream. The raise is injected
+    where the builder hands back its result: every ``plans.memos.local``
+    call goes through ``_local_or_none``, which then raises; a query
+    that never calls it is checked on return only."""
     build = plans.QUERIES[name].build
     bus = spark.sparkContext._jsc.sc().listenerBus()
     before = _scratch_state(spark)
     build(spark, SF_TEST_DIR)
-    assert _scratch_state(spark) == before
+    warm = _scratch_state(spark)
+    assert warm[:3] == before[:3]
     listeners = bus.listeners().size()
+    build(spark, SF_TEST_DIR)
+    _assert_left_as(spark, warm)
+    assert bus.listeners().size() == listeners
 
     def fail(*_):
         raise _Injected
@@ -239,7 +266,7 @@ def test_writing_query_releases_its_scratch_state(spark, monkeypatch, name):
         build(spark, SF_TEST_DIR)
     except _Injected:
         pass
-    assert _scratch_state(spark) == before
+    _assert_left_as(spark, warm)
     assert bus.listeners().size() == listeners
 
 
@@ -319,6 +346,42 @@ def test_no_function_returns_a_checkpointed_frame():
                 if isinstance(n, ast.Return)
                 and (_checkpoints(n.value) or getattr(n.value, "id", None) in bound)
             ]
+    assert not hits, "\n".join(hits)
+
+
+def _held_misses(tree: ast.AST) -> list[ast.Call]:
+    """The calls in ``tree`` that release a frame by hand (``unpersist``)
+    or keep one (``cache``, ``persist``, ``localCheckpoint``) other than
+    as the direct argument of ``held(...)``."""
+    calls = [n for n in ast.walk(tree) if isinstance(n, ast.Call)]
+    held_args = {
+        id(a)
+        for n in calls
+        if getattr(n.func, "id", getattr(n.func, "attr", None)) == "held"
+        for a in n.args
+    }
+    return [
+        n
+        for n in calls
+        if getattr(n.func, "attr", None) == "unpersist"
+        or (
+            getattr(n.func, "attr", None) in ("cache", "persist", "localCheckpoint")
+            and id(n) not in held_args
+        )
+    ]
+
+
+def test_every_kept_frame_is_held():
+    """Outside ``plans/memos.py``, every frame a builder caches, persists
+    or checkpoints is the direct argument of ``plans.memos.held``, which
+    releases it on return and on error, and nothing unpersists by
+    hand."""
+    hits = [
+        f"{path.relative_to(PACKAGE)}:{n.lineno}: {ast.unparse(n)[:80]}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != PACKAGE / "plans" / "memos.py"
+        for n in _held_misses(ast.parse(path.read_text()))
+    ]
     assert not hits, "\n".join(hits)
 
 

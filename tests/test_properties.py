@@ -333,12 +333,9 @@ def test_bpe_loop_matches_oracle_on_random_corpora(spark, tmp_path_factory, word
         }
     ).to_parquet(d / "documents.parquet")
 
-    merges, toks = _run_merge_loop(spark, str(d), N_MERGES)
+    with _run_merge_loop(spark, str(d), N_MERGES) as (merges, toks):
+        spark_toks = sorted(tuple(r) for r in toks.select("w", "freq", "pos", "sym").collect())
     spark_merges = [tuple(m) for m in merges]
-    spark_toks = sorted(
-        tuple(r)
-        for r in toks.select("w", "freq", "pos", "sym").collect()
-    )
 
     con = duckdb.connect()
     con.execute(
